@@ -339,11 +339,12 @@ def _read_file_partition(options, full_schema: T.StructType,
     """Executor-side read of ONE shared file: ranged-HTTP (or file://)
     parquet -> Arrow batches cast to the share schema, typed partition
     values re-attached per batch (A2/A3/A20). Shared by the batch and
-    streaming readers. If the recorded presigned URL has expired (streaming
+    streaming readers. Every data column is decoded, so the file arrives in
+    one whole-file GET. If the recorded presigned URL has expired (streaming
     replay long after the manifest was logged), the file is re-resolved by
     id through a fresh listing — one REST round-trip, executor-local."""
     import pyarrow as pa
-    import pyarrow.parquet as pq
+    import requests
 
     from datafusion_delta_sharing_spark.sources.dv import (
         dv_identity_changed,
@@ -351,7 +352,7 @@ def _read_file_partition(options, full_schema: T.StructType,
         positions_mask,
     )
     from datafusion_delta_sharing_spark.sources.reader import (
-        _open_parquet_source,
+        _open_parquet,
         _spark_struct_to_arrow_schema,
     )
     from datafusion_delta_sharing_spark.sources.schema import (
@@ -379,6 +380,7 @@ def _read_file_partition(options, full_schema: T.StructType,
     dv = getattr(partition, "deletion_vector", None)
     if refresh is None:
         refresh = lambda: _refresh_file_action(options, partition.file_id)  # noqa: E731
+    session = requests.Session()  # the DV and data GETs of this task
 
     def dv_deleted(descriptor):
         """Decode the DV; on an expired presigned DV URL (401/403),
@@ -388,10 +390,8 @@ def _read_file_partition(options, full_schema: T.StructType,
         its original rows): if the table gained deletes since the batch
         was logged, silently using the new DV would change row content
         between original and replay — refuse loudly instead."""
-        import requests
-
         try:
-            return dv_positions(descriptor)
+            return dv_positions(descriptor, session=session)
         except requests.HTTPError as exc:
             status = (exc.response.status_code
                       if exc.response is not None else None)
@@ -405,40 +405,11 @@ def _read_file_partition(options, full_schema: T.StructType,
                     "replay; cannot reproduce the original rows "
                     f"(logged {descriptor!r}, current {fresh_dv!r})"
                 ) from exc
-            return dv_positions(fresh_dv)
+            return dv_positions(fresh_dv, session=session)
 
     deleted = dv_deleted(dv) if dv else None
-
-    def _open(url, size):
-        import requests
-
-        from datafusion_delta_sharing_spark.sources.reader import (
-            _RangedHttpFile,
-        )
-
-        def _pf(u, s):
-            src = _open_parquet_source(u, s)
-            # pre_buffer coalesces projected column-chunk reads into
-            # ranged batches — fewer round trips per file over HTTP
-            # (see reader.py:_fetch_batches_task, same rationale)
-            if isinstance(src, _RangedHttpFile):
-                return pq.ParquetFile(src, pre_buffer=True)
-            return pq.ParquetFile(src)
-
-        try:
-            return _pf(url, size)
-        except requests.HTTPError as exc:
-            # ONLY auth failures mean an expired presigned URL; anything
-            # else (corrupt footer, 404, scheme errors) must surface as
-            # itself, not be masked by a pointless re-listing
-            status = (exc.response.status_code
-                      if exc.response is not None else None)
-            if status not in (401, 403):
-                raise
-            fresh = refresh()
-            return _pf(fresh.url, fresh.size)
-
-    reader = _open(partition.url, partition.size)
+    reader = _open_parquet(partition.url, partition.size, session,
+                           whole=True, refresh=refresh)
     file_row = 0  # physical row position within the file
     for batch in reader.iter_batches(columns=data_cols or None):
         if deleted is not None:
@@ -453,8 +424,8 @@ def _read_file_partition(options, full_schema: T.StructType,
         for field in full_schema.fields:
             atype = arrow_schema.field(field.name).type
             if field.name in partition_columns:
-                arrays.append(pa.nulls(n, atype) if decoded[field.name] is None
-                              else pa.array([decoded[field.name]] * n, type=atype))
+                arrays.append(pa.repeat(
+                    pa.scalar(decoded[field.name], type=atype), n))
             else:
                 idx = batch.schema.get_field_index(
                     phys.get(field.name, field.name))
@@ -766,31 +737,24 @@ class DeltaSharingCDFStreamReader(DataSourceStreamReader):
                 list(self.base_schema.fields)
                 + [T.StructField("_change_type", T.StringType())])
         arrow_out = _spark_struct_to_arrow_schema(self.out_schema)
-        ct_type = arrow_out.field("_change_type").type
-        cv_type = arrow_out.field("_commit_version").type
-        cts_type = arrow_out.field("_commit_timestamp").type
-        literal_ct = ("insert" if partition.kind == "add" else "delete")
+        # per-file constants; a "cdf" file carries its own _change_type
+        consts = {"_commit_version": partition.version,
+                  # keep None: a missing commit timestamp is NULL
+                  "_commit_timestamp": (partition.timestamp * 1000
+                                        if partition.timestamp is not None
+                                        else None)}
+        if partition.kind != "cdf":
+            consts["_change_type"] = ("insert" if partition.kind == "add"
+                                      else "delete")
         refresh = lambda: _refresh_cdf_file_action(  # noqa: E731
             self.options, partition.file_id, partition.version)
         for batch in _read_file_partition(self.options, file_schema,
                                           partition, refresh=refresh):
             n = batch.num_rows
-            cols = {name: batch.column(i)
-                    for i, name in enumerate(batch.schema.names)}
-            arrays = []
-            for field in self.out_schema.fields:
-                if field.name == "_change_type" and field.name not in cols:
-                    arrays.append(pa.array([literal_ct] * n, ct_type))
-                elif field.name == "_commit_version":
-                    arrays.append(pa.array([partition.version] * n, cv_type))
-                elif field.name == "_commit_timestamp":
-                    ts_us = (partition.timestamp * 1000
-                             if partition.timestamp is not None else None)
-                    arrays.append(pa.array([ts_us] * n,
-                                           type=pa.int64()).cast(cts_type))
-                else:
-                    arrays.append(cols[field.name].cast(
-                        arrow_out.field(field.name).type))
+            arrays = [pa.repeat(pa.scalar(consts[f.name], type=f.type), n)
+                      if f.name in consts
+                      else batch.column(f.name).cast(f.type)
+                      for f in arrow_out]
             yield pa.RecordBatch.from_arrays(arrays, schema=arrow_out)
 
     def commit(self, end: dict) -> None:

@@ -366,14 +366,18 @@ def _get_with_retry(http, url: str, headers: dict | None = None):
 
 def _fetch_dv_file(path: str, session=None,
                    offset: int | None = None,
-                   length: int | None = None) -> bytes:
+                   length: int | None = None,
+                   version_bytes: dict | None = None) -> bytes:
     """Read DV file bytes. For http(s) with a known (offset, length),
     fetch ONLY the version byte and the frame slice via Range requests —
     Delta packs many files' DVs into one shared DV file, so a full
     download per data file is O(file) x N tasks instead of O(DV slice)
-    (r5 review). A server that ignores Range (200) degrades to the full
-    read. Returns bytes indexable as if the WHOLE file were read (a
-    zero-filled prefix stands in for the unfetched middle)."""
+    (r5 review). ``version_bytes`` (DV file URL -> version byte, kept by
+    the caller for one task) lets the DVs of one task that share a DV file
+    fetch its version byte once. A server that ignores Range (200)
+    degrades to the full read. Returns bytes indexable as if the WHOLE
+    file were read (a zero-filled prefix stands in for the unfetched
+    middle)."""
     from urllib.parse import urlparse
 
     parsed = urlparse(path)
@@ -396,9 +400,14 @@ def _fetch_dv_file(path: str, session=None,
 
         http = session or requests
         if offset is not None and length is not None and offset > 0:
-            head = _get_with_retry(http, path,
-                                   headers={"Range": "bytes=0-0"})
-            head.raise_for_status()
+            versions = {} if version_bytes is None else version_bytes
+            if path not in versions:
+                head = _get_with_retry(http, path,
+                                       headers={"Range": "bytes=0-0"})
+                head.raise_for_status()
+                if head.status_code == 200:
+                    return head.content  # server ignored Range: full file
+                versions[path] = head.content[:1]
             slice_resp = _get_with_retry(
                 http, path,
                 headers={"Range": f"bytes={offset}-{offset + length - 1}"})
@@ -407,14 +416,10 @@ def _fetch_dv_file(path: str, session=None,
                     f"corrupt deletion vector: offset {offset} is past "
                     f"the end of DV file {path!r}")
             slice_resp.raise_for_status()
-            if head.status_code == 206 and slice_resp.status_code == 206:
-                body = slice_resp.content[:length]
-                return (head.content[:1]
-                        + b"\x00" * (offset - 1) + body)
-            # server ignored Range: either response already holds the
-            # full file
-            return (slice_resp.content
-                    if slice_resp.status_code == 200 else head.content)
+            if slice_resp.status_code == 200:
+                return slice_resp.content  # server ignored Range
+            body = slice_resp.content[:length]
+            return versions[path] + b"\x00" * (offset - 1) + body
         resp = _get_with_retry(http, path)
         resp.raise_for_status()
         return resp.content
@@ -481,7 +486,8 @@ def dv_identity_changed(fresh_dv: dict | None, descriptor: dict) -> bool:
         for k in ("storageType", "sizeInBytes", "cardinality")))
 
 
-def dv_positions(descriptor: dict, session=None) -> np.ndarray:
+def dv_positions(descriptor: dict, session=None,
+                 version_bytes: dict | None = None) -> np.ndarray:
     """Deletion-vector descriptor -> sorted uint64 deleted row positions.
 
     Supports ``storageType`` "i" (inline Z85) and "p" (absolute path /
@@ -516,7 +522,8 @@ def dv_positions(descriptor: dict, session=None) -> np.ndarray:
                 f"non-integer or out-of-range offset {offset!r}")
         blob = _fetch_dv_file(
             payload, session=session, offset=offset,
-            length=(4 + size + 4) if isinstance(size, int) else None)
+            length=(4 + size + 4) if isinstance(size, int) else None,
+            version_bytes=version_bytes)
         if not blob or blob[0] != DV_FILE_FORMAT_VERSION:
             raise DeltaSharingError(
                 "corrupt deletion vector file: bad format version "

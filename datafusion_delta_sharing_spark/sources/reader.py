@@ -7,8 +7,10 @@ Parity targets (SURVEY.md §2 Tier A):
   vectorized parquet reader plays this role on the local-path strategy; a
   ``mapInArrow`` fetch stage plays it for presigned HTTPS URLs.
 * A3  presigned-URL ranged parquet reader (``src/datasource/reader.rs:14-109``)
-  — ``_RangedHttpFile`` issues ``Range: bytes=a-b`` GETs; pyarrow reads the
-  footer first, then only the projected column chunks.
+  — ``_RangedHttpFile`` issues ``Range: bytes=a-b`` GETs and fetches each
+  byte at most once: a read of every data column is one GET of the whole
+  file; a projected read holds pyarrow's footer-tail GET and fetches only
+  the projected column chunks outside it.
 * A4  projection pushdown — automatic via Catalyst on the local strategy;
   explicit ``columns=`` (mapped to ``pyarrow`` column selection) on the
   HTTP strategy.
@@ -92,21 +94,36 @@ def _op_column_names(op: Op) -> set[str]:
 
 
 class _RangedHttpFile(io.RawIOBase):
-    """Seekable read-only file over HTTP Range requests.
+    """Seekable read-only file over HTTP Range requests that fetches each
+    byte of the file at most once.
 
     The pyarrow parquet reader calls ``seek``/``read`` to load the footer,
-    then the projected column chunks — each ``read`` maps to one
-    ``Range: bytes=start-end`` GET, exactly the reference's
-    ``SignedParquetFileReader::get_range`` (src/datasource/reader.rs:25-49).
+    then the projected column chunks. Bytes move as ``Range: bytes=a-b``
+    GETs, as in the reference's ``SignedParquetFileReader::get_range``
+    (src/datasource/reader.rs:25-49), and one held suffix of the file
+    answers every read it covers:
+
+    * ``whole=True`` (the read decodes every data column): the first
+      ``read`` GETs ``[0, size)`` and every later read is served from it;
+    * otherwise the GET that ends at EOF (pyarrow's speculative footer
+      tail) is held, and a later read overlapping it fetches only the
+      bytes before it.
+
+    A server that ignores ``Range`` answers 200 with the whole object,
+    which is then held the same way. A body shorter than the listed size
+    raises :class:`DeltaSharingError` instead of decoding short bytes.
     """
 
-    def __init__(self, url: str, size: int, session=None):
+    def __init__(self, url: str, size: int, session=None,
+                 whole: bool = False):
         import requests
 
         self._url = url
         self._size = size
+        self._whole = whole
         self._pos = 0
         self._session = session or requests.Session()
+        self._tail = b""  # the held suffix [size - len(tail), size)
 
     def seekable(self) -> bool:
         return True
@@ -130,15 +147,32 @@ class _RangedHttpFile(io.RawIOBase):
     _BACKOFF_S = 0.5
 
     def read(self, n: int = -1) -> bytes:
+        if n is None or n < 0:
+            n = self._size - self._pos
+        start, end = self._pos, min(self._pos + n, self._size)
+        if start >= end:
+            return b""
+        held = self._size - len(self._tail)
+        if start < held:
+            lo, hi = ((0, self._size) if self._whole
+                      else (start, min(end, held)))
+            fetched = self._get(lo, hi)
+            if hi == self._size and not self._tail:
+                self._tail = fetched  # the whole file, or the footer probe
+            held = self._size - len(self._tail)
+        if start >= held:
+            data = self._tail[start - held:end - held]
+        else:
+            data = fetched + self._tail[:max(0, end - held)]
+        self._pos = start + len(data)
+        return data
+
+    def _get(self, lo: int, hi: int) -> bytes:
+        """Bytes ``[lo, hi)`` of the file in one ranged GET."""
         import time
 
         import requests
 
-        if n is None or n < 0:
-            n = self._size - self._pos
-        if n <= 0 or self._pos >= self._size:
-            return b""
-        end = min(self._pos + n, self._size) - 1
         # transient faults (connection resets, 5xx from object stores) are
         # routine at 100 TB scan scale: bounded retry with backoff; 4xx
         # (expired presigned URL) propagates so the caller can re-list
@@ -147,23 +181,30 @@ class _RangedHttpFile(io.RawIOBase):
             try:
                 resp = self._session.get(
                     self._url,
-                    headers={"Range": f"bytes={self._pos}-{end}"},
+                    headers={"Range": f"bytes={lo}-{hi - 1}"},
                     timeout=120,
                 )
                 if resp.status_code >= 500:
                     raise requests.HTTPError(
                         f"server error {resp.status_code}", response=resp)
+                if resp.status_code == 416:
+                    raise DeltaSharingError(
+                        f"{self._url} cannot serve bytes {lo}-{hi - 1}: "
+                        f"the object is shorter than its listed size "
+                        f"{self._size}")
                 resp.raise_for_status()
+                body = resp.content
                 if resp.status_code == 200:
                     # server ignored the Range header: the body is the
                     # WHOLE file. Treating it as the requested slice
                     # corrupts reads silently (parquet starts AND ends
-                    # with PAR1, so even the footer probe mis-binds)
-                    data = resp.content[self._pos:end + 1]
-                else:
-                    data = resp.content
-                self._pos += len(data)
-                return data
+                    # with PAR1, so even the footer probe mis-binds);
+                    # holding it serves every later read
+                    self._check_length(body, 0, self._size, resp)
+                    self._tail = body
+                    return body[lo:hi]
+                self._check_length(body, lo, hi, resp)
+                return body
             except requests.HTTPError as exc:
                 status = exc.response.status_code if exc.response is not None else None
                 if status is None or status < 500:
@@ -177,6 +218,19 @@ class _RangedHttpFile(io.RawIOBase):
             if attempt < self._RETRIES:
                 time.sleep(self._BACKOFF_S * (2 ** attempt))
         raise last_exc  # type: ignore[misc]
+
+    def _check_length(self, body: bytes, lo: int, hi: int, resp) -> None:
+        """A complete response whose body is not the requested length means
+        the object differs from its listing (e.g. a listed size past the
+        served object's end): retrying returns the same body, and decoding
+        it yields short or garbled rows."""
+        if len(body) != hi - lo:
+            raise DeltaSharingError(
+                f"GET bytes={lo}-{hi - 1} of {self._url} returned "
+                f"{len(body)} bytes, expected {hi - lo} (HTTP "
+                f"{resp.status_code}, Content-Range "
+                f"{resp.headers.get('Content-Range')!r}); the object does "
+                f"not match its listed size {self._size}")
 
     def size(self) -> int:
         return self._size
@@ -237,14 +291,44 @@ def _local_path(url: str) -> str:
     return unquote(urlparse(url).path)
 
 
-def _open_parquet_source(url: str, size: int, session=None):
-    """Local paths open directly; http(s) URLs go through ranged reads."""
-    parsed = urlparse(url)
-    if parsed.scheme in ("", "file"):
-        return _local_path(url)
-    if parsed.scheme in ("http", "https"):
-        return _RangedHttpFile(url, size, session=session)
-    raise DeltaSharingError(f"unsupported file URL scheme {parsed.scheme!r} in {url}")
+def _open_parquet(url: str, size: int, session, whole: bool, refresh):
+    """Open one shared parquet file for both scan kernels.
+
+    Local paths open directly; http(s) URLs go through a
+    :class:`_RangedHttpFile` (``whole``: the read decodes every data
+    column, so the file arrives in one GET). On 401/403 — an expired
+    presigned URL — ``refresh()`` supplies a fresh file action (or None to
+    give up) and the file reopens from its URL."""
+    import pyarrow.parquet as pq
+    import requests
+
+    def open_(u: str, s: int):
+        scheme = urlparse(u).scheme
+        if scheme in ("", "file"):
+            return pq.ParquetFile(_local_path(u))
+        if scheme not in ("http", "https"):
+            raise DeltaSharingError(
+                f"unsupported file URL scheme {scheme!r} in {u}")
+        # pre_buffer coalesces a projected read's column-chunk ranges
+        # into few GETs (on a real object store the round trips, not
+        # the bytes, dominate small-file cost); a whole-file read is
+        # already in memory after its one GET, so buffering it again
+        # would only copy it
+        return pq.ParquetFile(
+            _RangedHttpFile(u, s, session=session, whole=whole),
+            pre_buffer=not whole)
+
+    try:
+        return open_(url, size)
+    except requests.HTTPError as exc:
+        # ONLY auth failures mean an expired presigned URL; anything
+        # else (corrupt footer, 404, scheme errors) must surface as
+        # itself, not be masked by a pointless re-listing
+        status = exc.response.status_code if exc.response is not None else None
+        fresh = refresh() if status in (401, 403) else None
+        if fresh is None:
+            raise
+        return open_(fresh.url, fresh.size)
 
 
 def _fetch_batches_task(
@@ -258,14 +342,16 @@ def _fetch_batches_task(
 ) -> Iterator["pyarrow.RecordBatch"]:  # noqa: F821
     """mapInArrow worker: file descriptors in, table record batches out.
 
-    Runs on executors. Streams parquet row groups (never whole files) and
-    appends typed partition columns per file (A20). On an expired presigned
+    Runs on executors. Streams parquet row groups and appends typed
+    partition columns per file (A20). A projection covering every data
+    column fetches each file in one GET; a narrower one fetches the footer
+    and the projected column chunks (see ``_RangedHttpFile``). One
+    ``requests`` session serves the whole task. On an expired presigned
     URL (HTTP 403), re-lists the table once via a fresh client to obtain a
     fresh URL for the same file id (File.expirationTimestamp handling —
     the reference does not survive expiry; we do).
     """
     import pyarrow as pa
-    import pyarrow.parquet as pq
     import requests
 
     from pyspark.sql import types as ST
@@ -279,7 +365,7 @@ def _fetch_batches_task(
         positions_mask as _positions_mask,
     )
     from datafusion_delta_sharing_spark.sources.reader import (
-        _open_parquet_source,
+        _open_parquet,
         _spark_struct_to_arrow_schema,
     )
 
@@ -291,7 +377,12 @@ def _fetch_batches_task(
     )
     data_cols = [n for n in out_names if n not in partition_columns]
     part_cols = [n for n in out_names if n in partition_columns]
+    # a projection covering every data column decodes the whole file
+    whole = bool(data_cols) and set(data_cols) == {
+        f.name for f in full_schema.fields
+        if f.name not in partition_columns}
     session = requests.Session()
+    dv_versions: dict = {}  # DV file URL -> version byte, for this task
 
     fresh_actions: dict | None = None
 
@@ -332,7 +423,8 @@ def _fetch_batches_task(
 
     def dv_deleted(descriptor: dict, file_id: str):
         try:
-            return _dv_positions(descriptor, session=session)
+            return _dv_positions(descriptor, session=session,
+                                 version_bytes=dv_versions)
         except requests.HTTPError as exc:
             status = (exc.response.status_code
                       if exc.response is not None else None)
@@ -352,7 +444,8 @@ def _fetch_batches_task(
                     f"deletion vector of file {file_id!r} changed "
                     "between listing and scan; re-run the read for a "
                     "consistent snapshot") from exc
-            return _dv_positions(fresh_dv, session=session)
+            return _dv_positions(fresh_dv, session=session,
+                                 version_bytes=dv_versions)
 
     for desc_batch in descriptor_batches:
         rows = desc_batch.to_pylist()
@@ -363,25 +456,8 @@ def _fetch_batches_task(
             deleted = (dv_deleted(json.loads(dv_doc), file_id)
                        if dv_doc else None)
 
-            def open_reader(target_url: str):
-                source = _open_parquet_source(target_url, size, session=session)
-                # pre_buffer coalesces the projected column-chunk reads
-                # into ranged batches (fetch-probe measured: 5 -> 3 GETs
-                # per file, same bytes) — on a real object store the
-                # round trips, not the bytes, dominate small-file cost
-                if isinstance(source, _RangedHttpFile):
-                    return pq.ParquetFile(source, pre_buffer=True)
-                return pq.ParquetFile(source)
-
-            try:
-                reader = open_reader(url)
-            except requests.HTTPError as exc:
-                status = exc.response.status_code if exc.response is not None else None
-                fresh = refreshed_action(file_id) if status in (401, 403) else None
-                if fresh is None:
-                    raise
-                reader = open_reader(fresh.url)
-
+            reader = _open_parquet(url, size, session, whole,
+                                   lambda: refreshed_action(file_id))
             decoded = _decode(partition_values, full_schema, part_cols)
             file_row = 0  # physical row position within THIS file
             if not data_cols:
@@ -402,15 +478,9 @@ def _fetch_batches_task(
                         n = nrows
                     if n == 0:
                         continue
-                    arrays = []
-                    for name in out_names:
-                        arrow_type = arrow_out.field(name).type
-                        arrays.append(
-                            pa.nulls(n, arrow_type)
-                            if decoded[name] is None
-                            else pa.repeat(
-                                pa.scalar(decoded[name], type=arrow_type),
-                                n))
+                    arrays = [pa.repeat(pa.scalar(
+                        decoded[name], type=arrow_out.field(name).type), n)
+                        for name in out_names]
                     yield pa.RecordBatch.from_arrays(arrays,
                                                      schema=arrow_out)
                 continue
@@ -426,9 +496,9 @@ def _fetch_batches_task(
                 arrays = []
                 for name in out_names:
                     if name in partition_columns:
-                        arrow_type = arrow_out.field(name).type
-                        arrays.append(pa.nulls(n, arrow_type) if decoded[name] is None
-                                      else pa.array([decoded[name]] * n, type=arrow_type))
+                        arrays.append(pa.repeat(pa.scalar(
+                            decoded[name], type=arrow_out.field(name).type),
+                            n))
                     else:
                         idx = data.schema.get_field_index(name)
                         if idx < 0:

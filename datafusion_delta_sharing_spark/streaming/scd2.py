@@ -151,6 +151,7 @@ def scd2_upsert_sink(spark: SparkSession, state_dir: str,
         done = guard.done_buckets(current, run_id, batch_id, touched)
         todo = [b for b in touched if b not in done]
         if not todo:
+            guard.record(todo, batch_id)
             return
         in_todo = F.col("bucket").isin(todo)
         new_ev = events.filter(in_todo)

@@ -136,7 +136,12 @@ class ReplayGuard:
     which the memo records; batch ids are monotone within a run, so a
     bucket stamped at batch K can never block a batch > K it did not
     see. Replays WITHIN one incarnation (a caller re-invoking the same
-    batch id, as the replay tests do) hit the memo directly."""
+    batch id, as the replay tests do) hit the memo directly.
+
+    The memo counts as primed only once a batch has committed: if the
+    first write fails and the batch is retried, the retry probes again,
+    so stamps written by an earlier incarnation still block their
+    buckets."""
 
     def __init__(self) -> None:
         self._seen: dict = {}   # bucket -> highest batch_id stamped here
@@ -148,15 +153,16 @@ class ReplayGuard:
                 if self._seen.get(b, -1) >= batch_id}
         if not self._primed:
             done |= stamped_buckets(current, run_id, batch_id)
-            self._primed = True
         return done
 
     def record(self, todo: list, batch_id: int) -> None:
-        """Call AFTER the write committed — a failed write wrote no
-        stamps, so it must not poison the memo."""
+        """Call AFTER the write committed, or with an empty ``todo`` when
+        every touched bucket was already done — a failed write wrote no
+        stamps, so it must neither poison the memo nor prime it."""
         for b in todo:
             if batch_id > self._seen.get(b, -1):
                 self._seen[b] = batch_id
+        self._primed = True
 
 
 def carry_other_stamps(current: DataFrame, in_todo,
@@ -287,6 +293,7 @@ def upsert_totals_sink(spark: SparkSession, state_dir: str,
         done = guard.done_buckets(current, run_id, batch_id, touched)
         todo = [b for b in touched if b not in done]
         if not todo:
+            guard.record(todo, batch_id)
             return
         in_todo = F.col("bucket").isin(todo)
         data = (

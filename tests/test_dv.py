@@ -165,13 +165,20 @@ def test_ranged_http_fetch_of_shared_dv_file():
     table = MockTable(share="s", schema="d", name="t",
                       schema_string=schema, partition_columns=[], files=[])
     with MockSharingServer([table], parquet_bytes={"/m.dv": blob}) as srv:
+        versions: dict = {}  # one scan task's memo
         for off, data, expect in ((offsets[0], data1, [1]),
                                   (offsets[1], data2, [4, 9])):
             desc = {"storageType": "p",
                     "pathOrInlineDv": f"{srv.base_url}/m.dv",
                     "offset": off, "sizeInBytes": len(data),
                     "cardinality": len(expect)}
-            assert list(dv.dv_positions(desc)) == expect
+            assert list(dv.dv_positions(desc, version_bytes=versions)) \
+                == expect
+        # the task's two DVs share one DV file: one version-byte GET
+        assert [r["range"] for r in srv.requests] == [
+            "bytes=0-0",
+            f"bytes={offsets[0]}-{offsets[0] + len(data1) + 7}",
+            f"bytes={offsets[1]}-{offsets[1] + len(data2) + 7}"]
         # corrupt offsets past EOF surface the module's error type, not
         # an opaque HTTP/struct error
         with pytest.raises(DeltaSharingError, match="past the end|offset"):

@@ -203,6 +203,48 @@ def test_upsert_merge_is_replay_idempotent(spark, sf_dir, tmp_path):
         assert thrice[uid] == (2 * cents, 2 * n)
 
 
+def test_upsert_refused_first_batch_retry_probes_again(spark, sf_dir,
+                                                       tmp_path,
+                                                       monkeypatch):
+    """A restarted sink's first batch meets stamps from the incarnation
+    before it, its write is refused, and the same incarnation retries the
+    batch. The retry must still see the earlier stamps: a memo primed by
+    the refused attempt would merge the already-committed bucket twice."""
+    from datafusion_delta_sharing_spark.streaming import upsert as UP
+
+    state = str(tmp_path / "state")
+    batch = (load_table(spark, sf_dir, "events")
+             .select("user_id", "value").limit(500).localCheckpoint())
+    old = UP.upsert_totals_sink(spark, state, n_buckets=4,
+                                run_id="ckpt-r")
+    old(batch, 0)
+    once = {r.user_id: (r.total_cents, r.n_events)
+            for r in UP.state_totals(spark, state).collect()}
+    # the old incarnation crashed inside batch 1 after bucket 0 committed
+    old(batch.filter(F.pmod("user_id", F.lit(4)) == 0), 1)
+
+    restarted = UP.upsert_totals_sink(spark, state, n_buckets=4,
+                                      run_id="ckpt-r")
+    stamp_rows = UP.new_stamp_rows
+    refusals = []
+
+    def refuse_once(*args, **kwargs):
+        if not refusals:
+            refusals.append(args)
+            raise RuntimeError("synthetic write refusal")
+        return stamp_rows(*args, **kwargs)
+
+    monkeypatch.setattr(UP, "new_stamp_rows", refuse_once)
+    with pytest.raises(RuntimeError, match="synthetic write refusal"):
+        restarted(batch, 1)
+    assert sorted(refusals[0][2]) == [1, 2, 3]  # bucket 0 already done
+    restarted(batch, 1)
+    after = {r.user_id: (r.total_cents, r.n_events)
+             for r in UP.state_totals(spark, state).collect()}
+    assert after == {uid: (2 * cents, 2 * n)
+                     for uid, (cents, n) in once.items()}
+
+
 def test_upsert_overwrite_reads_its_own_state_dir(spark, sf_dir, tmp_path):
     """ADVICE r10 pin: the pre-write localCheckpoint is LAZY, so the
     write job's own tasks physically read the old state files while the

@@ -115,9 +115,12 @@ def test_http_strategy_end_to_end(spark):
         assert len(rows) == 6
         assert str(rows[1].day) == "2021-04-28" and rows[1].tag == "x"
         assert rows[4].day is None and rows[4].tag == "y"
-        # ranged reads actually happened (footer + data chunk GETs)
-        paths = [r["path"] for r in srv.requests if r["path"].endswith(".parquet")]
-        assert len(paths) >= 4
+        # every data column is read: one ranged GET per file, covering it
+        gets = sorted((r["path"], r["range"]) for r in srv.requests
+                      if r["path"].endswith(".parquet"))
+        assert gets == [
+            (p, f"bytes=0-{len(blobs[p]) - 1}")
+            for p in ("/a.parquet", "/b.parquet")]
 
 
 def test_http_strategy_projection(spark):
