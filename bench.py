@@ -209,6 +209,29 @@ def _previous_bench(root=None) -> dict:
             "substituted": False}
 
 
+def _full_archive_path(root: Path, env_round: str | None) -> Path | None:
+    """Where a full sf0.1 run archives its per-query map: the round named
+    by SPARK_GRAFT_BENCH_ROUND, or else the newest BENCH_r{N}.json's N + 1.
+    An inferred round never overwrites an existing BENCH_FULL_r{NN}.json
+    (a re-run after the driver's artifact write infers its round again):
+    the skipped path is printed and None returned."""
+    import glob
+    import re
+
+    if env_round:
+        return root / f"BENCH_FULL_r{int(env_round):02d}.json"
+    ns = [int(m.group(1)) for p in glob.glob(str(root / "BENCH_r*.json"))
+          if (m := re.search(r"BENCH_r(\d+)\.json$", p))]
+    this_round = (max(ns) + 1) if ns else 1
+    archive = root / f"BENCH_FULL_r{this_round:02d}.json"
+    if archive.exists():
+        print(f"not overwriting {archive}; set "
+              f"SPARK_GRAFT_BENCH_ROUND={this_round} to replace it",
+              file=sys.stderr)
+        return None
+    return archive
+
+
 def release_query_state(spark) -> None:
     """Drop every SQL-cached frame a finished query left behind
     (VERDICT r10 #5 — §5 cache hygiene). The operators deliberately
@@ -499,20 +522,12 @@ def main() -> None:
     # driver-shaped runs archive (the default SF), so sf0.01 iteration
     # loops don't clobber the round's sf0.1 record.
     if sf_val == 0.1 and not only:
-        import glob as _glob
-        import re as _re
-
-        env_round = os.environ.get("SPARK_GRAFT_BENCH_ROUND")
-        if env_round:
-            this_round = int(env_round)
-        else:
-            ns = [int(m.group(1))
-                  for p in _glob.glob(str(root / "BENCH_r*.json"))
-                  if (m := _re.search(r"BENCH_r(\d+)\.json$", p))]
-            this_round = (max(ns) + 1) if ns else 1
-        with open(root / f"BENCH_FULL_r{this_round:02d}.json", "w") as fh:
-            json.dump(doc, fh, indent=1)
-            fh.write("\n")
+        archive = _full_archive_path(
+            root, os.environ.get("SPARK_GRAFT_BENCH_ROUND"))
+        if archive is not None:
+            with open(archive, "w") as fh:
+                json.dump(doc, fh, indent=1)
+                fh.write("\n")
     # leading newline: if anything (JVM banner, a stray progress bar) left
     # an unterminated stdout line, the JSON must still start at column 0 —
     # r4's artifact was lost to exactly this gluing

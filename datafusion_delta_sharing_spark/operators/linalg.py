@@ -110,9 +110,12 @@ def gram_matrix_pandas(emb: DataFrame, vec_col: str,
     at d=512), because the quantization makes each partial integral.
 
     Preconditions (ADVICE r10): every non-empty vector must have the
-    SAME dimension — ragged input raises a ValueError naming the two
-    lengths (the join path would instead score per-pair n_vecs, a
-    different statistic); and vector ids must be unique upstream — a
+    SAME dimension (the join path would instead score per-pair n_vecs, a
+    different statistic). Ragged input within one task raises a
+    ValueError naming the two lengths; each partial also carries its
+    task's dimension, and the merge raises (``raise_error`` inside the
+    same aggregate, so no extra job) when two tasks disagree. And
+    vector ids must be unique upstream — a
     duplicated id contributes one outer product per copy here but
     cross-matched pairs in the join path, so the two paths only agree
     on id-deduplicated input (embeddings tables are, by contract).
@@ -152,6 +155,7 @@ def gram_matrix_pandas(emb: DataFrame, vec_col: str,
             sums = mat.sum(axis=0)
             iu = np.triu_indices(d)
             yield pd.DataFrame({
+                "dim": np.full(len(iu[0]), d, dtype="int64"),
                 "dim_i": iu[0].astype("int64"),
                 "dim_j": iu[1].astype("int64"),
                 "n_part": np.full(len(iu[0]), n, dtype="int64"),
@@ -162,11 +166,18 @@ def gram_matrix_pandas(emb: DataFrame, vec_col: str,
 
     partials = emb.select(vec_col).mapInPandas(
         _partials,
-        "dim_i bigint, dim_j bigint, n_part bigint, "
+        "dim bigint, dim_i bigint, dim_j bigint, n_part bigint, "
         "s_ij bigint, s_i bigint, s_j bigint")
+    # every task emits key (0, 0), so that group sees every task's dimension
+    lo, hi = F.min("dim"), F.max("dim")
+    ragged = F.raise_error(F.format_string(
+        "gram_matrix_pandas needs uniform vector dimensions; saw lengths "
+        "%d and %d in different tasks — ragged embeddings must be "
+        "filtered or padded upstream", lo, hi))
     return (
         partials.groupBy("dim_i", "dim_j")
-        .agg(F.sum("n_part").alias("n_vecs"), F.sum("s_ij").alias("_s_ij"),
+        .agg(F.when(lo == hi, F.sum("n_part")).otherwise(ragged)
+             .alias("n_vecs"), F.sum("s_ij").alias("_s_ij"),
              F.sum("s_i").alias("_s_i"), F.sum("s_j").alias("_s_j"))
         .select("dim_i", "dim_j", "n_vecs",
                 (F.col("n_vecs") * F.col("_s_ij")

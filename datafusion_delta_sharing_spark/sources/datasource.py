@@ -340,9 +340,12 @@ def _read_file_partition(options, full_schema: T.StructType,
     parquet -> Arrow batches cast to the share schema, typed partition
     values re-attached per batch (A2/A3/A20). Shared by the batch and
     streaming readers. Every data column is decoded, so the file arrives in
-    one whole-file GET. If the recorded presigned URL has expired (streaming
-    replay long after the manifest was logged), the file is re-resolved by
-    id through a fresh listing — one REST round-trip, executor-local."""
+    one whole-file GET; an on-file deletion vector's version byte and frame
+    are planned together (``dv.DvReads``), one GET when the frame starts
+    within 64 KiB of the DV file's start. If the recorded presigned URL has
+    expired (streaming replay long after the manifest was logged), the file
+    is re-resolved by id through a fresh listing — one REST round-trip,
+    executor-local."""
     import pyarrow as pa
     import requests
 

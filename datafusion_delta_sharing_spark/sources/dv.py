@@ -42,7 +42,7 @@ from __future__ import annotations
 
 import binascii
 import struct
-from typing import Sequence
+from typing import Iterable, Sequence
 
 import numpy as np
 
@@ -326,58 +326,92 @@ def inline_descriptor(positions: Sequence[int],
 _RESOLVABLE_DV_SCHEMES = ("", "file", "http", "https")
 
 
-_RETRIES = 3
-_BACKOFF_S = 0.5
+def _frame_range(descriptor: dict) -> tuple[int, int]:
+    """The object range ``[offset, offset + 4 + size + 4)`` of a ``p``
+    descriptor's frame: size prefix, data, CRC-32. ``offset`` is OPTIONAL
+    in the Delta protocol; reference readers default a missing one to the
+    first frame, right after the 1-byte format version (a wrong default
+    fails LOUDLY downstream on the size/magic/CRC checks)."""
+    offset = descriptor.get("offset")
+    if offset is None:
+        offset = 1
+    if isinstance(offset, bool) or not isinstance(offset, int) or offset < 1:
+        raise DeltaSharingError(
+            "deletion vector descriptor with storageType='p' has a "
+            f"non-integer or out-of-range offset {offset!r}")
+    size = descriptor.get("sizeInBytes")
+    if isinstance(size, bool) or not isinstance(size, int) or size < 0:
+        raise DeltaSharingError(
+            "deletion vector descriptor with storageType='p' has a "
+            f"non-integer or negative sizeInBytes {size!r}")
+    return offset, offset + 4 + size + 4
 
 
-def _get_with_retry(http, url: str, headers: dict | None = None):
-    """Bounded-retry GET matching the parquet ranged reader's posture
-    (reader._RangedHttpFile.read): transient faults — 5xx and transport
-    errors (resets surface as ChunkedEncodingError etc., so the base
-    RequestException is caught) — retry with exponential backoff; 4xx
-    propagates to the caller (an expired presigned DV URL must surface,
-    not spin). Without this, a single flaky 503 on a shared DV file
-    failed the whole fetch task while the parquet bytes beside it
-    retried."""
-    import time
+class DvReads:
+    """The on-file deletion-vector bytes of one scan task, fetched in as few
+    GETs as the coalescing rule allows.
 
-    import requests
+    Delta packs many data files' DVs into one shared DV file. For each
+    http(s) DV file the task needs ``[0, 1)`` (the format version byte)
+    and every frame range; ranges within ``_COALESCE_BYTES`` of each other
+    merge, and each merged range is one GET, made when a DV first needs it
+    and held for the rest of the task. A range no plan covers is fetched
+    on its own.
+    """
 
-    last_exc: Exception | None = None
-    for attempt in range(_RETRIES + 1):
-        try:
-            resp = http.get(url, timeout=120, headers=headers or {})
-            if resp.status_code >= 500:
-                raise requests.HTTPError(
-                    f"server error {resp.status_code}", response=resp)
-            return resp
-        except requests.HTTPError as exc:
-            status = (exc.response.status_code
-                      if exc.response is not None else None)
-            if status is None or status < 500:
-                raise
-            last_exc = exc
-        except requests.RequestException as exc:
-            last_exc = exc
-        if attempt < _RETRIES:
-            time.sleep(_BACKOFF_S * (2 ** attempt))
-    raise last_exc  # type: ignore[misc]
+    def __init__(self, descriptors: Iterable[dict], session=None):
+        from urllib.parse import urlparse
+
+        from datafusion_delta_sharing_spark.sources.reader import (
+            _COALESCE_BYTES)
+
+        self._session = session
+        wanted: dict[str, list[tuple[int, int]]] = {}
+        for d in descriptors:
+            url = d.get("pathOrInlineDv", "")
+            if (d.get("storageType") != "p"
+                    or urlparse(url).scheme not in ("http", "https")):
+                continue
+            try:
+                frame = _frame_range(d)
+            except DeltaSharingError:
+                continue  # dv_positions refuses it when its file is read
+            wanted.setdefault(url, [(0, 1)]).append(frame)
+        self._gets: dict[str, list[list[int]]] = {}
+        for url, ranges in wanted.items():
+            merged: list[list[int]] = []
+            for lo, hi in sorted(ranges):
+                if merged and lo - merged[-1][1] <= _COALESCE_BYTES:
+                    merged[-1][1] = max(merged[-1][1], hi)
+                else:
+                    merged.append([lo, hi])
+            self._gets[url] = merged
+        self._held: dict[str, list[tuple[int, bytes]]] = {}
+
+    def read(self, url: str, lo: int, hi: int) -> bytes:
+        """Bytes ``[lo, hi)`` of the DV file at ``url``; shorter only when
+        a server that ignores ``Range`` sent a shorter whole file."""
+        import requests
+
+        from datafusion_delta_sharing_spark.sources.reader import _ranged_get
+
+        for at, body in self._held.get(url, ()):
+            if at <= lo and hi <= at + len(body):
+                return body[lo - at:hi - at]
+        get_lo, get_hi = next(
+            ((a, b) for a, b in self._gets.get(url, ()) if a <= lo
+             and hi <= b), (lo, hi))
+        at, body = _ranged_get(self._session or requests, url, get_lo,
+                               get_hi)
+        self._held.setdefault(url, []).append((at, body))
+        return body[lo - at:hi - at]
 
 
-def _fetch_dv_file(path: str, session=None,
-                   offset: int | None = None,
-                   length: int | None = None,
-                   version_bytes: dict | None = None) -> bytes:
-    """Read DV file bytes. For http(s) with a known (offset, length),
-    fetch ONLY the version byte and the frame slice via Range requests —
-    Delta packs many files' DVs into one shared DV file, so a full
-    download per data file is O(file) x N tasks instead of O(DV slice)
-    (r5 review). ``version_bytes`` (DV file URL -> version byte, kept by
-    the caller for one task) lets the DVs of one task that share a DV file
-    fetch its version byte once. A server that ignores Range (200)
-    degrades to the full read. Returns bytes indexable as if the WHOLE
-    file were read (a zero-filled prefix stands in for the unfetched
-    middle)."""
+def _dv_file_bytes(path: str, lo: int, hi: int,
+                   reads: DvReads) -> tuple[bytes, bytes]:
+    """``(version byte, bytes [lo, hi))`` of a DV file: a local read, or
+    ranged GETs through ``reads``. Either part comes back short when the
+    file ends first."""
     from urllib.parse import urlparse
 
     parsed = urlparse(path)
@@ -390,39 +424,14 @@ def _fetch_dv_file(path: str, session=None,
 
         try:
             with open(_local_path(path), "rb") as fh:
-                return fh.read()
+                blob = fh.read()
         except OSError as exc:
             raise DeltaSharingError(
                 f"cannot read deletion vector file {path!r}: {exc}"
             ) from exc
+        return blob[:1], blob[lo:hi]
     if parsed.scheme in ("http", "https"):
-        import requests
-
-        http = session or requests
-        if offset is not None and length is not None and offset > 0:
-            versions = {} if version_bytes is None else version_bytes
-            if path not in versions:
-                head = _get_with_retry(http, path,
-                                       headers={"Range": "bytes=0-0"})
-                head.raise_for_status()
-                if head.status_code == 200:
-                    return head.content  # server ignored Range: full file
-                versions[path] = head.content[:1]
-            slice_resp = _get_with_retry(
-                http, path,
-                headers={"Range": f"bytes={offset}-{offset + length - 1}"})
-            if slice_resp.status_code == 416:
-                raise DeltaSharingError(
-                    f"corrupt deletion vector: offset {offset} is past "
-                    f"the end of DV file {path!r}")
-            slice_resp.raise_for_status()
-            if slice_resp.status_code == 200:
-                return slice_resp.content  # server ignored Range
-            body = slice_resp.content[:length]
-            return versions[path] + b"\x00" * (offset - 1) + body
-        resp = _get_with_retry(http, path)
-        resp.raise_for_status()
-        return resp.content
+        return reads.read(path, 0, 1), reads.read(path, lo, hi)
     raise DeltaSharingError(
         f"unsupported deletion vector file scheme {parsed.scheme!r}")
 
@@ -487,7 +496,7 @@ def dv_identity_changed(fresh_dv: dict | None, descriptor: dict) -> bool:
 
 
 def dv_positions(descriptor: dict, session=None,
-                 version_bytes: dict | None = None) -> np.ndarray:
+                 reads: DvReads | None = None) -> np.ndarray:
     """Deletion-vector descriptor -> sorted uint64 deleted row positions.
 
     Supports ``storageType`` "i" (inline Z85) and "p" (absolute path /
@@ -495,6 +504,14 @@ def dv_positions(descriptor: dict, session=None,
     cannot be resolved through the sharing protocol — the client only
     ever sees presigned URLs, never the table root — and is refused
     loudly, as are unknown storage types.
+
+    An http(s) DV file's bytes come through ``reads``, the scan task's
+    :class:`DvReads` planned over all of its descriptors; without one, the
+    version byte and this frame alone are planned, which is one GET when
+    the frame starts within ``_COALESCE_BYTES`` of the file's start. The
+    version byte, size, CRC-32 and cardinality are checked on the served
+    bytes either way. An expired presigned URL propagates as the 401/403
+    ``HTTPError`` for the caller to re-list.
     """
     validate_descriptor(descriptor)
     storage = descriptor.get("storageType")
@@ -508,42 +525,28 @@ def dv_positions(descriptor: dict, session=None,
                 f"not match the {len(raw)}-byte decoded payload")
         data = raw[:size]
     elif storage == "p":
-        offset = descriptor.get("offset")
-        if offset is None:
-            # offset is OPTIONAL in the Delta protocol; reference readers
-            # default a missing offset rather than failing. The first DV
-            # frame sits right after the 1-byte format version; a wrong
-            # default fails LOUDLY downstream (size/magic/CRC checks)
-            offset = 1
-        if isinstance(offset, bool) or not isinstance(offset, int) \
-                or offset < 1:
-            raise DeltaSharingError(
-                "deletion vector descriptor with storageType='p' has a "
-                f"non-integer or out-of-range offset {offset!r}")
-        blob = _fetch_dv_file(
-            payload, session=session, offset=offset,
-            length=(4 + size + 4) if isinstance(size, int) else None,
-            version_bytes=version_bytes)
-        if not blob or blob[0] != DV_FILE_FORMAT_VERSION:
+        lo, hi = _frame_range(descriptor)
+        version, frame = _dv_file_bytes(
+            payload, lo, hi, reads or DvReads([descriptor], session))
+        if version != bytes([DV_FILE_FORMAT_VERSION]):
             raise DeltaSharingError(
                 "corrupt deletion vector file: bad format version "
-                f"{blob[0] if blob else 'EOF'}")
-        if offset + 4 > len(blob):
+                f"{version[0] if version else 'EOF'}")
+        if len(frame) < 4:
             raise DeltaSharingError(
-                f"corrupt deletion vector: offset {offset} is past the "
-                f"end of the {len(blob)}-byte DV file")
-        (stored_size,) = struct.unpack_from(">I", blob, offset)
-        if isinstance(size, int) and stored_size != size:
+                f"corrupt deletion vector: offset {lo} is past the end "
+                f"of the DV file {payload!r}")
+        (stored_size,) = struct.unpack_from(">I", frame, 0)
+        if stored_size != size:
             raise DeltaSharingError(
                 f"corrupt deletion vector: stored size {stored_size} != "
                 f"descriptor sizeInBytes {size}")
-        if offset + 4 + stored_size + 4 > len(blob):
+        if len(frame) < hi - lo:
             raise DeltaSharingError(
                 f"corrupt deletion vector: frame of {stored_size} bytes "
-                f"at offset {offset} overruns the {len(blob)}-byte "
-                "DV file")
-        data = blob[offset + 4:offset + 4 + stored_size]
-        (crc,) = struct.unpack_from(">I", blob, offset + 4 + stored_size)
+                f"at offset {lo} overruns the DV file {payload!r}")
+        data = frame[4:4 + stored_size]
+        (crc,) = struct.unpack_from(">I", frame, 4 + stored_size)
         if binascii.crc32(data) & 0xFFFFFFFF != crc:
             raise DeltaSharingError(
                 "corrupt deletion vector: CRC-32 mismatch")

@@ -7,10 +7,14 @@ Parity targets (SURVEY.md §2 Tier A):
   vectorized parquet reader plays this role on the local-path strategy; a
   ``mapInArrow`` fetch stage plays it for presigned HTTPS URLs.
 * A3  presigned-URL ranged parquet reader (``src/datasource/reader.rs:14-109``)
-  — ``_RangedHttpFile`` issues ``Range: bytes=a-b`` GETs and fetches each
-  byte at most once: a read of every data column is one GET of the whole
-  file; a projected read holds pyarrow's footer-tail GET and fetches only
-  the projected column chunks outside it.
+  — ``_RangedHttpFile`` issues ``Range: bytes=a-b`` GETs through
+  ``_ranged_get`` and fetches each byte at most once. Two ranges of one
+  object within ``_COALESCE_BYTES`` (pyarrow's 64 KiB footer probe) of
+  each other are one GET: a read of every data column, or a projected
+  read of a file of at most 128 KiB, is one GET of the whole file; a
+  projected read of a larger file holds the footer-tail GET and fetches
+  only the projected column chunks outside it; and a task's deletion
+  vectors in one shared DV file coalesce (``dv.DvReads``).
 * A4  projection pushdown — automatic via Catalyst on the local strategy;
   explicit ``columns=`` (mapped to ``pyarrow`` column selection) on the
   HTTP strategy.
@@ -93,25 +97,105 @@ def _op_column_names(op: Op) -> set[str]:
 # ---------------------------------------------------------------------------
 
 
+# pyarrow's speculative footer read. The scan already spends this many bytes
+# to save a round trip, so two ranges of one object within this distance of
+# each other are fetched in one GET: a small projected file is read whole,
+# and one task's deletion vectors in a shared DV file coalesce.
+_COALESCE_BYTES = 64 * 1024
+
+_RETRIES = 3
+_BACKOFF_S = 0.5
+
+
+def _ranged_get(session, url: str, lo: int, hi: int,
+                size: int | None = None) -> tuple[int, bytes]:
+    """Bytes ``[lo, hi)`` of ``url`` in one ``Range`` GET, as ``(start,
+    body)`` with ``body[0]`` at object offset ``start``.
+
+    The one GET of both scan kernels, for parquet and deletion-vector
+    bytes alike. Transient faults (5xx, dropped connections) retry with
+    backoff; any other 4xx propagates, so the caller can re-list on an
+    expired presigned URL (401/403). A server that ignores ``Range``
+    answers 200 with the whole object, which comes back whole (``start``
+    0) for the caller to hold. A 416, or a 206 body that is not the
+    requested length, raises :class:`DeltaSharingError`: the object is
+    shorter than its listing, and decoding short bytes yields wrong rows.
+    ``size`` (the listed object size, when known) is checked against a
+    200 body too.
+    """
+    import time
+
+    import requests
+
+    listed = ("" if size is None
+              else f", which does not match its listed size {size}")
+    last_exc: Exception | None = None
+    for attempt in range(_RETRIES + 1):
+        try:
+            resp = session.get(url, headers={"Range": f"bytes={lo}-{hi - 1}"},
+                               timeout=120)
+            if resp.status_code >= 500:
+                raise requests.HTTPError(
+                    f"server error {resp.status_code}", response=resp)
+            if resp.status_code == 416:
+                raise DeltaSharingError(
+                    f"{url} cannot serve bytes {lo}-{hi - 1}: the range "
+                    f"starts past the end of the object{listed}")
+            resp.raise_for_status()
+            body = resp.content
+            if resp.status_code == 200:
+                if size is not None and len(body) != size:
+                    raise _length_error(url, 0, size, body, resp, listed)
+                return 0, body
+            if len(body) != hi - lo:
+                raise _length_error(url, lo, hi, body, resp, listed)
+            return lo, body
+        except requests.HTTPError as exc:
+            status = (exc.response.status_code
+                      if exc.response is not None else None)
+            if status is None or status < 500:
+                raise
+            last_exc = exc
+        except requests.RequestException as exc:
+            # resets mid-body surface as ChunkedEncodingError /
+            # ContentDecodingError, NOT ConnectionError — catching the
+            # base class keeps the bounded retry for all of them
+            last_exc = exc
+        if attempt < _RETRIES:
+            time.sleep(_BACKOFF_S * (2 ** attempt))
+    raise last_exc  # type: ignore[misc]
+
+
+def _length_error(url: str, lo: int, hi: int, body: bytes, resp,
+                  listed: str) -> DeltaSharingError:
+    """A complete response of the wrong length: retrying returns the same
+    body, so it fails the read instead."""
+    return DeltaSharingError(
+        f"GET bytes={lo}-{hi - 1} of {url} returned {len(body)} bytes, "
+        f"expected {hi - lo} (HTTP {resp.status_code}, Content-Range "
+        f"{resp.headers.get('Content-Range')!r}); the requested range runs "
+        f"past the end of the object{listed}")
+
+
 class _RangedHttpFile(io.RawIOBase):
     """Seekable read-only file over HTTP Range requests that fetches each
     byte of the file at most once.
 
     The pyarrow parquet reader calls ``seek``/``read`` to load the footer,
-    then the projected column chunks. Bytes move as ``Range: bytes=a-b``
-    GETs, as in the reference's ``SignedParquetFileReader::get_range``
-    (src/datasource/reader.rs:25-49), and one held suffix of the file
-    answers every read it covers:
+    then the projected column chunks. Bytes move through
+    :func:`_ranged_get`, as in the reference's
+    ``SignedParquetFileReader::get_range`` (src/datasource/reader.rs:25-49),
+    and one held suffix of the file answers every read it covers:
 
-    * ``whole=True`` (the read decodes every data column): the first
-      ``read`` GETs ``[0, size)`` and every later read is served from it;
+    * ``whole=True`` (the read decodes every data column, or a file of at
+      most twice ``_COALESCE_BYTES`` decodes any): the first ``read`` GETs
+      ``[0, size)`` and every later read is served from it;
     * otherwise the GET that ends at EOF (pyarrow's speculative footer
       tail) is held, and a later read overlapping it fetches only the
       bytes before it.
 
-    A server that ignores ``Range`` answers 200 with the whole object,
-    which is then held the same way. A body shorter than the listed size
-    raises :class:`DeltaSharingError` instead of decoding short bytes.
+    A 200 from a server that ignores ``Range`` is the whole object and is
+    held the same way.
     """
 
     def __init__(self, url: str, size: int, session=None,
@@ -143,9 +227,6 @@ class _RangedHttpFile(io.RawIOBase):
     def tell(self) -> int:
         return self._pos
 
-    _RETRIES = 3
-    _BACKOFF_S = 0.5
-
     def read(self, n: int = -1) -> bytes:
         if n is None or n < 0:
             n = self._size - self._pos
@@ -156,9 +237,11 @@ class _RangedHttpFile(io.RawIOBase):
         if start < held:
             lo, hi = ((0, self._size) if self._whole
                       else (start, min(end, held)))
-            fetched = self._get(lo, hi)
-            if hi == self._size and not self._tail:
-                self._tail = fetched  # the whole file, or the footer probe
+            at, body = _ranged_get(self._session, self._url, lo, hi,
+                                   self._size)
+            fetched = body[lo - at:hi - at]
+            if at + len(body) == self._size and not self._tail:
+                self._tail = body  # the whole file, or the footer probe
             held = self._size - len(self._tail)
         if start >= held:
             data = self._tail[start - held:end - held]
@@ -166,71 +249,6 @@ class _RangedHttpFile(io.RawIOBase):
             data = fetched + self._tail[:max(0, end - held)]
         self._pos = start + len(data)
         return data
-
-    def _get(self, lo: int, hi: int) -> bytes:
-        """Bytes ``[lo, hi)`` of the file in one ranged GET."""
-        import time
-
-        import requests
-
-        # transient faults (connection resets, 5xx from object stores) are
-        # routine at 100 TB scan scale: bounded retry with backoff; 4xx
-        # (expired presigned URL) propagates so the caller can re-list
-        last_exc: Exception | None = None
-        for attempt in range(self._RETRIES + 1):
-            try:
-                resp = self._session.get(
-                    self._url,
-                    headers={"Range": f"bytes={lo}-{hi - 1}"},
-                    timeout=120,
-                )
-                if resp.status_code >= 500:
-                    raise requests.HTTPError(
-                        f"server error {resp.status_code}", response=resp)
-                if resp.status_code == 416:
-                    raise DeltaSharingError(
-                        f"{self._url} cannot serve bytes {lo}-{hi - 1}: "
-                        f"the object is shorter than its listed size "
-                        f"{self._size}")
-                resp.raise_for_status()
-                body = resp.content
-                if resp.status_code == 200:
-                    # server ignored the Range header: the body is the
-                    # WHOLE file. Treating it as the requested slice
-                    # corrupts reads silently (parquet starts AND ends
-                    # with PAR1, so even the footer probe mis-binds);
-                    # holding it serves every later read
-                    self._check_length(body, 0, self._size, resp)
-                    self._tail = body
-                    return body[lo:hi]
-                self._check_length(body, lo, hi, resp)
-                return body
-            except requests.HTTPError as exc:
-                status = exc.response.status_code if exc.response is not None else None
-                if status is None or status < 500:
-                    raise
-                last_exc = exc
-            except requests.RequestException as exc:
-                # resets mid-body surface as ChunkedEncodingError /
-                # ContentDecodingError, NOT ConnectionError — catching
-                # the base class keeps the bounded retry for all of them
-                last_exc = exc
-            if attempt < self._RETRIES:
-                time.sleep(self._BACKOFF_S * (2 ** attempt))
-        raise last_exc  # type: ignore[misc]
-
-    def _check_length(self, body: bytes, lo: int, hi: int, resp) -> None:
-        """A complete response whose body is not the requested length means
-        the object differs from its listing (e.g. a listed size past the
-        served object's end): retrying returns the same body, and decoding
-        it yields short or garbled rows."""
-        if len(body) != hi - lo:
-            raise DeltaSharingError(
-                f"GET bytes={lo}-{hi - 1} of {self._url} returned "
-                f"{len(body)} bytes, expected {hi - lo} (HTTP "
-                f"{resp.status_code}, Content-Range "
-                f"{resp.headers.get('Content-Range')!r}); the object does "
-                f"not match its listed size {self._size}")
 
     def size(self) -> int:
         return self._size
@@ -295,8 +313,8 @@ def _open_parquet(url: str, size: int, session, whole: bool, refresh):
     """Open one shared parquet file for both scan kernels.
 
     Local paths open directly; http(s) URLs go through a
-    :class:`_RangedHttpFile` (``whole``: the read decodes every data
-    column, so the file arrives in one GET). On 401/403 — an expired
+    :class:`_RangedHttpFile` (``whole``: the file arrives in one GET —
+    see ``_fetch_batches_task`` for when). On 401/403 — an expired
     presigned URL — ``refresh()`` supplies a fresh file action (or None to
     give up) and the file reopens from its URL."""
     import pyarrow.parquet as pq
@@ -311,9 +329,11 @@ def _open_parquet(url: str, size: int, session, whole: bool, refresh):
                 f"unsupported file URL scheme {scheme!r} in {u}")
         # pre_buffer coalesces a projected read's column-chunk ranges
         # into few GETs (on a real object store the round trips, not
-        # the bytes, dominate small-file cost); a whole-file read is
-        # already in memory after its one GET, so buffering it again
-        # would only copy it
+        # the bytes, dominate small-file cost); that matters only for a
+        # file too large to read whole. A whole-file read (every data
+        # column, or a file of at most twice _COALESCE_BYTES) is in
+        # memory after its one GET, so buffering it again would only
+        # copy it
         return pq.ParquetFile(
             _RangedHttpFile(u, s, session=session, whole=whole),
             pre_buffer=not whole)
@@ -344,9 +364,12 @@ def _fetch_batches_task(
 
     Runs on executors. Streams parquet row groups and appends typed
     partition columns per file (A20). A projection covering every data
-    column fetches each file in one GET; a narrower one fetches the footer
-    and the projected column chunks (see ``_RangedHttpFile``). One
-    ``requests`` session serves the whole task. On an expired presigned
+    column fetches each file in one GET, as does any projection decoding a
+    data column of a file of at most twice ``_COALESCE_BYTES``; otherwise
+    the footer and the projected column chunks are fetched (see
+    ``_RangedHttpFile``). Before its first file the task plans the GETs of
+    all its on-file deletion vectors (see ``DvReads``). One ``requests``
+    session serves the whole task. On an expired presigned
     URL (HTTP 403), re-lists the table once via a fresh client to obtain a
     fresh URL for the same file id (File.expirationTimestamp handling —
     the reference does not survive expiry; we do).
@@ -360,11 +383,13 @@ def _fetch_batches_task(
         decode_partition_values as _decode,
     )
     from datafusion_delta_sharing_spark.sources.dv import (
+        DvReads as _DvReads,
         dv_identity_changed as _dv_identity_changed,
         dv_positions as _dv_positions,
         positions_mask as _positions_mask,
     )
     from datafusion_delta_sharing_spark.sources.reader import (
+        _COALESCE_BYTES,
         _open_parquet,
         _spark_struct_to_arrow_schema,
     )
@@ -378,11 +403,14 @@ def _fetch_batches_task(
     data_cols = [n for n in out_names if n not in partition_columns]
     part_cols = [n for n in out_names if n in partition_columns]
     # a projection covering every data column decodes the whole file
-    whole = bool(data_cols) and set(data_cols) == {
+    all_data = bool(data_cols) and set(data_cols) == {
         f.name for f in full_schema.fields
         if f.name not in partition_columns}
     session = requests.Session()
-    dv_versions: dict = {}  # DV file URL -> version byte, for this task
+    rows = [row for batch in descriptor_batches for row in batch.to_pylist()]
+    dv_docs = [json.loads(row["deletion_vector"])
+               if row.get("deletion_vector") else None for row in rows]
+    dv_reads = _DvReads(filter(None, dv_docs), session)
 
     fresh_actions: dict | None = None
 
@@ -424,7 +452,7 @@ def _fetch_batches_task(
     def dv_deleted(descriptor: dict, file_id: str):
         try:
             return _dv_positions(descriptor, session=session,
-                                 version_bytes=dv_versions)
+                                 reads=dv_reads)
         except requests.HTTPError as exc:
             status = (exc.response.status_code
                       if exc.response is not None else None)
@@ -444,73 +472,71 @@ def _fetch_batches_task(
                     f"deletion vector of file {file_id!r} changed "
                     "between listing and scan; re-run the read for a "
                     "consistent snapshot") from exc
-            return _dv_positions(fresh_dv, session=session,
-                                 version_bytes=dv_versions)
+            return _dv_positions(fresh_dv, session=session)
 
-    for desc_batch in descriptor_batches:
-        rows = desc_batch.to_pylist()
-        for row in rows:
-            url, size, file_id = row["url"], row["size"], row["file_id"]
-            partition_values = json.loads(row["partition_values"])
-            dv_doc = row.get("deletion_vector")
-            deleted = (dv_deleted(json.loads(dv_doc), file_id)
-                       if dv_doc else None)
-
-            reader = _open_parquet(url, size, session, whole,
-                                   lambda: refreshed_action(file_id))
-            decoded = _decode(partition_values, full_schema, part_cols)
-            file_row = 0  # physical row position within THIS file
-            if not data_cols:
-                # projection is partition columns only (r9 review):
-                # row counts come from the row-group METADATA — the old
-                # `columns=data_cols or None` fallback read EVERY data
-                # column of every file just to learn batch lengths,
-                # turning a metadata-sized scan into a full download on
-                # a wide table. DV masks still apply per row group.
-                md = reader.metadata
-                for gi in range(md.num_row_groups):
-                    nrows = md.row_group(gi).num_rows
-                    if deleted is not None:
-                        mask = _positions_mask(deleted, file_row, nrows)
-                        file_row += nrows
-                        n = sum(mask) if mask is not None else nrows
-                    else:
-                        n = nrows
-                    if n == 0:
-                        continue
-                    arrays = [pa.repeat(pa.scalar(
-                        decoded[name], type=arrow_out.field(name).type), n)
-                        for name in out_names]
-                    yield pa.RecordBatch.from_arrays(arrays,
-                                                     schema=arrow_out)
-                continue
-            for data in reader.iter_batches(columns=data_cols or None):
+    for row, dv_doc in zip(rows, dv_docs):
+        url, size, file_id = row["url"], row["size"], row["file_id"]
+        partition_values = json.loads(row["partition_values"])
+        deleted = dv_deleted(dv_doc, file_id) if dv_doc else None
+        # a small file decoding any data column is read whole: every
+        # byte outside the footer probe lies within one gap of it
+        whole = all_data or (bool(data_cols)
+                             and size <= 2 * _COALESCE_BYTES)
+        reader = _open_parquet(url, size, session, whole,
+                               lambda: refreshed_action(file_id))
+        decoded = _decode(partition_values, full_schema, part_cols)
+        file_row = 0  # physical row position within THIS file
+        if not data_cols:
+            # projection is partition columns only (r9 review):
+            # row counts come from the row-group METADATA — the old
+            # `columns=data_cols or None` fallback read EVERY data
+            # column of every file just to learn batch lengths,
+            # turning a metadata-sized scan into a full download on
+            # a wide table. DV masks still apply per row group.
+            md = reader.metadata
+            for gi in range(md.num_row_groups):
+                nrows = md.row_group(gi).num_rows
                 if deleted is not None:
-                    mask = _positions_mask(deleted, file_row, data.num_rows)
-                    file_row += data.num_rows
-                    if mask is not None:
-                        data = data.filter(pa.array(mask))
-                        if data.num_rows == 0:
-                            continue
-                n = data.num_rows
-                arrays = []
-                for name in out_names:
-                    if name in partition_columns:
-                        arrays.append(pa.repeat(pa.scalar(
-                            decoded[name], type=arrow_out.field(name).type),
-                            n))
+                    mask = _positions_mask(deleted, file_row, nrows)
+                    file_row += nrows
+                    n = sum(mask) if mask is not None else nrows
+                else:
+                    n = nrows
+                if n == 0:
+                    continue
+                arrays = [pa.repeat(pa.scalar(
+                    decoded[name], type=arrow_out.field(name).type), n)
+                    for name in out_names]
+                yield pa.RecordBatch.from_arrays(arrays,
+                                                 schema=arrow_out)
+            continue
+        for data in reader.iter_batches(columns=data_cols or None):
+            if deleted is not None:
+                mask = _positions_mask(deleted, file_row, data.num_rows)
+                file_row += data.num_rows
+                if mask is not None:
+                    data = data.filter(pa.array(mask))
+                    if data.num_rows == 0:
+                        continue
+            n = data.num_rows
+            arrays = []
+            for name in out_names:
+                if name in partition_columns:
+                    arrays.append(pa.repeat(pa.scalar(
+                        decoded[name], type=arrow_out.field(name).type),
+                        n))
+                else:
+                    idx = data.schema.get_field_index(name)
+                    if idx < 0:
+                        # schema evolution: pre-add files lack the
+                        # column — NULL per Delta semantics; raw -1
+                        # would silently alias the LAST column
+                        arrays.append(
+                            pa.nulls(n, arrow_out.field(name).type))
                     else:
-                        idx = data.schema.get_field_index(name)
-                        if idx < 0:
-                            # schema evolution: pre-add files lack the
-                            # column — NULL per Delta semantics; raw -1
-                            # would silently alias the LAST column
-                            arrays.append(
-                                pa.nulls(n, arrow_out.field(name).type))
-                        else:
-                            arrays.append(data.column(idx).cast(
-                                arrow_out.field(name).type))
-                yield pa.RecordBatch.from_arrays(arrays, schema=arrow_out)
+                        arrays.append(data.column(idx).cast(
+                            arrow_out.field(name).type))
+            yield pa.RecordBatch.from_arrays(arrays, schema=arrow_out)
 
 
 def _spark_struct_to_arrow_schema(struct: T.StructType):

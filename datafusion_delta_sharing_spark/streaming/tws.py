@@ -24,10 +24,7 @@ from typing import Any, Iterator
 
 import pandas as pd
 
-from datafusion_delta_sharing_spark.functions.money import (
-    cents_sql,
-    cents_sum_np,
-)
+from datafusion_delta_sharing_spark.functions.money import cents_sum_np
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.streaming.stateful_processor import (
     StatefulProcessor,
@@ -137,13 +134,3 @@ def tws_user_totals(spark: SparkSession, sf_dir: str,
             .agg(F.max("n_events").alias("n_events"),
                  F.max_by("total_cents", "n_events").alias("total_cents")))
 
-
-def tws_user_totals_sql(events_sql: str = "events") -> str:
-    """DuckDB oracle: the whole-history aggregate the final emissions must
-    equal regardless of slicing."""
-    return f"""
-    SELECT user_id, count(*) AS n_events,
-           CAST(sum({cents_sql('value')}) AS BIGINT)
-               AS total_cents
-    FROM {events_sql} GROUP BY user_id
-    """

@@ -440,7 +440,11 @@ def write_slice_files(sliced: DataFrame, out: str, slice_ids) -> None:
     writes two files, still one per partition value), partitionBy-write,
     then move each ``__slice=i/part-*.parquet`` up as ``slice-i.parquet``
     with a strictly increasing mtime (FileStreamSource replays
-    oldest-mtime-first and tie-breaks on RANDOM part names — r9 review)."""
+    oldest-mtime-first and tie-breaks on RANDOM part names — r9 review).
+
+    A slice with no rows writes no file (partitionBy makes no directory
+    for it), so a one-file-per-trigger stream over ``out`` runs fewer
+    micro-batches than ``len(slice_ids)``."""
     import glob as _glob
     import shutil
 

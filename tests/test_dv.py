@@ -146,46 +146,90 @@ def test_out_of_range_offset_and_truncation_refuse(tmp_path):
                          "offset": offsets[0], "sizeInBytes": len(data)})
 
 
-def test_ranged_http_fetch_of_shared_dv_file():
-    """Delta packs many files' DVs into one shared DV file; the http path
-    must fetch only the version byte + the descriptor's frame slice via
-    Range requests, not the whole file per task (r5 review). Decoding the
-    SECOND frame exercises the stitched-blob offset arithmetic; a server
-    that ignores Range still works (the code falls back to the 200
-    body)."""
+def _serve_dv_file(blob: bytes):
     import json
 
     from tests.mock_server import MockSharingServer, MockTable
 
     schema = json.dumps({"type": "struct", "fields": [
         {"name": "id", "type": "long", "nullable": True, "metadata": {}}]})
+    table = MockTable(share="s", schema="d", name="t",
+                      schema_string=schema, partition_columns=[], files=[])
+    return MockSharingServer([table], parquet_bytes={"/m.dv": blob})
+
+
+def _p_desc(url: str, offset: int, data: bytes, cardinality: int) -> dict:
+    return {"storageType": "p", "pathOrInlineDv": url, "offset": offset,
+            "sizeInBytes": len(data), "cardinality": cardinality}
+
+
+def test_ranged_http_fetch_of_shared_dv_file():
+    """Delta packs many files' DVs into one shared DV file. One scan task
+    plans its DVs' ranges (the version byte and each frame) over all of
+    its descriptors; ranges within 64 KiB of each other are one GET, so
+    the task's two DVs cost one GET, ending at the last frame's end.
+    Decoding the SECOND frame exercises the offset arithmetic; a lone
+    descriptor is planned the same way, and a server that ignores Range
+    still works (its 200 body is the whole file)."""
     data1 = dv.encode_dv_data([1])
     data2 = dv.encode_dv_data([4, 9], use_runs=True)
     blob, offsets = dv.encode_dv_file([data1, data2])
-    table = MockTable(share="s", schema="d", name="t",
-                      schema_string=schema, partition_columns=[], files=[])
-    with MockSharingServer([table], parquet_bytes={"/m.dv": blob}) as srv:
-        versions: dict = {}  # one scan task's memo
-        for off, data, expect in ((offsets[0], data1, [1]),
-                                  (offsets[1], data2, [4, 9])):
-            desc = {"storageType": "p",
-                    "pathOrInlineDv": f"{srv.base_url}/m.dv",
-                    "offset": off, "sizeInBytes": len(data),
-                    "cardinality": len(expect)}
-            assert list(dv.dv_positions(desc, version_bytes=versions)) \
-                == expect
-        # the task's two DVs share one DV file: one version-byte GET
-        assert [r["range"] for r in srv.requests] == [
-            "bytes=0-0",
-            f"bytes={offsets[0]}-{offsets[0] + len(data1) + 7}",
-            f"bytes={offsets[1]}-{offsets[1] + len(data2) + 7}"]
+    end2 = offsets[1] + len(data2) + 8
+    with _serve_dv_file(blob) as srv:
+        url = f"{srv.base_url}/m.dv"
+        descs = [_p_desc(url, offsets[0], data1, 1),
+                 _p_desc(url, offsets[1], data2, 2)]
+        reads = dv.DvReads(descs)
+        assert list(dv.dv_positions(descs[0], reads=reads)) == [1]
+        assert list(dv.dv_positions(descs[1], reads=reads)) == [4, 9]
+        assert [r["range"] for r in srv.requests] == [f"bytes=0-{end2 - 1}"]
+        # without a task plan, the version byte and the frame are one GET
+        assert list(dv.dv_positions(descs[1])) == [4, 9]
+        assert srv.requests[-1]["range"] == f"bytes=0-{end2 - 1}"
+        srv.ignore_range = True
+        assert list(dv.dv_positions(descs[1])) == [4, 9]
         # corrupt offsets past EOF surface the module's error type, not
         # an opaque HTTP/struct error
         with pytest.raises(DeltaSharingError, match="past the end|offset"):
-            dv.dv_positions({"storageType": "p",
-                             "pathOrInlineDv": f"{srv.base_url}/m.dv",
-                             "offset": len(blob) + 64,
-                             "sizeInBytes": len(data1)})
+            dv.dv_positions(_p_desc(url, len(blob) + 64, data1, 1))
+
+
+def test_dvs_more_than_64k_apart_get_separate_gets():
+    """Two frames separated by a frame of more than 64 KiB (a dense
+    bitmap DV) are two GETs; the version byte rides with the first."""
+    data1 = dv.encode_dv_data([1])
+    big = dv.encode_dv_data(range(0, 600_000, 2))
+    data3 = dv.encode_dv_data([5, 6])
+    assert len(big) > 64 * 1024
+    blob, offsets = dv.encode_dv_file([data1, big, data3])
+    with _serve_dv_file(blob) as srv:
+        url = f"{srv.base_url}/m.dv"
+        descs = [_p_desc(url, offsets[0], data1, 1),
+                 _p_desc(url, offsets[2], data3, 2)]
+        reads = dv.DvReads(descs)
+        assert [list(dv.dv_positions(d, reads=reads)) for d in descs] \
+            == [[1], [5, 6]]
+        assert [r["range"] for r in srv.requests] == [
+            f"bytes=0-{offsets[0] + len(data1) + 7}",
+            f"bytes={offsets[2]}-{offsets[2] + len(data3) + 7}"]
+
+
+def test_short_dv_body_or_416_raises_typed_error():
+    """A frame that runs past the served file's end comes back as a short
+    206 body; an offset far past it gets a 416. Both fail the DV with a
+    DeltaSharingError instead of decoding short bytes."""
+    data = dv.encode_dv_data([1, 2])
+    blob, offsets = dv.encode_dv_file([data])
+    with _serve_dv_file(blob) as srv:
+        url = f"{srv.base_url}/m.dv"
+        short = {**_p_desc(url, offsets[0], data, 2),
+                 "sizeInBytes": len(data) + 100}
+        with pytest.raises(DeltaSharingError, match="past the end"):
+            dv.dv_positions(short)
+        with pytest.raises(DeltaSharingError, match="past the end"):
+            dv.dv_positions(_p_desc(url, len(blob) + 200_000, data, 2))
+        assert [r["range"].split("-")[0] for r in srv.requests][-1] == \
+            f"bytes={len(blob) + 200_000}"
 
 
 def test_local_dv_with_http_data_refused_at_plan_time():

@@ -488,6 +488,33 @@ def test_previous_bench_prefers_full_archives(tmp_path):
     assert (p["round"], p["substituted"]) == (9, False)
 
 
+def test_full_archive_is_never_overwritten_by_an_inferred_round(
+        tmp_path, capsys):
+    """A full run infers its round as the newest BENCH_r{N}.json + 1; if
+    that round's BENCH_FULL archive exists, it is skipped (and the path
+    printed) unless SPARK_GRAFT_BENCH_ROUND names the round."""
+    import pathlib
+    import sys
+
+    repo = pathlib.Path(__file__).resolve().parent.parent
+    sys.path.insert(0, str(repo))
+    try:
+        import bench
+    finally:
+        while str(repo) in sys.path:
+            sys.path.remove(str(repo))
+
+    (tmp_path / "BENCH_r11.json").write_text("{}")
+    fresh = bench._full_archive_path(tmp_path, None)
+    assert fresh == tmp_path / "BENCH_FULL_r12.json"
+    fresh.write_text("{}")
+    assert bench._full_archive_path(tmp_path, None) is None
+    assert str(fresh) in capsys.readouterr().err
+    assert bench._full_archive_path(tmp_path, "12") == fresh
+    assert bench._full_archive_path(tmp_path, "13") == (
+        tmp_path / "BENCH_FULL_r13.json")
+
+
 def test_fill_compact_queries_budget(tmp_path):
     """VERDICT r10 #2: the compact stdout line must carry as many
     per-query medians as fit the driver's 2,000-char tail — greedy

@@ -67,6 +67,20 @@ def test_gram_pandas_half_rounding_matches_spark(spark):
     assert exploded == pandas_path
 
 
+def test_gram_pandas_refuses_dimensions_that_differ_between_tasks(spark):
+    """Each task's vectors are uniform, so the per-task guard passes; the
+    merge must still refuse, because the tasks disagree (2 vs 3)."""
+    emb = (spark.range(0, 4, numPartitions=2)
+           .withColumn("embedding", F.when(
+               F.col("id") < 2, F.array(F.lit(0.5), F.lit(0.25)))
+               .otherwise(F.array(F.lit(0.5), F.lit(0.25), F.lit(1.0)))))
+    assert sorted(len(rows) for rows in emb.rdd.glom()
+                  .map(lambda part: {len(r.embedding) for r in part})
+                  .collect()) == [1, 1]
+    with pytest.raises(Exception, match="uniform vector dimensions"):
+        LA.gram_matrix_pandas(emb, "embedding").collect()
+
+
 def test_covariance_diagonal_is_nonnegative(spark, sf_dir):
     emb = load_table(spark, sf_dir, "embeddings").limit(80)
     diag = (LA.embedding_covariance(emb, "embedding", "vec_id")

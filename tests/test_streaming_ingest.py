@@ -8,6 +8,7 @@ arbitrary batch DataFrame logic transactionally per microbatch.
 
 from __future__ import annotations
 
+import os
 import time
 
 from pyspark.sql import functions as F
@@ -164,3 +165,28 @@ def test_compact_stamps_reports_cleared_empty_buckets(spark, tmp_path):
     # the emptied bucket is actually gone from disk, so re-running
     # finds nothing dead — the overcount ADVICE r9 flagged
     assert compact_stamps(spark, state, live_runs=("live",)) == 0
+
+
+def test_write_slice_files_writes_no_file_for_an_empty_slice(spark,
+                                                             tmp_path):
+    """Slice 1 has no rows: it gets no file, so a one-file-per-trigger
+    stream over the output runs two micro-batches, not three."""
+    from datafusion_delta_sharing_spark.streaming.upsert import (
+        write_slice_files,
+    )
+
+    out = str(tmp_path / "slices")
+    sliced = spark.createDataFrame(
+        [(1, 0), (2, 0), (3, 2)], "v long, __slice int")
+    write_slice_files(sliced, out, range(3))
+    assert sorted(f for f in os.listdir(out) if f.endswith(".parquet")) \
+        == ["slice-0-0.parquet", "slice-2-0.parquet"]
+    batches = []
+    query = (spark.readStream.schema("v long")
+             .option("maxFilesPerTrigger", 1).parquet(out)
+             .writeStream.trigger(availableNow=True)
+             .foreachBatch(lambda df, bid: batches.append(
+                 sorted(r.v for r in df.collect())))
+             .option("checkpointLocation", str(tmp_path / "ckpt")).start())
+    query.awaitTermination()
+    assert batches == [[1, 2], [3]]
