@@ -86,59 +86,13 @@ def _hyperplanes(dim: int, n_planes: int, table: int = 0) -> list[list[float]]:
     return planes
 
 
-def lsh_signature(df: DataFrame, dim: int, n_planes: int = 12,
-                  id_col: str = "vec_id", vec_col: str = "embedding") -> DataFrame:
-    """Random-hyperplane signature: bit p = (v · h_p) > 0, packed into a
-    long. Hyperplane dot products are zip_with/aggregate — JVM-side."""
-    signature = _signature_expr(vec_col, _hyperplanes(dim, n_planes))
-    return df.select(F.col(id_col).alias("id"), F.col(vec_col).alias("vec"),
-                     signature.alias("bucket"))
-
-
-def _signature_expr(vec_col: str, planes: list[list[float]]):
-    """Packed sign-bit signature of ``vec_col`` against the given planes —
-    bit p = (v · h_p) > 0. The plane matrix is ONE nested-array literal
-    iterated by higher-order functions (transform over planes, zip_with/
-    aggregate per dot, indexed transform for the bit pack), not n_planes
-    unrolled aggregate expressions: the unrolled form made Catalyst
-    analyze + Janino compile a 4096-literal tree PER TABLE (~10 s of
-    driver time for 8 tables × 8 planes before the first row moved —
-    measured on ann_lsh_topk). Same fold order per dot, so results are
-    bit-identical to the unrolled spelling."""
-    _check_packable(len(planes))
-    return _signature_from_mat(vec_col, _matrix_literal(planes))
-
-
-def _check_packable(n_planes: int) -> None:
-    """Bits are packed as a sum of pow(2.0, p) doubles — exact only for
-    p <= 52 (and the long accumulator caps at 63). Past that the signature
-    would be silently wrong, so refuse loudly (ADVICE r4). ONE guard shared
-    by the single-matrix and per-table paths — a limit fix must not be
-    able to diverge between them."""
-    if n_planes > 52:
-        raise ValueError(
-            f"n_planes={n_planes} exceeds the 52-bit double-exact "
-            "packing limit; use <= 52 planes (or multiple hash tables)")
-
-
 def _matrix_rows_sql(planes: list[list[float]]) -> str:
     """Plane matrix -> 'array(...),array(...)' SQL literal rows. repr() is
     the shortest exact round-trip form, so the doubles are bit-identical
-    to the lit() spelling. Shared by both literal builders — a formatting
-    fix (e.g. NaN handling) must apply to both."""
+    to the lit() spelling."""
     return ",".join(
         "array(" + ",".join(f"{float(v)!r}D" for v in plane) + ")"
         for plane in planes)
-
-
-def _matrix_literal(planes: list[list[float]]):
-    """Plane matrix -> ONE array-of-arrays literal Column, built as a SQL
-    expression string so the whole matrix costs a single py4j call:
-    per-element construction (nested F.array/F.lit — and F.lit(list),
-    which expands to the same) is one driver RPC per element, profiled at
-    ~7s of ann_lsh_topk wall time (8 tables x 8 planes x 64 dims = 4096
-    round trips) before the first job started."""
-    return F.expr(f"array({_matrix_rows_sql(planes)})")
 
 
 def _signature_from_mat(vec_col: str, mat):
@@ -167,7 +121,13 @@ def _lsh_buckets(df: DataFrame, dim: int, n_planes: int, n_tables: int,
     round-trips (~0.4s each) on the driver. Per-table values are
     unchanged — same plane derivation, same fold order — so buckets are
     bit-identical to the per-table spelling."""
-    _check_packable(n_planes)
+    if n_planes > 52:
+        # bits are packed as a sum of pow(2.0, p) doubles — exact only for
+        # p <= 52 (and the long accumulator caps at 63). Past that the
+        # signature would be silently wrong, so refuse loudly (ADVICE r4)
+        raise ValueError(
+            f"n_planes={n_planes} exceeds the 52-bit double-exact "
+            "packing limit; use <= 52 planes (or multiple hash tables)")
     if n_tables < 1:
         # an empty table set would posexplode to zero bucket rows and
         # silently report "no candidates" for a config typo

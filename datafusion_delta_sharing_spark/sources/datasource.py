@@ -5,9 +5,11 @@ The closest Spark-native analogue of the reference's DataFusion
 ``schema()`` (metadata fetch), ``pushFilters`` (A5: filters -> JSON predicate
 hints, ALL filters returned unhandled so Spark keeps the residual — the
 reference's ``Inexact`` verdict, table.rs:198-213), ``partitions()`` (file
-listing with server + stats pruning; one partition per file, A1) and
-``read()`` on executors (ranged-HTTP parquet -> Arrow batches + typed
-partition columns, A2/A3/A20).
+listing with server pruning, checked and stats-pruned by ``scan.plan_files``;
+one partition per file, A1) and ``read()`` on executors (``scan.read_files``:
+ranged-HTTP parquet -> Arrow batches + typed partition columns, A2/A3/A20).
+This module adapts the one scan path of ``sources/scan.py`` to Spark's
+DataSource API: filters to hints, stream offsets and the commit log.
 
 Usage::
 
@@ -58,12 +60,20 @@ from pyspark.sql.datasource import (
     StringStartsWith,
 )
 
+from datafusion_delta_sharing_spark.client import TableData
 from datafusion_delta_sharing_spark.errors import DeltaSharingError, PredicateError
 from datafusion_delta_sharing_spark.plans.predicates import Op, ValueType, conjunction
-from datafusion_delta_sharing_spark.plans.pruning import may_match
 from datafusion_delta_sharing_spark.securable import Table
-from datafusion_delta_sharing_spark.sources.dv import (
-    validate_descriptor as validate_dv_descriptor,
+from datafusion_delta_sharing_spark.sources.scan import (
+    FileTask,
+    _has_variant,
+    plan_files,
+    read_files,
+    relist,
+)
+from datafusion_delta_sharing_spark.sources.schema import (
+    column_mapping,
+    decode_partition_values,
 )
 
 
@@ -87,33 +97,21 @@ def _make_client(options) -> tuple:
 
 
 class _FilePartition(InputPartition):
-    def __init__(self, url: str, size: int, file_id: str,
-                 partition_values: dict[str, str],
-                 deletion_vector: dict | None = None,
+    """One shared file per Spark partition (``task`` None: the sentinel of
+    an empty listing, since Spark requires at least one partition).
+    ``spec`` pins the task's re-list (``scan.relist``); ``column_mapped``:
+    delta.columnMapping.mode is name/id, so the parquet columns carry the
+    schema's physicalName metadata instead of the logical field names."""
+
+    def __init__(self, task: FileTask | None, spec: dict | None = None,
                  column_mapped: bool = False):
-        self.url = url
-        self.size = size
-        self.file_id = file_id
-        # keys are LOGICAL names (partitions() normalizes column-mapped
-        # tables' physical keys before planning)
-        self.partition_values = partition_values
-        self.deletion_vector = deletion_vector
-        # True when delta.columnMapping.mode is name/id: the executor
-        # read resolves parquet columns via the schema's physicalName
-        # metadata instead of the logical field names
+        self.task = task
+        self.spec = spec or {}
         self.column_mapped = column_mapped
 
-
-class _CDFFilePartition(_FilePartition):
-    def __init__(self, url: str, size: int, file_id: str,
-                 partition_values: dict[str, str], kind: str,
-                 version: int, timestamp: int,
-                 deletion_vector: dict | None = None):
-        super().__init__(url, size, file_id, partition_values,
-                         deletion_vector)
-        self.kind = kind          # add | remove | cdf
-        self.version = version
-        self.timestamp = timestamp  # ms epoch
+    @property
+    def file_id(self) -> str:
+        return self.task.file_id
 
 
 def _filters_to_op(filters: Sequence[Filter], schema: T.StructType) -> Op | None:
@@ -214,11 +212,7 @@ class DeltaSharingBatchReader(DataSourceReader):
         version, timestamp = _snapshot_pins(self.options)
         data = client.get_table_data(table, json_predicate_hints=hints,
                                      version=version, timestamp=timestamp)
-        _check_reader_features(data.protocol)
-        from datafusion_delta_sharing_spark.sources.reader import (
-            _has_variant,
-        )
-
+        plan = plan_files(data, self.full_schema, self.hints_op)
         if _has_variant(self.full_schema):
             # this source always decodes through pyarrow, which cannot
             # parse a parquet footer containing the VARIANT logical type
@@ -226,222 +220,58 @@ class DeltaSharingBatchReader(DataSourceReader):
                 "table has VARIANT columns, which format('deltasharing') "
                 "cannot decode (pyarrow footer parse); use "
                 "DeltaSharingReader over a local (file://) share")
-        if data.metadata.format_provider.lower() != "parquet":
-            # refuse at PLAN time like the DeltaSharingReader path does
-            # (r9 review): without this, every executor task fails deep
-            # inside the parquet footer parse after downloading bytes
-            raise DeltaSharingError(
-                f"unsupported file format "
-                f"{data.metadata.format_provider!r}; only parquet-backed "
-                "shares are supported")
-        mapping = _column_mapping_of(data.metadata, self.full_schema)
-        # rename-swap guard (r9 review, mirrors the reader scan path):
-        # when one column's logical name is another's physical name, a
-        # spelling-agnostic stats lookup can read the WRONG column's
-        # range and a get(k, k) key normalization can misroute a
-        # partition value — disable stats pruning and refuse ambiguous
-        # partition keys instead
-        from datafusion_delta_sharing_spark.sources.schema import (
-            ambiguous_mapping_names,
-        )
-
-        ambiguous = ambiguous_mapping_names(mapping) if mapping else set()
-        files = list(data.files)
-        if ambiguous:
-            clash = sorted({k for f in files if f.partition_values
-                            for k in f.partition_values if k in ambiguous})
-            if clash:
-                raise DeltaSharingError(
-                    "column-mapping renames make partition-value key(s) "
-                    f"{clash} ambiguous (one column's logical name is "
-                    "another's physical name); ask the provider for a "
-                    "parquet-format share")
-        if self.hints_op is not None and not ambiguous:
-            # two exact stat sources per file — the server's stats JSON
-            # and synthetic stats from the partition values (a server
-            # that ignores jsonPredicateHints returns every partition).
-            # Under column mapping, keys may be physical (raw delta-
-            # format actions) or logical (parquet-format, server-
-            # translated): prune under both spellings — the wrong one
-            # finds no stats and cannot exclude, so the conjunction
-            # stays sound (ambiguous rename-swap tables skip pruning;
-            # Spark re-applies every filter, so results stay exact)
-            from datafusion_delta_sharing_spark.plans.pruning import (
-                partition_value_stats,
-            )
-
-            ops = [self.hints_op]
-            if mapping:
-                ops.append(self.hints_op.rename_columns(mapping))
-            files = [f for f in files
-                     if all(may_match(op, st) for op in ops
-                            for st in (f.parsed_stats(),
-                                       partition_value_stats(
-                                           f.partition_values)))]
-        if not files:
-            # Spark requires >= 1 partition; empty sentinel yields no batches
-            return [_FilePartition("", 0, "", {})]
-        for f in files:
-            if f.deletion_vector:  # refuse unresolvable DVs at plan time
-                validate_dv_descriptor(f.deletion_vector, data_url=f.url)
-        inverse = {v: k for k, v in (mapping or {}).items()}
-        return [_FilePartition(f.url, f.size, f.id,
-                               {inverse.get(k, k): v
-                                for k, v in f.partition_values.items()},
-                               deletion_vector=f.deletion_vector,
-                               column_mapped=bool(mapping))
-                for f in files]
+        if not plan.files:
+            return [_FilePartition(None)]
+        # this source reads in LOGICAL names: the plan's physical
+        # partition-value keys go back to logical, and the executor maps
+        # the parquet columns through the schema's physicalName metadata
+        names = {p: l for l, p in (plan.mapping or {}).items()}
+        spec = {"version": version, "timestamp": timestamp}
+        return [_FilePartition(
+                    FileTask(f.url, f.size, f.id, _partition_constants(
+                        self.options, self.full_schema,
+                        {names.get(k, k): v
+                         for k, v in f.partition_values.items()}),
+                        f.deletion_vector),
+                    spec, column_mapped=bool(plan.mapping))
+                for f in plan.files]
 
     def read(self, partition: _FilePartition):
-        if not partition.url:
+        if partition.task is None:
             return iter(())
         return _read_file_partition(self.options, self.full_schema, partition)
 
 
-def _partition_columns_of(options, full_schema: T.StructType,
-                          partition: _FilePartition) -> list[str]:
-    raw_pcols = options.get("partition_columns")
-    pcol_set = (set(json.loads(raw_pcols)) if raw_pcols
-                else set(partition.partition_values))
-    return [f.name for f in full_schema.fields if f.name in pcol_set]
+def _partition_constants(options, schema: T.StructType,
+                         partition_values: dict[str, str]) -> dict:
+    """A file's typed partition values, keyed by logical column name: the
+    partition columns ``schema()`` recorded in the options (or, for a
+    caller-given schema, the file's keys), decoded against ``schema``."""
+    raw = options.get("partition_columns")
+    names = set(json.loads(raw)) if raw else set(partition_values)
+    return decode_partition_values(
+        partition_values, schema,
+        [f.name for f in schema.fields if f.name in names])
 
 
-def _check_reader_features(protocol) -> None:
-    """Refuse required delta reader features the scan layer cannot honor
-    (same check as DeltaSharingReader._dataframe_from_listing — silently
-    scanning e.g. a typeWidening table as plain parquet yields wrong
-    rows)."""
-    from datafusion_delta_sharing_spark.sources.reader import (
-        _SUPPORTED_READER_FEATURES,
-    )
+def _read_file_partition(options, schema: T.StructType,
+                         partition: _FilePartition):
+    """Executor-side read of ONE shared file for the batch source and both
+    streams: ``scan.read_files`` over the partition's task, in the order of
+    ``schema``'s fields. If a presigned URL has expired (streaming replay
+    long after the manifest was logged), the file is re-resolved by id
+    through one re-list pinned to ``partition.spec``, with the profile
+    read again from the options."""
 
-    unsupported = [f for f in protocol.reader_features
-                   if f.lower() not in _SUPPORTED_READER_FEATURES]
-    if unsupported:
-        raise DeltaSharingError(
-            f"table requires reader features {sorted(unsupported)} "
-            "this client does not implement; supported: "
-            f"{sorted(_SUPPORTED_READER_FEATURES)}")
+    def relisted():
+        client, table = _make_client(options)
+        return relist(json.dumps(client.profile.to_doc()),
+                      table.full_name(), partition.spec)
 
-
-def _column_mapping_of(metadata, full_schema: T.StructType) -> dict | None:
-    """One validated entry point shared with the reader paths — see
-    sources/schema.column_mapping_of (r9 review unification)."""
-    from datafusion_delta_sharing_spark.sources.schema import (
-        column_mapping_of,
-    )
-
-    return column_mapping_of(metadata, full_schema)
-
-
-def _read_file_partition(options, full_schema: T.StructType,
-                         partition: _FilePartition, refresh=None):
-    """Executor-side read of ONE shared file: ranged-HTTP (or file://)
-    parquet -> Arrow batches cast to the share schema, typed partition
-    values re-attached per batch (A2/A3/A20). Shared by the batch and
-    streaming readers. Every data column is decoded, so the file arrives in
-    one whole-file GET; an on-file deletion vector's version byte and frame
-    are planned together (``dv.DvReads``), one GET when the frame starts
-    within 64 KiB of the DV file's start. If the recorded presigned URL has
-    expired (streaming replay long after the manifest was logged), the file
-    is re-resolved by id through a fresh listing — one REST round-trip,
-    executor-local."""
-    import pyarrow as pa
-    import requests
-
-    from datafusion_delta_sharing_spark.sources.dv import (
-        dv_identity_changed,
-        dv_positions,
-        positions_mask,
-    )
-    from datafusion_delta_sharing_spark.sources.reader import (
-        _open_parquet,
-        _spark_struct_to_arrow_schema,
-    )
-    from datafusion_delta_sharing_spark.sources.schema import (
-        decode_partition_values,
-    )
-
-    partition_columns = _partition_columns_of(options, full_schema, partition)
-    # column-mapped tables: the parquet columns are named by the schema's
-    # physicalName metadata (available executor-side ON the schema, no
-    # extra driver state); partition_values keys were normalized to
-    # logical at planning time, so only the parquet read needs physical
-    # spellings — output batches are logical either way
-    phys: dict[str, str] = {}
-    if getattr(partition, "column_mapped", False):
-        from datafusion_delta_sharing_spark.sources.schema import (
-            column_mapping,
-        )
-
-        phys = column_mapping(full_schema) or {}
-    data_cols = [phys.get(f.name, f.name) for f in full_schema.fields
-                 if f.name not in partition_columns]
-    arrow_schema = _spark_struct_to_arrow_schema(full_schema)
-    decoded = decode_partition_values(
-        partition.partition_values, full_schema, partition_columns)
-    dv = getattr(partition, "deletion_vector", None)
-    if refresh is None:
-        refresh = lambda: _refresh_file_action(options, partition.file_id)  # noqa: E731
-    session = requests.Session()  # the DV and data GETs of this task
-
-    def dv_deleted(descriptor):
-        """Decode the DV; on an expired presigned DV URL (401/403),
-        re-resolve the file once and retry with the fresh descriptor —
-        the same escape hatch the data URL gets below. The fresh DV must
-        describe the SAME deletion set (a replayed microbatch must emit
-        its original rows): if the table gained deletes since the batch
-        was logged, silently using the new DV would change row content
-        between original and replay — refuse loudly instead."""
-        try:
-            return dv_positions(descriptor, session=session)
-        except requests.HTTPError as exc:
-            status = (exc.response.status_code
-                      if exc.response is not None else None)
-            if status not in (401, 403):
-                raise
-            fresh_dv = refresh().deletion_vector
-            if dv_identity_changed(fresh_dv, descriptor):
-                raise DeltaSharingError(
-                    f"deletion vector of file {partition.file_id!r} "
-                    "changed between the logged microbatch and its "
-                    "replay; cannot reproduce the original rows "
-                    f"(logged {descriptor!r}, current {fresh_dv!r})"
-                ) from exc
-            return dv_positions(fresh_dv, session=session)
-
-    deleted = dv_deleted(dv) if dv else None
-    reader = _open_parquet(partition.url, partition.size, session,
-                           whole=True, refresh=refresh)
-    file_row = 0  # physical row position within the file
-    for batch in reader.iter_batches(columns=data_cols or None):
-        if deleted is not None:
-            mask = positions_mask(deleted, file_row, batch.num_rows)
-            file_row += batch.num_rows
-            if mask is not None:
-                batch = batch.filter(pa.array(mask))
-                if batch.num_rows == 0:
-                    continue
-        n = batch.num_rows
-        arrays = []
-        for field in full_schema.fields:
-            atype = arrow_schema.field(field.name).type
-            if field.name in partition_columns:
-                arrays.append(pa.repeat(
-                    pa.scalar(decoded[field.name], type=atype), n))
-            else:
-                idx = batch.schema.get_field_index(
-                    phys.get(field.name, field.name))
-                if idx < 0:
-                    # schema evolution: files written before a column was
-                    # added lack it — Delta semantics is NULL. Indexing
-                    # with the raw -1 would silently return the LAST
-                    # column's data under this name (pyarrow negative
-                    # indexing), which is data corruption, not an error
-                    arrays.append(pa.nulls(n, atype))
-                else:
-                    arrays.append(batch.column(idx).cast(atype))
-        yield pa.RecordBatch.from_arrays(arrays, schema=arrow_schema)
+    file_names = ((column_mapping(schema) or {})
+                  if partition.column_mapped else {})
+    yield from read_files([partition.task], schema, None, file_names,
+                          relisted)
 
 
 def _check_schema_drift(reader, table, schema_string: str) -> None:
@@ -470,41 +300,6 @@ def _snapshot_pins(options) -> tuple[int | None, str | None]:
             f"versionAsOf must be an integer version, got {raw!r}"
         ) from exc
     return version, options.get("timestampAsOf")
-
-
-def _refresh_file_action(options, file_id: str):
-    """Re-resolve a file by id via a fresh listing (expired-URL escape
-    hatch); the re-list stays inside the same pinned snapshot, if any.
-    Returns the fresh FileAction — URL, size AND deletion-vector
-    descriptor, whose presigned DV URL can expire exactly like the data
-    URL."""
-    client, table = _make_client(options)
-    version, timestamp = _snapshot_pins(options)
-    data = client.get_table_data(table, version=version, timestamp=timestamp)
-    for f in data.files:
-        if f.id == file_id:
-            return f
-    raise DeltaSharingError(
-        f"file {file_id!r} of {table.full_name()} is no longer listed "
-        "(expired or vacuumed) — cannot replay this partition")
-
-
-def _refresh_cdf_file_action(options, file_id: str, version: int):
-    """Expired-URL escape hatch for CDF partitions: change-action files
-    (remove/cdc) never appear in the snapshot listing `_refresh_file_action`
-    consults, so a CDF replay must re-resolve through `/changes` for the
-    partition's own commit version (r5 review — without this, routine URL
-    expiry permanently wedged CDF streams on remove/cdc files)."""
-    client, table = _make_client(options)
-    changes = client.get_table_changes(
-        table, starting_version=version, ending_version=version)
-    for _, f in changes.actions:
-        if f.id == file_id:
-            return f
-    raise DeltaSharingError(
-        f"change file {file_id!r} of {table.full_name()} version "
-        f"{version} is no longer served (vacuumed) — cannot replay "
-        "this partition")
 
 
 class DeltaSharingStreamReader(DataSourceStreamReader):
@@ -593,8 +388,7 @@ class DeltaSharingStreamReader(DataSourceStreamReader):
     def latestOffset(self) -> dict:
         client, table = _make_client(self.options)
         data = client.get_table_data(table)
-        _check_reader_features(data.protocol)
-        if _column_mapping_of(data.metadata, self.full_schema):
+        if plan_files(data, self.full_schema, None).mapping:
             # batch reads translate column mapping; the streaming
             # manifest does not persist the per-file translation state
             # yet — refuse loudly rather than mis-read physical columns
@@ -606,9 +400,6 @@ class DeltaSharingStreamReader(DataSourceStreamReader):
             self._version = data.version
         new = [f for f in data.files if f.id not in self._seen]
         if new:
-            for f in new:
-                if f.deletion_vector:  # refuse unresolvable DVs at plan time
-                    validate_dv_descriptor(f.deletion_vector, data_url=f.url)
             self._latest_batch += 1
             manifest = [{"id": f.id, "url": f.url, "size": f.size,
                          "partition_values": dict(f.partition_values),
@@ -631,10 +422,11 @@ class DeltaSharingStreamReader(DataSourceStreamReader):
                     f"cannot replay microbatch {b}: no manifest in the "
                     f"stream commit log at {self._log_path} (log lost or "
                     "truncated) — refusing to guess the original file set")
-            for f in manifest:
-                parts.append(_FilePartition(
-                    f["url"], f["size"], f["id"], f["partition_values"],
-                    deletion_vector=f.get("deletion_vector")))
+            # an unpinned re-list: the stream follows the live table
+            parts.extend(_FilePartition(FileTask(
+                f["url"], f["size"], f["id"], _partition_constants(
+                    self.options, self.full_schema, f["partition_values"]),
+                f.get("deletion_vector"))) for f in manifest)
         return parts
 
     def read(self, partition: _FilePartition) -> Iterator:
@@ -707,58 +499,36 @@ class DeltaSharingCDFStreamReader(DataSourceStreamReader):
         client, table = _make_client(self.options)
         changes = client.get_table_changes(
             table, starting_version=lo + 1, ending_version=hi)
-        _check_reader_features(changes.protocol)
-        if _column_mapping_of(changes.metadata, self.base_schema):
+        data = TableData(changes.protocol, changes.metadata,
+                         tuple(f for _, f in changes.actions), changes.version)
+        if plan_files(data, self.base_schema, None).mapping:
             raise DeltaSharingError(
                 "column-mapped tables are not supported by the CDF "
                 "streaming source; read them with the batch reader")
         _check_schema_drift(self, table, changes.metadata.schema_string)
-        for _, f in changes.actions:
-            if f.deletion_vector:  # refuse unresolvable DVs at plan time
-                validate_dv_descriptor(f.deletion_vector, data_url=f.url)
-        return [
-            _CDFFilePartition(f.url, f.size, f.id,
-                              dict(f.partition_values), kind,
-                              f.version if f.version is not None else hi,
-                              # keep None: a missing commit timestamp must
-                              # surface as NULL, not a silent 1970 epoch
-                              f.timestamp,
-                              deletion_vector=f.deletion_vector)
-            for kind, f in changes.actions
-        ]
+        parts = []
+        for kind, f in changes.actions:
+            version = f.version if f.version is not None else hi
+            constants = {
+                **_partition_constants(self.options, self.base_schema,
+                                       f.partition_values),
+                "_commit_version": version,
+                # keep None: a missing commit timestamp must surface as
+                # NULL, not a silent 1970 epoch
+                "_commit_timestamp": (f.timestamp * 1000
+                                      if f.timestamp is not None else None)}
+            if kind != "cdf":  # a "cdf" file carries its own _change_type
+                constants["_change_type"] = ("insert" if kind == "add"
+                                             else "delete")
+            # an expired URL re-resolves through /changes for the file's
+            # own commit: remove/cdc files are in no snapshot listing
+            parts.append(_FilePartition(
+                FileTask(f.url, f.size, f.id, constants, f.deletion_vector),
+                {"changes_version": version}))
+        return parts
 
-    def read(self, partition: _CDFFilePartition):
-        import pyarrow as pa
-
-        from datafusion_delta_sharing_spark.sources.reader import (
-            _spark_struct_to_arrow_schema,
-        )
-
-        file_schema = self.base_schema
-        if partition.kind == "cdf":
-            file_schema = T.StructType(
-                list(self.base_schema.fields)
-                + [T.StructField("_change_type", T.StringType())])
-        arrow_out = _spark_struct_to_arrow_schema(self.out_schema)
-        # per-file constants; a "cdf" file carries its own _change_type
-        consts = {"_commit_version": partition.version,
-                  # keep None: a missing commit timestamp is NULL
-                  "_commit_timestamp": (partition.timestamp * 1000
-                                        if partition.timestamp is not None
-                                        else None)}
-        if partition.kind != "cdf":
-            consts["_change_type"] = ("insert" if partition.kind == "add"
-                                      else "delete")
-        refresh = lambda: _refresh_cdf_file_action(  # noqa: E731
-            self.options, partition.file_id, partition.version)
-        for batch in _read_file_partition(self.options, file_schema,
-                                          partition, refresh=refresh):
-            n = batch.num_rows
-            arrays = [pa.repeat(pa.scalar(consts[f.name], type=f.type), n)
-                      if f.name in consts
-                      else batch.column(f.name).cast(f.type)
-                      for f in arrow_out]
-            yield pa.RecordBatch.from_arrays(arrays, schema=arrow_out)
+    def read(self, partition: _FilePartition):
+        return _read_file_partition(self.options, self.out_schema, partition)
 
     def commit(self, end: dict) -> None:
         pass  # offsets are logical; the server's history is the log

@@ -362,7 +362,7 @@ class DvReads:
     def __init__(self, descriptors: Iterable[dict], session=None):
         from urllib.parse import urlparse
 
-        from datafusion_delta_sharing_spark.sources.reader import (
+        from datafusion_delta_sharing_spark.sources.scan import (
             _COALESCE_BYTES)
 
         self._session = session
@@ -393,7 +393,7 @@ class DvReads:
         a server that ignores ``Range`` sent a shorter whole file."""
         import requests
 
-        from datafusion_delta_sharing_spark.sources.reader import _ranged_get
+        from datafusion_delta_sharing_spark.sources.scan import _ranged_get
 
         for at, body in self._held.get(url, ()):
             if at <= lo and hi <= at + len(body):
@@ -417,9 +417,9 @@ def _dv_file_bytes(path: str, lo: int, hi: int,
     parsed = urlparse(path)
     if parsed.scheme in ("", "file"):
         # same file:-URL decode rule as the parquet side — ONE shared
-        # helper (reader._local_path), imported lazily to avoid the
-        # module cycle (reader imports dv at module level)
-        from datafusion_delta_sharing_spark.sources.reader import (
+        # helper (scan._local_path), imported lazily to avoid the
+        # module cycle (scan imports dv at module level)
+        from datafusion_delta_sharing_spark.sources.scan import (
             _local_path)
 
         try:

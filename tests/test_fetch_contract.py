@@ -26,7 +26,7 @@ from datafusion_delta_sharing_spark.sources import dv
 from datafusion_delta_sharing_spark.sources.datasource import (
     DeltaSharingDataSource,
 )
-from datafusion_delta_sharing_spark.sources.reader import _RangedHttpFile
+from datafusion_delta_sharing_spark.sources.scan import _RangedHttpFile
 from tests.mock_server import MockSharingServer, MockTable
 
 SCHEMA_STRING = json.dumps({"type": "struct", "fields": [
@@ -303,5 +303,22 @@ def test_changed_dv_identity_on_refresh_raises(spark, entry):
 
         with pytest.raises(Exception, match="changed between") as info:
             _ids_after(spark, srv, entry, resign_with_new_deletes)
+        assert (isinstance(info.value, DeltaSharingError)
+                or "DeltaSharingError" in str(info.value))
+
+
+@pytest.mark.parametrize("entry", ["reader", "format"])
+def test_expired_url_of_a_file_the_relist_drops_raises(spark, entry):
+    """A data URL that expires mid-scan re-lists the table; a file the
+    re-list no longer lists (vacuumed) ends in a typed error naming it."""
+    with _serve_with_dvs() as (srv, table):
+        def vacuum():
+            srv.forbidden_paths.add("/d1.parquet")
+            table.files[:] = [f for f in table.files
+                              if f["id"] != "/d1.parquet"]
+
+        with pytest.raises(Exception, match="no longer listed") as info:
+            _ids_after(spark, srv, entry, vacuum)
+        assert "'/d1.parquet'" in str(info.value)
         assert (isinstance(info.value, DeltaSharingError)
                 or "DeltaSharingError" in str(info.value))

@@ -1258,11 +1258,11 @@ def test_kfold_and_group_split_properties(spark, sf_dir):
         SP.kfold_assign("doc_id", k=1)
 
 
-def test_lsh_signature_plane_count_guard():
+def test_lsh_topk_plane_count_guard():
     """ADVICE r4: signatures pack bits as pow(2.0, p) doubles — exact only
     for p <= 52, so a wider plane set must refuse instead of silently
     producing wrong buckets."""
     from datafusion_delta_sharing_spark.operators import similarity as SIM
 
     with pytest.raises(ValueError, match="52"):
-        SIM._signature_expr("embedding", [[1.0]] * 53)
+        SIM.lsh_topk(None, None, dim=1, n_planes=53)

@@ -999,7 +999,7 @@ def test_local_path_absolutizes_bare_paths():
     silently drops every row (or resurrects DV-deleted ones)."""
     import os
 
-    from datafusion_delta_sharing_spark.sources.reader import _local_path
+    from datafusion_delta_sharing_spark.sources.scan import _local_path
 
     assert os.path.isabs(_local_path("rel/part-0.parquet"))
     assert _local_path("/abs/p.parquet") == "/abs/p.parquet"
