@@ -5,9 +5,10 @@ The closest Spark-native analogue of the reference's DataFusion
 ``schema()`` (metadata fetch), ``pushFilters`` (A5: filters -> JSON predicate
 hints, ALL filters returned unhandled so Spark keeps the residual — the
 reference's ``Inexact`` verdict, table.rs:198-213), ``partitions()`` (file
-listing with server pruning, checked and stats-pruned by ``scan.plan_files``;
-one partition per file, A1) and ``read()`` on executors (``scan.read_files``:
-ranged-HTTP parquet -> Arrow batches + typed partition columns, A2/A3/A20).
+listing with server pruning, checked and stats-pruned by ``scan.plan_files``,
+one partition per ``scan.pack_files`` file group, A1) and ``read()`` on
+executors (``scan.read_files``: ranged-HTTP parquet -> Arrow batches + typed
+partition columns, A2/A3/A20).
 This module adapts the one scan path of ``sources/scan.py`` to Spark's
 DataSource API: filters to hints, stream offsets and the commit log.
 
@@ -67,9 +68,11 @@ from datafusion_delta_sharing_spark.securable import Table
 from datafusion_delta_sharing_spark.sources.scan import (
     FileTask,
     _has_variant,
+    pack_files,
     plan_files,
     read_files,
     relist,
+    relist_pin,
 )
 from datafusion_delta_sharing_spark.sources.schema import (
     column_mapping,
@@ -97,21 +100,24 @@ def _make_client(options) -> tuple:
 
 
 class _FilePartition(InputPartition):
-    """One shared file per Spark partition (``task`` None: the sentinel of
-    an empty listing, since Spark requires at least one partition).
-    ``spec`` pins the task's re-list (``scan.relist``); ``column_mapped``:
+    """The shared files of one Spark partition: a ``scan.pack_files`` group
+    for a batch read, one file for a stream, and no file for an empty
+    listing (Spark requires at least one partition). ``spec`` pins the
+    task's re-list (``scan.relist``); ``column_mapped``:
     delta.columnMapping.mode is name/id, so the parquet columns carry the
     schema's physicalName metadata instead of the logical field names."""
 
-    def __init__(self, task: FileTask | None, spec: dict | None = None,
+    def __init__(self, tasks: list[FileTask], spec: dict | None = None,
                  column_mapped: bool = False):
-        self.task = task
+        self.tasks = tasks
         self.spec = spec or {}
         self.column_mapped = column_mapped
 
     @property
     def file_id(self) -> str:
-        return self.task.file_id
+        """The file id of a one-file (stream) partition."""
+        (task,) = self.tasks
+        return task.file_id
 
 
 def _filters_to_op(filters: Sequence[Filter], schema: T.StructType) -> Op | None:
@@ -220,24 +226,24 @@ class DeltaSharingBatchReader(DataSourceReader):
                 "table has VARIANT columns, which format('deltasharing') "
                 "cannot decode (pyarrow footer parse); use "
                 "DeltaSharingReader over a local (file://) share")
-        if not plan.files:
-            return [_FilePartition(None)]
         # this source reads in LOGICAL names: the plan's physical
         # partition-value keys go back to logical, and the executor maps
         # the parquet columns through the schema's physicalName metadata
         names = {p: l for l, p in (plan.mapping or {}).items()}
-        spec = {"version": version, "timestamp": timestamp}
+        # executor-side URL refreshes re-list the snapshot THIS listing
+        # came from
+        spec = relist_pin(data, version, timestamp)
         return [_FilePartition(
-                    FileTask(f.url, f.size, f.id, _partition_constants(
+                    [FileTask(f.url, f.size, f.id, _partition_constants(
                         self.options, self.full_schema,
                         {names.get(k, k): v
                          for k, v in f.partition_values.items()}),
-                        f.deletion_vector),
+                        f.deletion_vector) for f in group],
                     spec, column_mapped=bool(plan.mapping))
-                for f in plan.files]
+                for group in pack_files(plan.files)]
 
     def read(self, partition: _FilePartition):
-        if partition.task is None:
+        if not partition.tasks:
             return iter(())
         return _read_file_partition(self.options, self.full_schema, partition)
 
@@ -256,12 +262,14 @@ def _partition_constants(options, schema: T.StructType,
 
 def _read_file_partition(options, schema: T.StructType,
                          partition: _FilePartition):
-    """Executor-side read of ONE shared file for the batch source and both
-    streams: ``scan.read_files`` over the partition's task, in the order of
-    ``schema``'s fields. If a presigned URL has expired (streaming replay
-    long after the manifest was logged), the file is re-resolved by id
-    through one re-list pinned to ``partition.spec``, with the profile
-    read again from the options."""
+    """Executor-side read of one partition's shared files for the batch
+    source and both streams: ``scan.read_files`` over the partition's
+    tasks, in the order of ``schema``'s fields, so a file group's deletion
+    vectors in one DV file are planned together. If a presigned URL has
+    expired (a long scan, or a streaming replay long after the manifest
+    was logged), the partition's files are re-resolved by id through one
+    re-list pinned to ``partition.spec``, with the profile read again from
+    the options."""
 
     def relisted():
         client, table = _make_client(options)
@@ -270,7 +278,7 @@ def _read_file_partition(options, schema: T.StructType,
 
     file_names = ((column_mapping(schema) or {})
                   if partition.column_mapped else {})
-    yield from read_files([partition.task], schema, None, file_names,
+    yield from read_files(partition.tasks, schema, None, file_names,
                           relisted)
 
 
@@ -423,10 +431,10 @@ class DeltaSharingStreamReader(DataSourceStreamReader):
                     f"stream commit log at {self._log_path} (log lost or "
                     "truncated) — refusing to guess the original file set")
             # an unpinned re-list: the stream follows the live table
-            parts.extend(_FilePartition(FileTask(
+            parts.extend(_FilePartition([FileTask(
                 f["url"], f["size"], f["id"], _partition_constants(
                     self.options, self.full_schema, f["partition_values"]),
-                f.get("deletion_vector"))) for f in manifest)
+                f.get("deletion_vector"))]) for f in manifest)
         return parts
 
     def read(self, partition: _FilePartition) -> Iterator:
@@ -523,7 +531,7 @@ class DeltaSharingCDFStreamReader(DataSourceStreamReader):
             # an expired URL re-resolves through /changes for the file's
             # own commit: remove/cdc files are in no snapshot listing
             parts.append(_FilePartition(
-                FileTask(f.url, f.size, f.id, constants, f.deletion_vector),
+                [FileTask(f.url, f.size, f.id, constants, f.deletion_vector)],
                 {"changes_version": version}))
         return parts
 

@@ -23,12 +23,13 @@ Parity targets (SURVEY.md §2 Tier A):
 
 Scale design (100 TB): the driver only ever touches the *file list* (one
 row per file — metadata, not data). Data bytes move exclusively inside
-executor tasks: each task receives a slice of file descriptors and streams
-Arrow record batches straight out of parquet row groups over HTTP. No
-driver materialization, no local staging, no collect. Stats-based file
-pruning (plans/pruning.py) happens before the file list is parallelized, so
-a selective predicate turns a million-file table into the handful of files
-Spark must actually open.
+executor tasks: each task receives one file group of descriptors
+(``scan.pack_files``: ~128 MiB of parquet) and streams Arrow record
+batches straight out of parquet row groups over HTTP. No driver
+materialization, no local staging, no collect.
+Stats-based file pruning (plans/pruning.py) happens before the file list is
+parallelized, so a selective predicate turns a million-file table into the
+handful of files Spark must actually open.
 """
 
 from __future__ import annotations
@@ -60,10 +61,12 @@ from datafusion_delta_sharing_spark.sources.scan import (
     FileTask,
     _has_variant,
     _local_path,
+    pack_files,
     physical_partition_keys,
     plan_files,
     read_files,
     relist,
+    relist_pin,
 )
 from datafusion_delta_sharing_spark.sources.schema import (
     column_mapping_of,
@@ -71,8 +74,6 @@ from datafusion_delta_sharing_spark.sources.schema import (
     schema_from_string,
     to_physical_schema,
 )
-
-_BYTES_PER_TASK = 128 * 1024 * 1024  # one Spark task per ~128 MiB of parquet
 
 
 def _op_column_names(op: Op) -> set[str]:
@@ -255,6 +256,7 @@ class DeltaSharingReader:
         df = self._dataframe_from_listing(
             table, data, predicate_op=predicate_op, columns=scan_columns,
             limit=prune_limit,
+            refresh_spec=relist_pin(data, version, timestamp),
         )
         if predicate is not None:
             df = df.filter(predicate)  # residual: Inexact semantics (A5)
@@ -482,11 +484,9 @@ class DeltaSharingReader:
                                       partition_columns, columns)
             else:
                 if refresh_spec is None:
-                    # pin executor-side URL refreshes to the snapshot THIS
-                    # listing came from (Delta-Table-Version header): an
-                    # unpinned re-list would splice a newer snapshot into
-                    # a running scan
-                    refresh_spec = {"version": data.version}
+                    # executor-side URL refreshes re-list the snapshot
+                    # THIS listing came from
+                    refresh_spec = relist_pin(data)
                 df = self._read_distributed(table, files, full_schema,
                                             partition_columns, columns,
                                             refresh_spec)
@@ -634,31 +634,19 @@ class DeltaSharingReader:
                           full_schema: T.StructType, partition_columns: list[str],
                           columns: Sequence[str] | None,
                           refresh_spec: dict) -> DataFrame:
-        """The scale path: parallelize the descriptor list, fetch + decode on
-        executors via mapInArrow, one task per ~_BYTES_PER_TASK of parquet;
-        expired URLs re-list pinned to ``refresh_spec``."""
+        """The scale path: parallelize the file descriptors, one Spark
+        partition per ``scan.pack_files`` group and no shuffle, and fetch +
+        decode them on executors via mapInArrow; expired URLs re-list
+        pinned to ``refresh_spec``."""
         out_schema = (T.StructType([full_schema[c] for c in columns])
                       if columns else full_schema)
 
-        descriptors = [
-            {
-                "url": f.url,
-                "file_id": f.id,
-                "size": f.size,
-                "partition_values": json.dumps(f.partition_values),
-                # decoded INSIDE the fetch task — DV bytes never
-                # concentrate on the driver (100 TB posture)
-                "deletion_vector": (json.dumps(f.deletion_vector)
-                                    if f.deletion_vector else None),
-            }
-            # size-descending (LPT order): round-robin repartition then
-            # spreads the n largest files across n distinct tasks instead
-            # of letting skewed sizes cluster into straggler tasks —
-            # byte-count task sizing is otherwise defeated by row-count
-            # distribution. (A single file larger than _BYTES_PER_TASK
-            # still bounds wall-clock: file granularity is the floor.)
-            for f in sorted(files, key=lambda fa: -fa.size)
-        ]
+        groups = [[(f.url, f.id, f.size, json.dumps(f.partition_values),
+                    # decoded INSIDE the fetch task — DV bytes never
+                    # concentrate on the driver (100 TB posture)
+                    json.dumps(f.deletion_vector)
+                    if f.deletion_vector else None)
+                   for f in group] for group in pack_files(files)]
         desc_schema = T.StructType([
             T.StructField("url", T.StringType(), False),
             T.StructField("file_id", T.StringType(), False),
@@ -666,12 +654,9 @@ class DeltaSharingReader:
             T.StructField("partition_values", T.StringType(), False),
             T.StructField("deletion_vector", T.StringType(), True),
         ])
-        total_bytes = sum(f.size for f in files) or 1
-        n_tasks = max(1, min(len(files),
-                             (total_bytes + _BYTES_PER_TASK - 1)
-                             // _BYTES_PER_TASK))
-        desc_df = (self.spark.createDataFrame(descriptors, desc_schema)
-                   .repartition(int(n_tasks)))
+        desc_df = self.spark.createDataFrame(
+            self.spark.sparkContext.parallelize(groups, len(groups))
+            .flatMap(lambda group: group), desc_schema)
 
         # the profile serializes ITSELF (Profile.to_doc round-trips via
         # from_json): a hand-built v1 doc here crashed every non-bearer

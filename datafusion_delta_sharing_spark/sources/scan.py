@@ -5,13 +5,18 @@ Counterpart of the reference's ``DeltaSharingTable::scan``
 (``src/datasource/scan.rs:50-157``) over the presigned-URL reader
 (``src/datasource/reader.rs``). ``DeltaSharingReader.table`` /
 ``table_changes`` (mapInArrow), ``format("deltasharing")`` batch reads, the
-snapshot stream and the CDF stream all go through the same three functions:
+snapshot stream and the CDF stream all go through the same functions:
 
 * :func:`plan_files` (driver): the checks a listing must pass before any
   task is scheduled, and stats pruning;
+* :func:`pack_files` (driver): the file groups of a batch read, one Spark
+  task each, as the reference runs one partition per file group
+  (``src/datasource/scan.rs:77,123-125``); the streams keep one file per
+  task;
 * :func:`read_files` (executor): file tasks in, Arrow record batches out;
 * :func:`relist` (executor): one re-list per task when a presigned URL
-  expired mid-scan.
+  expired mid-scan, pinned by :func:`relist_pin` to the snapshot a batch
+  read listed.
 
 Below them sits the HTTP layer (A3): :func:`_ranged_get` is the one GET of
 parquet and deletion-vector bytes alike, and :class:`_RangedHttpFile` fetches
@@ -171,6 +176,38 @@ def physical_partition_keys(files: Iterable[FileAction],
             if f.partition_values else f for f in files], bool(ambiguous)
 
 
+# the cap of one file group: one Spark task per ~128 MiB of parquet
+_BYTES_PER_TASK = 128 * 1024 * 1024
+
+
+def pack_files(files: Sequence[FileAction]) -> list[list[FileAction]]:
+    """The file groups of a batch read, each read by one Spark task.
+
+    ``max(1, min(#files, ceil(total bytes / _BYTES_PER_TASK)))`` groups,
+    dealt largest file first round-robin so the n largest files land in n
+    distinct groups; each group keeps listing order. An empty listing is
+    one empty group. The same listing always gives the same groups."""
+    files = list(files)
+    total = sum(f.size for f in files)
+    n = max(1, min(len(files), -(-total // _BYTES_PER_TASK)))
+    groups: list[list[int]] = [[] for _ in range(n)]
+    by_size = sorted(range(len(files)), key=lambda i: (-files[i].size, i))
+    for k, i in enumerate(by_size):
+        groups[k % n].append(i)
+    return [[files[i] for i in sorted(g)] for g in groups]
+
+
+def relist_pin(data: TableData, version: int | None = None,
+               timestamp: str | None = None) -> dict:
+    """The :func:`relist` spec of a snapshot read of ``data``: the version
+    the listing came from (its Delta-Table-Version header), else the
+    ``version`` / ``timestamp`` the read asked for. An unpinned re-list would splice a newer snapshot's
+    URLs and deletion vectors into a running scan."""
+    if data.version is not None:
+        return {"version": data.version, "timestamp": None}
+    return {"version": version, "timestamp": timestamp}
+
+
 def _has_variant(dtype: T.DataType) -> bool:
     if isinstance(dtype, T.VariantType):
         return True
@@ -204,8 +241,9 @@ def _ranged_get(session, url: str, lo: int, hi: int,
     body)`` with ``body[0]`` at object offset ``start``.
 
     The one GET of the scan, for parquet and deletion-vector bytes alike.
-    Transient faults (5xx, dropped connections) retry with backoff; any
-    other 4xx propagates, so the caller can re-list on an expired
+    Transient faults (5xx, dropped connections) retry with backoff, and
+    raise :class:`DeltaSharingError` once the retries run out; any other 4xx
+    propagates at once, so the caller can re-list on an expired
     presigned URL (401/403). A server that ignores ``Range`` answers 200
     with the whole object, which comes back whole (``start`` 0) for the
     caller to hold. A 416, or a 206 body that is not the requested length,
@@ -251,7 +289,9 @@ def _ranged_get(session, url: str, lo: int, hi: int,
             last_exc = exc
         if attempt < _RETRIES:
             time.sleep(_BACKOFF_S * (2 ** attempt))
-    raise last_exc  # type: ignore[misc]
+    raise DeltaSharingError(
+        f"GET bytes={lo}-{hi - 1} of {url} failed after {_RETRIES + 1} "
+        f"attempts: {last_exc}") from last_exc
 
 
 def _status(exc) -> int | None:

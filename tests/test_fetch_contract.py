@@ -1,10 +1,11 @@
-"""The executor fetch contract of both scan kernels (``DeltaSharingReader``
-and ``format("deltasharing")``), read off the mock server's request log:
-every byte of a shared parquet file crosses the wire at most once, a read of
-every data column (or of any data column of a file of at most 128 KiB) is
-one whole-file GET, a task's deletion vectors in one shared DV file are one
-GET, and a body that does not match the listed size ends in a typed error,
-never in short rows."""
+"""The executor fetch contract of both batch entry points
+(``DeltaSharingReader`` and ``format("deltasharing")``), read off the mock
+server's request log: every byte of a shared parquet file crosses the wire
+at most once, a read of every data column (or of any data column of a file
+of at most 128 KiB) is one whole-file GET, the files of one shared DV file
+are one task whose deletion vectors are one GET, a task re-lists at most
+once, and a body that does not match the listed size, or a GET whose
+retries run out, ends in a typed error, never in short rows."""
 
 import contextlib
 import io
@@ -15,6 +16,7 @@ import numpy as np
 import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
+import requests
 
 from datafusion_delta_sharing_spark import (
     DeltaSharingClient,
@@ -22,7 +24,8 @@ from datafusion_delta_sharing_spark import (
     Profile,
 )
 from datafusion_delta_sharing_spark.errors import DeltaSharingError
-from datafusion_delta_sharing_spark.sources import dv
+from datafusion_delta_sharing_spark.plans import audit
+from datafusion_delta_sharing_spark.sources import dv, scan
 from datafusion_delta_sharing_spark.sources.datasource import (
     DeltaSharingDataSource,
 )
@@ -261,18 +264,74 @@ def _dv_ranges(srv, path: str) -> list[str]:
 
 @pytest.mark.parametrize("entry", ["reader", "format"])
 def test_task_dvs_sharing_a_dv_file_are_one_get(spark, entry):
-    """The reader's one scan task plans all three DVs and fetches the
-    version byte and every frame in one GET; ``format("deltasharing")``
-    reads one file per task, so each task's DV is one GET."""
+    """The small share's three files (far below the 128 MiB cap) are one
+    file group, so on both entry points one scan task plans the three DVs
+    of the shared DV file and fetches the version byte and every frame in
+    one GET."""
     with _serve_with_dvs() as (srv, _):
         assert _ids_after(spark, srv, entry) == DV_IDS
         n = len(srv.parquet_bytes["/shared.dv"])
-        gets = _dv_ranges(srv, "/shared.dv")
-        if entry == "reader":
-            assert gets == [f"bytes=0-{n - 1}"]
-        else:
-            assert len(gets) == len(DV_DELETED)
-            assert all(g.startswith("bytes=0-") for g in gets)
+        assert _dv_ranges(srv, "/shared.dv") == [f"bytes=0-{n - 1}"]
+
+
+def test_a_file_group_is_one_task_without_a_shuffle(registered):
+    """The reader places each file group in one Spark partition with no
+    Exchange below its MapInArrow, and the data source plans the small DV
+    share as one partition holding all three files."""
+    with _serve_with_dvs() as (srv, _):
+        df = _read(registered, srv, "reader")
+        assert audit.shuffles(df) == 0
+        assert df.rdd.getNumPartitions() == 1
+        source = DeltaSharingDataSource(
+            {"profile_json": json.dumps(srv.profile_doc()),
+             "table": "s.d.t"})
+        parts = source.reader(source.schema()).partitions()
+        assert [sorted(t.file_id for t in p.tasks) for p in parts] == [
+            sorted(DV_DELETED)]
+
+
+def _queries(srv) -> int:
+    return sum(r["method"] == "POST" and r["path"].endswith("/query")
+               for r in srv.requests)
+
+
+@pytest.mark.parametrize("entry", ["reader", "format"])
+def test_two_expired_urls_in_one_task_relist_once(spark, entry):
+    """Two files of one task whose presigned URLs both expired re-list the
+    table once: one ``/query`` to plan and one to re-list."""
+    with _serve_with_dvs() as (srv, table):
+        def resign():
+            for f in table.files:
+                if f["id"] in ("/d0.parquet", "/d2.parquet"):
+                    srv.forbidden_paths.add(f["id"])
+                    fresh = f["id"] + ".resigned"
+                    srv.parquet_bytes[fresh] = DV_BLOBS[f["id"]]
+                    f["url"] = f"{srv.base_url}{fresh}"
+
+        assert _ids_after(spark, srv, entry, resign) == DV_IDS
+        assert _queries(srv) == 2
+        assert _ranges(srv, "/d0.parquet.resigned")
+        assert _ranges(srv, "/d2.parquet.resigned")
+
+
+@pytest.mark.parametrize("entry", ["reader", "format"])
+def test_relist_is_pinned_to_the_listed_version(spark, entry):
+    """Listed at version 7; the table then moves to version 8 without
+    ``/d1.parquet``, whose old URL expires. The re-list must ask for
+    version 7, where the file is still listed under a re-signed URL."""
+    with _serve_with_dvs() as (srv, table):
+        def advance():
+            listed = [dict(f) for f in table.files]
+            srv.parquet_bytes["/d1.resigned"] = DV_BLOBS["/d1.parquet"]
+            table.history[7] = [
+                {**f, "url": f"{srv.base_url}/d1.resigned"}
+                if f["id"] == "/d1.parquet" else f for f in listed]
+            table.version = 8
+            table.files[:] = [f for f in listed if f["id"] != "/d1.parquet"]
+            srv.forbidden_paths.add("/d1.parquet")
+
+        assert _ids_after(spark, srv, entry, advance) == DV_IDS
+        assert _ranges(srv, "/d1.resigned")
 
 
 @pytest.mark.parametrize("entry", ["reader", "format"])
@@ -322,3 +381,29 @@ def test_expired_url_of_a_file_the_relist_drops_raises(spark, entry):
         assert "'/d1.parquet'" in str(info.value)
         assert (isinstance(info.value, DeltaSharingError)
                 or "DeltaSharingError" in str(info.value))
+
+
+def test_ranged_get_raises_a_typed_error_when_retries_run_out(monkeypatch):
+    """A connection that drops on every attempt ends in
+    :class:`DeltaSharingError` caused by the ``requests`` error, after
+    ``_RETRIES + 1`` attempts; an expired URL (403) still raises
+    ``HTTPError`` at once, so the caller can re-list."""
+    monkeypatch.setattr(scan, "_BACKOFF_S", 0)
+
+    class Dropping(dict):
+        def __getitem__(self, key):
+            raise BrokenPipeError("synthetic dropped connection")
+
+    with _serve(BLOBS) as srv:
+        srv.parquet_bytes = Dropping(BLOBS)
+        session = requests.Session()
+        with pytest.raises(DeltaSharingError, match="attempts") as info:
+            scan._ranged_get(session, f"{srv.base_url}/small.parquet", 0, 10)
+        assert isinstance(info.value.__cause__, requests.RequestException)
+        assert len(_ranges(srv, "/small.parquet")) == scan._RETRIES + 1
+
+        srv.forbidden_paths.add("/large.parquet")
+        with pytest.raises(requests.HTTPError) as info:
+            scan._ranged_get(session, f"{srv.base_url}/large.parquet", 0, 10)
+        assert info.value.response.status_code == 403
+        assert len(_ranges(srv, "/large.parquet")) == 1

@@ -32,7 +32,12 @@ from datafusion_delta_sharing_spark.sources import dv
 from datafusion_delta_sharing_spark.sources.datasource import (
     DeltaSharingDataSource,
 )
-from datafusion_delta_sharing_spark.sources.scan import plan_files
+from datafusion_delta_sharing_spark.sources.scan import (
+    _BYTES_PER_TASK,
+    pack_files,
+    plan_files,
+    relist_pin,
+)
 from datafusion_delta_sharing_spark.sources.schema import schema_from_string
 from tests.mock_server import MockSharingServer, MockTable
 
@@ -149,6 +154,78 @@ def test_plan_files_spells_the_plan_physically():
     assert plan.partition_columns == ["col-p"]
     assert [f.partition_values for f in plan.files] == [
         {"col-p": "v"}, {"col-p": "w"}]
+
+
+# -- the file packer of both batch reads ----------------------------------
+
+MIB = 1024 * 1024
+
+
+def _sized(file_id: str, mib: float) -> FileAction:
+    """A listed file of ``mib`` MiB."""
+    return FileAction(url=f"https://host/{file_id}.parquet", id=file_id,
+                      size=int(mib * MIB))
+
+
+def _ids(groups) -> list[list[str]]:
+    return [[f.id for f in g] for g in groups]
+
+
+@pytest.mark.parametrize("mibs, n", [
+    ([10] * 40, 4),           # ceil(400 / 128)
+    ([1e-6] * 3, 1),          # at least one group
+    ([1024, 1024], 2),        # at most one group per file
+    ([100, 70, 60, 40, 30], 3),
+])
+def test_pack_files_group_count_follows_the_cap(mibs, n):
+    files = [_sized(f"f{i}", m) for i, m in enumerate(mibs)]
+    groups = pack_files(files)
+    assert len(groups) == n == max(1, min(len(files), -(-sum(
+        f.size for f in files) // _BYTES_PER_TASK)))
+    assert sorted(f.id for g in groups for f in g) == sorted(
+        f.id for f in files)
+
+
+def test_pack_files_deals_the_largest_files_to_distinct_groups():
+    # 300 MiB: three groups; size order f1 f0 f4 f2 f3 dealt round-robin
+    files = [_sized(f"f{i}", m) for i, m in enumerate([70, 100, 40, 30, 60])]
+    assert _ids(pack_files(files)) == [["f1", "f2"], ["f0", "f3"], ["f4"]]
+
+
+def test_pack_files_is_deterministic():
+    files = [_sized(f"f{i}", (37 * i) % 90 + 1) for i in range(30)]
+    first = _ids(pack_files(files))
+    assert _ids(pack_files(list(files))) == first
+    assert _ids(pack_files(tuple(files))) == first
+    # each group keeps listing order
+    order = [f.id for f in files]
+    assert all(g == sorted(g, key=order.index) for g in first)
+
+
+def test_relist_pin_prefers_the_listed_version():
+    def listed(version):
+        return TableData(protocol=None, metadata=None, files=(),
+                         version=version)
+    assert relist_pin(listed(7), 3, "2024-01-01T00:00:00Z") == {
+        "version": 7, "timestamp": None}
+    # a server that reports no version: the snapshot the read asked for
+    assert relist_pin(listed(None), None, "2024-01-01T00:00:00Z") == {
+        "version": None, "timestamp": "2024-01-01T00:00:00Z"}
+
+
+def test_an_empty_listing_is_one_empty_group():
+    assert pack_files([]) == [[]]
+    table = MockTable(share="s", schema="d", name="t",
+                      schema_string=json.dumps({"type": "struct",
+                                                "fields": PLAIN}),
+                      partition_columns=["p"])
+    with MockSharingServer([table]) as srv:
+        source = DeltaSharingDataSource(
+            {"profile_json": json.dumps(srv.profile_doc()), "table": "s.d.t"})
+        reader = source.reader(source.schema())
+        parts = reader.partitions()
+        assert [p.tasks for p in parts] == [[]]
+        assert list(reader.read(parts[0])) == []
 
 
 # -- one share, every read entry point ------------------------------------
@@ -281,7 +358,7 @@ batch = pa.RecordBatch.from_pylist([{
 ids = [i for b in reader._fetch_batches_task([batch], schema, [], None, "{}",
                                              "s.d.t", {})
        for i in b.column("id").to_pylist()]
-part = datasource._FilePartition(FileTask(path, size, "f", {}, descriptor))
+part = datasource._FilePartition([FileTask(path, size, "f", {}, descriptor)])
 ids += [i for b in datasource._read_file_partition({}, schema, part)
         for i in b.column("id").to_pylist()]
 names = [json.loads(sock.recv(65536))["n"] for _ in range(4)]
