@@ -25,7 +25,7 @@ import json
 import time
 from dataclasses import dataclass, field as dc_field
 from datetime import datetime, timezone
-from typing import Any, Iterator
+from typing import Any, Callable, Iterator
 from urllib.parse import quote
 
 import requests
@@ -243,24 +243,167 @@ def _parse_version_header(raw: str) -> int:
             f"header: {raw!r}") from exc
 
 
+def _header_version(resp: requests.Response) -> int | None:
+    """The ``delta-table-version`` header of ``resp``; None when absent."""
+    raw = resp.headers.get(VERSION_HEADER)
+    return None if raw is None else _parse_version_header(raw)
+
+
+def _table_actions(resp: requests.Response, endpoint: str,
+                   file_line: Callable[[str, dict], Any] | None = None,
+                   ) -> tuple[ProtocolAction, MetadataAction, list]:
+    """The protocol and metaData lines of a table endpoint's NDJSON body,
+    both required, and ``file_line(kind, body)`` of every other line
+    (None drops the line)."""
+    protocol: ProtocolAction | None = None
+    metadata: MetadataAction | None = None
+    items: list = []
+    for kind, body in _parse_ndjson_actions(resp.text):
+        if kind == "protocol":
+            protocol = ProtocolAction.from_json(body)
+        elif kind == "metaData":
+            metadata = MetadataAction.from_json(body)
+        elif file_line is not None:
+            item = file_line(kind, body)
+            if item is not None:
+                items.append(item)
+    if protocol is None or metadata is None:
+        raise DeltaSharingError(
+            f"{endpoint} response missing protocol or metaData line")
+    return protocol, metadata, items
+
+
+def _query_file(kind: str, action: dict) -> FileAction | None:
+    """A ``/query`` line's data file: only ``file`` lines, and of a
+    delta-format response only ``add`` actions."""
+    if kind != "file":
+        return None
+    dsa = action.get("deltaSingleAction")
+    if dsa is not None and "add" not in dsa:
+        # a snapshot query must list LIVE data only: treating a
+        # remove/cdc change action as a data file would read
+        # soft-deleted rows back (the CDF endpoint is where
+        # those belong)
+        raise DeltaSharingError(
+            "query response contains a non-add delta action "
+            f"{sorted(dsa)}: snapshot listings must carry "
+            "only add files")
+    return FileAction.from_json(action)
+
+
+def _change_action(kind: str, action: dict
+                   ) -> tuple[str, FileAction] | None:
+    """A ``/changes`` line as ``(kind, file)``, kind ``add`` / ``remove`` /
+    ``cdf``."""
+    dsa = action.get("deltaSingleAction") if kind == "file" else None
+    if dsa is not None:
+        # delta-format CDF: every change arrives as a "file" line whose
+        # deltaSingleAction holds add / remove / cdc — map the inner kind
+        # back to the parquet-format vocabulary ("cdc" → "cdf") so
+        # downstream grouping is format-blind
+        kind = next(("cdf" if k == "cdc" else k
+                     for k in ("add", "remove", "cdc") if k in dsa), kind)
+    if kind in ("add", "remove", "cdf"):
+        return kind, FileAction.from_json(action)
+    return None
+
+
+# the one retry policy of every request the connector sends
+_RETRIES = 4
+_BACKOFF_S = 0.5
+
+
+def send_with_retry(send: Callable[[], requests.Response]
+                    ) -> requests.Response:
+    """The final response of ``send()``, retried on 429 / 5xx / transport
+    errors with bounded exponential backoff.
+
+    With a 1000-executor cluster listing files through one sharing server,
+    throttling is routine, not exceptional. Waits ``_BACKOFF_S *
+    2**attempt``, or the server's ``Retry-After``; every request the
+    connector sends is a read (the protocol's POST /query is a listing,
+    the token grant is idempotent), so retrying is always safe. Other
+    statuses return at once — they will not heal — for the caller to
+    check (:func:`check_response`). ``send`` builds its headers on every
+    attempt, so an OAuth token can refresh during a backoff. When
+    transport errors use up the retries, raises :class:`DeltaSharingError`
+    from the last one."""
+    last_exc: Exception | None = None
+    for attempt in range(_RETRIES + 1):
+        try:
+            resp = send()
+        except requests.RequestException as exc:
+            # resets mid-body surface as ChunkedEncodingError /
+            # ContentDecodingError, NOT ConnectionError — catching the
+            # base class keeps the bounded retry for all of them
+            last_exc = exc
+        else:
+            if resp.status_code < 500 and resp.status_code != 429:
+                return resp
+            last_exc = None
+        if attempt < _RETRIES:
+            time.sleep(_BACKOFF_S * (2 ** attempt) if last_exc is not None
+                       else _retry_after(resp, attempt))
+    if last_exc is not None:
+        raise DeltaSharingError(
+            f"request failed after {_RETRIES + 1} attempts: {last_exc}"
+        ) from last_exc
+    return resp
+
+
+def _retry_after(resp: requests.Response, attempt: int) -> float:
+    try:
+        # clamp BOTH ends: a negative Retry-After (skewed server clock)
+        # would make time.sleep raise ValueError and abort a retryable
+        # request
+        return min(max(float(resp.headers["Retry-After"]), 0.0), 30.0)
+    except (KeyError, ValueError):
+        return _BACKOFF_S * (2 ** attempt)
+
+
+def check_response(resp: requests.Response) -> requests.Response:
+    """``resp``, or for a status >= 400 the :class:`ClientHttpError` (4xx)
+    / :class:`ServerHttpError` (5xx) carrying ``.status`` and the
+    ``{errorCode, message}`` body (src/error.rs:73-89)."""
+    if resp.status_code < 400:
+        return resp
+    error_code = None
+    message = resp.text[:500]
+    try:
+        body = resp.json()
+        # non-object JSON error bodies ('"oops"', '[..]') must still
+        # map to the client's error types, not AttributeError
+        if isinstance(body, dict):
+            error_code = body.get("errorCode")
+            message = body.get("message", message)
+    except ValueError:
+        pass
+    cls = ClientHttpError if resp.status_code < 500 else ServerHttpError
+    raise cls(
+        f"HTTP {resp.status_code} from sharing server: {message}",
+        status=resp.status_code,
+        error_code=error_code,
+    )
+
+
 class DeltaSharingClient:
     """Synchronous Delta Sharing REST client over ``requests``.
 
     All list endpoints transparently follow ``nextPageToken`` pagination
     (pagination.rs:10-52); ``max_results`` caps the page size like the
-    reference's paginated variants.
+    reference's paginated variants. Requests go through
+    :func:`send_with_retry` and :func:`check_response`, the one retry
+    policy and error mapping of the package, which also cover the scan's
+    parquet and deletion-vector GETs and the OAuth token grant.
     """
 
     def __init__(self, profile: Profile, session: requests.Session | None = None,
                  max_results: int | None = None, timeout: float = 60.0,
-                 retries: int = 4, backoff_base: float = 0.5,
                  capabilities: str | None = None):
         self.profile = profile
         self.session = session or requests.Session()
         self.max_results = max_results
         self.timeout = timeout
-        self.retries = retries
-        self.backoff_base = backoff_base
         # ADVICE r4: the delta-format opt-in is configurable — a provider
         # that answers the delta capability with features this reader
         # refuses at scan time (column mapping, exotic DV encodings) can be
@@ -274,64 +417,6 @@ class DeltaSharingClient:
     def _url(self, *parts: str) -> str:
         encoded = "/".join(quote(p, safe="") for p in parts)
         return f"{self.profile.endpoint}/{encoded}"
-
-    def _check(self, resp: requests.Response) -> requests.Response:
-        if resp.status_code < 400:
-            return resp
-        error_code = None
-        message = resp.text[:500]
-        try:
-            body = resp.json()
-            # non-object JSON error bodies ('"oops"', '[..]') must still
-            # map to the client's error types, not AttributeError
-            if isinstance(body, dict):
-                error_code = body.get("errorCode")
-                message = body.get("message", message)
-        except ValueError:
-            pass
-        cls = ClientHttpError if resp.status_code < 500 else ServerHttpError
-        raise cls(
-            f"HTTP {resp.status_code} from sharing server: {message}",
-            status=resp.status_code,
-            error_code=error_code,
-        )
-
-    def _with_retry(self, send) -> requests.Response:
-        """Bounded exponential backoff on 429 / 5xx / transport errors —
-        with a 1000-executor cluster listing files through one sharing
-        server, throttling is routine, not exceptional. Honors
-        ``Retry-After`` when the server sends one; every request here is
-        a read (the protocol's POST /query is a listing), so retrying is
-        always safe. Other 4xx raise immediately — they will not heal."""
-        last_exc: Exception | None = None
-        for attempt in range(self.retries + 1):
-            try:
-                resp = send()
-            except requests.RequestException as exc:
-                last_exc = exc
-            else:
-                if resp.status_code < 500 and resp.status_code != 429:
-                    return self._check(resp)
-                last_exc = None
-                retry_after = resp.headers.get("Retry-After")
-            if attempt >= self.retries:
-                break
-            if last_exc is None and retry_after:
-                try:
-                    # clamp BOTH ends: a negative Retry-After (skewed
-                    # server clock) would make time.sleep raise ValueError
-                    # and abort a retryable request
-                    delay = min(max(float(retry_after), 0.0), 30.0)
-                except ValueError:
-                    delay = self.backoff_base * (2 ** attempt)
-            else:
-                delay = self.backoff_base * (2 ** attempt)
-            time.sleep(delay)
-        if last_exc is not None:
-            raise DeltaSharingError(
-                f"request failed after {self.retries + 1} attempts: {last_exc}"
-            ) from last_exc
-        return self._check(resp)
 
     # advertised on every request (PROTOCOL.md capabilities header): both
     # response formats parse — delta-format actions are unwrapped by the
@@ -356,15 +441,30 @@ class DeltaSharingClient:
                 **self.CAPABILITIES_HEADER}
 
     def _get(self, url: str, params: dict | None = None) -> requests.Response:
-        return self._with_retry(lambda: self.session.get(
+        return check_response(send_with_retry(lambda: self.session.get(
             url, headers=self._headers(), params=params or {},
-            timeout=self.timeout))
+            timeout=self.timeout)))
 
     def _post(self, url: str, body: dict) -> requests.Response:
-        return self._with_retry(lambda: self.session.post(
+        return check_response(send_with_retry(lambda: self.session.post(
             url, headers={**self._headers(),
                           "Content-Type": "application/json"},
-            json=body, timeout=self.timeout))
+            json=body, timeout=self.timeout)))
+
+    def _get_object(self, url: str, params: dict | None = None) -> dict:
+        """The JSON object body of a GET; a 200 carrying anything else (a
+        proxy's HTML page, a JSON array) raises :class:`DeltaSharingError`
+        naming ``url``."""
+        resp = self._get(url, params)
+        try:
+            body = resp.json()
+        except ValueError:
+            body = None
+        if not isinstance(body, dict):
+            raise DeltaSharingError(
+                f"sharing server answered {url} with a body that is not a "
+                f"JSON object: {resp.text[:200]!r}")
+        return body
 
     def _paginate(self, url: str) -> Iterator[dict]:
         """Follow nextPageToken until exhausted, yielding raw items."""
@@ -375,7 +475,7 @@ class DeltaSharingClient:
                 params["maxResults"] = str(self.max_results)
             if token:
                 params["pageToken"] = token
-            body = self._get(url, params=params).json()
+            body = self._get_object(url, params)
             yield from body.get("items", [])
             prev, token = token, body.get("nextPageToken")
             if not token:
@@ -399,7 +499,7 @@ class DeltaSharingClient:
     def get_share(self, share: Share | str) -> Share:
         """GET /shares/{share} (mod.rs:98-118)."""
         name = share.name if isinstance(share, Share) else share
-        body = self._get(self._url("shares", name)).json()
+        body = self._get_object(self._url("shares", name))
         item = body.get("share", body)
         return Share(name=item["name"], id=item.get("id"))
 
@@ -460,29 +560,19 @@ class DeltaSharingClient:
                     starting_timestamp.strftime("%Y-%m-%dT%H:%M:%SZ")
                 )
             params["startingTimestamp"] = starting_timestamp
-        resp = self._get(self._table_url(table, "version"), params=params)
-        raw = resp.headers.get(VERSION_HEADER)
-        if raw is None:
+        version = _header_version(
+            self._get(self._table_url(table, "version"), params=params))
+        if version is None:
             raise DeltaSharingError(
                 f"sharing server response missing {VERSION_HEADER} header"
             )
-        return _parse_version_header(raw)
+        return version
 
     def get_table_metadata(self, table: Table) -> tuple[ProtocolAction, MetadataAction]:
         """GET …/metadata — two NDJSON lines: protocol then metaData
         (mod.rs:283-319)."""
-        resp = self._get(self._table_url(table, "metadata"))
-        protocol: ProtocolAction | None = None
-        metadata: MetadataAction | None = None
-        for kind, body in _parse_ndjson_actions(resp.text):
-            if kind == "protocol":
-                protocol = ProtocolAction.from_json(body)
-            elif kind == "metaData":
-                metadata = MetadataAction.from_json(body)
-        if protocol is None or metadata is None:
-            raise DeltaSharingError(
-                "metadata response missing protocol or metaData line"
-            )
+        protocol, metadata, _ = _table_actions(
+            self._get(self._table_url(table, "metadata")), "metadata")
         return protocol, metadata
 
     def get_table_data(self, table: Table,
@@ -516,36 +606,9 @@ class DeltaSharingClient:
         if timestamp is not None:
             body["timestamp"] = timestamp
         resp = self._post(self._table_url(table, "query"), body)
-        protocol: ProtocolAction | None = None
-        metadata: MetadataAction | None = None
-        files: list[FileAction] = []
-        for kind, action in _parse_ndjson_actions(resp.text):
-            if kind == "protocol":
-                protocol = ProtocolAction.from_json(action)
-            elif kind == "metaData":
-                metadata = MetadataAction.from_json(action)
-            elif kind == "file":
-                dsa = action.get("deltaSingleAction")
-                if dsa is not None and "add" not in dsa:
-                    # a snapshot query must list LIVE data only: treating a
-                    # remove/cdc change action as a data file would read
-                    # soft-deleted rows back (the CDF endpoint is where
-                    # those belong)
-                    raise DeltaSharingError(
-                        "query response contains a non-add delta action "
-                        f"{sorted(dsa)}: snapshot listings must carry "
-                        "only add files")
-                files.append(FileAction.from_json(action))
-        if protocol is None or metadata is None:
-            raise DeltaSharingError("query response missing protocol or metaData line")
-        raw_version = resp.headers.get(VERSION_HEADER)
-        return TableData(
-            protocol=protocol,
-            metadata=metadata,
-            files=tuple(files),
-            version=(_parse_version_header(raw_version)
-                     if raw_version is not None else None),
-        )
+        protocol, metadata, files = _table_actions(resp, "query", _query_file)
+        return TableData(protocol=protocol, metadata=metadata,
+                         files=tuple(files), version=_header_version(resp))
 
     def get_table_changes(self, table: Table,
                           starting_version: int | None = None,
@@ -578,37 +641,8 @@ class DeltaSharingClient:
         if ending_timestamp is not None:
             params["endingTimestamp"] = ending_timestamp
         resp = self._get(self._table_url(table, "changes"), params=params)
-        protocol: ProtocolAction | None = None
-        metadata: MetadataAction | None = None
-        actions: list[tuple[str, FileAction]] = []
-        for kind, action in _parse_ndjson_actions(resp.text):
-            if kind == "protocol":
-                protocol = ProtocolAction.from_json(action)
-            elif kind == "metaData":
-                metadata = MetadataAction.from_json(action)
-            elif kind in ("add", "remove", "cdf"):
-                actions.append((kind, FileAction.from_json(action)))
-            elif kind == "file" and "deltaSingleAction" in action:
-                # delta-format CDF: every change arrives as a "file" line
-                # whose deltaSingleAction holds add / remove / cdc — map
-                # the inner kind back to the parquet-format vocabulary
-                # ("cdc" → "cdf") so downstream grouping is format-blind
-                dsa = action["deltaSingleAction"]
-                inner_kind = next(
-                    (k for k in ("add", "remove", "cdc") if k in dsa), None)
-                if inner_kind is not None:
-                    actions.append(
-                        ("cdf" if inner_kind == "cdc" else inner_kind,
-                         FileAction.from_json(action)))
-        if protocol is None or metadata is None:
-            raise DeltaSharingError(
-                "changes response missing protocol or metaData line")
-        raw_version = resp.headers.get(VERSION_HEADER)
-        return TableChanges(
-            protocol=protocol,
-            metadata=metadata,
-            actions=tuple(actions),
-            version=(_parse_version_header(raw_version)
-                     if raw_version is not None else None),
-        )
-
+        protocol, metadata, actions = _table_actions(resp, "changes",
+                                                     _change_action)
+        return TableChanges(protocol=protocol, metadata=metadata,
+                            actions=tuple(actions),
+                            version=_header_version(resp))

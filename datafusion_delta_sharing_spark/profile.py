@@ -216,12 +216,18 @@ class OAuthClientCredentialsProfile:
 
         import requests
 
+        # imported here: the client module imports this one
+        from datafusion_delta_sharing_spark.client import send_with_retry
+
         body = {"grant_type": "client_credentials",
                 "client_id": self.client_id,
                 "client_secret": self._client_secret}
         if self.scope:
             body["scope"] = self.scope
-        resp = requests.post(self.token_endpoint, data=body, timeout=30.0)
+        # throttled (429) and failed (5xx) grants retry like every other
+        # request; a refused grant (401 wrong secret) fails at once
+        resp = send_with_retry(lambda: requests.post(
+            self.token_endpoint, data=body, timeout=30.0))
         if resp.status_code >= 400:
             raise ProfileError(
                 f"token endpoint returned HTTP {resp.status_code}: "

@@ -510,8 +510,9 @@ def dv_positions(descriptor: dict, session=None,
     version byte and this frame alone are planned, which is one GET when
     the frame starts within ``_COALESCE_BYTES`` of the file's start. The
     version byte, size, CRC-32 and cardinality are checked on the served
-    bytes either way. An expired presigned URL propagates as the 401/403
-    ``HTTPError`` for the caller to re-list.
+    bytes either way. GETs go through ``scan._ranged_get``: an expired
+    presigned URL propagates as the client's :class:`HttpError` with
+    ``.status`` 401/403, for the caller to re-list.
     """
     validate_descriptor(descriptor)
     storage = descriptor.get("storageType")

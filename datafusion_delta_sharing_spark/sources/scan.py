@@ -19,8 +19,13 @@ snapshot stream and the CDF stream all go through the same functions:
   read listed.
 
 Below them sits the HTTP layer (A3): :func:`_ranged_get` is the one GET of
-parquet and deletion-vector bytes alike, and :class:`_RangedHttpFile` fetches
-each byte of a file at most once. Two ranges of one object within
+parquet and deletion-vector bytes alike. It sends through the client's one
+retry loop and error mapping (``client.send_with_retry`` and
+``client.check_response``), as every REST call and the OAuth token grant
+do: 429, 5xx and dropped connections retry, and a failure that escapes is
+a typed :class:`HttpError` (401/403 is what triggers a re-list) or, when
+transport errors use up the retries, a :class:`DeltaSharingError`.
+:class:`_RangedHttpFile` fetches each byte of a file at most once. Two ranges of one object within
 ``_COALESCE_BYTES`` (pyarrow's 64 KiB footer probe) of each other are one
 GET: a read of every data column, or a projected read of a file of at most
 128 KiB, is one GET of the whole file; a projected read of a larger file
@@ -38,8 +43,13 @@ from urllib.parse import urlparse
 
 from pyspark.sql import types as T
 
-from datafusion_delta_sharing_spark.client import FileAction, TableData
-from datafusion_delta_sharing_spark.errors import DeltaSharingError
+from datafusion_delta_sharing_spark.client import (
+    FileAction,
+    TableData,
+    check_response,
+    send_with_retry,
+)
+from datafusion_delta_sharing_spark.errors import DeltaSharingError, HttpError
 from datafusion_delta_sharing_spark.plans.predicates import Op
 from datafusion_delta_sharing_spark.plans.pruning import (
     may_match,
@@ -231,71 +241,40 @@ def _has_variant(dtype: T.DataType) -> bool:
 # and one task's deletion vectors in a shared DV file coalesce.
 _COALESCE_BYTES = 64 * 1024
 
-_RETRIES = 3
-_BACKOFF_S = 0.5
-
-
 def _ranged_get(session, url: str, lo: int, hi: int,
                 size: int | None = None) -> tuple[int, bytes]:
     """Bytes ``[lo, hi)`` of ``url`` in one ``Range`` GET, as ``(start,
     body)`` with ``body[0]`` at object offset ``start``.
 
     The one GET of the scan, for parquet and deletion-vector bytes alike.
-    Transient faults (5xx, dropped connections) retry with backoff, and
-    raise :class:`DeltaSharingError` once the retries run out; any other 4xx
-    propagates at once, so the caller can re-list on an expired
-    presigned URL (401/403). A server that ignores ``Range`` answers 200
-    with the whole object, which comes back whole (``start`` 0) for the
-    caller to hold. A 416, or a 206 body that is not the requested length,
-    raises :class:`DeltaSharingError`: the object is shorter than its
-    listing, and decoding short bytes yields wrong rows. ``size`` (the
-    listed object size, when known) is checked against a 200 body too.
+    It goes through the client's request path: 429, 5xx and dropped
+    connections retry with backoff (:func:`client.send_with_retry`), and a
+    final status >= 400 raises the client's :class:`HttpError` with its
+    ``.status`` (:func:`client.check_response`), so the caller can re-list
+    on an expired presigned URL (401/403). A server that ignores ``Range``
+    answers 200 with the whole object, which comes back whole (``start``
+    0) for the caller to hold. A 416, or a 206 body that is not the
+    requested length, raises :class:`DeltaSharingError`: the object is
+    shorter than its listing, and decoding short bytes yields wrong rows.
+    ``size`` (the listed object size, when known) is checked against a 200
+    body too.
     """
-    import time
-
-    import requests
-
     listed = ("" if size is None
               else f", which does not match its listed size {size}")
-    last_exc: Exception | None = None
-    for attempt in range(_RETRIES + 1):
-        try:
-            resp = session.get(url, headers={"Range": f"bytes={lo}-{hi - 1}"},
-                               timeout=120)
-            if resp.status_code >= 500:
-                raise requests.HTTPError(
-                    f"server error {resp.status_code}", response=resp)
-            if resp.status_code == 416:
-                raise DeltaSharingError(
-                    f"{url} cannot serve bytes {lo}-{hi - 1}: the range "
-                    f"starts past the end of the object{listed}")
-            resp.raise_for_status()
-            body = resp.content
-            if resp.status_code == 200:
-                if size is not None and len(body) != size:
-                    raise _length_error(url, 0, size, body, resp, listed)
-                return 0, body
-            if len(body) != hi - lo:
-                raise _length_error(url, lo, hi, body, resp, listed)
-            return lo, body
-        except requests.HTTPError as exc:
-            if (_status(exc) or 0) < 500:
-                raise
-            last_exc = exc
-        except requests.RequestException as exc:
-            # resets mid-body surface as ChunkedEncodingError /
-            # ContentDecodingError, NOT ConnectionError — catching the
-            # base class keeps the bounded retry for all of them
-            last_exc = exc
-        if attempt < _RETRIES:
-            time.sleep(_BACKOFF_S * (2 ** attempt))
-    raise DeltaSharingError(
-        f"GET bytes={lo}-{hi - 1} of {url} failed after {_RETRIES + 1} "
-        f"attempts: {last_exc}") from last_exc
-
-
-def _status(exc) -> int | None:
-    return exc.response.status_code if exc.response is not None else None
+    resp = send_with_retry(lambda: session.get(
+        url, headers={"Range": f"bytes={lo}-{hi - 1}"}, timeout=120))
+    if resp.status_code == 416:
+        raise DeltaSharingError(
+            f"{url} cannot serve bytes {lo}-{hi - 1}: the range "
+            f"starts past the end of the object{listed}")
+    body = check_response(resp).content
+    if resp.status_code == 200:
+        if size is not None and len(body) != size:
+            raise _length_error(url, 0, size, body, resp, listed)
+        return 0, body
+    if len(body) != hi - lo:
+        raise _length_error(url, lo, hi, body, resp, listed)
+    return lo, body
 
 
 def _length_error(url: str, lo: int, hi: int, body: bytes, resp,
@@ -411,11 +390,12 @@ def _open_parquet(url: str, size: int, session, whole: bool,
 
     Local paths open directly; http(s) URLs go through a
     :class:`_RangedHttpFile` (``whole``: the file arrives in one GET —
-    see :func:`read_files` for when). On 401/403 — an expired presigned
-    URL — ``refresh()`` supplies a fresh file action and the file reopens
-    from its URL."""
+    see :func:`read_files` for when). On an :class:`HttpError` 401/403
+    while opening — an expired presigned URL — ``refresh()`` supplies a
+    fresh file action and the file reopens from its URL. A 401/403 on a
+    later column-chunk GET of a projected read is not re-listed; it
+    surfaces as the typed :class:`HttpError`."""
     import pyarrow.parquet as pq
-    import requests
 
     def open_(u: str, s: int):
         scheme = urlparse(u).scheme
@@ -437,11 +417,11 @@ def _open_parquet(url: str, size: int, session, whole: bool,
 
     try:
         return open_(url, size)
-    except requests.HTTPError as exc:
+    except HttpError as exc:
         # ONLY auth failures mean an expired presigned URL; anything
         # else (corrupt footer, 404, scheme errors) must surface as
         # itself, not be masked by a pointless re-listing
-        if _status(exc) not in (401, 403):
+        if exc.status not in (401, 403):
             raise
         fresh = refresh()
         return open_(fresh.url, fresh.size)
@@ -484,10 +464,13 @@ def read_files(tasks: Iterable[FileTask], schema: T.StructType,
     and before its first file the task plans the GETs of all its on-file
     deletion vectors (``dv.DvReads``), whose rows it drops by position.
 
-    On an expired presigned URL (401/403) of a data or DV file, ``relist``
-    is called once for the task (File.expirationTimestamp handling — the
-    reference does not survive expiry; we do). A file it no longer lists,
-    or whose deletion vector changed, raises :class:`DeltaSharingError`.
+    On an expired presigned URL (an :class:`HttpError` 401/403) of a DV
+    file or of a data file as it opens, ``relist`` is called once for the
+    task (File.expirationTimestamp handling — the reference does not
+    survive expiry; we do). A file it no longer lists, or whose deletion
+    vector changed, raises :class:`DeltaSharingError`. Throttled and
+    failed GETs retry in :func:`_ranged_get`; any other HTTP failure
+    raises the client's typed :class:`HttpError`.
     """
     import pyarrow as pa
     import requests
@@ -516,8 +499,8 @@ def read_files(tasks: Iterable[FileTask], schema: T.StructType,
         try:
             return dv.dv_positions(task.deletion_vector, session=session,
                                    reads=dv_reads)
-        except requests.HTTPError as exc:
-            if _status(exc) not in (401, 403):
+        except HttpError as exc:
+            if exc.status not in (401, 403):
                 raise
             fresh_dv = fresh_action(task.file_id).deletion_vector
             if dv.dv_identity_changed(fresh_dv, task.deletion_vector):

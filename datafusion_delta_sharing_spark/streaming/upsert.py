@@ -138,10 +138,13 @@ class ReplayGuard:
     see. Replays WITHIN one incarnation (a caller re-invoking the same
     batch id, as the replay tests do) hit the memo directly.
 
-    The memo counts as primed only once a batch has committed: if the
-    first write fails and the batch is retried, the retry probes again,
-    so stamps written by an earlier incarnation still block their
-    buckets."""
+    The memo counts as primed only while every batch it answered has
+    reached :meth:`record`: :meth:`done_buckets` unprimes it and
+    ``record`` primes it again. If a write fails, or an interrupt lands
+    after a write committed but before ``record`` ran, the retry of that
+    batch probes again, so stamps the memo never saw still block their
+    buckets. Fault-free batches always reach ``record`` and run no
+    probe after the first."""
 
     def __init__(self) -> None:
         self._seen: dict = {}   # bucket -> highest batch_id stamped here
@@ -153,6 +156,7 @@ class ReplayGuard:
                 if self._seen.get(b, -1) >= batch_id}
         if not self._primed:
             done |= stamped_buckets(current, run_id, batch_id)
+        self._primed = False
         return done
 
     def record(self, todo: list, batch_id: int) -> None:

@@ -6,6 +6,7 @@ import json
 
 import pytest
 
+from datafusion_delta_sharing_spark import client as client_mod
 from datafusion_delta_sharing_spark.client import DeltaSharingClient
 from datafusion_delta_sharing_spark.errors import ClientHttpError
 from datafusion_delta_sharing_spark.profile import Profile
@@ -200,9 +201,9 @@ def test_partition_values_none_normalized():
     assert f.partition_values == {"day": ""}
 
 
-def test_retry_on_429_then_success(server):
-    client = DeltaSharingClient(Profile.from_json(server.profile_doc()),
-                                backoff_base=0.0)
+def test_retry_on_429_then_success(server, monkeypatch):
+    monkeypatch.setattr(client_mod, "_BACKOFF_S", 0.0)
+    client = DeltaSharingClient(Profile.from_json(server.profile_doc()))
     path = "/delta-sharing/shares"
     server.throttle_paths[path] = 2
     names = [s.name for s in client.list_shares()]
@@ -211,9 +212,10 @@ def test_retry_on_429_then_success(server):
     assert len(throttled) == 3  # 2 x 429 + 1 success
 
 
-def test_retry_exhaustion_surfaces_429(server):
-    client = DeltaSharingClient(Profile.from_json(server.profile_doc()),
-                                retries=1, backoff_base=0.0)
+def test_retry_exhaustion_surfaces_429(server, monkeypatch):
+    monkeypatch.setattr(client_mod, "_RETRIES", 1)
+    monkeypatch.setattr(client_mod, "_BACKOFF_S", 0.0)
+    client = DeltaSharingClient(Profile.from_json(server.profile_doc()))
     server.throttle_paths["/delta-sharing/shares"] = 99
     with pytest.raises(ClientHttpError) as exc:
         client.list_shares()
@@ -221,9 +223,9 @@ def test_retry_exhaustion_surfaces_429(server):
     assert server.throttle_paths["/delta-sharing/shares"] == 97  # 2 attempts
 
 
-def test_no_retry_on_plain_4xx(server):
-    client = DeltaSharingClient(Profile.from_json(server.profile_doc()),
-                                backoff_base=0.0)
+def test_no_retry_on_plain_4xx(server, monkeypatch):
+    monkeypatch.setattr(client_mod, "_BACKOFF_S", 0.0)
+    client = DeltaSharingClient(Profile.from_json(server.profile_doc()))
     with pytest.raises(ClientHttpError):
         client.get_share("nope")
     hits = [r for r in server.requests
@@ -280,11 +282,35 @@ def test_error_body_non_object_json_still_maps():
 
     from datafusion_delta_sharing_spark.errors import ServerHttpError
 
+    with pytest.raises(ServerHttpError):
+        client_mod.check_response(FakeResp())
+
+
+@pytest.mark.parametrize("text", ["<html><body>502 Bad Gateway</body></html>",
+                                  '[{"name": "sales"}]'])
+def test_non_object_json_body_raises_typed_error(text):
+    """A 200 whose body is not a JSON object (a proxy's HTML page, a JSON
+    array) raises DeltaSharingError naming the URL, not a decode error
+    or AttributeError."""
+    import requests
+
+    from datafusion_delta_sharing_spark.errors import DeltaSharingError
+
+    class Session:
+        def get(self, url, **kwargs):
+            resp = requests.Response()
+            resp.status_code = 200
+            resp.encoding = "utf-8"
+            resp._content = text.encode()
+            return resp
+
     client = DeltaSharingClient(Profile.from_json(json.dumps({
         "shareCredentialsVersion": 1, "endpoint": "http://x",
-        "bearerToken": "t"})))
-    with pytest.raises(ServerHttpError):
-        client._check(FakeResp())
+        "bearerToken": "t"})), session=Session())
+    with pytest.raises(DeltaSharingError, match="http://x/shares"):
+        client.list_shares()
+    with pytest.raises(DeltaSharingError, match="http://x/shares/sales"):
+        client.get_share("sales")
 
 
 def test_profile_bad_version_raises_profile_error():

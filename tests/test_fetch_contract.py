@@ -4,8 +4,9 @@ server's request log: every byte of a shared parquet file crosses the wire
 at most once, a read of every data column (or of any data column of a file
 of at most 128 KiB) is one whole-file GET, the files of one shared DV file
 are one task whose deletion vectors are one GET, a task re-lists at most
-once, and a body that does not match the listed size, or a GET whose
-retries run out, ends in a typed error, never in short rows."""
+once, throttled data, DV and token requests retry through the client's one
+request path, and a body that does not match the listed size, or a GET
+whose retries run out, ends in a typed error, never in short rows."""
 
 import contextlib
 import io
@@ -23,7 +24,8 @@ from datafusion_delta_sharing_spark import (
     DeltaSharingReader,
     Profile,
 )
-from datafusion_delta_sharing_spark.errors import DeltaSharingError
+from datafusion_delta_sharing_spark import client as client_mod
+from datafusion_delta_sharing_spark.errors import ClientHttpError, DeltaSharingError
 from datafusion_delta_sharing_spark.plans import audit
 from datafusion_delta_sharing_spark.sources import dv, scan
 from datafusion_delta_sharing_spark.sources.datasource import (
@@ -386,9 +388,10 @@ def test_expired_url_of_a_file_the_relist_drops_raises(spark, entry):
 def test_ranged_get_raises_a_typed_error_when_retries_run_out(monkeypatch):
     """A connection that drops on every attempt ends in
     :class:`DeltaSharingError` caused by the ``requests`` error, after
-    ``_RETRIES + 1`` attempts; an expired URL (403) still raises
-    ``HTTPError`` at once, so the caller can re-list."""
-    monkeypatch.setattr(scan, "_BACKOFF_S", 0)
+    ``_RETRIES + 1`` attempts; an expired URL (403) raises
+    :class:`ClientHttpError` with ``.status`` 403 at once, so the caller
+    can re-list."""
+    monkeypatch.setattr(client_mod, "_BACKOFF_S", 0)
 
     class Dropping(dict):
         def __getitem__(self, key):
@@ -400,10 +403,64 @@ def test_ranged_get_raises_a_typed_error_when_retries_run_out(monkeypatch):
         with pytest.raises(DeltaSharingError, match="attempts") as info:
             scan._ranged_get(session, f"{srv.base_url}/small.parquet", 0, 10)
         assert isinstance(info.value.__cause__, requests.RequestException)
-        assert len(_ranges(srv, "/small.parquet")) == scan._RETRIES + 1
+        assert len(_ranges(srv, "/small.parquet")) == client_mod._RETRIES + 1
 
         srv.forbidden_paths.add("/large.parquet")
-        with pytest.raises(requests.HTTPError) as info:
+        with pytest.raises(ClientHttpError) as info:
             scan._ranged_get(session, f"{srv.base_url}/large.parquet", 0, 10)
-        assert info.value.response.status_code == 403
+        assert info.value.status == 403
         assert len(_ranges(srv, "/large.parquet")) == 1
+
+
+# -- faults on the one request path ----------------------------------------
+# The mock server answers a throttled path with 429 and Retry-After: 0, so
+# these retries do not wait, also in Spark's Python workers.
+
+
+@pytest.mark.parametrize("entry", ["reader", "format"])
+def test_throttled_data_get_retries_to_exact_rows(registered, entry):
+    with _serve(BLOBS) as srv:
+        srv.throttle_paths["/small.parquet"] = 2
+        rows = _read(registered, srv, entry).collect()
+        assert sorted(r.id for r in rows) == IDS
+        n = len(BLOBS["/small.parquet"])
+        assert _ranges(srv, "/small.parquet") == [(0, n - 1)] * 3
+
+
+@pytest.mark.parametrize("entry", ["reader", "format"])
+def test_throttled_dv_get_retries_to_exact_rows(spark, entry):
+    with _serve_with_dvs() as (srv, _):
+        srv.throttle_paths["/shared.dv"] = 1
+        assert _ids_after(spark, srv, entry) == DV_IDS
+        n = len(srv.parquet_bytes["/shared.dv"])
+        assert _dv_ranges(srv, "/shared.dv") == [f"bytes=0-{n - 1}"] * 2
+
+
+@pytest.mark.parametrize("entry", ["reader", "format"])
+def test_url_still_expired_after_relist_raises_client_http_error(registered,
+                                                                 entry):
+    """The re-list hands back the same URL, which still answers 403: the
+    read fails with the client's typed error, not a raw ``requests``
+    one."""
+    with _serve_with_dvs() as (srv, _):
+        srv.forbidden_paths.add("/d1.parquet")
+        with pytest.raises(Exception, match="ClientHttpError") as info:
+            _read(registered, srv, entry).collect()
+        assert "HTTP 403" in str(info.value)
+        assert _queries(srv) == 2  # the planning listing and one re-list
+
+
+def test_throttled_token_grant_retries():
+    from datafusion_delta_sharing_spark.profile import (
+        OAuthClientCredentialsProfile,
+    )
+
+    with _serve({}) as srv:
+        srv.oauth = {"client_id": "cid", "client_secret": "sekrit",
+                     "expires_in": 3600}
+        srv.throttle_paths["/oauth/token"] = 2
+        profile = OAuthClientCredentialsProfile(
+            srv.endpoint, f"{srv.base_url}/oauth/token", "cid", "sekrit")
+        assert [s.name for s in DeltaSharingClient(profile).list_shares()
+                ] == ["s"]
+        assert sum(r["path"] == "/oauth/token" for r in srv.requests) == 3

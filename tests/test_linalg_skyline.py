@@ -259,6 +259,43 @@ def test_upsert_refused_first_batch_retry_probes_again(spark, sf_dir,
                      for uid, (cents, n) in once.items()}
 
 
+def test_upsert_batch_interrupted_before_record_probes_again(
+        spark, sf_dir, tmp_path, monkeypatch):
+    """Batch 1's write commits, then an interrupt lands before the guard
+    records it, and the same sink receives batch 1 again. The replay must
+    probe the stamps the memo never saw: skipping the probe would merge
+    batch 1 twice."""
+    from datafusion_delta_sharing_spark.streaming import upsert as UP
+
+    state = str(tmp_path / "state")
+    batch = (load_table(spark, sf_dir, "events")
+             .select("user_id", "value").limit(500).localCheckpoint())
+    merge = UP.upsert_totals_sink(spark, state, n_buckets=4,
+                                  run_id="ckpt-i")
+    merge(batch, 0)
+    once = {r.user_id: (r.total_cents, r.n_events)
+            for r in UP.state_totals(spark, state).collect()}
+
+    record = UP.ReplayGuard.record
+    interrupts = []
+
+    def interrupt_once(self, todo, batch_id):
+        if batch_id == 1 and not interrupts:
+            interrupts.append(todo)
+            raise RuntimeError("synthetic interrupt after commit")
+        return record(self, todo, batch_id)
+
+    monkeypatch.setattr(UP.ReplayGuard, "record", interrupt_once)
+    with pytest.raises(RuntimeError, match="synthetic interrupt"):
+        merge(batch, 1)
+    assert interrupts and interrupts[0]
+    merge(batch, 1)
+    after = {r.user_id: (r.total_cents, r.n_events)
+             for r in UP.state_totals(spark, state).collect()}
+    assert after == {uid: (2 * cents, 2 * n)
+                     for uid, (cents, n) in once.items()}
+
+
 def test_upsert_overwrite_reads_its_own_state_dir(spark, sf_dir, tmp_path):
     """ADVICE r10 pin: the pre-write localCheckpoint is LAZY, so the
     write job's own tasks physically read the old state files while the

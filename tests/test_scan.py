@@ -213,6 +213,38 @@ def test_relist_pin_prefers_the_listed_version():
         "version": None, "timestamp": "2024-01-01T00:00:00Z"}
 
 
+def test_one_retry_loop_and_no_raw_http_errors_in_sources():
+    """Every request goes through the client's one retry loop: the only
+    function that sleeps between attempts is ``client.send_with_retry``,
+    and no scan source catches or raises a raw ``requests.HTTPError``."""
+    import ast
+    import glob
+
+    import datafusion_delta_sharing_spark as pkg
+
+    root = os.path.dirname(pkg.__file__)
+    sources = sorted(glob.glob(os.path.join(root, "sources", "*.py")))
+    sleepers = set()
+    for path in [os.path.join(root, "client.py"),
+                 os.path.join(root, "profile.py"), *sources]:
+        with open(path) as fh:
+            tree = ast.parse(fh.read())
+        for fn in ast.walk(tree):
+            if not isinstance(fn, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                continue
+            for node in ast.walk(fn):
+                if (isinstance(node, ast.Call)
+                        and isinstance(node.func, ast.Attribute)
+                        and node.func.attr == "sleep"
+                        and isinstance(node.func.value, ast.Name)
+                        and node.func.value.id == "time"):
+                    sleepers.add((os.path.basename(path), fn.name))
+    assert sleepers == {("client.py", "send_with_retry")}
+    for path in sources:
+        with open(path) as fh:
+            assert "requests.HTTPError" not in fh.read(), path
+
+
 def test_an_empty_listing_is_one_empty_group():
     assert pack_files([]) == [[]]
     table = MockTable(share="s", schema="d", name="t",
