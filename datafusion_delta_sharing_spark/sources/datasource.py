@@ -28,9 +28,10 @@ The streaming reader is the engine's answer to the reference's CDF stub
 (A34, ``todo!()`` at src/client/mod.rs:384-386): for append-only shared
 tables, each microbatch emits rows from files not seen at the previous
 offset. It is a partition-planning ``DataSourceStreamReader`` (VERDICT r2
-#5): rows are read in *executor* tasks (one per new file, Arrow batches),
-never on the driver, and the offset is O(1) — ``{"version", "batch"}`` —
-regardless of how many files the table has accumulated. The per-batch file
+#5): rows are read in *executor* tasks (one per ``scan.pack_files`` group
+of the new files, Arrow batches), never on the driver, and the offset is
+O(1) — ``{"version", "batch"}`` — regardless of how many files the table
+has accumulated. The per-batch file
 manifest lives in an append-only JSONL commit log on the driver
 (``stream_log_dir`` option; a fresh temp dir by default) so a replayed
 microbatch reproduces its original file set exactly.
@@ -38,8 +39,9 @@ microbatch reproduces its original file set exactly.
 
 from __future__ import annotations
 
+import dataclasses
 import json
-from typing import Iterator, Sequence
+from typing import Iterable, Iterator, Sequence
 
 from pyspark.sql import types as T
 from pyspark.sql.datasource import (
@@ -61,23 +63,21 @@ from pyspark.sql.datasource import (
     StringStartsWith,
 )
 
-from datafusion_delta_sharing_spark.client import TableData
+from datafusion_delta_sharing_spark.client import FileAction, TableData
 from datafusion_delta_sharing_spark.errors import DeltaSharingError, PredicateError
 from datafusion_delta_sharing_spark.plans.predicates import Op, ValueType, conjunction
 from datafusion_delta_sharing_spark.securable import Table
 from datafusion_delta_sharing_spark.sources.scan import (
     FileTask,
     _has_variant,
+    file_tasks,
     pack_files,
     plan_files,
     read_files,
     relist,
     relist_pin,
 )
-from datafusion_delta_sharing_spark.sources.schema import (
-    column_mapping,
-    decode_partition_values,
-)
+from datafusion_delta_sharing_spark.sources.schema import CDF_META_FIELDS
 
 
 def _make_client(options) -> tuple:
@@ -100,24 +100,17 @@ def _make_client(options) -> tuple:
 
 
 class _FilePartition(InputPartition):
-    """The shared files of one Spark partition: a ``scan.pack_files`` group
-    for a batch read, one file for a stream, and no file for an empty
-    listing (Spark requires at least one partition). ``spec`` pins the
-    task's re-list (``scan.relist``); ``column_mapped``:
-    delta.columnMapping.mode is name/id, so the parquet columns carry the
-    schema's physicalName metadata instead of the logical field names."""
+    """The shared files of one Spark partition: a ``scan.pack_files`` group,
+    or no file for an empty batch listing (Spark requires at least one
+    partition). ``spec`` pins the task's re-list (``scan.relist``);
+    ``file_names`` maps a logical column to its parquet column where
+    delta.columnMapping.mode is name/id (the plan's mapping)."""
 
     def __init__(self, tasks: list[FileTask], spec: dict | None = None,
-                 column_mapped: bool = False):
+                 file_names: dict[str, str] | None = None):
         self.tasks = tasks
         self.spec = spec or {}
-        self.column_mapped = column_mapped
-
-    @property
-    def file_id(self) -> str:
-        """The file id of a one-file (stream) partition."""
-        (task,) = self.tasks
-        return task.file_id
+        self.file_names = file_names or {}
 
 
 def _filters_to_op(filters: Sequence[Filter], schema: T.StructType) -> Op | None:
@@ -228,19 +221,19 @@ class DeltaSharingBatchReader(DataSourceReader):
                 "DeltaSharingReader over a local (file://) share")
         # this source reads in LOGICAL names: the plan's physical
         # partition-value keys go back to logical, and the executor maps
-        # the parquet columns through the schema's physicalName metadata
+        # the parquet columns through the plan's logical -> physical map
         names = {p: l for l, p in (plan.mapping or {}).items()}
+        files = [dataclasses.replace(f, partition_values={
+                     names.get(k, k): v
+                     for k, v in f.partition_values.items()})
+                 for f in plan.files]
+        tasks = file_tasks(files, self.full_schema, _partition_columns(
+            self.options, self.full_schema, files))
         # executor-side URL refreshes re-list the snapshot THIS listing
         # came from
         spec = relist_pin(data, version, timestamp)
-        return [_FilePartition(
-                    [FileTask(f.url, f.size, f.id, _partition_constants(
-                        self.options, self.full_schema,
-                        {names.get(k, k): v
-                         for k, v in f.partition_values.items()}),
-                        f.deletion_vector) for f in group],
-                    spec, column_mapped=bool(plan.mapping))
-                for group in pack_files(plan.files)]
+        return [_FilePartition(group, spec, plan.mapping)
+                for group in pack_files(tasks)]
 
     def read(self, partition: _FilePartition):
         if not partition.tasks:
@@ -248,16 +241,15 @@ class DeltaSharingBatchReader(DataSourceReader):
         return _read_file_partition(self.options, self.full_schema, partition)
 
 
-def _partition_constants(options, schema: T.StructType,
-                         partition_values: dict[str, str]) -> dict:
-    """A file's typed partition values, keyed by logical column name: the
-    partition columns ``schema()`` recorded in the options (or, for a
-    caller-given schema, the file's keys), decoded against ``schema``."""
+def _partition_columns(options, schema: T.StructType,
+                       files: Iterable[FileAction]) -> list[str]:
+    """The partition columns of ``schema``, by logical name: those
+    ``schema()`` recorded in the options or, for a caller-given schema,
+    the files' partition keys."""
     raw = options.get("partition_columns")
-    names = set(json.loads(raw)) if raw else set(partition_values)
-    return decode_partition_values(
-        partition_values, schema,
-        [f.name for f in schema.fields if f.name in names])
+    names = (set(json.loads(raw)) if raw
+             else {k for f in files for k in f.partition_values})
+    return [f.name for f in schema.fields if f.name in names]
 
 
 def _read_file_partition(options, schema: T.StructType,
@@ -276,17 +268,24 @@ def _read_file_partition(options, schema: T.StructType,
         return relist(json.dumps(client.profile.to_doc()),
                       table.full_name(), partition.spec)
 
-    file_names = ((column_mapping(schema) or {})
-                  if partition.column_mapped else {})
-    yield from read_files(partition.tasks, schema, None, file_names,
-                          relisted)
+    yield from read_files(partition.tasks, schema, None,
+                          partition.file_names, relisted)
 
 
-def _check_schema_drift(reader, table, schema_string: str) -> None:
-    """A share's table can be schema-evolved underneath a running stream;
-    silently decoding new bytes with the old schema mis-reads or drops
-    columns. Pin the first schema seen and fail LOUDLY on drift — the
-    operator restarts the stream with the new schema deliberately."""
+def _check_stream_listing(reader, table, data: TableData,
+                          schema: T.StructType) -> None:
+    """Refuse, LOUDLY, a listing a stream cannot read: one
+    ``scan.plan_files`` refuses; a column-mapped table (a stream's
+    manifests do not yet persist the per-file translation batch reads
+    apply, so it would mis-read physical columns); and a schema that
+    drifted under the running stream (decoding new bytes with the old
+    schema mis-reads or drops columns). The first schema seen is pinned;
+    the operator restarts the stream to pick up a new one."""
+    if plan_files(data, schema, None).mapping:
+        raise DeltaSharingError(
+            "column-mapped tables are not supported by the streaming "
+            "sources; read them with the batch reader")
+    schema_string = data.metadata.schema_string
     seen = getattr(reader, "_schema_string_seen", None)
     if seen is None:
         reader._schema_string_seen = schema_string
@@ -317,12 +316,14 @@ class DeltaSharingStreamReader(DataSourceStreamReader):
     stream runs (VERDICT r2 #5; the r1 design's offset grew with the file
     count). The driver polls the share at ``latestOffset``; files not seen
     before become microbatch N+1, recorded as one JSONL line in the commit
-    log. ``partitions(start, end)`` plans one :class:`_FilePartition` per
-    manifest entry of batches ``start+1..end`` and Spark distributes the
-    actual parquet fetch to executors (same ``_read_file_partition`` path as
-    the batch source). Replay after a driver restart reloads the manifest
-    from the log; a replay the log cannot satisfy fails loudly rather than
-    silently emitting fewer rows."""
+    log. ``partitions(start, end)`` packs the manifest files of batches
+    ``start+1..end`` into ``scan.pack_files`` groups, one
+    :class:`_FilePartition` each, and Spark distributes the actual parquet
+    fetch to executors (same ``_read_file_partition`` path as the batch
+    source); a range with no files plans no partition. Replay after a
+    driver restart reloads the manifest from the log; a replay the log
+    cannot satisfy fails loudly rather than silently emitting fewer
+    rows."""
 
     def __init__(self, options, schema: T.StructType):
         import os
@@ -396,14 +397,7 @@ class DeltaSharingStreamReader(DataSourceStreamReader):
     def latestOffset(self) -> dict:
         client, table = _make_client(self.options)
         data = client.get_table_data(table)
-        if plan_files(data, self.full_schema, None).mapping:
-            # batch reads translate column mapping; the streaming
-            # manifest does not persist the per-file translation state
-            # yet — refuse loudly rather than mis-read physical columns
-            raise DeltaSharingError(
-                "column-mapped tables are not supported by the streaming "
-                "source; read them with the batch reader")
-        _check_schema_drift(self, table, data.metadata.schema_string)
+        _check_stream_listing(self, table, data, self.full_schema)
         if data.version is not None:
             self._version = data.version
         new = [f for f in data.files if f.id not in self._seen]
@@ -419,7 +413,7 @@ class DeltaSharingStreamReader(DataSourceStreamReader):
         return {"version": self._version, "batch": self._latest_batch}
 
     def partitions(self, start: dict, end: dict) -> Sequence[InputPartition]:
-        parts: list[_FilePartition] = []
+        files: list[FileAction] = []
         for b in range(start.get("batch", -1) + 1, end.get("batch", -1) + 1):
             manifest = self._batches.get(b)
             if manifest is None:
@@ -430,12 +424,14 @@ class DeltaSharingStreamReader(DataSourceStreamReader):
                     f"cannot replay microbatch {b}: no manifest in the "
                     f"stream commit log at {self._log_path} (log lost or "
                     "truncated) — refusing to guess the original file set")
-            # an unpinned re-list: the stream follows the live table
-            parts.extend(_FilePartition([FileTask(
-                f["url"], f["size"], f["id"], _partition_constants(
-                    self.options, self.full_schema, f["partition_values"]),
-                f.get("deletion_vector"))]) for f in manifest)
-        return parts
+            # a manifest entry is spelled with FileAction's field names
+            files.extend(FileAction(**f) for f in manifest)
+        if not files:
+            return []
+        tasks = file_tasks(files, self.full_schema, _partition_columns(
+            self.options, self.full_schema, files))
+        # an unpinned re-list: the stream follows the live table
+        return [_FilePartition(group) for group in pack_files(tasks)]
 
     def read(self, partition: _FilePartition) -> Iterator:
         return _read_file_partition(self.options, self.full_schema, partition)
@@ -448,11 +444,18 @@ class DeltaSharingStreamReader(DataSourceStreamReader):
             del self._batches[b]
 
 
-_CDF_META_FIELDS = (
-    T.StructField("_change_type", T.StringType()),
-    T.StructField("_commit_version", T.LongType()),
-    T.StructField("_commit_timestamp", T.TimestampType()),
-)
+def _change_constants(kind: str, f: FileAction, hi: int) -> dict:
+    """The change-feed columns of one action file of a range ending at
+    version ``hi``, the commit version of a file that names none."""
+    constants = {
+        "_commit_version": f.version if f.version is not None else hi,
+        # keep None: a missing commit timestamp must surface as NULL, not
+        # a silent 1970 epoch
+        "_commit_timestamp": (f.timestamp * 1000
+                              if f.timestamp is not None else None)}
+    if kind != "cdf":  # a "cdf" file carries its own _change_type
+        constants["_change_type"] = "insert" if kind == "add" else "delete"
+    return constants
 
 
 def _wants_cdf(options) -> bool:
@@ -466,16 +469,17 @@ class DeltaSharingCDFStreamReader(DataSourceStreamReader):
     is no local commit log at all: ``partitions(start, end)`` re-lists the
     version range from the server, which is authoritative for replay. A
     replay whose versions the server has vacuumed fails loudly server-side
-    rather than silently dropping changes. Each action file is one
-    executor partition; add/remove actions get literal
-    insert/delete ``_change_type``, ``cdf`` files carry their own."""
+    rather than silently dropping changes. The files of each commit
+    version are packed into ``scan.pack_files`` groups, one executor
+    partition each; add/remove actions get literal insert/delete
+    ``_change_type``, ``cdf`` files carry their own."""
 
     def __init__(self, options, schema: T.StructType):
         self.options = options
         # schema arrives WITH the three CDF meta columns (appended by
         # DeltaSharingDataSource.schema); the file payload schema is the
         # table schema without them
-        meta_names = {f.name for f in _CDF_META_FIELDS}
+        meta_names = {f.name for f in CDF_META_FIELDS}
         self.out_schema = schema
         self.base_schema = T.StructType(
             [f for f in schema.fields if f.name not in meta_names])
@@ -509,31 +513,19 @@ class DeltaSharingCDFStreamReader(DataSourceStreamReader):
             table, starting_version=lo + 1, ending_version=hi)
         data = TableData(changes.protocol, changes.metadata,
                          tuple(f for _, f in changes.actions), changes.version)
-        if plan_files(data, self.base_schema, None).mapping:
-            raise DeltaSharingError(
-                "column-mapped tables are not supported by the CDF "
-                "streaming source; read them with the batch reader")
-        _check_schema_drift(self, table, changes.metadata.schema_string)
-        parts = []
-        for kind, f in changes.actions:
-            version = f.version if f.version is not None else hi
-            constants = {
-                **_partition_constants(self.options, self.base_schema,
-                                       f.partition_values),
-                "_commit_version": version,
-                # keep None: a missing commit timestamp must surface as
-                # NULL, not a silent 1970 epoch
-                "_commit_timestamp": (f.timestamp * 1000
-                                      if f.timestamp is not None else None)}
-            if kind != "cdf":  # a "cdf" file carries its own _change_type
-                constants["_change_type"] = ("insert" if kind == "add"
-                                             else "delete")
-            # an expired URL re-resolves through /changes for the file's
-            # own commit: remove/cdc files are in no snapshot listing
-            parts.append(_FilePartition(
-                [FileTask(f.url, f.size, f.id, constants, f.deletion_vector)],
-                {"changes_version": version}))
-        return parts
+        _check_stream_listing(self, table, data, self.base_schema)
+        tasks = file_tasks(data.files, self.base_schema, _partition_columns(
+            self.options, self.base_schema, data.files),
+            [_change_constants(kind, f, hi) for kind, f in changes.actions])
+        by_version: dict[int, list[FileTask]] = {}
+        for task in tasks:
+            by_version.setdefault(task.constants["_commit_version"],
+                                  []).append(task)
+        # an expired URL re-resolves through /changes for the group's own
+        # commit: remove/cdc files are in no snapshot listing
+        return [_FilePartition(group, {"changes_version": version})
+                for version, same in by_version.items()
+                for group in pack_files(same)]
 
     def read(self, partition: _FilePartition):
         return _read_file_partition(self.options, self.out_schema, partition)
@@ -570,7 +562,7 @@ class DeltaSharingDataSource(DataSource):
             list(metadata.partition_columns))
         base = schema_from_string(metadata.schema_string)
         if _wants_cdf(self.options):
-            return T.StructType(list(base.fields) + list(_CDF_META_FIELDS))
+            return T.StructType(list(base.fields) + list(CDF_META_FIELDS))
         return base
 
     def reader(self, schema: T.StructType) -> DeltaSharingBatchReader:

@@ -23,10 +23,10 @@ Parity targets (SURVEY.md §2 Tier A):
 
 Scale design (100 TB): the driver only ever touches the *file list* (one
 row per file — metadata, not data). Data bytes move exclusively inside
-executor tasks: each task receives one file group of descriptors
-(``scan.pack_files``: ~128 MiB of parquet) and streams Arrow record
-batches straight out of parquet row groups over HTTP. No driver
-materialization, no local staging, no collect.
+executor tasks: each task receives one file group of ready file tasks
+(``scan.file_tasks`` packed by ``scan.pack_files``: ~128 MiB of parquet)
+and streams Arrow record batches straight out of parquet row groups over
+HTTP. No driver materialization, no local staging, no collect.
 Stats-based file pruning (plans/pruning.py) happens before the file list is
 parallelized, so a selective predicate turns a million-file table into the
 handful of files Spark must actually open.
@@ -35,6 +35,7 @@ handful of files Spark must actually open.
 from __future__ import annotations
 
 import json
+import pickle
 from functools import reduce
 from typing import Iterable, Iterator, Sequence
 from urllib.parse import urlparse
@@ -58,9 +59,9 @@ from datafusion_delta_sharing_spark.plans.pruning import prune_for_limit
 from datafusion_delta_sharing_spark.securable import Table
 from datafusion_delta_sharing_spark.sources.dv import dv_positions
 from datafusion_delta_sharing_spark.sources.scan import (
-    FileTask,
     _has_variant,
     _local_path,
+    file_tasks,
     pack_files,
     physical_partition_keys,
     plan_files,
@@ -69,6 +70,7 @@ from datafusion_delta_sharing_spark.sources.scan import (
     relist_pin,
 )
 from datafusion_delta_sharing_spark.sources.schema import (
+    CDF_META_FIELDS,
     column_mapping_of,
     decode_partition_values,
     schema_from_string,
@@ -89,25 +91,20 @@ def _op_column_names(op: Op) -> set[str]:
 
 
 def _fetch_batches_task(
-    descriptor_batches: Iterable["pyarrow.RecordBatch"],  # noqa: F821
+    group_batches: Iterable["pyarrow.RecordBatch"],  # noqa: F821
     schema: T.StructType,
-    partition_columns: Sequence[str],
     columns: Sequence[str] | None,
     profile_doc: str,
     table_fqn: str,
     spec: dict,
 ) -> Iterator["pyarrow.RecordBatch"]:  # noqa: F821
-    """mapInArrow worker: the file descriptors of one Spark task in, table
-    record batches out, through ``scan.read_files``. Partition values are
-    decoded here, on the executor, into each file's typed constants (A20);
-    an expired presigned URL re-lists the table once, pinned to ``spec``."""
-    tasks = [FileTask(row["url"], row["size"], row["file_id"],
-                      decode_partition_values(
-                          json.loads(row["partition_values"]), schema,
-                          partition_columns),
-                      json.loads(row["deletion_vector"])
-                      if row["deletion_vector"] else None)
-             for batch in descriptor_batches for row in batch.to_pylist()]
+    """mapInArrow worker: the pickled file group of one Spark task in,
+    table record batches out, through ``scan.read_files``. The tasks
+    arrive ready, partition values decoded on the driver (A20); an expired
+    presigned URL re-lists the table once, pinned to ``spec``."""
+    tasks = [task for batch in group_batches
+             for group in batch.column("tasks").to_pylist()
+             for task in pickle.loads(group)]
     yield from read_files(tasks, schema, columns, {},
                           lambda: relist(profile_doc, table_fqn, spec))
 
@@ -418,11 +415,8 @@ class DeltaSharingReader:
                             F.timestamp_millis(F.lit(ts).cast("long"))))
 
         if not parts:
-            out = T.StructType(list(full_schema.fields) + [
-                T.StructField("_change_type", T.StringType()),
-                T.StructField("_commit_version", T.LongType()),
-                T.StructField("_commit_timestamp", T.TimestampType())])
-            return self.spark.createDataFrame([], out)
+            return self.spark.createDataFrame([], T.StructType(
+                list(full_schema.fields) + list(CDF_META_FIELDS)))
         return reduce(lambda a, b: a.unionByName(b), parts)
 
     # -- physical construction --------------------------------------------
@@ -634,29 +628,20 @@ class DeltaSharingReader:
                           full_schema: T.StructType, partition_columns: list[str],
                           columns: Sequence[str] | None,
                           refresh_spec: dict) -> DataFrame:
-        """The scale path: parallelize the file descriptors, one Spark
-        partition per ``scan.pack_files`` group and no shuffle, and fetch +
-        decode them on executors via mapInArrow; expired URLs re-list
-        pinned to ``refresh_spec``."""
+        """The scale path: build the file tasks on the driver, parallelize
+        their ``scan.pack_files`` groups one Spark partition each and with
+        no shuffle, and fetch + decode them on executors via mapInArrow;
+        expired URLs re-list pinned to ``refresh_spec``."""
         out_schema = (T.StructType([full_schema[c] for c in columns])
                       if columns else full_schema)
 
-        groups = [[(f.url, f.id, f.size, json.dumps(f.partition_values),
-                    # decoded INSIDE the fetch task — DV bytes never
-                    # concentrate on the driver (100 TB posture)
-                    json.dumps(f.deletion_vector)
-                    if f.deletion_vector else None)
-                   for f in group] for group in pack_files(files)]
-        desc_schema = T.StructType([
-            T.StructField("url", T.StringType(), False),
-            T.StructField("file_id", T.StringType(), False),
-            T.StructField("size", T.LongType(), False),
-            T.StructField("partition_values", T.StringType(), False),
-            T.StructField("deletion_vector", T.StringType(), True),
-        ])
-        desc_df = self.spark.createDataFrame(
-            self.spark.sparkContext.parallelize(groups, len(groups))
-            .flatMap(lambda group: group), desc_schema)
+        # deletion vectors travel as descriptors and are decoded INSIDE
+        # the fetch task — DV bytes never concentrate on the driver
+        groups = pack_files(file_tasks(files, full_schema, partition_columns))
+        group_df = self.spark.createDataFrame(
+            self.spark.sparkContext.parallelize(
+                [(pickle.dumps(g),) for g in groups], len(groups)),
+            T.StructType([T.StructField("tasks", T.BinaryType(), False)]))
 
         # the profile serializes ITSELF (Profile.to_doc round-trips via
         # from_json): a hand-built v1 doc here crashed every non-bearer
@@ -666,10 +651,9 @@ class DeltaSharingReader:
         profile_doc = json.dumps(self.client.profile.to_doc())
         fqn = table.full_name()
         cols = list(columns) if columns else None
-        pcols = list(partition_columns)
 
         def fetch(batches):
-            return _fetch_batches_task(batches, full_schema, pcols, cols,
+            return _fetch_batches_task(batches, full_schema, cols,
                                        profile_doc, fqn, refresh_spec)
 
-        return desc_df.mapInArrow(fetch, out_schema)
+        return group_df.mapInArrow(fetch, out_schema)

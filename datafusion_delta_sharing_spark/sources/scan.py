@@ -9,10 +9,12 @@ snapshot stream and the CDF stream all go through the same functions:
 
 * :func:`plan_files` (driver): the checks a listing must pass before any
   task is scheduled, and stats pruning;
-* :func:`pack_files` (driver): the file groups of a batch read, one Spark
-  task each, as the reference runs one partition per file group
-  (``src/datasource/scan.rs:77,123-125``); the streams keep one file per
-  task;
+* :func:`file_tasks` (driver): the one builder of :class:`FileTask`,
+  each file's partition values decoded once while the scan is planned, as
+  the reference does (``src/datasource/scan.rs:61-82,159-229``);
+* :func:`pack_files` (driver): the file groups of every read, batch and
+  stream alike, one Spark task each, as the reference runs one partition
+  per file group (``src/datasource/scan.rs:77,123-125``);
 * :func:`read_files` (executor): file tasks in, Arrow record batches out;
 * :func:`relist` (executor): one re-list per task when a presigned URL
   expired mid-scan, pinned by :func:`relist_pin` to the snapshot a batch
@@ -61,6 +63,7 @@ from datafusion_delta_sharing_spark.sources import dv
 from datafusion_delta_sharing_spark.sources.schema import (
     ambiguous_mapping_names,
     column_mapping_of,
+    decode_partition_values,
     to_physical_schema,
 )
 
@@ -190,8 +193,9 @@ def physical_partition_keys(files: Iterable[FileAction],
 _BYTES_PER_TASK = 128 * 1024 * 1024
 
 
-def pack_files(files: Sequence[FileAction]) -> list[list[FileAction]]:
-    """The file groups of a batch read, each read by one Spark task.
+def pack_files(files: Sequence[Any]) -> list[list[Any]]:
+    """The file groups of a read, each read by one Spark task; ``files``
+    are file actions or file tasks, packed by their ``size``.
 
     ``max(1, min(#files, ceil(total bytes / _BYTES_PER_TASK)))`` groups,
     dealt largest file first round-robin so the n largest files land in n
@@ -307,18 +311,43 @@ class _RangedHttpFile(io.RawIOBase):
 
     A 200 from a server that ignores ``Range`` is the whole object and is
     held the same way.
+
+    An :class:`HttpError` 401/403 on any GET (the presigned URL expired,
+    before the footer or between column chunks) calls ``refresh()`` for a
+    fresh file action and repeats the GET once from its URL; a fresh
+    action whose size differs from the listed one raises
+    :class:`DeltaSharingError`, as the file changed under the scan.
     """
 
     def __init__(self, url: str, size: int, session=None,
-                 whole: bool = False):
+                 whole: bool = False,
+                 refresh: Callable[[], FileAction] | None = None):
         import requests
 
         self._url = url
         self._size = size
         self._whole = whole
+        self._refresh = refresh
         self._pos = 0
         self._session = session or requests.Session()
         self._tail = b""  # the held suffix [size - len(tail), size)
+
+    def _get(self, lo: int, hi: int) -> tuple[int, bytes]:
+        try:
+            return _ranged_get(self._session, self._url, lo, hi, self._size)
+        except HttpError as exc:
+            # ONLY auth failures mean an expired presigned URL; anything
+            # else (404, a 5xx outlasting the retries) surfaces as itself
+            if self._refresh is None or exc.status not in (401, 403):
+                raise
+            fresh = self._refresh()
+            if fresh.size != self._size:
+                raise DeltaSharingError(
+                    f"file {self._url} changed between listing and scan "
+                    f"(listed {self._size} bytes, now {fresh.size}); re-run "
+                    "the read") from exc
+            self._url = fresh.url
+        return _ranged_get(self._session, self._url, lo, hi, self._size)
 
     def seekable(self) -> bool:
         return True
@@ -348,8 +377,7 @@ class _RangedHttpFile(io.RawIOBase):
         if start < held:
             lo, hi = ((0, self._size) if self._whole
                       else (start, min(end, held)))
-            at, body = _ranged_get(self._session, self._url, lo, hi,
-                                   self._size)
+            at, body = self._get(lo, hi)
             fetched = body[lo - at:hi - at]
             if at + len(body) == self._size and not self._tail:
                 self._tail = body  # the whole file, or the footer probe
@@ -390,41 +418,26 @@ def _open_parquet(url: str, size: int, session, whole: bool,
 
     Local paths open directly; http(s) URLs go through a
     :class:`_RangedHttpFile` (``whole``: the file arrives in one GET —
-    see :func:`read_files` for when). On an :class:`HttpError` 401/403
-    while opening — an expired presigned URL — ``refresh()`` supplies a
-    fresh file action and the file reopens from its URL. A 401/403 on a
-    later column-chunk GET of a projected read is not re-listed; it
-    surfaces as the typed :class:`HttpError`."""
+    see :func:`read_files` for when), which calls ``refresh()`` for a
+    fresh file action when a GET finds the presigned URL expired."""
     import pyarrow.parquet as pq
 
-    def open_(u: str, s: int):
-        scheme = urlparse(u).scheme
-        if scheme in ("", "file"):
-            return pq.ParquetFile(_local_path(u))
-        if scheme not in ("http", "https"):
-            raise DeltaSharingError(
-                f"unsupported file URL scheme {scheme!r} in {u}")
-        # pre_buffer coalesces a projected read's column-chunk ranges
-        # into few GETs (on a real object store the round trips, not
-        # the bytes, dominate small-file cost); that matters only for a
-        # file too large to read whole. A whole-file read (every data
-        # column, or a file of at most twice _COALESCE_BYTES) is in
-        # memory after its one GET, so buffering it again would only
-        # copy it
-        return pq.ParquetFile(
-            _RangedHttpFile(u, s, session=session, whole=whole),
-            pre_buffer=not whole)
-
-    try:
-        return open_(url, size)
-    except HttpError as exc:
-        # ONLY auth failures mean an expired presigned URL; anything
-        # else (corrupt footer, 404, scheme errors) must surface as
-        # itself, not be masked by a pointless re-listing
-        if exc.status not in (401, 403):
-            raise
-        fresh = refresh()
-        return open_(fresh.url, fresh.size)
+    scheme = urlparse(url).scheme
+    if scheme in ("", "file"):
+        return pq.ParquetFile(_local_path(url))
+    if scheme not in ("http", "https"):
+        raise DeltaSharingError(
+            f"unsupported file URL scheme {scheme!r} in {url}")
+    # pre_buffer coalesces a projected read's column-chunk ranges into few
+    # GETs (on a real object store the round trips, not the bytes,
+    # dominate small-file cost); that matters only for a file too large to
+    # read whole. A whole-file read (every data column, or a file of at
+    # most twice _COALESCE_BYTES) is in memory after its one GET, so
+    # buffering it again would only copy it
+    return pq.ParquetFile(
+        _RangedHttpFile(url, size, session=session, whole=whole,
+                        refresh=refresh),
+        pre_buffer=not whole)
 
 
 # ---------------------------------------------------------------------------
@@ -443,6 +456,24 @@ class FileTask:
     file_id: str
     constants: dict[str, Any]
     deletion_vector: dict | None = None
+
+
+def file_tasks(files: Iterable[FileAction], schema: T.StructType,
+               partition_columns: Sequence[str],
+               constants: Sequence[dict[str, Any]] | None = None,
+               ) -> list[FileTask]:
+    """The read tasks of ``files``, built on the driver: the one place a
+    :class:`FileTask` is made. Each file's partition values are decoded
+    against ``schema`` (its keys and ``partition_columns`` spelled as
+    ``schema`` spells them; a missing value is NULL), then merged with its
+    entry of ``constants``, the per-file output columns of a change feed."""
+    files = list(files)
+    return [FileTask(f.url, f.size, f.id, {
+                **decode_partition_values(f.partition_values, schema,
+                                          partition_columns), **extra},
+                f.deletion_vector)
+            for f, extra in zip(files, constants or [{}] * len(files),
+                                strict=True)]
 
 
 def read_files(tasks: Iterable[FileTask], schema: T.StructType,
@@ -465,11 +496,11 @@ def read_files(tasks: Iterable[FileTask], schema: T.StructType,
     deletion vectors (``dv.DvReads``), whose rows it drops by position.
 
     On an expired presigned URL (an :class:`HttpError` 401/403) of a DV
-    file or of a data file as it opens, ``relist`` is called once for the
+    file or on any GET of a data file, ``relist`` is called once for the
     task (File.expirationTimestamp handling — the reference does not
-    survive expiry; we do). A file it no longer lists, or whose deletion
-    vector changed, raises :class:`DeltaSharingError`. Throttled and
-    failed GETs retry in :func:`_ranged_get`; any other HTTP failure
+    survive expiry; we do). A file it no longer lists, or whose size or
+    deletion vector changed, raises :class:`DeltaSharingError`. Throttled
+    and failed GETs retry in :func:`_ranged_get`; any other HTTP failure
     raises the client's typed :class:`HttpError`.
     """
     import pyarrow as pa

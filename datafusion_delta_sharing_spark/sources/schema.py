@@ -91,6 +91,14 @@ def schema_from_string(schema_string: str) -> T.StructType:
 
 # -- partition values (scan.rs:159-229) ----------------------------------
 
+# the Delta change-data-feed metadata columns a CDF read appends to the
+# table schema, in order
+CDF_META_FIELDS = (
+    T.StructField("_change_type", T.StringType()),
+    T.StructField("_commit_version", T.LongType()),
+    T.StructField("_commit_timestamp", T.TimestampType()),
+)
+
 _EPOCH = _dt.date(1970, 1, 1)
 
 

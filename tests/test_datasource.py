@@ -147,8 +147,9 @@ def _stream_schema():
 
 def test_stream_offsets_o1_and_commit_log(tmp_path):
     """VERDICT r2 #5: the offset must stay O(1) however many files land,
-    partitions() must plan one executor task per new file, and a restart
-    with the same commit log must replay an uncommitted batch exactly."""
+    partitions() must plan one executor task per file group of new files,
+    and a restart with the same commit log must replay an uncommitted
+    batch exactly."""
     from datafusion_delta_sharing_spark.sources.datasource import (
         DeltaSharingStreamReader,
     )
@@ -180,22 +181,24 @@ def test_stream_offsets_o1_and_commit_log(tmp_path):
         assert set(off1) == set(off2) == {"version", "batch"}
         assert off2 == {"version": 8, "batch": 1}
 
-        # batch 1 = the two files that landed between the polls
+        # batch 1 = the two files that landed between the polls, one
+        # file group
         parts = reader.partitions(off1, off2)
-        assert sorted(p.file_id for p in parts) == ["s2", "s3"]
+        assert [[t.file_id for t in p.tasks] for p in parts] == [["s2", "s3"]]
         # empty range plans nothing
         assert reader.partitions(off2, off2) == []
 
         # executor read path yields Arrow batches with partition col attached
         batches = list(reader.read(parts[0]))
-        assert sum(b.num_rows for b in batches) == 2
+        assert sum(b.num_rows for b in batches) == 3
         assert str(batches[0].column(2)[0]) == "2021-04-29"
 
         # restart: a fresh reader over the same log replays batch 1 exactly
         reader2 = DeltaSharingStreamReader(opts, _stream_schema())
         assert reader2.initialOffset() == off2
         parts2 = reader2.partitions(off1, off2)
-        assert sorted(p.file_id for p in parts2) == ["s2", "s3"]
+        assert [[t.file_id for t in p.tasks] for p in parts2] == [
+            ["s2", "s3"]]
 
         # commit prunes memory but the log still serves replays
         reader2.commit(off2)

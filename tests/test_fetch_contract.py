@@ -12,6 +12,7 @@ import contextlib
 import io
 import json
 import re
+import uuid
 
 import numpy as np
 import pyarrow as pa
@@ -25,6 +26,7 @@ from datafusion_delta_sharing_spark import (
     Profile,
 )
 from datafusion_delta_sharing_spark import client as client_mod
+from datafusion_delta_sharing_spark.client import FileAction
 from datafusion_delta_sharing_spark.errors import ClientHttpError, DeltaSharingError
 from datafusion_delta_sharing_spark.plans import audit
 from datafusion_delta_sharing_spark.sources import dv, scan
@@ -264,14 +266,33 @@ def _dv_ranges(srv, path: str) -> list[str]:
     return [r["range"] for r in srv.requests if r["path"] == path]
 
 
-@pytest.mark.parametrize("entry", ["reader", "format"])
+def _stream_ids(spark, srv) -> list[int]:
+    """The ids the snapshot stream emits into a memory sink over one
+    ``availableNow`` run: the three files are one micro-batch."""
+    spark.dataSource.register(DeltaSharingDataSource)
+    sink = f"dv_stream_{uuid.uuid4().hex[:8]}"
+    query = (spark.readStream.format("deltasharing")
+             .option("profile_json", json.dumps(srv.profile_doc()))
+             .option("table", "s.d.t").load()
+             .writeStream.format("memory").queryName(sink)
+             .trigger(availableNow=True).start())
+    try:
+        query.awaitTermination(60)
+        return sorted(r.id for r in spark.table(sink).collect())
+    finally:
+        query.stop()
+
+
+@pytest.mark.parametrize("entry", ["reader", "format", "stream"])
 def test_task_dvs_sharing_a_dv_file_are_one_get(spark, entry):
     """The small share's three files (far below the 128 MiB cap) are one
-    file group, so on both entry points one scan task plans the three DVs
-    of the shared DV file and fetches the version byte and every frame in
-    one GET."""
+    file group, so on every entry point, the snapshot stream's micro-batch
+    included, one scan task plans the three DVs of the shared DV file and
+    fetches the version byte and every frame in one GET."""
     with _serve_with_dvs() as (srv, _):
-        assert _ids_after(spark, srv, entry) == DV_IDS
+        ids = (_stream_ids(spark, srv) if entry == "stream"
+               else _ids_after(spark, srv, entry))
+        assert ids == DV_IDS
         n = len(srv.parquet_bytes["/shared.dv"])
         assert _dv_ranges(srv, "/shared.dv") == [f"bytes=0-{n - 1}"]
 
@@ -410,6 +431,56 @@ def test_ranged_get_raises_a_typed_error_when_retries_run_out(monkeypatch):
             scan._ranged_get(session, f"{srv.base_url}/large.parquet", 0, 10)
         assert info.value.status == 403
         assert len(_ranges(srv, "/large.parquet")) == 1
+
+
+@pytest.mark.parametrize("fresh_size", ["listed", "changed"])
+def test_expiry_after_the_footer_relists_the_column_chunk_get(monkeypatch,
+                                                              fresh_size):
+    """A presigned URL that expires between a projected read's footer GET
+    and its first column-chunk GET re-lists once, and the read continues
+    from the fresh URL to exact rows; a fresh action whose size differs
+    from the listed one fails the read with a typed error instead."""
+    from pyspark.sql import types as T
+
+    blob = BLOBS["/large.parquet"]
+    assert len(blob) > 2 * PROBE  # a projected read holds the footer tail
+    with _serve({"/large.parquet": blob, "/fresh.parquet": blob}) as srv:
+        old = f"{srv.base_url}/large.parquet"
+        size = len(blob) + (fresh_size == "changed")
+        relists, gets = [], []
+        ranged_get = scan._ranged_get
+
+        def expiring_get(session, url, lo, hi, size=None):
+            gets.append(url)
+            if url == old and gets.count(old) == 2:
+                raise ClientHttpError("HTTP 403 (synthetic expiry)",
+                                      status=403)
+            return ranged_get(session, url, lo, hi, size)
+
+        def relist():
+            relists.append(1)
+            return {"large": FileAction(
+                url=f"{srv.base_url}/fresh.parquet", id="large", size=size)}
+
+        monkeypatch.setattr(scan, "_ranged_get", expiring_get)
+        schema = T.StructType([T.StructField("id", T.LongType(), False),
+                               T.StructField("a", T.DoubleType()),
+                               T.StructField("b", T.DoubleType())])
+        tasks = [scan.FileTask(old, len(blob), "large", {})]
+
+        def ids():
+            return [i for b in scan.read_files(tasks, schema, ["id"], {},
+                                               relist)
+                    for i in b.column("id").to_pylist()]
+
+        if fresh_size == "listed":
+            assert ids() == list(range(1000, 13_000))
+            assert _ranges(srv, "/fresh.parquet")
+        else:
+            with pytest.raises(DeltaSharingError,
+                               match="changed between listing and scan"):
+                ids()
+        assert len(relists) == 1
 
 
 # -- faults on the one request path ----------------------------------------

@@ -245,6 +245,43 @@ def test_one_retry_loop_and_no_raw_http_errors_in_sources():
             assert "requests.HTTPError" not in fh.read(), path
 
 
+def test_one_file_task_builder_on_the_driver():
+    """Every read entry point builds its file tasks in ``scan.file_tasks``
+    on the driver: ``FileTask(`` is called in that one function across
+    ``sources/*.py``, a stream partition is a file group with no one-file
+    ``file_id``, and the reader's executor entry point decodes nothing."""
+    import ast
+    import glob
+
+    import datafusion_delta_sharing_spark as pkg
+    from datafusion_delta_sharing_spark.sources import datasource
+
+    root = os.path.dirname(pkg.__file__)
+    builders = []
+    for path in sorted(glob.glob(os.path.join(root, "sources", "*.py"))):
+        with open(path) as fh:
+            tree = ast.parse(fh.read())
+        enclosing = {}
+        for fn in ast.walk(tree):
+            if isinstance(fn, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                for node in ast.walk(fn):
+                    enclosing[node] = fn.name  # innermost: walked last
+        builders += [(os.path.basename(path), enclosing.get(node))
+                     for node in ast.walk(tree)
+                     if isinstance(node, ast.Call)
+                     and isinstance(node.func, ast.Name)
+                     and node.func.id == "FileTask"]
+        if path.endswith("reader.py"):
+            (task_fn,) = [fn for fn in ast.walk(tree)
+                          if isinstance(fn, ast.FunctionDef)
+                          and fn.name == "_fetch_batches_task"]
+            called = {ast.unparse(node.func) for node in ast.walk(task_fn)
+                      if isinstance(node, ast.Call)}
+            assert not called & {"json.loads", "decode_partition_values"}
+    assert builders == [("scan.py", "file_tasks")]
+    assert not hasattr(datasource._FilePartition, "file_id")
+
+
 def test_an_empty_listing_is_one_empty_group():
     assert pack_files([]) == [[]]
     table = MockTable(share="s", schema="d", name="t",
@@ -360,7 +397,7 @@ def test_every_entry_point_reads_the_same_rows(spark):
 # -- the benchmark's trace hook -------------------------------------------
 
 HOOK_PROBE = r"""
-import importlib.util, json, os, socket, sys
+import importlib.util, json, os, pickle, socket, sys
 
 import pyarrow as pa
 import pyarrow.parquet as pq
@@ -384,13 +421,12 @@ pq.write_table(pa.table({"id": pa.array([0, 1, 2], pa.int64())}), path)
 size = os.path.getsize(path)
 schema = T.StructType([T.StructField("id", T.LongType())])
 descriptor = dv.inline_descriptor([1])
-batch = pa.RecordBatch.from_pylist([{
-    "url": path, "file_id": "f", "size": size, "partition_values": "{}",
-    "deletion_vector": json.dumps(descriptor)}])
-ids = [i for b in reader._fetch_batches_task([batch], schema, [], None, "{}",
+task = FileTask(path, size, "f", {}, descriptor)
+batch = pa.RecordBatch.from_pylist([{"tasks": pickle.dumps([task])}])
+ids = [i for b in reader._fetch_batches_task([batch], schema, None, "{}",
                                              "s.d.t", {})
        for i in b.column("id").to_pylist()]
-part = datasource._FilePartition([FileTask(path, size, "f", {}, descriptor)])
+part = datasource._FilePartition([task])
 ids += [i for b in datasource._read_file_partition({}, schema, part)
         for i in b.column("id").to_pylist()]
 names = [json.loads(sock.recv(65536))["n"] for _ in range(4)]

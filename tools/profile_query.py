@@ -19,6 +19,24 @@ from pathlib import Path
 sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 
 
+def new_job_counts(jobs, after: int) -> tuple[int, int, int, int]:
+    """``(jobs, stages, tasks, last)``: the counts of the jobs in ``jobs``
+    (an ``AppStatusStore.jobsList``) whose id is above ``after``, and the
+    highest job id seen. Counting by id, not by the list's size, stays
+    right once the store holds ``spark.ui.retainedJobs`` entries and
+    evicts an old job for each new one."""
+    n_jobs = n_stages = n_tasks = 0
+    last = after
+    for i in range(jobs.size()):
+        jd = jobs.apply(i)
+        last = max(last, jd.jobId())
+        if jd.jobId() > after:
+            n_jobs += 1
+            n_stages += jd.stageIds().size()
+            n_tasks += jd.numTasks()
+    return n_jobs, n_stages, n_tasks, last
+
+
 def main() -> None:
     names = [q.strip() for q in sys.argv[1].split(",") if q.strip()]
     n_runs = int(sys.argv[2]) if len(sys.argv) > 2 else 2
@@ -36,44 +54,27 @@ def main() -> None:
     spark.read.parquet(f"{sf_dir}/region.parquet").count()
 
     sc = spark.sparkContext
-    jsc = sc._jsc.sc()
-
-    def snap():
-        st = spark.sparkContext.statusTracker()
-        jobs = st.getJobIdsForGroup(None)
-        return set(jobs)
-
     # AppStatusStore sees EVERY job regardless of job group — streaming
     # queries run their micro-batch jobs under the stream's own group,
     # which getJobIdsForGroup(None) misses (r11 fix: the old per-group
     # diff undercounted foreachBatch sinks by the whole stream)
     store = sc._jsc.sc().statusStore()  # core AppStatusStore, not the SQL one
     _no_filter = spark._jvm.java.util.ArrayList()  # empty = all statuses
-
-    def _counts():
-        jobs = store.jobsList(_no_filter)
-        n_jobs = jobs.size()
-        n_tasks = 0
-        n_stages = 0
-        for i in range(n_jobs):
-            jd = jobs.apply(i)
-            n_tasks += jd.numTasks()
-            n_stages += jd.stageIds().size()
-        return n_jobs, n_stages, n_tasks
+    *_, last = new_job_counts(store.jobsList(_no_filter), -1)
 
     for name in names:
         fn = queries[name]
         for run in range(n_runs):
-            j0, s0, t0n = _counts()
             t0 = time.perf_counter()
             df = fn(spark, sf_dir)
             t_build = time.perf_counter() - t0
             df.write.format("noop").mode("overwrite").save()
             t_total = time.perf_counter() - t0
-            j1, s1, t1n = _counts()
+            jobs, stages, tasks, last = new_job_counts(
+                store.jobsList(_no_filter), last)
             print(f"{name} run{run}: total={t_total:.3f}s "
-                  f"build={t_build:.3f}s jobs={j1 - j0} "
-                  f"stages={s1 - s0} tasks={t1n - t0n}")
+                  f"build={t_build:.3f}s jobs={jobs} "
+                  f"stages={stages} tasks={tasks}")
     spark.stop()
 
 
