@@ -70,6 +70,7 @@ from datafusion_delta_sharing_spark.securable import Table
 from datafusion_delta_sharing_spark.sources.scan import (
     FileTask,
     _has_variant,
+    change_tasks,
     file_tasks,
     pack_files,
     plan_files,
@@ -444,20 +445,6 @@ class DeltaSharingStreamReader(DataSourceStreamReader):
             del self._batches[b]
 
 
-def _change_constants(kind: str, f: FileAction, hi: int) -> dict:
-    """The change-feed columns of one action file of a range ending at
-    version ``hi``, the commit version of a file that names none."""
-    constants = {
-        "_commit_version": f.version if f.version is not None else hi,
-        # keep None: a missing commit timestamp must surface as NULL, not
-        # a silent 1970 epoch
-        "_commit_timestamp": (f.timestamp * 1000
-                              if f.timestamp is not None else None)}
-    if kind != "cdf":  # a "cdf" file carries its own _change_type
-        constants["_change_type"] = "insert" if kind == "add" else "delete"
-    return constants
-
-
 def _wants_cdf(options) -> bool:
     return str(options.get("readChangeFeed", "")).lower() in ("true", "1")
 
@@ -470,7 +457,8 @@ class DeltaSharingCDFStreamReader(DataSourceStreamReader):
     version range from the server, which is authoritative for replay. A
     replay whose versions the server has vacuumed fails loudly server-side
     rather than silently dropping changes. The files of each commit
-    version are packed into ``scan.pack_files`` groups, one executor
+    version are packed into groups by ``scan.change_tasks``, as
+    ``DeltaSharingReader.table_changes`` packs them, one executor
     partition each; add/remove actions get literal insert/delete
     ``_change_type``, ``cdf`` files carry their own."""
 
@@ -514,18 +502,10 @@ class DeltaSharingCDFStreamReader(DataSourceStreamReader):
         data = TableData(changes.protocol, changes.metadata,
                          tuple(f for _, f in changes.actions), changes.version)
         _check_stream_listing(self, table, data, self.base_schema)
-        tasks = file_tasks(data.files, self.base_schema, _partition_columns(
-            self.options, self.base_schema, data.files),
-            [_change_constants(kind, f, hi) for kind, f in changes.actions])
-        by_version: dict[int, list[FileTask]] = {}
-        for task in tasks:
-            by_version.setdefault(task.constants["_commit_version"],
-                                  []).append(task)
-        # an expired URL re-resolves through /changes for the group's own
-        # commit: remove/cdc files are in no snapshot listing
-        return [_FilePartition(group, {"changes_version": version})
-                for version, same in by_version.items()
-                for group in pack_files(same)]
+        return [_FilePartition(group, spec)
+                for spec, group in change_tasks(
+                    changes.actions, self.base_schema, _partition_columns(
+                        self.options, self.base_schema, data.files), hi)]
 
     def read(self, partition: _FilePartition):
         return _read_file_partition(self.options, self.out_schema, partition)

@@ -59,8 +59,10 @@ from datafusion_delta_sharing_spark.plans.pruning import prune_for_limit
 from datafusion_delta_sharing_spark.securable import Table
 from datafusion_delta_sharing_spark.sources.dv import dv_positions
 from datafusion_delta_sharing_spark.sources.scan import (
+    FileTask,
     _has_variant,
     _local_path,
+    change_tasks,
     file_tasks,
     pack_files,
     physical_partition_keys,
@@ -96,17 +98,19 @@ def _fetch_batches_task(
     columns: Sequence[str] | None,
     profile_doc: str,
     table_fqn: str,
-    spec: dict,
 ) -> Iterator["pyarrow.RecordBatch"]:  # noqa: F821
-    """mapInArrow worker: the pickled file group of one Spark task in,
-    table record batches out, through ``scan.read_files``. The tasks
-    arrive ready, partition values decoded on the driver (A20); an expired
-    presigned URL re-lists the table once, pinned to ``spec``."""
-    tasks = [task for batch in group_batches
-             for group in batch.column("tasks").to_pylist()
-             for task in pickle.loads(group)]
-    yield from read_files(tasks, schema, columns, {},
-                          lambda: relist(profile_doc, table_fqn, spec))
+    """mapInArrow worker: the file groups of one Spark task in, table
+    record batches out, through ``scan.read_files``. Each row is one
+    pickled ``(spec, tasks)`` group whose tasks arrive ready, partition
+    values and change-feed columns decoded on the driver (A20); an expired
+    presigned URL re-lists the table once per group, pinned to its
+    ``spec``."""
+    for batch in group_batches:
+        for group in batch.column("group").to_pylist():
+            spec, tasks = pickle.loads(group)
+            yield from read_files(
+                tasks, schema, columns, {},
+                lambda: relist(profile_doc, table_fqn, spec))
 
 
 def _normalized_path_expr(col):
@@ -134,8 +138,9 @@ class DeltaSharingReader:
     (src/datasource/table.rs). Two physical strategies, chosen per file list:
 
     * all-local URLs (``file://`` or plain paths — tests, pre-staged data):
-      native ``spark.read.parquet`` per partition-value group, so Catalyst
-      gets full predicate/projection pushdown into the vectorized reader;
+      native ``spark.read.parquet`` per group of files sharing their
+      partition values and change-feed columns, so Catalyst gets full
+      predicate/projection pushdown into the vectorized reader;
     * any http(s) URL: distributed ``mapInArrow`` fetch — the 100 TB path.
     """
 
@@ -250,11 +255,26 @@ class DeltaSharingReader:
                         f"unknown column(s) in projection: {unknown}")
                 scan_columns = None
 
-        df = self._dataframe_from_listing(
-            table, data, predicate_op=predicate_op, columns=scan_columns,
-            limit=prune_limit,
-            refresh_spec=relist_pin(data, version, timestamp),
-        )
+        logical = schema_from_string(data.metadata.schema_string)
+        if scan_columns:
+            unknown = [c for c in scan_columns
+                       if c not in logical.fieldNames()]
+            if unknown:
+                raise DeltaSharingError(
+                    f"unknown column(s) in projection: {unknown}")
+        plan = plan_files(data, logical, predicate_op)
+        files = plan.files
+        if prune_limit is not None and predicate_op is None:
+            # beyond the reference's limitHint: stop listing files once
+            # stats-known record counts cover the limit
+            files = prune_for_limit(files, prune_limit)
+        # executor-side URL refreshes re-list the snapshot THIS listing
+        # came from
+        spec = relist_pin(data, version, timestamp)
+        groups = [(spec, group) for group in pack_files(
+            file_tasks(files, plan.schema, plan.partition_columns))]
+        df = self._dataframe_from_tasks(table, groups, plan.schema,
+                                        plan.mapping, scan_columns)
         if predicate is not None:
             df = df.filter(predicate)  # residual: Inexact semantics (A5)
             if out_columns is not None and scan_columns != out_columns:
@@ -363,15 +383,17 @@ class DeltaSharingReader:
         update_preimage / update_postimage), ``_commit_version``,
         ``_commit_timestamp``.
 
-        ``add``/``remove`` actions are whole-file inserts/deletes tagged
-        with a literal change type; ``cdf`` actions' files carry their own
-        ``_change_type`` column. Each commit's file group reuses the same
-        local/distributed scan strategies as a snapshot read, so the 100 TB
-        posture (ranged HTTP fetch, no driver-side rows) is unchanged.
-        The reference's client stops at ``todo!()`` here
+        The actions' file tasks are built by ``scan.change_tasks``, as the
+        CDF stream builds them: ``add``/``remove`` files are whole-file
+        inserts/deletes with a literal change type, ``cdf`` files carry
+        their own ``_change_type`` column, and a file without a commit
+        version belongs to the end of the range (``ending_version``, else
+        the response's version). All commits are one scan through the
+        same local/distributed strategies as a snapshot read, so the plan
+        does not grow with the number of commits and the 100 TB posture
+        (ranged HTTP fetch, no driver-side rows) is unchanged. The
+        reference's client stops at ``todo!()`` here
         (src/client/mod.rs:384-386)."""
-        import dataclasses
-
         if isinstance(table, str):
             table = Table.from_str(table)
         changes = self.client.get_table_changes(
@@ -379,92 +401,59 @@ class DeltaSharingReader:
             ending_version=ending_version,
             starting_timestamp=starting_timestamp,
             ending_timestamp=ending_timestamp)
-        full_schema = schema_from_string(changes.metadata.schema_string)
-        cdf_doc = json.loads(changes.metadata.schema_string)
-        cdf_doc["fields"] = list(cdf_doc["fields"]) + [
-            {"name": "_change_type", "type": "string",
-             "nullable": True, "metadata": {}}]
-        cdf_metadata = dataclasses.replace(
-            changes.metadata, schema_string=json.dumps(cdf_doc))
-
-        groups: dict[tuple, list[FileAction]] = {}
-        for kind, f in changes.actions:
-            groups.setdefault((kind, f.version, f.timestamp), []).append(f)
-
-        parts: list[DataFrame] = []
-        for (kind, ver, ts), files in sorted(
-                groups.items(),
-                key=lambda kv: (kv[0][1] or 0, kv[0][0])):
-            metadata = cdf_metadata if kind == "cdf" else changes.metadata
-            data = TableData(protocol=changes.protocol, metadata=metadata,
-                             files=tuple(files), version=changes.version)
-            # expired-URL refreshes must go through /changes for this
-            # commit: remove/cdc files never appear in a snapshot listing
-            df = self._dataframe_from_listing(
-                table, data,
-                refresh_spec={"changes_version": ver} if ver is not None
-                else None)
-            if kind != "cdf":
-                df = df.withColumn(
-                    "_change_type",
-                    F.lit("insert" if kind == "add" else "delete"))
-            parts.append(
-                df.withColumn("_commit_version",
-                              F.lit(ver).cast("long"))
-                .withColumn("_commit_timestamp",
-                            F.timestamp_millis(F.lit(ts).cast("long"))))
-
-        if not parts:
-            return self.spark.createDataFrame([], T.StructType(
-                list(full_schema.fields) + list(CDF_META_FIELDS)))
-        return reduce(lambda a, b: a.unionByName(b), parts)
+        data = TableData(changes.protocol, changes.metadata,
+                         tuple(f for _, f in changes.actions),
+                         changes.version)
+        plan = plan_files(data, schema_from_string(
+            changes.metadata.schema_string), None)
+        groups = change_tasks(
+            zip([kind for kind, _ in changes.actions], plan.files,
+                strict=True),
+            plan.schema, plan.partition_columns,
+            ending_version if ending_version is not None
+            else changes.version)
+        return self._dataframe_from_tasks(
+            table, groups,
+            T.StructType(plan.schema.fields + list(CDF_META_FIELDS)),
+            plan.mapping)
 
     # -- physical construction --------------------------------------------
 
-    def _dataframe_from_listing(self, table: Table, data: TableData,
-                                predicate_op: Op | None = None,
-                                columns: Sequence[str] | None = None,
-                                limit: int | None = None,
-                                refresh_spec: dict | None = None) -> DataFrame:
-        logical = schema_from_string(data.metadata.schema_string)
-        if columns:
-            unknown = [c for c in columns if c not in logical.fieldNames()]
-            if unknown:
-                raise DeltaSharingError(
-                    f"unknown column(s) in projection: {unknown}")
-        plan = plan_files(data, logical, predicate_op)
-        full_schema, partition_columns = plan.schema, plan.partition_columns
-        # Column mapping ('name'/'id' modes) TRANSLATED, beyond the
-        # reference class (which ignores the metadata and reads all-NULL
-        # columns): the scan below runs entirely in the plan's PHYSICAL
-        # names (schema, partition columns, partition-value keys,
-        # projection); the result renames back to logical in one final
-        # projection. Nested-field renames are refused by the planner — a
-        # flat select-alias cannot rename inside a struct.
-        rename_back: list[tuple[str, str]] | None = None
-        if plan.mapping:
-            rename_back = [(plan.mapping.get(c, c), c)
-                           for c in columns or logical.fieldNames()]
-            columns = [phys for phys, _ in rename_back] if columns else None
-        files = plan.files
-        if limit is not None and predicate_op is None:
-            # beyond the reference's limitHint: stop listing files once
-            # stats-known record counts cover the limit (caller guarantees
-            # no predicate applies — see table())
-            files = prune_for_limit(files, limit)
+    def _dataframe_from_tasks(self, table: Table,
+                              groups: list[tuple[dict, list[FileTask]]],
+                              schema: T.StructType,
+                              mapping: dict[str, str] | None,
+                              columns: Sequence[str] | None = None,
+                              ) -> DataFrame:
+        """The rows of the file-task ``groups`` (each with its re-list
+        spec) under ``schema``, whose constant columns the tasks carry,
+        through one of the two strategies.
 
-        if not files:
+        Column mapping ('name'/'id' modes) is TRANSLATED, beyond the
+        reference class (which ignores the metadata and reads all-NULL
+        columns): ``schema`` and the tasks are in the plan's PHYSICAL
+        names, ``columns`` in logical ones, and the result renames back to
+        logical in one final projection. Nested-field renames are refused
+        by the planner — a flat select-alias cannot rename inside a
+        struct."""
+        rename_back: list[tuple[str, str]] | None = None
+        if mapping:
+            logical_of = {phys: name for name, phys in mapping.items()}
+            rename_back = [(mapping.get(c, c), c) for c in columns or [
+                logical_of.get(f.name, f.name) for f in schema.fields]]
+            columns = [phys for phys, _ in rename_back] if columns else None
+        tasks = [task for _, group in groups for task in group]
+        if not tasks:
             # CALLER column order, not table-schema order: the non-empty
             # paths return columns as projected, and a positionally-bound
             # consumer (union, toPandas().iloc) must see the same layout
             # whether or not pruning emptied the listing
-            out_schema = (T.StructType([full_schema[c] for c in columns])
-                          if columns else full_schema)
-            df = self.spark.createDataFrame([], out_schema)
+            df = self.spark.createDataFrame([], T.StructType(
+                [schema[c] for c in columns]) if columns else schema)
+        elif all(urlparse(t.url).scheme in ("", "file") for t in tasks):
+            df = self._read_local(tasks, schema, columns)
         else:
-            local = all(urlparse(f.url).scheme in ("", "file")
-                        for f in files)
-            if not local and _has_variant(full_schema):
+            if _has_variant(schema):
                 # pyarrow (the fetch strategies' decoder) does not
                 # recognize the parquet VARIANT logical type — a clear
                 # plan-time error beats the task-side Thrift failure
@@ -473,175 +462,168 @@ class DeltaSharingReader:
                     "only from local (file://) shares — the ranged-HTTP "
                     "fetch decodes via pyarrow, which cannot parse a "
                     "parquet footer containing the VARIANT logical type")
-            if local:
-                df = self._read_local(files, full_schema,
-                                      partition_columns, columns)
-            else:
-                if refresh_spec is None:
-                    # executor-side URL refreshes re-list the snapshot
-                    # THIS listing came from
-                    refresh_spec = relist_pin(data)
-                df = self._read_distributed(table, files, full_schema,
-                                            partition_columns, columns,
-                                            refresh_spec)
+            df = self._read_distributed(table, groups, schema, columns)
         if rename_back:
             # leave column-mapped physical space: one final projection
             df = df.select([F.col(f"`{phys}`").alias(logical)
                             for phys, logical in rename_back])
         return df
 
-    # above this many distinct partition tuples, per-group scans would blow
-    # up the plan: switch to one scan + input_file_name partition join
+    # above this many distinct constant tuples (partition values and
+    # change-feed columns), one scan per tuple would blow up the plan:
+    # switch to one scan per set of constant names + a file-identity join
     MAX_PARTITION_SCANS = 16
 
     @staticmethod
-    def _local_dv_rows(files: list[FileAction]):
-        """(file path, deleted row position) pandas frame for files
-        carrying deletion vectors, or None. Decoded driver-side: on this
-        strategy the files are driver-local anyway (tests / pre-staged
-        data) and the row count is bounded by the summed DV cardinalities;
-        the distributed strategy decodes inside the fetch task instead.
-        Built as a pandas frame so createDataFrame ships it over Arrow —
-        a 10 % DV on a 600k-row file is 60k positions, and the
-        row-at-a-time tuple path made the anti-join cost 4× the scan."""
+    def _local_dv_rows(keyed: Iterable[tuple[object, FileTask]]):
+        """(key, deleted row position) pandas frame of the ``(key, task)``
+        pairs whose task carries a deletion vector, or None. Decoded
+        driver-side: on this strategy the files are driver-local
+        anyway (tests / pre-staged data) and the row count is bounded by
+        the summed DV cardinalities; the distributed strategy decodes
+        inside the fetch task instead. Built as a pandas frame so
+        createDataFrame ships it over Arrow — a 10 % DV on a 600k-row file
+        is 60k positions, and the row-at-a-time tuple path made the
+        anti-join cost 4× the scan."""
         import numpy as np
         import pandas as pd
 
-        paths: list[str] = []
+        keys: list = []
         arrays = []
-        for f in files:
-            if not f.deletion_vector:
+        for key, task in keyed:
+            if not task.deletion_vector:
                 continue
-            pos = dv_positions(f.deletion_vector)
+            pos = dv_positions(task.deletion_vector)
             if len(pos) == 0:
                 continue
-            paths.append(_local_path(f.url))
+            keys.append(key)
             arrays.append(pos.astype("int64"))
-        if not paths:
+        if not keys:
             return None
         return pd.DataFrame({
-            "__dv_file": np.repeat(np.array(paths, dtype=object),
-                                   [len(a) for a in arrays]),
+            "__dv_key": np.repeat(np.array(keys, dtype=object),
+                                  [len(a) for a in arrays]),
             "__dv_pos": np.concatenate(arrays),
         })
 
-    def _anti_join_dv(self, df: DataFrame, dv_rows,
-                      file_col: str = "__dv_file") -> DataFrame:
-        """Drop (file, position) pairs named by the deletion vectors. The
-        positions side is cardinality-sized; Catalyst/AQE picks broadcast
-        when it is small and a shuffled anti-join when it is not."""
-        pos_df = self.spark.createDataFrame(
-            dv_rows.rename(columns={"__dv_file": file_col}))
-        return (df.join(pos_df, [file_col, "__dv_pos"], "left_anti")
-                .drop("__dv_pos"))
+    def _anti_join_dv(self, df: DataFrame, dv_rows) -> DataFrame:
+        """Drop the (``__dv_key``, ``__dv_pos``) pairs named by the deletion
+        vectors. The positions side is cardinality-sized; Catalyst/AQE
+        picks broadcast when it is small and a shuffled anti-join when it
+        is not."""
+        return (df.join(self.spark.createDataFrame(dv_rows),
+                        ["__dv_key", "__dv_pos"], "left_anti")
+                .drop("__dv_key", "__dv_pos"))
 
-    def _read_local(self, files: list[FileAction], full_schema: T.StructType,
-                    partition_columns: list[str],
+    def _read_local(self, tasks: list[FileTask], schema: T.StructType,
                     columns: Sequence[str] | None) -> DataFrame:
-        """Native parquet scan per partition-value group: Spark's vectorized
-        reader + Catalyst pushdown do A2/A4 for free. File groups are
-        coalesced per distinct partition tuple to bound plan size; past
-        MAX_PARTITION_SCANS distinct tuples, a single scan joins partition
-        values by file identity instead (SURVEY.md §7 risk note)."""
-        data_schema = T.StructType(
-            [f for f in full_schema.fields if f.name not in partition_columns]
-        )
-        groups: dict[tuple, list[FileAction]] = {}
-        for f in files:
-            key = tuple(sorted(f.partition_values.items()))
-            groups.setdefault(key, []).append(f)
+        """Native parquet scans: Spark's vectorized reader + Catalyst
+        pushdown do A2/A4 for free, and each task's ``constants``
+        (partition values, change-feed columns) become typed literals.
 
-        if len(groups) > self.MAX_PARTITION_SCANS and partition_columns:
-            return self._read_local_single_scan(
-                files, full_schema, data_schema, partition_columns, columns)
-
-        dv_rows = self._local_dv_rows(files)
+        Tasks are grouped by the names of their constants (a change feed's
+        add and remove files carry ``_change_type``, its cdf files read it
+        from the parquet), then by their values: one scan per value tuple,
+        or, past MAX_PARTITION_SCANS tuples in all, one scan per set of
+        names that joins the values by file identity, so the plan size is
+        bounded whatever the number of partitions or commits (SURVEY.md §7
+        risk note)."""
+        shapes: dict[tuple, dict[tuple, list[FileTask]]] = {}
+        for task in tasks:
+            shapes.setdefault(tuple(task.constants), {}).setdefault(
+                tuple(task.constants.values()), []).append(task)
+        if sum(map(len, shapes.values())) > self.MAX_PARTITION_SCANS:
+            out = reduce(DataFrame.unionByName, [
+                self._read_local_single_scan(
+                    [t for group in by_values.values() for t in group],
+                    schema, names)
+                for names, by_values in shapes.items()])
+            return out.select(*columns) if columns else out
+        groups = [group for by_values in shapes.values()
+                  for group in by_values.values()]
+        # a file's deletion vector is keyed by (group, path): an add and a
+        # remove of one file are in different groups and stay apart
+        dv_rows = self._local_dv_rows(
+            (f"{i}:{_local_path(t.url)}", t)
+            for i, group in enumerate(groups) for t in group)
         parts: list[DataFrame] = []
-        for _, group in sorted(groups.items()):
-            paths = [_local_path(f.url) for f in group]
-            df = self.spark.read.schema(data_schema).parquet(*paths)
-            select_cols = [f.name for f in full_schema.fields]
+        for i, group in enumerate(groups):
+            constants = group[0].constants
+            df = self.spark.read.schema(T.StructType(
+                [f for f in schema.fields if f.name not in constants])
+            ).parquet(*[_local_path(t.url) for t in group])
+            select = [F.lit(constants[f.name]).cast(f.dataType).alias(f.name)
+                      if f.name in constants else f.name
+                      for f in schema.fields]
             if dv_rows is not None:
                 # row positions come from the scan's hidden _metadata
                 # struct; soft-deleted (file, position) pairs are
                 # anti-joined away after the union
-                df = (df.withColumn("__dv_file", _normalized_path_expr(
-                          F.col("_metadata.file_path")))
-                      .withColumn("__dv_pos", F.col("_metadata.row_index")))
-                select_cols = select_cols + ["__dv_file", "__dv_pos"]
-            decoded = decode_partition_values(
-                group[0].partition_values, full_schema, partition_columns
-            )
-            for name in partition_columns:
-                dtype = full_schema[name].dataType
-                df = df.withColumn(name, F.lit(decoded[name]).cast(dtype))
-            parts.append(df.select(*select_cols))
+                select += [
+                    F.concat(F.lit(f"{i}:"), _normalized_path_expr(
+                        F.col("_metadata.file_path"))).alias("__dv_key"),
+                    F.col("_metadata.row_index").alias("__dv_pos")]
+            parts.append(df.select(*select))
         out = reduce(DataFrame.unionByName, parts)
         if dv_rows is not None:
-            out = self._anti_join_dv(out, dv_rows).drop("__dv_file")
-        if columns:
-            out = out.select(*columns)
-        return out
+            out = self._anti_join_dv(out, dv_rows)
+        return out.select(*columns) if columns else out
 
-    def _read_local_single_scan(self, files: list[FileAction],
-                                full_schema: T.StructType,
-                                data_schema: T.StructType,
-                                partition_columns: list[str],
-                                columns: Sequence[str] | None) -> DataFrame:
-        """One scan over every file + a broadcast join from file identity
-        (``input_file_name``) to decoded partition values: plan size is O(1)
-        in the number of distinct partition tuples.
+    def _read_local_single_scan(self, tasks: list[FileTask],
+                                schema: T.StructType,
+                                names: tuple[str, ...]) -> DataFrame:
+        """One scan over the tasks' files + a broadcast join from file
+        identity (``input_file_name``) to each task's constants ``names``:
+        plan size is O(1) in the number of distinct tuples. A file that
+        several tasks list (an add and a later remove of one file) is
+        scanned once and joins each task's constants, and its deletion
+        vector rows are dropped per task.
 
         ``input_file_name()`` returns a percent-encoded ``file://`` URI, so
         both join sides are normalized to the *decoded* filesystem path
         (scheme stripped, ``%xx`` unescaped) — a path with spaces or other
         URI-special characters must not silently drop its rows."""
-        paths = [_local_path(f.url) for f in files]
-        scan = (self.spark.read.schema(data_schema).parquet(*paths)
+        paths = [_local_path(t.url) for t in tasks]
+        data_schema = T.StructType(
+            [f for f in schema.fields if f.name not in names])
+        scan = (self.spark.read.schema(data_schema)
+                .parquet(*dict.fromkeys(paths))
                 .withColumn("__file",
                             _normalized_path_expr(F.input_file_name())))
-        dv_rows = self._local_dv_rows(files)
+        dv_rows = self._local_dv_rows(enumerate(tasks))
         if dv_rows is not None:
             scan = scan.withColumn("__dv_pos", F.col("_metadata.row_index"))
-
-        part_fields = [full_schema[c] for c in partition_columns]
         map_schema = T.StructType(
-            [T.StructField("__file", T.StringType(), False)] + part_fields)
-        rows = []
-        for f, path in zip(files, paths):
-            decoded = decode_partition_values(
-                f.partition_values, full_schema, partition_columns)
-            # paths come decoded from _local_path, matching the normalized
-            # (scheme-stripped, %xx-unescaped) Spark-side file identity
-            rows.append(tuple([path] + [decoded[c] for c in partition_columns]))
-        mapping = self.spark.createDataFrame(rows, map_schema)
-        joined = scan.join(F.broadcast(mapping), "__file")
+            [T.StructField("__file", T.StringType(), False),
+             T.StructField("__dv_key", T.LongType(), False)]
+            + [schema[name] for name in names])
+        # paths come decoded from _local_path, matching the normalized
+        # (scheme-stripped, %xx-unescaped) Spark-side file identity
+        rows = [(path, i, *task.constants.values())
+                for i, (path, task) in enumerate(zip(paths, tasks))]
+        joined = scan.join(
+            F.broadcast(self.spark.createDataFrame(rows, map_schema)),
+            "__file")
         if dv_rows is not None:
-            joined = self._anti_join_dv(joined, dv_rows, file_col="__file")
-        out = (joined.drop("__file")
-               .select(*[f.name for f in full_schema.fields]))
-        if columns:
-            out = out.select(*columns)
-        return out
+            joined = self._anti_join_dv(joined, dv_rows)
+        return joined.select(*[f.name for f in schema.fields])
 
-    def _read_distributed(self, table: Table, files: list[FileAction],
-                          full_schema: T.StructType, partition_columns: list[str],
-                          columns: Sequence[str] | None,
-                          refresh_spec: dict) -> DataFrame:
-        """The scale path: build the file tasks on the driver, parallelize
-        their ``scan.pack_files`` groups one Spark partition each and with
-        no shuffle, and fetch + decode them on executors via mapInArrow;
-        expired URLs re-list pinned to ``refresh_spec``."""
-        out_schema = (T.StructType([full_schema[c] for c in columns])
-                      if columns else full_schema)
+    def _read_distributed(self, table: Table,
+                          groups: list[tuple[dict, list[FileTask]]],
+                          schema: T.StructType,
+                          columns: Sequence[str] | None) -> DataFrame:
+        """The scale path: parallelize the file-task groups, each pickled
+        with its re-list spec, one Spark partition each and with no
+        shuffle, and fetch + decode them on executors in one mapInArrow."""
+        out_schema = (T.StructType([schema[c] for c in columns])
+                      if columns else schema)
 
         # deletion vectors travel as descriptors and are decoded INSIDE
         # the fetch task — DV bytes never concentrate on the driver
-        groups = pack_files(file_tasks(files, full_schema, partition_columns))
         group_df = self.spark.createDataFrame(
             self.spark.sparkContext.parallelize(
                 [(pickle.dumps(g),) for g in groups], len(groups)),
-            T.StructType([T.StructField("tasks", T.BinaryType(), False)]))
+            T.StructType([T.StructField("group", T.BinaryType(), False)]))
 
         # the profile serializes ITSELF (Profile.to_doc round-trips via
         # from_json): a hand-built v1 doc here crashed every non-bearer
@@ -653,7 +635,7 @@ class DeltaSharingReader:
         cols = list(columns) if columns else None
 
         def fetch(batches):
-            return _fetch_batches_task(batches, full_schema, cols,
-                                       profile_doc, fqn, refresh_spec)
+            return _fetch_batches_task(batches, schema, cols, profile_doc,
+                                       fqn)
 
         return group_df.mapInArrow(fetch, out_schema)

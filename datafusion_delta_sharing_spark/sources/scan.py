@@ -3,15 +3,17 @@
 Counterpart of the reference's ``DeltaSharingTable::scan``
 (``src/datasource/table.rs:174-196``) and its ``ParquetExec`` wrapper
 (``src/datasource/scan.rs:50-157``) over the presigned-URL reader
-(``src/datasource/reader.rs``). ``DeltaSharingReader.table`` /
-``table_changes`` (mapInArrow), ``format("deltasharing")`` batch reads, the
-snapshot stream and the CDF stream all go through the same functions:
+(``src/datasource/reader.rs``). ``DeltaSharingReader.table`` and
+``table_changes``, ``format("deltasharing")`` batch reads, the snapshot
+stream and the CDF stream all go through the same functions:
 
 * :func:`plan_files` (driver): the checks a listing must pass before any
   task is scheduled, and stats pruning;
 * :func:`file_tasks` (driver): the one builder of :class:`FileTask`,
   each file's partition values decoded once while the scan is planned, as
   the reference does (``src/datasource/scan.rs:61-82,159-229``);
+* :func:`change_tasks` (driver): the file tasks of a change-feed read,
+  batch or stream, with their change-feed columns, packed per commit;
 * :func:`pack_files` (driver): the file groups of every read, batch and
   stream alike, one Spark task each, as the reference runs one partition
   per file group (``src/datasource/scan.rs:77,123-125``);
@@ -39,6 +41,7 @@ outside it; and a task's deletion vectors in one shared DV file coalesce
 from __future__ import annotations
 
 import dataclasses
+import datetime
 import io
 from typing import Any, Callable, Iterable, Iterator, Sequence
 from urllib.parse import urlparse
@@ -215,8 +218,9 @@ def relist_pin(data: TableData, version: int | None = None,
                timestamp: str | None = None) -> dict:
     """The :func:`relist` spec of a snapshot read of ``data``: the version
     the listing came from (its Delta-Table-Version header), else the
-    ``version`` / ``timestamp`` the read asked for. An unpinned re-list would splice a newer snapshot's
-    URLs and deletion vectors into a running scan."""
+    ``version`` / ``timestamp`` the read asked for. An unpinned re-list
+    would splice a newer snapshot's URLs and deletion vectors into a
+    running scan."""
     if data.version is not None:
         return {"version": data.version, "timestamp": None}
     return {"version": version, "timestamp": timestamp}
@@ -474,6 +478,55 @@ def file_tasks(files: Iterable[FileAction], schema: T.StructType,
                 f.deletion_vector)
             for f, extra in zip(files, constants or [{}] * len(files),
                                 strict=True)]
+
+
+_EPOCH_UTC = datetime.datetime(1970, 1, 1, tzinfo=datetime.timezone.utc)
+
+
+def _change_constants(kind: str, f: FileAction,
+                      end_version: int | None) -> dict[str, Any]:
+    """The change-feed columns of one action file of a range ending at
+    ``end_version``, the commit version of a file that names none. The
+    commit timestamp is a UTC-aware datetime, the form of a decoded
+    timestamp partition value, so a Spark literal and ``pa.scalar`` give
+    the same instant."""
+    constants = {
+        "_commit_version": f.version if f.version is not None
+        else end_version,
+        # keep None: a missing commit timestamp must surface as NULL, not
+        # a silent 1970 epoch
+        "_commit_timestamp": (
+            _EPOCH_UTC + datetime.timedelta(milliseconds=f.timestamp)
+            if f.timestamp is not None else None)}
+    if kind != "cdf":  # a "cdf" file carries its own _change_type
+        constants["_change_type"] = "insert" if kind == "add" else "delete"
+    return constants
+
+
+def change_tasks(changes: Iterable[tuple[str, FileAction]],
+                 schema: T.StructType, partition_columns: Sequence[str],
+                 end_version: int | None,
+                 ) -> list[tuple[dict, list[FileTask]]]:
+    """The file-task groups of a change-feed read of ``(kind, file)``
+    actions (``add`` / ``remove`` / ``cdf``) of a range ending at
+    ``end_version``, each with its :func:`relist` spec.
+
+    Every task carries ``_commit_version`` and ``_commit_timestamp``, and
+    an add or remove file the literal ``_change_type`` insert or delete.
+    The tasks of one commit version are packed together by
+    :func:`pack_files`, and a group re-lists through ``/changes`` for its
+    own commit: remove and cdc files are in no snapshot listing."""
+    changes = list(changes)
+    tasks = file_tasks([f for _, f in changes], schema, partition_columns,
+                       [_change_constants(kind, f, end_version)
+                        for kind, f in changes])
+    by_version: dict[int | None, list[FileTask]] = {}
+    for task in tasks:
+        by_version.setdefault(task.constants["_commit_version"],
+                              []).append(task)
+    return [({"changes_version": version}, group)
+            for version, same in by_version.items()
+            for group in pack_files(same)]
 
 
 def read_files(tasks: Iterable[FileTask], schema: T.StructType,

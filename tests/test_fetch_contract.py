@@ -6,7 +6,10 @@ of at most 128 KiB) is one whole-file GET, the files of one shared DV file
 are one task whose deletion vectors are one GET, a task re-lists at most
 once, throttled data, DV and token requests retry through the client's one
 request path, and a body that does not match the listed size, or a GET
-whose retries run out, ends in a typed error, never in short rows."""
+whose retries run out, ends in a typed error, never in short rows. A
+change-feed read is one scan whatever its number of commits, re-lists an
+expired file through ``/changes`` for the file's own commit, and reads the
+same rows as the CDF stream."""
 
 import contextlib
 import io
@@ -535,3 +538,121 @@ def test_throttled_token_grant_retries():
         assert [s.name for s in DeltaSharingClient(profile).list_shares()
                 ] == ["s"]
         assert sum(r["path"] == "/oauth/token" for r in srv.requests) == 3
+
+
+# -- change-feed reads ------------------------------------------------------
+
+CHANGE_SCHEMA = json.dumps({"type": "struct", "fields": [
+    {"name": "id", "type": "long", "nullable": False, "metadata": {}}]})
+CHANGE_TYPES = {"add": "insert", "remove": "delete", "cdf": "update_postimage"}
+
+
+@contextlib.contextmanager
+def _serve_changes(where: str, commits, tmp_path=None):
+    """A change feed of one file per commit: ``commits[v - 1]`` is the
+    ``(kind, ids)`` of version v, served as mock-server bytes
+    (``where="http"``) or as files under ``tmp_path`` (``"file"``); a
+    ``cdf`` file carries its own ``_change_type`` column. Yields the
+    server, its table and the rows :func:`_change_rows` must read."""
+    table = MockTable(share="s", schema="d", name="c",
+                      schema_string=CHANGE_SCHEMA, version=len(commits))
+    with MockSharingServer([table]) as srv:
+        expected = []
+        for v, (kind, ids) in enumerate(commits, start=1):
+            columns = {"id": pa.array(ids, pa.int64())}
+            if kind == "cdf":
+                columns["_change_type"] = pa.array([CHANGE_TYPES[kind]]
+                                                   * len(ids))
+            sink = io.BytesIO()
+            pq.write_table(pa.table(columns), sink)
+            path = f"/v{v}.parquet"
+            if where == "http":
+                srv.parquet_bytes[path] = sink.getvalue()
+                url = f"{srv.base_url}{path}"
+            else:
+                (tmp_path / path[1:]).write_bytes(sink.getvalue())
+                url = f"file://{tmp_path}{path}"
+            # a millisecond fraction, so the instant must survive exactly
+            ts = 1_600_000_000_000 + 60_000 * v + 123
+            table.changes.append({"kind": kind, "version": v,
+                                  "timestamp": ts, "url": url, "id": path,
+                                  "size": len(sink.getvalue())})
+            expected += [(i, CHANGE_TYPES[kind], v, ts * 1000) for i in ids]
+        yield srv, table, sorted(expected)
+
+
+def _change_rows(df) -> list[tuple]:
+    """``(id, _change_type, _commit_version, _commit_timestamp in µs)``
+    rows, sorted."""
+    from pyspark.sql import functions as F
+
+    return sorted(tuple(r) for r in df.select(
+        "id", "_change_type", "_commit_version",
+        F.unix_micros("_commit_timestamp")).collect())
+
+
+def _table_changes(spark, srv):
+    client = DeltaSharingClient(Profile.from_json(srv.profile_doc()))
+    return DeltaSharingReader(spark, client).table_changes(
+        "s.d.c", starting_version=1)
+
+
+def test_table_changes_over_http_relists_the_files_own_commit(spark):
+    """Add, remove and cdf files read through the presigned-URL path; the
+    remove file's URL expires after planning, and its task re-lists
+    ``/changes`` for that file's own commit, once."""
+    commits = [("add", [1, 2]), ("remove", [9]), ("cdf", [2])]
+    with _serve_changes("http", commits) as (srv, table, expected):
+        df = _table_changes(spark, srv)
+        srv.forbidden_paths.add("/v2.parquet")
+        srv.parquet_bytes["/v2.resigned"] = srv.parquet_bytes["/v2.parquet"]
+        table.changes[1]["url"] = f"{srv.base_url}/v2.resigned"
+        seen = len(srv.requests)
+        assert _change_rows(df) == expected
+        after = srv.requests[seen:]
+        assert [r["query"] for r in after if r["path"].endswith("/changes")
+                ] == [{"startingVersion": "2", "endingVersion": "2"}]
+        assert sum(r["path"] == "/v2.parquet" for r in after) == 1
+        assert _ranges(srv, "/v2.resigned")
+
+
+@pytest.mark.parametrize("where", ["http", "file"])
+def test_a_change_range_is_one_scan(spark, tmp_path, where):
+    """Forty one-file commits, add and cdf alternating, plan one
+    MapInArrow over HTTP and at most two file scans (one per set of
+    constant columns) over ``file://``, not a branch per commit."""
+    commits = [("add" if v % 2 else "cdf", [v]) for v in range(1, 41)]
+    with _serve_changes(where, commits, tmp_path) as (srv, _, expected):
+        df = _table_changes(spark, srv)
+        plan = audit._executed_plan(df)
+        if where == "http":
+            assert len(re.findall(r"\bMapInArrow\b", plan)) == 1
+            assert "FileScan" not in plan
+        else:
+            assert "MapInArrow" not in plan
+            assert 1 <= plan.count("FileScan parquet") <= 2
+        assert _change_rows(df) == expected
+
+
+@pytest.mark.parametrize("where", ["http", "file"])
+def test_both_cdf_entry_points_agree(registered, tmp_path, where):
+    """``table_changes`` and the CDF stream (``availableNow`` into a
+    memory sink) read one add/remove/cdf share to the same rows, the
+    commit timestamp to the microsecond."""
+    commits = [("add", [1, 2]), ("remove", [9]), ("cdf", [2])]
+    with _serve_changes(where, commits, tmp_path) as (srv, _, expected):
+        sink = f"cdf_agree_{uuid.uuid4().hex[:8]}"
+        query = (registered.readStream.format("deltasharing")
+                 .option("profile_json", json.dumps(srv.profile_doc()))
+                 .option("table", "s.d.c")
+                 .option("readChangeFeed", "true")
+                 .option("startingVersion", "1").load()
+                 .writeStream.format("memory").queryName(sink)
+                 .trigger(availableNow=True).start())
+        try:
+            query.awaitTermination(60)
+            streamed = _change_rows(registered.table(sink))
+        finally:
+            query.stop()
+        assert _change_rows(_table_changes(registered, srv)) == streamed
+        assert streamed == expected

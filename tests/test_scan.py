@@ -248,8 +248,13 @@ def test_one_retry_loop_and_no_raw_http_errors_in_sources():
 def test_one_file_task_builder_on_the_driver():
     """Every read entry point builds its file tasks in ``scan.file_tasks``
     on the driver: ``FileTask(`` is called in that one function across
-    ``sources/*.py``, a stream partition is a file group with no one-file
-    ``file_id``, and the reader's executor entry point decodes nothing."""
+    ``sources/*.py``, and partition values are decoded there and in the
+    metadata-only ``partition_row_counts`` only. Both change-feed entry
+    points reach the one ``scan._change_constants`` through
+    ``scan.change_tasks``, and ``table_changes`` is one scan, not a union
+    of tagged per-commit reads. A stream partition is a file group with no
+    one-file ``file_id``, and the reader's executor entry point decodes
+    nothing."""
     import ast
     import glob
 
@@ -257,28 +262,50 @@ def test_one_file_task_builder_on_the_driver():
     from datafusion_delta_sharing_spark.sources import datasource
 
     root = os.path.dirname(pkg.__file__)
-    builders = []
+    calls: set[tuple[str, str, str]] = set()  # (file, enclosing def, callee)
+    defs: list[tuple[str, str]] = []  # (file, qualified def name)
+
+    def visit(node, name: str, where: str) -> None:
+        for child in ast.iter_child_nodes(node):
+            if isinstance(child, (ast.FunctionDef, ast.AsyncFunctionDef,
+                                  ast.ClassDef)):
+                scope = f"{where}.{child.name}".lstrip(".")
+                defs.append((name, scope))
+                visit(child, name, scope)
+                continue
+            if isinstance(child, ast.Call):
+                calls.add((name, where, ast.unparse(child.func)))
+            visit(child, name, where)
+
     for path in sorted(glob.glob(os.path.join(root, "sources", "*.py"))):
         with open(path) as fh:
-            tree = ast.parse(fh.read())
-        enclosing = {}
-        for fn in ast.walk(tree):
-            if isinstance(fn, (ast.FunctionDef, ast.AsyncFunctionDef)):
-                for node in ast.walk(fn):
-                    enclosing[node] = fn.name  # innermost: walked last
-        builders += [(os.path.basename(path), enclosing.get(node))
-                     for node in ast.walk(tree)
-                     if isinstance(node, ast.Call)
-                     and isinstance(node.func, ast.Name)
-                     and node.func.id == "FileTask"]
-        if path.endswith("reader.py"):
-            (task_fn,) = [fn for fn in ast.walk(tree)
-                          if isinstance(fn, ast.FunctionDef)
-                          and fn.name == "_fetch_batches_task"]
-            called = {ast.unparse(node.func) for node in ast.walk(task_fn)
-                      if isinstance(node, ast.Call)}
-            assert not called & {"json.loads", "decode_partition_values"}
-    assert builders == [("scan.py", "file_tasks")]
+            visit(ast.parse(fh.read()), os.path.basename(path), "")
+
+    def callers(callee: str) -> list[tuple[str, str]]:
+        return sorted({(f, w) for f, w, c in calls if c == callee})
+
+    def called_in(name: str, scope: str) -> set[str]:
+        # the def's own calls and those of every def nested in it
+        assert defs.count((name, scope)) == 1
+        return {c for f, w, c in calls if f == name
+                and (w == scope or w.startswith(scope + "."))}
+
+    assert callers("FileTask") == [("scan.py", "file_tasks")]
+    assert callers("decode_partition_values") == [
+        ("reader.py", "DeltaSharingReader.partition_row_counts"),
+        ("scan.py", "file_tasks")]
+    assert [d for d in defs
+            if d[1].rsplit(".", 1)[-1] == "_change_constants"] == [
+        ("scan.py", "_change_constants")]
+    assert callers("_change_constants") == [("scan.py", "change_tasks")]
+    assert callers("change_tasks") == [
+        ("datasource.py", "DeltaSharingCDFStreamReader.partitions"),
+        ("reader.py", "DeltaSharingReader.table_changes")]
+    assert not {c.rsplit(".", 1)[-1] for c in called_in(
+        "reader.py", "DeltaSharingReader.table_changes")} & {
+        "unionByName", "withColumn"}
+    assert not called_in("reader.py", "_fetch_batches_task") & {
+        "json.loads", "decode_partition_values"}
     assert not hasattr(datasource._FilePartition, "file_id")
 
 
@@ -422,9 +449,9 @@ size = os.path.getsize(path)
 schema = T.StructType([T.StructField("id", T.LongType())])
 descriptor = dv.inline_descriptor([1])
 task = FileTask(path, size, "f", {}, descriptor)
-batch = pa.RecordBatch.from_pylist([{"tasks": pickle.dumps([task])}])
+batch = pa.RecordBatch.from_pylist([{"group": pickle.dumps(({}, [task]))}])
 ids = [i for b in reader._fetch_batches_task([batch], schema, None, "{}",
-                                             "s.d.t", {})
+                                             "s.d.t")
        for i in b.column("id").to_pylist()]
 part = datasource._FilePartition([task])
 ids += [i for b in datasource._read_file_partition({}, schema, part)
