@@ -9,6 +9,7 @@ the distributed ``mapInArrow`` read path can be tested end-to-end.
 
 from __future__ import annotations
 
+import itertools
 import json
 import re
 import threading
@@ -17,6 +18,14 @@ from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 from urllib.parse import parse_qs, urlparse
 
 TOKEN = "test-token-0000"
+
+_TABLE_IDS = itertools.count(1)
+
+
+def _next_table_id() -> str:
+    """``tbl-NNNN`` from a process-wide counter: eight characters, the
+    length of every id this server has served."""
+    return f"tbl-{next(_TABLE_IDS) % 10_000:04d}"
 
 
 @dataclass
@@ -29,7 +38,9 @@ class MockTable:
     # (file_id, url_or_None, partition_values, stats_json_or_None)
     files: list[dict] = field(default_factory=list)
     version: int = 7
-    table_id: str = "tbl-0001"
+    # metaData.id: distinct per table, as two real Delta tables never
+    # share one, so a client cache keyed by it keeps two tables apart
+    table_id: str = field(default_factory=_next_table_id)
     # optional time travel: version -> file list for that snapshot;
     # ``files`` stays the latest. A query body pinning an absent version
     # gets the protocol's RESOURCE_DOES_NOT_EXIST error.

@@ -100,6 +100,24 @@ def _make_client(options) -> tuple:
     return DeltaSharingClient(profile), Table.from_str(fqn)
 
 
+class _OneClient:
+    """A stream reader's client and table, made on first use and kept for
+    the reader's life: each trigger plans through the same HTTP session,
+    and an OAuth profile grants one token, not one per call. The client
+    stays out of the reader's pickled state, which Spark ships to the
+    executors that run ``read``."""
+
+    options: dict
+
+    def _client_and_table(self) -> tuple:
+        if getattr(self, "_client", None) is None:
+            self._client = _make_client(self.options)
+        return self._client
+
+    def __getstate__(self) -> dict:
+        return {k: v for k, v in self.__dict__.items() if k != "_client"}
+
+
 class _FilePartition(InputPartition):
     """The shared files of one Spark partition: a ``scan.pack_files`` group,
     or no file for an empty batch listing (Spark requires at least one
@@ -229,7 +247,9 @@ class DeltaSharingBatchReader(DataSourceReader):
                      for k, v in f.partition_values.items()})
                  for f in plan.files]
         tasks = file_tasks(files, self.full_schema, _partition_columns(
-            self.options, self.full_schema, files))
+            self.options, self.full_schema, files), source=(
+                client.profile.endpoint, table.full_name(),
+                data.metadata.id))
         # executor-side URL refreshes re-list the snapshot THIS listing
         # came from
         spec = relist_pin(data, version, timestamp)
@@ -310,7 +330,7 @@ def _snapshot_pins(options) -> tuple[int | None, str | None]:
     return version, options.get("timestampAsOf")
 
 
-class DeltaSharingStreamReader(DataSourceStreamReader):
+class DeltaSharingStreamReader(_OneClient, DataSourceStreamReader):
     """Snapshot-diff microbatch source with executor-side reads.
 
     Offset = ``{"version": V, "batch": N}`` — constant size however long the
@@ -348,7 +368,7 @@ class DeltaSharingStreamReader(DataSourceStreamReader):
             prefix="deltasharing-stream-")
         os.makedirs(log_dir, exist_ok=True)
         self._log_path = os.path.join(log_dir, "batches.jsonl")
-        self._batches: dict[int, list[dict]] = {}
+        self._batches: dict[int, dict] = {}  # batch -> its log record
         self._latest_batch = -1
         self._seen: set[str] = set()
         self._version = -1
@@ -370,7 +390,7 @@ class DeltaSharingStreamReader(DataSourceStreamReader):
                 if not line.strip():
                     continue
                 rec = json.loads(line)
-                self._batches[rec["batch"]] = rec["files"]
+                self._batches[rec["batch"]] = rec
                 self._latest_batch = max(self._latest_batch, rec["batch"])
                 self._version = max(self._version, rec.get("version", -1))
                 self._seen.update(f["id"] for f in rec["files"])
@@ -381,13 +401,9 @@ class DeltaSharingStreamReader(DataSourceStreamReader):
                     # post-restart schema change and mis-decode replays
                     self._schema_string_seen = rec["schema"]
 
-    def _append_log(self, batch: int, version: int, files: list[dict]) -> None:
+    def _append_log(self, rec: dict) -> None:
         with open(self._log_path, "a", encoding="utf-8") as fh:
-            fh.write(json.dumps({
-                "batch": batch, "version": version, "files": files,
-                # persist the drift pin (see _load_log)
-                "schema": getattr(self, "_schema_string_seen", None),
-            }) + "\n")
+            fh.write(json.dumps(rec) + "\n")
             fh.flush()
 
     # -- DataSourceStreamReader contract ----------------------------------
@@ -396,7 +412,7 @@ class DeltaSharingStreamReader(DataSourceStreamReader):
         return dict(self._initial)
 
     def latestOffset(self) -> dict:
-        client, table = _make_client(self.options)
+        client, table = self._client_and_table()
         data = client.get_table_data(table)
         _check_stream_listing(self, table, data, self.full_schema)
         if data.version is not None:
@@ -408,29 +424,42 @@ class DeltaSharingStreamReader(DataSourceStreamReader):
                          "partition_values": dict(f.partition_values),
                          "deletion_vector": f.deletion_vector}
                         for f in new]
-            self._batches[self._latest_batch] = manifest
+            rec = {"batch": self._latest_batch, "version": self._version,
+                   "files": manifest,
+                   # persist the drift pin (see _load_log)
+                   "schema": getattr(self, "_schema_string_seen", None),
+                   # the listing's metaData.id, part of the files' cache
+                   # keys; a record without one reads uncached
+                   "table_id": data.metadata.id}
+            self._batches[self._latest_batch] = rec
             self._seen.update(f.id for f in new)
-            self._append_log(self._latest_batch, self._version, manifest)
+            self._append_log(rec)
         return {"version": self._version, "batch": self._latest_batch}
 
     def partitions(self, start: dict, end: dict) -> Sequence[InputPartition]:
-        files: list[FileAction] = []
+        batches: list[tuple[str | None, list[FileAction]]] = []
         for b in range(start.get("batch", -1) + 1, end.get("batch", -1) + 1):
-            manifest = self._batches.get(b)
-            if manifest is None:
+            rec = self._batches.get(b)
+            if rec is None:
                 self._load_log()  # commit pruned memory; the log is durable
-                manifest = self._batches.get(b)
-            if manifest is None:
+                rec = self._batches.get(b)
+            if rec is None:
                 raise DeltaSharingError(
                     f"cannot replay microbatch {b}: no manifest in the "
                     f"stream commit log at {self._log_path} (log lost or "
                     "truncated) — refusing to guess the original file set")
             # a manifest entry is spelled with FileAction's field names
-            files.extend(FileAction(**f) for f in manifest)
+            batches.append((rec.get("table_id"),
+                            [FileAction(**f) for f in rec["files"]]))
+        files = [f for _, fs in batches for f in fs]
         if not files:
             return []
-        tasks = file_tasks(files, self.full_schema, _partition_columns(
-            self.options, self.full_schema, files))
+        client, table = self._client_and_table()
+        columns = _partition_columns(self.options, self.full_schema, files)
+        tasks = [task for table_id, fs in batches
+                 for task in file_tasks(fs, self.full_schema, columns,
+                                        source=(client.profile.endpoint,
+                                                table.full_name(), table_id))]
         # an unpinned re-list: the stream follows the live table
         return [_FilePartition(group) for group in pack_files(tasks)]
 
@@ -449,15 +478,15 @@ def _wants_cdf(options) -> bool:
     return str(options.get("readChangeFeed", "")).lower() in ("true", "1")
 
 
-class DeltaSharingCDFStreamReader(DataSourceStreamReader):
+class DeltaSharingCDFStreamReader(_OneClient, DataSourceStreamReader):
     """Change-Data-Feed microbatch source over the protocol's ``/changes``
     endpoint (``readChangeFeed`` option; Spark's delta CDF streaming
     analogue). Offsets are purely logical — ``{"version": V}`` — so there
     is no local commit log at all: ``partitions(start, end)`` re-lists the
     version range from the server, which is authoritative for replay. A
     replay whose versions the server has vacuumed fails loudly server-side
-    rather than silently dropping changes. The files of each commit
-    version are packed into groups by ``scan.change_tasks``, as
+    rather than silently dropping changes. The files of the range are
+    packed into groups by ``scan.change_tasks``, as
     ``DeltaSharingReader.table_changes`` packs them, one executor
     partition each; add/remove actions get literal insert/delete
     ``_change_type``, ``cdf`` files carry their own."""
@@ -482,21 +511,21 @@ class DeltaSharingCDFStreamReader(DataSourceStreamReader):
             # serve changes FROM startingVersion (inclusive)
             self._initial = {"version": start_v - 1}
         else:
-            client, table = _make_client(options)
+            client, table = self._client_and_table()
             self._initial = {"version": client.get_table_version(table)}
 
     def initialOffset(self) -> dict:
         return dict(self._initial)
 
     def latestOffset(self) -> dict:
-        client, table = _make_client(self.options)
+        client, table = self._client_and_table()
         return {"version": client.get_table_version(table)}
 
     def partitions(self, start: dict, end: dict) -> Sequence[InputPartition]:
         lo, hi = start.get("version", -1), end.get("version", -1)
         if hi <= lo:
             return []
-        client, table = _make_client(self.options)
+        client, table = self._client_and_table()
         changes = client.get_table_changes(
             table, starting_version=lo + 1, ending_version=hi)
         data = TableData(changes.protocol, changes.metadata,
@@ -505,7 +534,9 @@ class DeltaSharingCDFStreamReader(DataSourceStreamReader):
         return [_FilePartition(group, spec)
                 for spec, group in change_tasks(
                     changes.actions, self.base_schema, _partition_columns(
-                        self.options, self.base_schema, data.files), hi)]
+                        self.options, self.base_schema, data.files), hi,
+                    (client.profile.endpoint, table.full_name(),
+                     changes.metadata.id))]
 
     def read(self, partition: _FilePartition):
         return _read_file_partition(self.options, self.out_schema, partition)

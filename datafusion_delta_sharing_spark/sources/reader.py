@@ -10,8 +10,8 @@ Parity targets (SURVEY.md §2 Tier A):
   ``mapInArrow`` stage over ``scan.read_files``, the one executor read
   kernel, plays it for presigned HTTPS URLs.
 * A3  presigned-URL ranged parquet reader (``src/datasource/reader.rs:14-109``)
-  — ``scan._RangedHttpFile`` fetches each byte at most once; see
-  ``sources/scan.py``.
+  — ``scan.read_files`` fetches each byte at most once per application and
+  executor, through its executor file cache; see ``sources/scan.py``.
 * A4  projection pushdown — automatic via Catalyst on the local strategy;
   explicit ``columns=`` (mapped to ``pyarrow`` column selection) on the
   HTTP strategy.
@@ -26,7 +26,8 @@ row per file — metadata, not data). Data bytes move exclusively inside
 executor tasks: each task receives one file group of ready file tasks
 (``scan.file_tasks`` packed by ``scan.pack_files``: ~128 MiB of parquet)
 and streams Arrow record batches straight out of parquet row groups over
-HTTP. No driver materialization, no local staging, no collect.
+HTTP. No driver materialization and no collect; the only local copy is
+the executor's bounded file cache (``scan.read_files``).
 Stats-based file pruning (plans/pruning.py) happens before the file list is
 parallelized, so a selective predicate turns a million-file table into the
 handful of files Spark must actually open.
@@ -271,8 +272,10 @@ class DeltaSharingReader:
         # executor-side URL refreshes re-list the snapshot THIS listing
         # came from
         spec = relist_pin(data, version, timestamp)
-        groups = [(spec, group) for group in pack_files(
-            file_tasks(files, plan.schema, plan.partition_columns))]
+        groups = [(spec, group) for group in pack_files(file_tasks(
+            files, plan.schema, plan.partition_columns,
+            source=(self.client.profile.endpoint, table.full_name(),
+                    data.metadata.id)))]
         df = self._dataframe_from_tasks(table, groups, plan.schema,
                                         plan.mapping, scan_columns)
         if predicate is not None:
@@ -411,7 +414,9 @@ class DeltaSharingReader:
                 strict=True),
             plan.schema, plan.partition_columns,
             ending_version if ending_version is not None
-            else changes.version)
+            else changes.version,
+            (self.client.profile.endpoint, table.full_name(),
+             changes.metadata.id))
         return self._dataframe_from_tasks(
             table, groups,
             T.StructType(plan.schema.fields + list(CDF_META_FIELDS)),

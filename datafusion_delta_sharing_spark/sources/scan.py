@@ -13,7 +13,7 @@ stream and the CDF stream all go through the same functions:
   each file's partition values decoded once while the scan is planned, as
   the reference does (``src/datasource/scan.rs:61-82,159-229``);
 * :func:`change_tasks` (driver): the file tasks of a change-feed read,
-  batch or stream, with their change-feed columns, packed per commit;
+  batch or stream, with their change-feed columns, packed across commits;
 * :func:`pack_files` (driver): the file groups of every read, batch and
   stream alike, one Spark task each, as the reference runs one partition
   per file group (``src/datasource/scan.rs:77,123-125``);
@@ -29,20 +29,34 @@ retry loop and error mapping (``client.send_with_retry`` and
 do: 429, 5xx and dropped connections retry, and a failure that escapes is
 a typed :class:`HttpError` (401/403 is what triggers a re-list) or, when
 transport errors use up the retries, a :class:`DeltaSharingError`.
-:class:`_RangedHttpFile` fetches each byte of a file at most once. Two ranges of one object within
+
+Each byte of a shared data file crosses the wire at most once per
+application and executor. Delta data files never change once written, and
+the protocol keeps a file's ``id`` across requests and lets a client cache
+its content under it, so :func:`read_files` keeps the files it reads whole
+in one executor-local file cache (:func:`_cache_open`,
+:func:`_cache_fill`), keyed by the profile endpoint, the table, its
+``metaData.id``, the file id and the listed size (:func:`file_tasks`): a
+second read of a share, through any entry point, opens its files from
+local disk. Within one read, two ranges of one object within
 ``_COALESCE_BYTES`` (pyarrow's 64 KiB footer probe) of each other are one
 GET: a read of every data column, or a projected read of a file of at most
 128 KiB, is one GET of the whole file; a projected read of a larger file
-holds the footer-tail GET and fetches only the projected column chunks
-outside it; and a task's deletion vectors in one shared DV file coalesce
-(``dv.DvReads``).
+that is not cached holds the footer-tail GET and fetches only the
+projected column chunks outside it (:class:`_RangedHttpFile`); and a
+task's deletion vectors in one shared DV file coalesce (``dv.DvReads``).
 """
 
 from __future__ import annotations
 
+import contextlib
 import dataclasses
 import datetime
+import functools
+import hashlib
 import io
+import os
+import tempfile
 from typing import Any, Callable, Iterable, Iterator, Sequence
 from urllib.parse import urlparse
 
@@ -296,62 +310,62 @@ def _length_error(url: str, lo: int, hi: int, body: bytes, resp,
         f"past the end of the object{listed}")
 
 
+def _refreshing_get(session, url: str, lo: int, hi: int, size: int,
+                    refresh: Callable[[], FileAction] | None,
+                    ) -> tuple[str, int, bytes]:
+    """:func:`_ranged_get` of bytes ``[lo, hi)`` of a file of listed
+    ``size``, as ``(url, start, body)``.
+
+    An :class:`HttpError` 401/403 (the presigned URL expired) calls
+    ``refresh()`` for a fresh file action and repeats the GET once from its
+    URL, which comes back as ``url`` for the caller's next GET; a fresh
+    action whose size differs from the listed one raises
+    :class:`DeltaSharingError`, as the file changed under the scan."""
+    try:
+        return (url, *_ranged_get(session, url, lo, hi, size))
+    except HttpError as exc:
+        # ONLY auth failures mean an expired presigned URL; anything
+        # else (404, a 5xx outlasting the retries) surfaces as itself
+        if refresh is None or exc.status not in (401, 403):
+            raise
+        fresh = refresh()
+        if fresh.size != size:
+            raise DeltaSharingError(
+                f"file {url} changed between listing and scan (listed "
+                f"{size} bytes, now {fresh.size}); re-run the read") from exc
+    return (fresh.url, *_ranged_get(session, fresh.url, lo, hi, size))
+
+
 class _RangedHttpFile(io.RawIOBase):
     """Seekable read-only file over HTTP Range requests that fetches each
-    byte of the file at most once.
+    byte of the file at most once per open; the executor file cache of
+    :func:`read_files` makes that once per application and executor for a
+    file read whole.
 
     The pyarrow parquet reader calls ``seek``/``read`` to load the footer,
     then the projected column chunks. Bytes move through
-    :func:`_ranged_get`, as in the reference's
+    :func:`_refreshing_get`, as in the reference's
     ``SignedParquetFileReader::get_range`` (src/datasource/reader.rs:25-49),
-    and one held suffix of the file answers every read it covers:
-
-    * ``whole=True`` (the read decodes every data column, or a file of at
-      most twice ``_COALESCE_BYTES`` decodes any): the first ``read`` GETs
-      ``[0, size)`` and every later read is served from it;
-    * otherwise the GET that ends at EOF (pyarrow's speculative footer
-      tail) is held, and a later read overlapping it fetches only the
-      bytes before it.
-
-    A 200 from a server that ignores ``Range`` is the whole object and is
+    and the GET that ends at EOF (pyarrow's speculative footer tail) is
+    held: a later read overlapping it fetches only the bytes before it. A
+    200 from a server that ignores ``Range`` is the whole object and is
     held the same way.
 
     An :class:`HttpError` 401/403 on any GET (the presigned URL expired,
-    before the footer or between column chunks) calls ``refresh()`` for a
-    fresh file action and repeats the GET once from its URL; a fresh
-    action whose size differs from the listed one raises
-    :class:`DeltaSharingError`, as the file changed under the scan.
+    before the footer or between column chunks) calls ``refresh()`` and
+    repeats the GET from the fresh URL (:func:`_refreshing_get`).
     """
 
     def __init__(self, url: str, size: int, session=None,
-                 whole: bool = False,
                  refresh: Callable[[], FileAction] | None = None):
         import requests
 
         self._url = url
         self._size = size
-        self._whole = whole
         self._refresh = refresh
         self._pos = 0
         self._session = session or requests.Session()
         self._tail = b""  # the held suffix [size - len(tail), size)
-
-    def _get(self, lo: int, hi: int) -> tuple[int, bytes]:
-        try:
-            return _ranged_get(self._session, self._url, lo, hi, self._size)
-        except HttpError as exc:
-            # ONLY auth failures mean an expired presigned URL; anything
-            # else (404, a 5xx outlasting the retries) surfaces as itself
-            if self._refresh is None or exc.status not in (401, 403):
-                raise
-            fresh = self._refresh()
-            if fresh.size != self._size:
-                raise DeltaSharingError(
-                    f"file {self._url} changed between listing and scan "
-                    f"(listed {self._size} bytes, now {fresh.size}); re-run "
-                    "the read") from exc
-            self._url = fresh.url
-        return _ranged_get(self._session, self._url, lo, hi, self._size)
 
     def seekable(self) -> bool:
         return True
@@ -379,12 +393,12 @@ class _RangedHttpFile(io.RawIOBase):
             return b""
         held = self._size - len(self._tail)
         if start < held:
-            lo, hi = ((0, self._size) if self._whole
-                      else (start, min(end, held)))
-            at, body = self._get(lo, hi)
+            lo, hi = start, min(end, held)
+            self._url, at, body = _refreshing_get(
+                self._session, self._url, lo, hi, self._size, self._refresh)
             fetched = body[lo - at:hi - at]
             if at + len(body) == self._size and not self._tail:
-                self._tail = body  # the whole file, or the footer probe
+                self._tail = body  # the footer probe, or a 200's whole file
             held = self._size - len(self._tail)
         if start >= held:
             data = self._tail[start - held:end - held]
@@ -408,7 +422,6 @@ def _local_path(url: str) -> str:
     ``_metadata.file_path`` / ``input_file_name`` (always absolute), so
     a relative listing path would match nothing and silently drop every
     row (or resurrect DV-deleted ones) instead of erroring."""
-    import os
     from urllib.parse import unquote
 
     if not url.startswith("file:"):
@@ -416,32 +429,84 @@ def _local_path(url: str) -> str:
     return unquote(urlparse(url).path)
 
 
-def _open_parquet(url: str, size: int, session, whole: bool,
-                  refresh: Callable[[], FileAction]):
-    """Open one shared parquet file.
+# ---------------------------------------------------------------------------
+# The executor file cache
+# ---------------------------------------------------------------------------
 
-    Local paths open directly; http(s) URLs go through a
-    :class:`_RangedHttpFile` (``whole``: the file arrives in one GET —
-    see :func:`read_files` for when), which calls ``refresh()`` for a
-    fresh file action when a GET finds the presigned URL expired."""
-    import pyarrow.parquet as pq
+# the bound of one executor's file cache; the entries used longest ago
+# (by mtime) are evicted first
+_CACHE_BYTES = 2 * 1024 ** 3
 
-    scheme = urlparse(url).scheme
-    if scheme in ("", "file"):
-        return pq.ParquetFile(_local_path(url))
-    if scheme not in ("http", "https"):
-        raise DeltaSharingError(
-            f"unsupported file URL scheme {scheme!r} in {url}")
-    # pre_buffer coalesces a projected read's column-chunk ranges into few
-    # GETs (on a real object store the round trips, not the bytes,
-    # dominate small-file cost); that matters only for a file too large to
-    # read whole. A whole-file read (every data column, or a file of at
-    # most twice _COALESCE_BYTES) is in memory after its one GET, so
-    # buffering it again would only copy it
-    return pq.ParquetFile(
-        _RangedHttpFile(url, size, session=session, whole=whole,
-                        refresh=refresh),
-        pre_buffer=not whole)
+
+def _cache_root() -> str | None:
+    """The executor's file cache directory, under its Spark local
+    directory: the ``blockmgr-*`` path a Python worker finds in
+    ``SPARK_LOCAL_DIRS`` while it runs a task, which every Python worker
+    of the executor shares and Spark deletes when the application stops.
+    None outside a Spark task, so a read on the driver caches nothing."""
+    from pyspark import TaskContext
+
+    local = os.environ.get("SPARK_LOCAL_DIRS")
+    if TaskContext.get() is None or not local:
+        return None
+    return os.path.join(local.split(",")[0], "deltasharing-files")
+
+
+def _cache_open(root: str, key: str, size: int):
+    """The cached copy of the file ``key``, memory-mapped, or None when it
+    is absent (never read, or evicted by another worker) or its length is
+    not the listed ``size``. A hit touches the entry's mtime."""
+    import pyarrow as pa
+
+    path = os.path.join(root, key)
+    try:
+        mapped = pa.memory_map(path)
+    except OSError:
+        return None
+    if mapped.size() != size:
+        mapped.close()
+        return None
+    with contextlib.suppress(OSError):
+        os.utime(path)
+    return mapped
+
+
+def _cache_fill(root: str, key: str, body: bytes,
+                cap: int = _CACHE_BYTES) -> None:
+    """Store ``body`` as the entry ``key``: written to a temp file and
+    moved into place with ``os.replace``, so a reader never sees a partial
+    entry. Then the oldest entries by mtime are evicted until the entries
+    hold at most ``cap`` bytes. A body above ``cap`` is not admitted, and
+    a failed write (a full disk) only leaves the file uncached."""
+    if len(body) > cap:
+        return
+    tmp = None
+    try:
+        os.makedirs(root, exist_ok=True)
+        fd, tmp = tempfile.mkstemp(dir=root, prefix=".fill-")
+        with os.fdopen(fd, "wb") as fh:
+            fh.write(body)
+        os.replace(tmp, os.path.join(root, key))
+        tmp = None
+        entries = []
+        with os.scandir(root) as it:
+            for entry in it:
+                if entry.name.startswith("."):
+                    continue  # another worker's fill in flight
+                with contextlib.suppress(FileNotFoundError):
+                    st = entry.stat()
+                    entries.append((st.st_mtime_ns, st.st_size, entry.path))
+        total = sum(n for _, n, _ in entries)
+        for _, n, path in sorted(entries):
+            if total <= cap:
+                break
+            with contextlib.suppress(FileNotFoundError):
+                os.unlink(path)
+            total -= n
+    except OSError:
+        if tmp is not None:
+            with contextlib.suppress(OSError):
+                os.unlink(tmp)
 
 
 # ---------------------------------------------------------------------------
@@ -453,29 +518,48 @@ def _open_parquet(url: str, size: int, session, whole: bool,
 class FileTask:
     """One shared file to read. ``constants`` are the typed per-file output
     columns: the decoded partition values and, for change-feed files,
-    ``_change_type`` / ``_commit_version`` / ``_commit_timestamp``."""
+    ``_change_type`` / ``_commit_version`` / ``_commit_timestamp``.
+    ``cache_key`` names the file in the executor file cache of
+    :func:`read_files`; a task without one is never cached."""
 
     url: str
     size: int
     file_id: str
     constants: dict[str, Any]
     deletion_vector: dict | None = None
+    cache_key: str | None = None
 
 
 def file_tasks(files: Iterable[FileAction], schema: T.StructType,
                partition_columns: Sequence[str],
                constants: Sequence[dict[str, Any]] | None = None,
+               source: tuple[str, str, str] | None = None,
                ) -> list[FileTask]:
     """The read tasks of ``files``, built on the driver: the one place a
     :class:`FileTask` is made. Each file's partition values are decoded
     against ``schema`` (its keys and ``partition_columns`` spelled as
     ``schema`` spells them; a missing value is NULL), then merged with its
-    entry of ``constants``, the per-file output columns of a change feed."""
+    entry of ``constants``, the per-file output columns of a change feed.
+
+    ``source`` is ``(profile endpoint, "share.schema.table", the
+    listing's metaData.id)``. With it, each http(s) file gets its cache
+    key: a digest of ``source``, the file id and the listed size. The
+    protocol keeps a file's id across requests, and the endpoint and the
+    table id keep two servers' or two tables' files apart even when their
+    names and file ids agree."""
+
+    def cache_key(f: FileAction) -> str | None:
+        if (source is None or not all(source) or not f.id
+                or urlparse(f.url).scheme not in ("http", "https")):
+            return None
+        return hashlib.sha256("\0".join(
+            (*source, f.id, str(f.size))).encode()).hexdigest()
+
     files = list(files)
     return [FileTask(f.url, f.size, f.id, {
                 **decode_partition_values(f.partition_values, schema,
                                           partition_columns), **extra},
-                f.deletion_vector)
+                f.deletion_vector, cache_key(f))
             for f, extra in zip(files, constants or [{}] * len(files),
                                 strict=True)]
 
@@ -506,32 +590,35 @@ def _change_constants(kind: str, f: FileAction,
 def change_tasks(changes: Iterable[tuple[str, FileAction]],
                  schema: T.StructType, partition_columns: Sequence[str],
                  end_version: int | None,
+                 source: tuple[str, str, str] | None = None,
                  ) -> list[tuple[dict, list[FileTask]]]:
     """The file-task groups of a change-feed read of ``(kind, file)``
     actions (``add`` / ``remove`` / ``cdf``) of a range ending at
-    ``end_version``, each with its :func:`relist` spec.
+    ``end_version``, each with its :func:`relist` spec; ``source`` as in
+    :func:`file_tasks`.
 
     Every task carries ``_commit_version`` and ``_commit_timestamp``, and
     an add or remove file the literal ``_change_type`` insert or delete.
-    The tasks of one commit version are packed together by
-    :func:`pack_files`, and a group re-lists through ``/changes`` for its
-    own commit: remove and cdc files are in no snapshot listing."""
+    The whole range is packed by :func:`pack_files`, so small commits
+    share a group, and a group re-lists through ``/changes`` over the
+    versions of its files (remove and cdc files are in no snapshot
+    listing). An empty range has no group."""
     changes = list(changes)
     tasks = file_tasks([f for _, f in changes], schema, partition_columns,
                        [_change_constants(kind, f, end_version)
-                        for kind, f in changes])
-    by_version: dict[int | None, list[FileTask]] = {}
-    for task in tasks:
-        by_version.setdefault(task.constants["_commit_version"],
-                              []).append(task)
-    return [({"changes_version": version}, group)
-            for version, same in by_version.items()
-            for group in pack_files(same)]
+                        for kind, f in changes], source)
+    out = []
+    for group in pack_files(tasks) if tasks else []:
+        versions = [t.constants["_commit_version"] for t in group
+                    if t.constants["_commit_version"] is not None]
+        out.append(({"starting_version": min(versions, default=None),
+                     "ending_version": max(versions, default=None)}, group))
+    return out
 
 
 def read_files(tasks: Iterable[FileTask], schema: T.StructType,
                columns: Sequence[str] | None, file_names: dict[str, str],
-               relist: Callable[[], dict[str, FileAction]],
+               relist: Callable[[], dict[tuple, FileAction]],
                ) -> Iterator["pyarrow.RecordBatch"]:  # noqa: F821
     """The files of one Spark task as record batches of ``columns`` of
     ``schema`` (all of its fields when None), in that order.
@@ -541,22 +628,30 @@ def read_files(tasks: Iterable[FileTask], schema: T.StructType,
     name)`` and cast to the schema's type, or NULL for a file written
     before the column was added (Delta semantics). A projection of
     constants only reads row counts from the footer and never fetches a
-    column chunk. A read of every data column, or of any data column of a
-    file of at most twice ``_COALESCE_BYTES``, is one whole-file GET;
-    otherwise the footer and the projected column chunks are fetched (see
-    :class:`_RangedHttpFile`). One ``requests`` session serves the task,
-    and before its first file the task plans the GETs of all its on-file
-    deletion vectors (``dv.DvReads``), whose rows it drops by position.
+    column chunk. One ``requests`` session serves the task, and before its
+    first file the task plans the GETs of all its on-file deletion vectors
+    (``dv.DvReads``), whose rows it drops by position.
+
+    Inside a Spark task, an http(s) file with a ``cache_key`` is opened
+    from the executor file cache (:func:`_cache_root`) when its copy there
+    has the listed size. Otherwise a read of every data column, or of any
+    data column of a file of at most twice ``_COALESCE_BYTES``, is one
+    whole-file GET whose body then fills the cache; any other read fetches
+    the footer and the projected column chunks (:class:`_RangedHttpFile`)
+    and fills nothing.
 
     On an expired presigned URL (an :class:`HttpError` 401/403) of a DV
     file or on any GET of a data file, ``relist`` is called once for the
     task (File.expirationTimestamp handling — the reference does not
-    survive expiry; we do). A file it no longer lists, or whose size or
-    deletion vector changed, raises :class:`DeltaSharingError`. Throttled
-    and failed GETs retry in :func:`_ranged_get`; any other HTTP failure
-    raises the client's typed :class:`HttpError`.
+    survive expiry; we do); it returns fresh actions keyed by ``(file id,
+    commit version)``, the version None for a snapshot. A file it no
+    longer lists, or whose size or deletion vector changed, raises
+    :class:`DeltaSharingError`. Throttled and failed GETs retry in
+    :func:`_ranged_get`; any other HTTP failure raises the client's typed
+    :class:`HttpError`.
     """
     import pyarrow as pa
+    import pyarrow.parquet as pq
     import requests
     from pyspark.sql.pandas.types import to_arrow_schema
 
@@ -564,17 +659,19 @@ def read_files(tasks: Iterable[FileTask], schema: T.StructType,
     fields = [schema[c] for c in columns] if columns else schema.fields
     arrow_out = to_arrow_schema(T.StructType(fields))
     session = requests.Session()
+    cache = _cache_root()
     dv_reads = dv.DvReads([t.deletion_vector for t in tasks
                            if t.deletion_vector], session)
-    relisted: list[dict[str, FileAction]] = []  # at most one per task
+    relisted: list[dict[tuple, FileAction]] = []  # at most one per task
 
-    def fresh_action(file_id: str) -> FileAction:
+    def fresh_action(task: FileTask) -> FileAction:
         if not relisted:
             relisted.append(relist())
-        action = relisted[0].get(file_id)
+        action = relisted[0].get(
+            (task.file_id, task.constants.get("_commit_version")))
         if action is None:
             raise DeltaSharingError(
-                f"file {file_id!r} is no longer listed by the share "
+                f"file {task.file_id!r} is no longer listed by the share "
                 "(expired or vacuumed) after its presigned URL expired; "
                 "re-run the read")
         return action
@@ -586,7 +683,7 @@ def read_files(tasks: Iterable[FileTask], schema: T.StructType,
         except HttpError as exc:
             if exc.status not in (401, 403):
                 raise
-            fresh_dv = fresh_action(task.file_id).deletion_vector
+            fresh_dv = fresh_action(task).deletion_vector
             if dv.dv_identity_changed(fresh_dv, task.deletion_vector):
                 # an unpinned re-list (or a stream replay) sees a table
                 # that gained or lost deletes since the listing: using the
@@ -599,6 +696,31 @@ def read_files(tasks: Iterable[FileTask], schema: T.StructType,
                     "the read for a consistent snapshot") from exc
             return dv.dv_positions(fresh_dv, session=session)
 
+    def open_file(task: FileTask, whole: bool):
+        scheme = urlparse(task.url).scheme
+        if scheme in ("", "file"):
+            return pq.ParquetFile(_local_path(task.url))
+        if scheme not in ("http", "https"):
+            raise DeltaSharingError(
+                f"unsupported file URL scheme {scheme!r} in {task.url}")
+        key = task.cache_key if cache else None
+        cached = _cache_open(cache, key, task.size) if key else None
+        if cached is not None:
+            return pq.ParquetFile(cached)
+        refresh = functools.partial(fresh_action, task)
+        if not whole:
+            # pre_buffer coalesces a projected read's column-chunk ranges
+            # into few GETs (on a real object store the round trips, not
+            # the bytes, dominate small-file cost)
+            return pq.ParquetFile(
+                _RangedHttpFile(task.url, task.size, session, refresh),
+                pre_buffer=True)
+        _, _, body = _refreshing_get(session, task.url, 0, task.size,
+                                     task.size, refresh)
+        if key:
+            _cache_fill(cache, key, body)
+        return pq.ParquetFile(pa.BufferReader(body))
+
     for task in tasks:
         data_cols = [f.name for f in fields if f.name not in task.constants]
         all_data = set(data_cols) == {
@@ -606,8 +728,7 @@ def read_files(tasks: Iterable[FileTask], schema: T.StructType,
         whole = bool(data_cols) and (
             all_data or task.size <= 2 * _COALESCE_BYTES)
         deleted = deleted_positions(task) if task.deletion_vector else None
-        reader = _open_parquet(task.url, task.size, session, whole,
-                               lambda: fresh_action(task.file_id))
+        reader = open_file(task, whole)
         if data_cols:
             parts = ((b.num_rows, b) for b in reader.iter_batches(
                 columns=[file_names.get(c, c) for c in data_cols]))
@@ -641,26 +762,33 @@ def read_files(tasks: Iterable[FileTask], schema: T.StructType,
 
 
 def relist(profile_doc: str, table_fqn: str,
-           spec: dict) -> dict[str, FileAction]:
-    """Fresh file actions by id, for a task whose presigned URLs expired.
+           spec: dict) -> dict[tuple, FileAction]:
+    """Fresh file actions by ``(file id, commit version)``, for a task
+    whose presigned URLs expired.
 
     ``spec`` pins the re-list to what the read listed: ``{"version",
     "timestamp"}`` re-queries that snapshot (an unpinned re-list would
     splice a NEWER snapshot's URLs and deletion vectors into a
-    time-traveled scan), and ``{"changes_version"}`` re-resolves a
-    change-feed file through ``/changes`` for its own commit (remove and
-    cdc files never appear in a snapshot listing)."""
+    time-traveled scan), its files keyed with version None; and
+    ``{"starting_version", "ending_version"}`` re-resolves a change-feed
+    group through ``/changes`` over its version range (remove and cdc
+    files never appear in a snapshot listing), each file keyed with its
+    commit version, or ``ending_version`` for one that names none, as
+    :func:`change_tasks` dates it: an add and a remove of one file share
+    an id."""
     from datafusion_delta_sharing_spark.client import DeltaSharingClient
     from datafusion_delta_sharing_spark.profile import Profile
     from datafusion_delta_sharing_spark.securable import Table
 
     client = DeltaSharingClient(Profile.from_json(profile_doc))
     table = Table.from_str(table_fqn)
-    version = spec.get("changes_version")
-    if version is not None:
+    if "starting_version" in spec:
+        end = spec["ending_version"]
         changes = client.get_table_changes(
-            table, starting_version=version, ending_version=version)
-        return {f.id: f for _, f in changes.actions}
+            table, starting_version=spec["starting_version"],
+            ending_version=end)
+        return {(f.id, end if f.version is None else f.version): f
+                for _, f in changes.actions}
     data = client.get_table_data(table, version=spec.get("version"),
                                  timestamp=spec.get("timestamp"))
-    return {f.id: f for f in data.files}
+    return {(f.id, None): f for f in data.files}

@@ -1,20 +1,24 @@
 """The executor fetch contract of both batch entry points
 (``DeltaSharingReader`` and ``format("deltasharing")``), read off the mock
 server's request log: every byte of a shared parquet file crosses the wire
-at most once, a read of every data column (or of any data column of a file
-of at most 128 KiB) is one whole-file GET, the files of one shared DV file
-are one task whose deletion vectors are one GET, a task re-lists at most
-once, throttled data, DV and token requests retry through the client's one
-request path, and a body that does not match the listed size, or a GET
-whose retries run out, ends in a typed error, never in short rows. A
-change-feed read is one scan whatever its number of commits, re-lists an
-expired file through ``/changes`` for the file's own commit, and reads the
-same rows as the CDF stream."""
+at most once per application and executor (a second read of a share, through
+any entry point, opens its files from the executor file cache), a read of
+every data column (or of any data column of a file of at most 128 KiB) is
+one whole-file GET, the files of one shared DV file are one task whose
+deletion vectors are one GET, a task re-lists at most once, throttled data,
+DV and token requests retry through the client's one request path, and a
+body that does not match the listed size, or a GET whose retries run out,
+ends in a typed error, never in short rows. A change-feed read is one scan
+whatever its number of commits, packs small commits into one task that
+re-lists an expired file through ``/changes`` over the task's version
+range, and reads the same rows as the CDF stream."""
 
 import contextlib
 import io
 import json
+import os
 import re
+import time
 import uuid
 
 import numpy as np
@@ -105,6 +109,10 @@ def _ranges(srv, path: str) -> list[tuple[int, int]]:
             assert m, f"data GET without a closed Range: {r['range']!r}"
             out.append((int(m.group(1)), int(m.group(2))))
     return out
+
+
+def _data_gets(requests_) -> list[dict]:
+    return [r for r in requests_ if r["path"].endswith(".parquet")]
 
 
 @pytest.mark.parametrize("entry", ["reader", "format"])
@@ -462,7 +470,7 @@ def test_expiry_after_the_footer_relists_the_column_chunk_get(monkeypatch,
 
         def relist():
             relists.append(1)
-            return {"large": FileAction(
+            return {("large", None): FileAction(
                 url=f"{srv.base_url}/fresh.parquet", id="large", size=size)}
 
         monkeypatch.setattr(scan, "_ranged_get", expiring_get)
@@ -597,10 +605,11 @@ def _table_changes(spark, srv):
         "s.d.c", starting_version=1)
 
 
-def test_table_changes_over_http_relists_the_files_own_commit(spark):
-    """Add, remove and cdf files read through the presigned-URL path; the
-    remove file's URL expires after planning, and its task re-lists
-    ``/changes`` for that file's own commit, once."""
+def test_table_changes_over_http_relists_the_packed_range(spark):
+    """Add, remove and cdf files read through the presigned-URL path, the
+    three commits packed into one task; the remove file's URL expires
+    after planning, and the task re-lists ``/changes`` over its version
+    range, once."""
     commits = [("add", [1, 2]), ("remove", [9]), ("cdf", [2])]
     with _serve_changes("http", commits) as (srv, table, expected):
         df = _table_changes(spark, srv)
@@ -611,7 +620,7 @@ def test_table_changes_over_http_relists_the_files_own_commit(spark):
         assert _change_rows(df) == expected
         after = srv.requests[seen:]
         assert [r["query"] for r in after if r["path"].endswith("/changes")
-                ] == [{"startingVersion": "2", "endingVersion": "2"}]
+                ] == [{"startingVersion": "1", "endingVersion": "3"}]
         assert sum(r["path"] == "/v2.parquet" for r in after) == 1
         assert _ranges(srv, "/v2.resigned")
 
@@ -628,6 +637,8 @@ def test_a_change_range_is_one_scan(spark, tmp_path, where):
         if where == "http":
             assert len(re.findall(r"\bMapInArrow\b", plan)) == 1
             assert "FileScan" not in plan
+            # the forty small commits are one file group, one task
+            assert df.rdd.getNumPartitions() == 1
         else:
             assert "MapInArrow" not in plan
             assert 1 <= plan.count("FileScan parquet") <= 2
@@ -638,7 +649,8 @@ def test_a_change_range_is_one_scan(spark, tmp_path, where):
 def test_both_cdf_entry_points_agree(registered, tmp_path, where):
     """``table_changes`` and the CDF stream (``availableNow`` into a
     memory sink) read one add/remove/cdf share to the same rows, the
-    commit timestamp to the microsecond."""
+    commit timestamp to the microsecond. The second read, of files the
+    stream has read, makes no data GET."""
     commits = [("add", [1, 2]), ("remove", [9]), ("cdf", [2])]
     with _serve_changes(where, commits, tmp_path) as (srv, _, expected):
         sink = f"cdf_agree_{uuid.uuid4().hex[:8]}"
@@ -654,5 +666,222 @@ def test_both_cdf_entry_points_agree(registered, tmp_path, where):
             streamed = _change_rows(registered.table(sink))
         finally:
             query.stop()
+        seen = len(srv.requests)
         assert _change_rows(_table_changes(registered, srv)) == streamed
         assert streamed == expected
+        assert not _data_gets(srv.requests[seen:])
+
+
+def test_change_relist_keys_an_add_and_a_remove_of_one_file_apart():
+    """An add and a later remove of one file share its id: the re-list of
+    a packed range keys fresh actions by ``(file id, commit version)``, so
+    each task finds its own action."""
+    table = MockTable(share="s", schema="d", name="c",
+                      schema_string=CHANGE_SCHEMA, version=3)
+    with MockSharingServer([table]) as srv:
+        for kind, v in (("add", 1), ("remove", 3)):
+            table.changes.append({
+                "kind": kind, "version": v, "timestamp": 1_600_000_000_000,
+                "url": f"{srv.base_url}/f.v{v}", "id": "/f.parquet",
+                "size": 10})
+        fresh = scan.relist(json.dumps(srv.profile_doc()), "s.d.c",
+                            {"starting_version": 1, "ending_version": 3})
+        assert {k: f.url for k, f in fresh.items()} == {
+            ("/f.parquet", 1): f"{srv.base_url}/f.v1",
+            ("/f.parquet", 3): f"{srv.base_url}/f.v3"}
+
+
+def test_oauth_cdf_stream_grants_one_token(registered):
+    """The CDF stream plans every trigger through one client, so an OAuth
+    profile grants one token for the whole stream (the executors' reads
+    make no REST call)."""
+    from pyspark.sql import types as T
+
+    from datafusion_delta_sharing_spark.sources.schema import CDF_META_FIELDS
+
+    commits = [("add", [1, 2]), ("remove", [9]), ("cdf", [2])]
+    with _serve_changes("http", commits) as (srv, _, expected):
+        srv.oauth = {"client_id": "cid", "client_secret": "sekrit",
+                     "expires_in": 3600}
+        profile = {"shareCredentialsVersion": 2,
+                   "type": "oauth_client_credentials",
+                   "endpoint": srv.endpoint,
+                   "tokenEndpoint": f"{srv.base_url}/oauth/token",
+                   "clientId": "cid", "clientSecret": "sekrit"}
+        schema = T.StructType([T.StructField("id", T.LongType(), False),
+                               *CDF_META_FIELDS])
+        sink = f"cdf_oauth_{uuid.uuid4().hex[:8]}"
+        query = (registered.readStream.format("deltasharing").schema(schema)
+                 .option("profile_json", json.dumps(profile))
+                 .option("table", "s.d.c")
+                 .option("readChangeFeed", "true")
+                 .option("startingVersion", "1").load()
+                 .writeStream.format("memory").queryName(sink)
+                 .trigger(availableNow=True).start())
+        try:
+            query.awaitTermination(60)
+            assert _change_rows(registered.table(sink)) == expected
+        finally:
+            query.stop()
+        assert len(srv.issued_tokens) == 1
+
+
+# -- the executor file cache -------------------------------------------------
+
+
+@pytest.mark.parametrize("first,second", [("reader", "format"),
+                                          ("format", "reader")])
+def test_second_read_through_the_other_entry_point_fetches_nothing(
+        registered, first, second):
+    """A share read whole once is in the executor file cache: reading it
+    again, through the other batch entry point, makes no data GET and
+    returns the same rows."""
+    with _serve(BLOBS) as srv:
+        rows = sorted(tuple(r) for r in _read(registered, srv, first).collect())
+        assert len(_data_gets(srv.requests)) == len(BLOBS)
+        seen = len(srv.requests)
+        again = sorted(tuple(r) for r in _read(registered, srv,
+                                               second).collect())
+        assert again == rows
+        assert not _data_gets(srv.requests[seen:])
+
+
+def test_projected_read_of_a_cached_file_fetches_nothing(registered):
+    """A projected read of a large file opens its cached whole copy
+    instead of taking the ranged path."""
+    with _serve(BLOBS) as srv:
+        _read(registered, srv, "reader").collect()
+        seen = len(srv.requests)
+        rows = _read(registered, srv, "reader", columns=["id"]).collect()
+        assert sorted(r.id for r in rows) == IDS
+        assert not _data_gets(srv.requests[seen:])
+
+
+def test_a_changed_listed_size_is_a_cache_miss(registered):
+    """A file whose listing now names another size is not the cached
+    copy: its GET is made again and the new bytes decode."""
+    with _serve({"/small.parquet": BLOBS["/small.parquet"]}) as srv:
+        _read(registered, srv, "reader").collect()
+        new = _blob(500, 60, 20)
+        assert len(new) != len(BLOBS["/small.parquet"])
+        srv.parquet_bytes["/small.parquet"] = new
+        srv.tables[0].files[0]["size"] = len(new)
+        seen = len(srv.requests)
+        rows = _read(registered, srv, "reader").collect()
+        assert sorted(r.id for r in rows) == list(range(500, 560))
+        assert _ranges(srv, "/small.parquet")[-1] == (0, len(new) - 1)
+        assert len(_data_gets(srv.requests[seen:])) == 1
+
+
+def test_a_cold_read_of_an_expired_url_relists_once(spark):
+    """A file not yet cached whose presigned URL expired after planning
+    re-lists once and reads exact rows; the bytes it fetched then serve a
+    second run of the same plan, which makes no GET and no re-list. (The
+    data source lists when Spark runs the query, so only the reader plans
+    before a URL can expire.)"""
+    with _serve(dict(BLOBS)) as srv:
+        df = _read(spark, srv, "reader")
+        table = srv.tables[0]
+        srv.forbidden_paths.add("/small.parquet")
+        srv.parquet_bytes["/small.resigned"] = BLOBS["/small.parquet"]
+        table.files[0]["url"] = f"{srv.base_url}/small.resigned"
+        assert sorted(r.id for r in df.collect()) == IDS
+        assert _queries(srv) == 2
+        assert _ranges(srv, "/small.resigned")
+        seen = len(srv.requests)
+        assert sorted(r.id for r in df.collect()) == IDS
+        assert not [r for r in srv.requests[seen:]
+                    if r["path"].startswith(("/small", "/large"))]
+        assert _queries(srv) == 2
+
+
+def test_two_servers_with_equal_names_and_ids_never_share_bytes(registered):
+    """Two servers whose tables share a name, file ids and file sizes but
+    not bytes: each read returns its own server's rows."""
+    other = {"/small.parquet": _blob(5000, 50, 20)}
+    mine = {"/small.parquet": BLOBS["/small.parquet"]}
+    assert len(other["/small.parquet"]) == len(mine["/small.parquet"])
+    with _serve(mine) as a, _serve(other) as b:
+        for srv, lo in ((a, 0), (b, 5000), (a, 0)):
+            rows = _read(registered, srv, "reader").collect()
+            assert sorted(r.id for r in rows) == list(range(lo, lo + 50))
+
+
+def test_a_recreated_table_is_a_cache_miss(registered):
+    """One server, one table name and file id, the same size: a table
+    recreated under a new metaData.id reads its own bytes."""
+    other = _blob(5000, 50, 20)
+    assert len(other) == len(BLOBS["/small.parquet"])
+    with _serve({"/small.parquet": BLOBS["/small.parquet"]}) as srv:
+        assert sorted(r.id for r in _read(registered, srv, "reader")
+                      .collect()) == list(range(50))
+        srv.tables[0].table_id = "tbl-new1"
+        srv.parquet_bytes["/small.parquet"] = other
+        assert sorted(r.id for r in _read(registered, srv, "reader")
+                      .collect()) == list(range(5000, 5050))
+
+
+def test_eviction_keeps_the_cache_under_its_cap(tmp_path):
+    """Filling past the cap evicts the entries used longest ago until the
+    entries fit; a hit counts as a use; a body above the cap is not
+    admitted; a copy of another length is a miss."""
+    root = str(tmp_path / "cache")
+    cap = 250
+
+    def fill(key, n, at=None):
+        scan._cache_fill(root, key, bytes([len(key)]) * n, cap)
+        if at is not None and os.path.exists(os.path.join(root, key)):
+            os.utime(os.path.join(root, key), (at, at))
+
+    def entries():
+        return sorted(os.listdir(root))
+
+    fill("a", 100, at=1)
+    fill("b", 100, at=2)
+    assert entries() == ["a", "b"]
+    hit = scan._cache_open(root, "a", 100)  # a is now the newest use
+    assert hit is not None and hit.read() == bytes([1]) * 100
+    assert scan._cache_open(root, "b", 99) is None
+    fill("cc", 100, at=time.time() + 10)
+    assert entries() == ["a", "cc"]
+    fill("ddd", 100)
+    assert entries() == ["cc", "ddd"]
+    assert sum(os.path.getsize(os.path.join(root, k))
+               for k in entries()) <= cap
+    fill("big", cap + 1)
+    assert entries() == ["cc", "ddd"]
+    assert scan._cache_open(root, "gone", 1) is None
+
+
+def _cache_worker(root: str, seed: int, rounds: int, cap: int) -> None:
+    """Fill and open eight keys in a random order; any hit must hold its
+    key's whole body."""
+    rng = np.random.default_rng(seed)
+    for _ in range(rounds):
+        k = int(rng.integers(8))
+        body = bytes([k]) * (1000 + 100 * k)
+        hit = scan._cache_open(root, f"k{k}", len(body))
+        if hit is None:
+            scan._cache_fill(root, f"k{k}", body, cap)
+        elif hit.read() != body:
+            raise AssertionError(f"k{k}: a cached entry is not its body")
+
+
+def test_concurrent_fills_never_expose_a_partial_entry(tmp_path):
+    """Six processes (more than this host's cores) fill and evict one
+    cache directory at once: every hit reads its whole entry, and the
+    entries end under the cap."""
+    import multiprocessing
+
+    root, cap = str(tmp_path / "cache"), 5_000
+    ctx = multiprocessing.get_context("spawn")
+    procs = [ctx.Process(target=_cache_worker, args=(root, seed, 300, cap))
+             for seed in range(6)]
+    for p in procs:
+        p.start()
+    for p in procs:
+        p.join(timeout=120)
+    assert [p.is_alive() for p in procs] == [False] * 6
+    assert [p.exitcode for p in procs] == [0] * 6
+    assert sum(os.path.getsize(os.path.join(root, k))
+               for k in os.listdir(root) if not k.startswith(".")) <= cap

@@ -245,21 +245,14 @@ def test_one_retry_loop_and_no_raw_http_errors_in_sources():
             assert "requests.HTTPError" not in fh.read(), path
 
 
-def test_one_file_task_builder_on_the_driver():
-    """Every read entry point builds its file tasks in ``scan.file_tasks``
-    on the driver: ``FileTask(`` is called in that one function across
-    ``sources/*.py``, and partition values are decoded there and in the
-    metadata-only ``partition_row_counts`` only. Both change-feed entry
-    points reach the one ``scan._change_constants`` through
-    ``scan.change_tasks``, and ``table_changes`` is one scan, not a union
-    of tagged per-commit reads. A stream partition is a file group with no
-    one-file ``file_id``, and the reader's executor entry point decodes
-    nothing."""
+def _source_calls() -> tuple[set[tuple[str, str, str]],
+                             list[tuple[str, str]]]:
+    """Every call in ``sources/*.py`` as ``(file, qualified enclosing def,
+    callee)``, and every def as ``(file, qualified name)``."""
     import ast
     import glob
 
     import datafusion_delta_sharing_spark as pkg
-    from datafusion_delta_sharing_spark.sources import datasource
 
     root = os.path.dirname(pkg.__file__)
     calls: set[tuple[str, str, str]] = set()  # (file, enclosing def, callee)
@@ -280,6 +273,22 @@ def test_one_file_task_builder_on_the_driver():
     for path in sorted(glob.glob(os.path.join(root, "sources", "*.py"))):
         with open(path) as fh:
             visit(ast.parse(fh.read()), os.path.basename(path), "")
+    return calls, defs
+
+
+def test_one_file_task_builder_on_the_driver():
+    """Every read entry point builds its file tasks in ``scan.file_tasks``
+    on the driver: ``FileTask(`` is called in that one function across
+    ``sources/*.py``, and partition values are decoded there and in the
+    metadata-only ``partition_row_counts`` only. Both change-feed entry
+    points reach the one ``scan._change_constants`` through
+    ``scan.change_tasks``, and ``table_changes`` is one scan, not a union
+    of tagged per-commit reads. A stream partition is a file group with no
+    one-file ``file_id``, and the reader's executor entry point decodes
+    nothing."""
+    from datafusion_delta_sharing_spark.sources import datasource
+
+    calls, defs = _source_calls()
 
     def callers(callee: str) -> list[tuple[str, str]]:
         return sorted({(f, w) for f, w, c in calls if c == callee})
@@ -307,6 +316,24 @@ def test_one_file_task_builder_on_the_driver():
     assert not called_in("reader.py", "_fetch_batches_task") & {
         "json.loads", "decode_partition_values"}
     assert not hasattr(datasource._FilePartition, "file_id")
+
+
+def test_the_file_cache_is_used_only_in_read_files():
+    """The executor file cache is found, looked up and filled only in
+    ``scan.read_files`` (its file opener included), so a driver-side
+    caller never touches it, and the cache key is built only in
+    ``scan.file_tasks``, the one builder of ``FileTask``, so no entry point
+    keys a file its own way."""
+    calls, _ = _source_calls()
+
+    def callers(callee: str) -> list[tuple[str, str]]:
+        return sorted({(f, w) for f, w, c in calls if c == callee})
+
+    assert callers("_cache_root") == [("scan.py", "read_files")]
+    assert callers("_cache_open") == [("scan.py", "read_files.open_file")]
+    assert callers("_cache_fill") == [("scan.py", "read_files.open_file")]
+    assert callers("hashlib.sha256") == [("scan.py", "file_tasks.cache_key")]
+    assert callers("cache_key") == [("scan.py", "file_tasks")]
 
 
 def test_an_empty_listing_is_one_empty_group():
