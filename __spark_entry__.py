@@ -16,7 +16,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 def entry(spark: SparkSession) -> DataFrame:
     """Flagship query on /root/testdata/sf0.001; driver checks rows>0."""
-    from datafusion_delta_sharing_spark.harness.tierb import q_flagship
+    from datafusion_delta_sharing_spark.harness.relational import q_flagship
 
     return q_flagship(spark, "/root/testdata/sf0.001")
 
@@ -44,15 +44,8 @@ def entry(spark: SparkSession) -> DataFrame:
 # obligation indefinitely). Registry growth without a rotation slot
 # stays IMPOSSIBLE - enforced by
 # tests/test_harness_connector.py::test_window_plan_covers_registry.
-_MODULE_ORDER = ("connector", "extensions", "extensions2", "extensions3",
-                 "extensions4", "extensions5", "extensions6", "extensions7",
-                 "extensions8", "extensions9", "extensions10", "extensions11",
-                 "extensions12", "extensions13", "extensions14", "extensions15",
-                 "extensions16", "extensions17", "extensions18",
-                 "extensions19", "extensions20", "extensions21",
-                 "extensions22", "extensions23", "formats",
-                 "tpch", "tierb5", "tierb4", "tierb3", "tierb2", "tierb6",
-                 "tierb7", "tierb8", "tierb9", "tierb")
+_MODULE_ORDER = ("connector", "relational", "text", "ml", "graph",
+                 "timeseries", "streaming")
 
 _WINDOW = (
     # --- r11 window (WINDOW_PLAN.json r11_window; executed r11_planned
@@ -103,10 +96,16 @@ def _windowed(merged: dict) -> dict:
     return front
 
 
+def _registered(mod) -> dict:
+    """Query ``<key>`` is the function ``q_<key>`` defined in ``mod``."""
+    return {name[2:]: fn for name, fn in vars(mod).items()
+            if name.startswith("q_") and fn.__module__ == mod.__name__}
+
+
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     registry: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
     for mod in _modules():
-        registry.update(mod.QUERIES)
+        registry.update(_registered(mod))
     return _windowed(registry)
 
 

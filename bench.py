@@ -10,10 +10,7 @@ plan changes from machine load (18x swings on untouched queries). This
 harness therefore records ALL per-query run timings (``runs``), the
 1/5/15-minute load averages before and after the suite (``loadavg``), and
 reports **medians** as the headline numbers; ``delta_vs_prev`` is
-median-vs-median when the previous artifact carries medians (r5+) and
-median-vs-best against older best-of-N artifacts (flagged in
-``prev_basis`` — conservative: median >= best, so such deltas read
-pessimistic, never flattering).
+median-vs-median against the previous round's artifact.
 """
 
 from __future__ import annotations
@@ -157,9 +154,8 @@ def _previous_bench(root=None) -> dict:
     VERDICT r2 #9 asked for the r(N)/r(N-1) ratio to live in the artifact).
 
     The driver nests the bench stdout JSON under "parsed" — which is null
-    when that round's stdout did not parse (r4: progress-bar text glued to
-    the JSON line left only a truncated "tail"). Walk rounds newest-first
-    until one yields usable per-query numbers. ``root`` exists for tests;
+    when that round's stdout did not parse. Walk rounds newest-first until
+    one yields usable per-query numbers. ``root`` exists for tests;
     production runs read the repo root."""
     import glob
     import re
@@ -186,11 +182,6 @@ def _previous_bench(root=None) -> dict:
             if not isinstance(doc, dict):
                 continue
             parsed = doc.get("parsed", doc)
-            if parsed is None:
-                try:  # salvage: the raw stdout tail may still be the JSON
-                    parsed = json.loads(doc.get("tail", ""))
-                except (TypeError, json.JSONDecodeError):
-                    continue
             if not isinstance(parsed, dict) or not parsed.get("queries"):
                 continue
             # r7+ compact stubs carry only the top-3 queries with the
@@ -199,14 +190,9 @@ def _previous_bench(root=None) -> dict:
             # them, not wall medians (flagged via "substituted")
             n_q = parsed.get("n_queries")
             substituted = isinstance(n_q, int) and len(parsed["queries"]) < n_q
-            # r5+ artifacts carry medians in "queries" (and raw runs);
-            # r1-r4 carried best-of-3 — comparable only with a basis flag
-            basis = "median" if (parsed.get("runs") or substituted) else "best"
             return {"round": n, "sf": parsed.get("sf"),
-                    "queries": parsed["queries"], "basis": basis,
-                    "substituted": substituted}
-    return {"round": -1, "sf": None, "queries": {}, "basis": "best",
-            "substituted": False}
+                    "queries": parsed["queries"], "substituted": substituted}
+    return {"round": -1, "sf": None, "queries": {}, "substituted": False}
 
 
 def _full_archive_path(root: Path, env_round: str | None) -> Path | None:
@@ -429,7 +415,7 @@ def main() -> None:
               for name in timings
               if same_sf and prev["queries"].get(name)}
 
-    from datafusion_delta_sharing_spark.harness import extensions as EXT
+    from datafusion_delta_sharing_spark.harness import text as EXT
 
     total = round(sum(timings.values()), 3)
     doc = {
@@ -452,7 +438,6 @@ def main() -> None:
         # across runs, raw runs alongside)
         "stream_seconds": stream_split,
         "prev_round": prev["round"],
-        "prev_basis": prev["basis"],   # "best" for r<=4 artifacts
         # True when prev was an r7+ compact stub: its values (and this
         # run's delta numerators) are compute-substituted, not wall
         "prev_substituted": prev.get("substituted", False),
@@ -474,10 +459,7 @@ def main() -> None:
             "methodology":
                 "r5 (VERDICT r4 #3): queries = per-query MEDIAN of n_runs "
                 "with raw timings in 'runs' and 1/5/15-min loadavg before/"
-                "after the suite. delta_vs_prev against r<=4 artifacts "
-                "divides a median by a best-of-3 (prev_basis='best') - "
-                "those ratios read pessimistic, never flattering. Wide "
-                "spread within one query's runs = machine load, not plan. "
+                "after the suite. Wide spread within one query's runs = machine load, not plan. "
                 "'calibration' times fixed-size CPU probes (JVM all-core, "
                 "BLAS matmul, 1-core Python) before/after the suite: "
                 "divide a cross-round per-query delta by the matching "

@@ -1,9 +1,22 @@
 """Correctness harness: the driver-facing query registry.
 
-Each query is ``(spark, sf_dir) -> DataFrame`` plus (where ANSI-SQL
-expressible) a DuckDB oracle string over the same parquet tables. The
-registry backs ``__spark_entry__.py`` (SURVEY.md §5: end-to-end correctness
-vs a DuckDB oracle — the coverage the reference lacks).
+Each query is ``(spark, sf_dir) -> DataFrame`` plus a DuckDB oracle
+string over the same parquet tables. The registry backs
+``__spark_entry__.py`` (SURVEY.md §5: end-to-end correctness vs a DuckDB
+oracle — the coverage the reference lacks). It is organized by domain,
+one module each:
+
+* ``connector`` — reads through the connector from ``mockserver``;
+* ``relational`` — the relational surface and TPC-H shapes;
+* ``text`` — text curation, dedup and retrieval;
+* ``ml`` — featurization, model fits and evaluation;
+* ``graph`` — the part co-purchase graph;
+* ``timeseries`` — time series and event streams;
+* ``streaming`` — Structured Streaming pipelines.
+
+In each module, the function ``q_<key>`` is query ``<key>`` (in definition
+order) and ``ORACLES[<key>]`` its oracle; operator logic lives in
+``operators/``, the harness keeps the fixtures and the query wiring.
 
 Comparability rules (driver hashes row-count + schema + order-insensitive
 values, columns sorted by name):

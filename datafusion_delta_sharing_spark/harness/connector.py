@@ -1,40 +1,55 @@
-"""Connector queries ON the oracle path (VERDICT r1, next-round item #1).
+"""Connector queries: the driver's sf parquet served through the
+in-process mock Delta Sharing server (``harness/mockserver.py``) and read
+back through the real connector stack.
 
-Round 1 verified the Delta Sharing connector only through pytest + mock
-server; every CORRECTNESS row loaded parquet via ``spark.read.parquet``.
-These queries close that gap: each one serves the driver's own sf parquet
-through the in-process mock Delta Sharing server (``harness/mockserver.py``)
-and reads it back through the *real* connector stack —
-``DeltaSharingReader.table()`` (reference ``src/datasource/table.rs:174-196``)
-and ``spark.read.format("deltasharing")`` — so the DuckDB oracle checks the
-whole pipeline end-to-end: REST discovery, NDJSON listing, presigned-URL
-ranged HTTP fetch (``mapInArrow``), predicate hints + residual filters,
-typed partition-value reconstruction, and catalog SQL rewriting.
+Each query goes through ``DeltaSharingReader`` (reference
+``src/datasource/table.rs:174-196``), ``spark.read.format("deltasharing")``,
+the snapshot or CDF stream, or ``DeltaSharingCatalog``, so the DuckDB
+oracle checks the whole pipeline end to end: REST discovery, NDJSON
+listing, presigned-URL ranged HTTP fetch, predicate hints and residual
+filters, partition-value reconstruction, deletion vectors, time travel,
+change feeds, OAuth and bearer expiry.
 
-Two physical shapes are exercised:
+Two physical shapes are served:
 
-* ``customer`` served as HTTP parquet bytes with ``Range`` support — the
-  distributed executor-side fetch path (A1–A3);
-* ``orders`` re-staged as a *partitioned* share (partitionBy o_orderstatus,
-  data files without the partition column, ``file://`` URLs) — the native
-  vectorized scan + per-file partition-value decode path (A20,
-  reference ``src/datasource/scan.rs:159-229``).
+* ``customer`` as HTTP parquet bytes with ``Range`` support (the
+  executor-side fetch path), plus its CDF, DV and time-travel variants;
+* ``orders`` re-staged as a *partitioned* share (partitionBy
+  o_orderstatus, data files without the partition column, ``file://``
+  URLs) — the native scan + per-file partition-value decode path.
 
-The mock server lives for the process lifetime (daemon threads), cached per
-sf_dir, because the returned DataFrames are lazy: executors contact the
-server again at collect time.
+The mock server lives for the process lifetime (daemon threads), cached
+per sf_dir, because the returned DataFrames are lazy: executors contact
+the server again at collect time.
 """
 
 from __future__ import annotations
 
 import glob
+import hashlib
+import io
+import json
 import os
+import tempfile as _tmp
+import time
 
+import numpy as np
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from datafusion_delta_sharing_spark.catalog import DeltaSharingCatalog
+from datafusion_delta_sharing_spark.client import DeltaSharingClient
+from datafusion_delta_sharing_spark.errors import ProfileError
+from datafusion_delta_sharing_spark.functions.money import cents
+from datafusion_delta_sharing_spark.operators import cdc as CDC
+from datafusion_delta_sharing_spark.profile import Profile
+from datafusion_delta_sharing_spark.sources import dv as DV
+from datafusion_delta_sharing_spark.sources.reader import DeltaSharingReader
 from datafusion_delta_sharing_spark.streaming import (
-    progress as _STREAM_PROGRESS,
-)
+    progress as _STREAM_PROGRESS)
+from datafusion_delta_sharing_spark.streaming.windows import materialize_stream
+
 
 _SHARE, _SCHEMA = "bench", "tpch"
 _STAGE_ROOT = os.path.join(os.path.dirname(os.path.dirname(
@@ -48,14 +63,24 @@ def _stage_key(src: str, salt: str = "") -> str:
     + mtime/size (+ salt). One definition shared by every staging site
     (ADVICE r2: a basename-only key silently reused stale staged data
     when two sf dirs shared a label or the source changed in place)."""
-    import hashlib
-
     src = os.path.abspath(src)
     st = os.stat(src)
     suffix = f":{salt}" if salt else ""
     return hashlib.md5(
         f"{src}:{st.st_mtime_ns}:{st.st_size}{suffix}".encode()
     ).hexdigest()[:16]
+
+
+def _staged(sf_dir: str, table: str, name: str, write,
+            salt: str = "") -> str:
+    """The directory ``name`` that ``write(src, out)`` fills from the
+    ``table`` parquet of ``sf_dir``, written once per source version
+    (keyed by :func:`_stage_key`)."""
+    src = os.path.abspath(os.path.join(sf_dir, f"{table}.parquet"))
+    out = os.path.join(_STAGE_ROOT, _stage_key(src, salt), name)
+    if not os.path.exists(os.path.join(out, "_SUCCESS")):
+        write(src, out)
+    return out
 
 
 def _stage_partitioned_orders(spark: SparkSession, sf_dir: str) -> str:
@@ -65,14 +90,9 @@ def _stage_partitioned_orders(spark: SparkSession, sf_dir: str) -> str:
 
     The staging dir is keyed by :func:`_stage_key` (source path +
     mtime/size)."""
-    src = os.path.abspath(os.path.join(sf_dir, "orders.parquet"))
-    key = _stage_key(src)
-    out = os.path.join(_STAGE_ROOT, key, "orders_by_status")
-    if not os.path.exists(os.path.join(out, "_SUCCESS")):
-        (spark.read.parquet(src)
-         .repartition(1)
-         .write.mode("overwrite").partitionBy("o_orderstatus").parquet(out))
-    return out
+    return _staged(sf_dir, "orders", "orders_by_status", lambda src, out: (
+        spark.read.parquet(src).repartition(1)
+        .write.mode("overwrite").partitionBy("o_orderstatus").parquet(out)))
 
 
 def _stage_cdf_customer(spark: SparkSession, sf_dir: str) -> dict:
@@ -82,20 +102,16 @@ def _stage_cdf_customer(spark: SparkSession, sf_dir: str) -> dict:
     leaves as a ``remove`` commit (v3). Reconstructing the table from
     base + feed must therefore yield exactly ``c_custkey % 3 != 2`` — a
     result that requires BOTH change kinds to be applied."""
-    src = os.path.abspath(os.path.join(sf_dir, "customer.parquet"))
-    key = _stage_key(src, salt="cdf")
-    out = os.path.join(_STAGE_ROOT, key, "customer_cdf")
-    cust = spark.read.parquet(src).select(
-        "c_custkey", "c_name", "c_acctbal", "c_mktsegment")
-    paths = {}
-    for mod in (0, 1, 2):
-        slice_dir = os.path.join(out, f"slice{mod}")
-        if not os.path.exists(os.path.join(slice_dir, "_SUCCESS")):
-            (cust.filter(F.col("c_custkey") % 3 == mod)
-             .coalesce(1).write.mode("overwrite").parquet(slice_dir))
-        paths[mod] = sorted(glob.glob(
-            os.path.join(slice_dir, "*.parquet")))[0]
-    return paths
+    def write(mod):
+        return lambda src, out: (
+            spark.read.parquet(src)
+            .select("c_custkey", "c_name", "c_acctbal", "c_mktsegment")
+            .filter(F.col("c_custkey") % 3 == mod)
+            .coalesce(1).write.mode("overwrite").parquet(out))
+
+    return {mod: sorted(glob.glob(os.path.join(
+        _staged(sf_dir, "customer", f"customer_cdf/slice{mod}", write(mod),
+                "cdf"), "*.parquet")))[0] for mod in (0, 1, 2)}
 
 
 def _stage_cdf_update(spark: SparkSession, sf_dir: str) -> str:
@@ -105,10 +121,7 @@ def _stage_cdf_update(spark: SparkSession, sf_dir: str) -> str:
     ``c_mktsegment = 'UPDATED'``, both in ONE file whose own
     ``_change_type`` column travels with the data (the protocol's
     ``cdc`` action shape, which add/remove actions cannot express)."""
-    src = os.path.abspath(os.path.join(sf_dir, "customer.parquet"))
-    key = _stage_key(src, salt="cdfu")
-    out = os.path.join(_STAGE_ROOT, key, "customer_cdf_update")
-    if not os.path.exists(os.path.join(out, "_SUCCESS")):
+    def write(src, out):
         upd = (spark.read.parquet(src)
                .select("c_custkey", "c_name", "c_acctbal", "c_mktsegment")
                .filter((F.col("c_custkey") % 3 == 1)
@@ -118,6 +131,8 @@ def _stage_cdf_update(spark: SparkSession, sf_dir: str) -> str:
                 .withColumn("_change_type", F.lit("update_postimage")))
         (pre.unionByName(post).coalesce(1)
          .write.mode("overwrite").parquet(out))
+
+    out = _staged(sf_dir, "customer", "customer_cdf_update", write, "cdfu")
     return sorted(glob.glob(os.path.join(out, "*.parquet")))[0]
 
 
@@ -133,14 +148,6 @@ def _stage_dv_customer(sf_dir: str) -> tuple[dict, list]:
 
     Pure pyarrow (no Spark write) so the blob row order is deterministic;
     returns ({served_path: bytes}, [file dicts with None urls])."""
-    import io
-
-    import numpy as np
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    from datafusion_delta_sharing_spark.sources import dv as DV
-
     cols = ["c_custkey", "c_name", "c_acctbal"]
     src = os.path.join(sf_dir, "customer.parquet")
     if os.path.isdir(src):
@@ -185,12 +192,8 @@ def _stage_dv_customer(sf_dir: str) -> tuple[dict, list]:
 def _ensure_served(spark: SparkSession, sf_dir: str) -> dict:
     if sf_dir in _SERVED:
         return _SERVED[sf_dir]
-    import json
-
     from datafusion_delta_sharing_spark.harness.mockserver import (
-        MockSharingServer,
-        MockTable,
-    )
+        MockSharingServer, MockTable)
 
     customer_path = f"{sf_dir}/customer.parquet"
     # driver testdata is a single parquet file; scale-probe dirs
@@ -219,8 +222,6 @@ def _ensure_served(spark: SparkSession, sf_dir: str) -> dict:
     order_files = []
     for path in sorted(glob.glob(os.path.join(
             orders_dir, "o_orderstatus=*", "*.parquet"))):
-        import pyarrow.parquet as _pq
-
         status = os.path.basename(os.path.dirname(path)).split("=", 1)[1]
         order_files.append({
             "id": f"orders-{status}-{os.path.basename(path)}",
@@ -230,7 +231,7 @@ def _ensure_served(spark: SparkSession, sf_dir: str) -> dict:
             # real servers ship numRecords stats per file action; the
             # metadata-only aggregates (connector_meta_counts) need them
             "stats": json.dumps(
-                {"numRecords": _pq.ParquetFile(path).metadata.num_rows}),
+                {"numRecords": pq.ParquetFile(path).metadata.num_rows}),
         })
 
     cdf_paths = _stage_cdf_customer(spark, sf_dir)
@@ -242,15 +243,16 @@ def _ensure_served(spark: SparkSession, sf_dir: str) -> dict:
                 "size": os.path.getsize(cdf_paths[mod]),
                 "partition_values": {}}
 
+    def _add_remove() -> list[dict]:
+        return [{"kind": "add", "version": 2,
+                 "timestamp": 1_700_000_000_000, **_cdf_file(0)},
+                {"kind": "remove", "version": 3,
+                 "timestamp": 1_700_000_060_000, **_cdf_file(2)}]
+
     cdf_table = MockTable(share=_SHARE, schema=_SCHEMA, name="customer_cdf",
                           schema_string=cdf_schema,
                           files=[_cdf_file(1), _cdf_file(2)])
-    cdf_table.changes.extend([
-        {"kind": "add", "version": 2, "timestamp": 1_700_000_000_000,
-         **_cdf_file(0)},
-        {"kind": "remove", "version": 3, "timestamp": 1_700_000_060_000,
-         **_cdf_file(2)},
-    ])
+    cdf_table.changes.extend(_add_remove())
 
     # the FULL three-kind CDC history (connector_cdf_scd2): the same
     # base snapshot and add/remove commits, plus a v4 ``cdc`` commit
@@ -262,10 +264,7 @@ def _ensure_served(spark: SparkSession, sf_dir: str) -> dict:
                          schema_string=cdf_schema,
                          files=[_cdf_file(1), _cdf_file(2)])
     cdf_full.changes.extend([
-        {"kind": "add", "version": 2, "timestamp": 1_700_000_000_000,
-         **_cdf_file(0)},
-        {"kind": "remove", "version": 3, "timestamp": 1_700_000_060_000,
-         **_cdf_file(2)},
+        *_add_remove(),
         {"kind": "cdf", "version": 4, "timestamp": 1_700_000_120_000,
          "id": "cdf-update4", "url": f"file://{update_path}",
          "size": os.path.getsize(update_path), "partition_values": {}},
@@ -329,14 +328,26 @@ def _ensure_served(spark: SparkSession, sf_dir: str) -> dict:
     return state
 
 
-def _reader(spark: SparkSession, sf_dir: str):
-    from datafusion_delta_sharing_spark.client import DeltaSharingClient
-    from datafusion_delta_sharing_spark.profile import Profile
-    from datafusion_delta_sharing_spark.sources.reader import DeltaSharingReader
+def _reader(spark: SparkSession, sf_dir: str, profile="profile_json"):
+    state = _ensure_served(spark, sf_dir)
+    profile = Profile.from_json(state[profile])
+    return DeltaSharingReader(spark, DeltaSharingClient(profile))
+
+
+def _load(spark: SparkSession, sf_dir: str, table: str, stream=False,
+          **options) -> DataFrame:
+    """``table`` of the served share through ``format("deltasharing")``,
+    batch or (``stream``) streaming."""
+    from datafusion_delta_sharing_spark.sources.datasource import (
+        DeltaSharingDataSource)
 
     state = _ensure_served(spark, sf_dir)
-    profile = Profile.from_json(state["profile_json"])
-    return DeltaSharingReader(spark, DeltaSharingClient(profile))
+    spark.dataSource.register(DeltaSharingDataSource)
+    return ((spark.readStream if stream else spark.read)
+            .format("deltasharing")
+            .option("profile_json", state["profile_json"])
+            .option("table", f"{_SHARE}.{_SCHEMA}.{table}")
+            .options(**options).load())
 
 
 # -- queries ---------------------------------------------------------------
@@ -373,9 +384,6 @@ def q_connector_datasource(spark: SparkSession, sf_dir: str) -> DataFrame:
     pushFilters -> jsonPredicateHints, per-file input partitions, Arrow
     batch read on executors; aggregation on top proves the rows compose
     with the relational engine."""
-    from datafusion_delta_sharing_spark.sources.datasource import (
-        DeltaSharingDataSource,
-    )
 
     # the driver builds its own session without this conf; Spark 4 refuses to
     # plan a Python data source that implements pushFilters() while it is
@@ -386,12 +394,7 @@ def q_connector_datasource(spark: SparkSession, sf_dir: str) -> DataFrame:
     # DataFrame plans/executes lazily, after this function returns), and no
     # registry query depends on the default-false path.
     spark.conf.set("spark.sql.python.filterPushdown.enabled", "true")
-    state = _ensure_served(spark, sf_dir)
-    spark.dataSource.register(DeltaSharingDataSource)
-    df = (spark.read.format("deltasharing")
-          .option("profile_json", state["profile_json"])
-          .option("table", f"{_SHARE}.{_SCHEMA}.customer")
-          .load())
+    df = _load(spark, sf_dir, "customer")
     return (df.filter(F.col("c_acctbal") > 0)
             .groupBy("c_mktsegment")
             .agg(F.count(F.lit(1)).alias("n_customers"),
@@ -404,9 +407,6 @@ def q_connector_catalog_sql(spark: SparkSession, sf_dir: str) -> DataFrame:
     registration over the connector scan, FQN rewrite outside string
     literals, then a join+agg across TWO shared tables (reference
     examples/query_from_catalog.rs:21)."""
-    from datafusion_delta_sharing_spark.catalog import DeltaSharingCatalog
-    from datafusion_delta_sharing_spark.profile import Profile
-
     state = _ensure_served(spark, sf_dir)
     catalog = DeltaSharingCatalog(spark, Profile.from_json(state["profile_json"]))
     return catalog.sql(f"""
@@ -426,8 +426,6 @@ def q_connector_cdf_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     slice 2 at v3) reconstructed with operators/cdc.apply_changes. The
     result is right ONLY if both the insert and the delete commit are
     fetched through the protocol and applied in version order."""
-    from datafusion_delta_sharing_spark.operators import cdc as CDC
-
     reader = _reader(spark, sf_dir)
     base = reader.table(f"{_SHARE}.{_SCHEMA}.customer_cdf")
     changes = reader.table_changes(f"{_SHARE}.{_SCHEMA}.customer_cdf",
@@ -500,22 +498,8 @@ def q_connector_cdf_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     sink, and aggregate per (change type, commit version). The counts
     are right only if the stream replays the server's history from
     ``startingVersion`` and maps both action kinds to CDF metadata."""
-    import json
-
-    from datafusion_delta_sharing_spark.sources.datasource import (
-        DeltaSharingDataSource,
-    )
-    from datafusion_delta_sharing_spark.streaming.windows import (
-        materialize_stream,
-    )
-
-    state = _ensure_served(spark, sf_dir)
-    spark.dataSource.register(DeltaSharingDataSource)
-    stream = (spark.readStream.format("deltasharing")
-              .option("profile_json", state["profile_json"])
-              .option("table", f"{_SHARE}.{_SCHEMA}.customer_cdf")
-              .option("readChangeFeed", "true")
-              .option("startingVersion", "2").load())
+    stream = _load(spark, sf_dir, "customer_cdf", stream=True,
+                   readChangeFeed="true", startingVersion="2")
     rows = materialize_stream(stream, "append", "connector_cdf_stream")
     return (rows.groupBy("_change_type", "_commit_version")
             .agg(F.count(F.lit(1)).cast("long").alias("n_rows"),
@@ -545,33 +529,13 @@ def q_connector_cdf_scd2(spark: SparkSession, sf_dir: str) -> DataFrame:
     order, so the sink's order contract holds by construction. The
     oracle is the batch interval build over the same commit-derived
     event log expressed directly on the customer table."""
-    import tempfile as _tmp
-
-    from datafusion_delta_sharing_spark.sources.datasource import (
-        DeltaSharingDataSource,
-    )
     from datafusion_delta_sharing_spark.streaming.scd2 import (
-        scd2_state, scd2_upsert_sink,
-    )
+        scd2_state, scd2_upsert_sink)
 
     state = _ensure_served(spark, sf_dir)
     reader = _reader(spark, sf_dir)
     state_dir = _tmp.mkdtemp(prefix="cdf_scd2_state_")
     ckpt = _tmp.mkdtemp(prefix="cdf_scd2_ckpt_")
-
-    def _events(df: DataFrame, version_col) -> DataFrame:
-        # the SCD2 state IS the segment; a delete closes the row into a
-        # terminal '<deleted>' version. Update preimages are the old
-        # row restated, not an event — only postimages advance history.
-        return (df.filter(F.col("_change_type") != "update_preimage")
-                .select(
-                    F.col("c_custkey").cast("bigint").alias("user_id"),
-                    F.when(F.col("_change_type") == "delete",
-                           F.lit("<deleted>"))
-                    .otherwise(F.col("c_mktsegment"))
-                    .alias("event_type"),
-                    F.timestamp_seconds(version_col).alias("ts"),
-                    version_col.cast("bigint").alias("event_id")))
 
     # initial load: the base snapshot (slices 1+2) as v1 segment
     # states, merged under its own run_id (a one-off backfill run)
@@ -582,18 +546,14 @@ def q_connector_cdf_scd2(spark: SparkSession, sf_dir: str) -> DataFrame:
     # once before its first reuse
     scd2_upsert_sink(spark, state_dir, n_buckets=8,
                      run_id=f"{ckpt}-seed")(
-        _events(base, F.lit(1)), 0)
+        CDC.change_events(base, "c_custkey", "c_mktsegment", F.lit(1)), 0)
 
-    spark.dataSource.register(DeltaSharingDataSource)
-    stream = (spark.readStream.format("deltasharing")
-              .option("profile_json", state["profile_json"])
-              .option("table", f"{_SHARE}.{_SCHEMA}.customer_cdf_full")
-              .option("readChangeFeed", "true")
-              .option("startingVersion", "2").load())
-    import time
+    stream = _load(spark, sf_dir, "customer_cdf_full", stream=True,
+                   readChangeFeed="true", startingVersion="2")
 
     t0 = time.perf_counter()
-    query = (_events(stream, F.col("_commit_version"))
+    query = (CDC.change_events(stream, "c_custkey", "c_mktsegment",
+                               F.col("_commit_version"))
              .writeStream.outputMode("update")
              .foreachBatch(scd2_upsert_sink(spark, state_dir,
                                             n_buckets=8, run_id=ckpt))
@@ -618,21 +578,7 @@ def q_connector_snapshot_stream(spark: SparkSession,
     carries the whole snapshot through the ranged executor fetch; the
     per-segment aggregate is right only if every file's bytes arrive
     through the streaming path."""
-    import json
-
-    from datafusion_delta_sharing_spark.functions.money import cents
-    from datafusion_delta_sharing_spark.sources.datasource import (
-        DeltaSharingDataSource,
-    )
-    from datafusion_delta_sharing_spark.streaming.windows import (
-        materialize_stream,
-    )
-
-    state = _ensure_served(spark, sf_dir)
-    spark.dataSource.register(DeltaSharingDataSource)
-    stream = (spark.readStream.format("deltasharing")
-              .option("profile_json", state["profile_json"])
-              .option("table", f"{_SHARE}.{_SCHEMA}.customer").load())
+    stream = _load(spark, sf_dir, "customer", stream=True)
     rows = materialize_stream(stream, "append",
                               "connector_snapshot_stream")
     return (rows.groupBy("c_mktsegment")
@@ -654,15 +600,7 @@ def q_connector_oauth(spark: SparkSession, sf_dir: str) -> DataFrame:
     that by serving parquet paths before its auth check, and
     tests/test_reader_catalog.py pins exactly one issued token for the
     whole chain (ADVICE r7)."""
-    from datafusion_delta_sharing_spark.client import DeltaSharingClient
-    from datafusion_delta_sharing_spark.profile import Profile
-    from datafusion_delta_sharing_spark.sources.reader import (
-        DeltaSharingReader,
-    )
-
-    state = _ensure_served(spark, sf_dir)
-    profile = Profile.from_json(state["oauth_profile_json"])
-    reader = DeltaSharingReader(spark, DeltaSharingClient(profile))
+    reader = _reader(spark, sf_dir, "oauth_profile_json")
     # vacuously-true predicate: exercises the hint + residual machinery
     # under OAuth without changing the row set (acctbal CAN be negative)
     df = reader.table(f"{_SHARE}.{_SCHEMA}.customer",
@@ -687,15 +625,6 @@ def q_connector_bearer_expiry(spark: SparkSession, sf_dir: str) -> DataFrame:
     crossing-expiry scenario (same reader, token expiring mid-session
     between two requests) is pinned in
     tests/test_harness_connector.py::test_bearer_expiry_mid_session."""
-    import json
-
-    from datafusion_delta_sharing_spark.client import DeltaSharingClient
-    from datafusion_delta_sharing_spark.errors import ProfileError
-    from datafusion_delta_sharing_spark.profile import Profile
-    from datafusion_delta_sharing_spark.sources.reader import (
-        DeltaSharingReader,
-    )
-
     state = _ensure_served(spark, sf_dir)
     doc = json.loads(state["profile_json"])
     live = Profile.from_json(json.dumps(
@@ -719,79 +648,10 @@ def q_connector_bearer_expiry(spark: SparkSession, sf_dir: str) -> DataFrame:
     return counts.join(F.broadcast(flags))
 
 
-QUERIES = {
-    "connector_flagship": q_connector_flagship,
-    "connector_bearer_expiry": q_connector_bearer_expiry,
-    "connector_meta_counts": q_connector_meta_counts,
-    "connector_cdf_stream": q_connector_cdf_stream,
-    "connector_snapshot_stream": q_connector_snapshot_stream,
-    "connector_oauth": q_connector_oauth,
-    "connector_time_travel_diff": q_connector_time_travel_diff,
-    "connector_dv_apply": q_connector_dv_apply,
-    "connector_partitioned": q_connector_partitioned,
-    "connector_datasource": q_connector_datasource,
-    "connector_catalog_sql": q_connector_catalog_sql,
-    "connector_cdf_apply": q_connector_cdf_apply,
-    "connector_cdf_scd2": q_connector_cdf_scd2,
-}
-
 ORACLES = {
-    "connector_bearer_expiry": """
-        SELECT CAST(count(*) AS BIGINT) AS n_customers,
-               TRUE AS expired_rejected,
-               TRUE AS error_mentions_expiry
-        FROM customer
-    """,
     "connector_flagship": """
         SELECT c_custkey, c_name, c_acctbal, c_mktsegment
         FROM customer WHERE c_acctbal >= 1000.0
-    """,
-    "connector_meta_counts": """
-        SELECT o_orderstatus, CAST(count(*) AS BIGINT) AS n_rows
-        FROM orders GROUP BY o_orderstatus
-        UNION ALL
-        SELECT '__ALL__' AS o_orderstatus,
-               CAST(count(*) AS BIGINT) AS n_rows
-        FROM orders
-    """,
-    "connector_oauth": """
-        SELECT c_mktsegment,
-               CAST(count(*) AS BIGINT) AS n_customers,
-               min(c_custkey) AS min_key,
-               max(c_custkey) AS max_key
-        FROM customer GROUP BY c_mktsegment
-    """,
-    "connector_snapshot_stream": """
-        SELECT c_mktsegment,
-               CAST(count(*) AS BIGINT) AS n_customers,
-               CAST(sum(CAST(round(c_acctbal * 100) AS BIGINT)) AS BIGINT)
-                   AS bal_cents
-        FROM customer GROUP BY c_mktsegment
-    """,
-    "connector_cdf_stream": """
-        SELECT 'insert' AS _change_type,
-               CAST(2 AS BIGINT) AS _commit_version,
-               CAST(count(*) AS BIGINT) AS n_rows,
-               CAST(sum(c_custkey) AS BIGINT) AS sum_keys
-        FROM customer WHERE c_custkey % 3 = 0
-        UNION ALL
-        SELECT 'delete' AS _change_type,
-               CAST(3 AS BIGINT) AS _commit_version,
-               CAST(count(*) AS BIGINT) AS n_rows,
-               CAST(sum(c_custkey) AS BIGINT) AS sum_keys
-        FROM customer WHERE c_custkey % 3 = 2
-    """,
-    "connector_time_travel_diff": """
-        SELECT 'added' AS change, c_custkey, c_name
-        FROM customer WHERE c_custkey % 3 = 0
-        UNION ALL
-        SELECT 'removed' AS change, c_custkey, c_name
-        FROM customer WHERE c_custkey % 3 = 2
-    """,
-    "connector_dv_apply": """
-        SELECT c_custkey, c_name, c_acctbal
-        FROM customer
-        WHERE c_custkey % 7 <> 0 AND c_acctbal > 0
     """,
     "connector_partitioned": """
         SELECT o_orderkey, o_custkey, o_orderstatus, o_totalprice,
@@ -821,6 +681,39 @@ ORACLES = {
     "connector_cdf_apply": """
         SELECT c_custkey, c_name, c_acctbal, c_mktsegment
         FROM customer WHERE c_custkey % 3 != 2
+    """,
+    "connector_dv_apply": """
+        SELECT c_custkey, c_name, c_acctbal
+        FROM customer
+        WHERE c_custkey % 7 <> 0 AND c_acctbal > 0
+    """,
+    "connector_time_travel_diff": """
+        SELECT 'added' AS change, c_custkey, c_name
+        FROM customer WHERE c_custkey % 3 = 0
+        UNION ALL
+        SELECT 'removed' AS change, c_custkey, c_name
+        FROM customer WHERE c_custkey % 3 = 2
+    """,
+    "connector_meta_counts": """
+        SELECT o_orderstatus, CAST(count(*) AS BIGINT) AS n_rows
+        FROM orders GROUP BY o_orderstatus
+        UNION ALL
+        SELECT '__ALL__' AS o_orderstatus,
+               CAST(count(*) AS BIGINT) AS n_rows
+        FROM orders
+    """,
+    "connector_cdf_stream": """
+        SELECT 'insert' AS _change_type,
+               CAST(2 AS BIGINT) AS _commit_version,
+               CAST(count(*) AS BIGINT) AS n_rows,
+               CAST(sum(c_custkey) AS BIGINT) AS sum_keys
+        FROM customer WHERE c_custkey % 3 = 0
+        UNION ALL
+        SELECT 'delete' AS _change_type,
+               CAST(3 AS BIGINT) AS _commit_version,
+               CAST(count(*) AS BIGINT) AS n_rows,
+               CAST(sum(c_custkey) AS BIGINT) AS sum_keys
+        FROM customer WHERE c_custkey % 3 = 2
     """,
     # the maintained dimension == the batch SCD2 interval build over the
     # commit-derived event log: base snapshot (mod 1, 2) carries its
@@ -859,5 +752,25 @@ ORACLES = {
             WINDOW w AS (PARTITION BY user_id
                          ORDER BY ts NULLS LAST, event_id NULLS LAST)
         )
+    """,
+    "connector_snapshot_stream": """
+        SELECT c_mktsegment,
+               CAST(count(*) AS BIGINT) AS n_customers,
+               CAST(sum(CAST(round(c_acctbal * 100) AS BIGINT)) AS BIGINT)
+                   AS bal_cents
+        FROM customer GROUP BY c_mktsegment
+    """,
+    "connector_oauth": """
+        SELECT c_mktsegment,
+               CAST(count(*) AS BIGINT) AS n_customers,
+               min(c_custkey) AS min_key,
+               max(c_custkey) AS max_key
+        FROM customer GROUP BY c_mktsegment
+    """,
+    "connector_bearer_expiry": """
+        SELECT CAST(count(*) AS BIGINT) AS n_customers,
+               TRUE AS expired_rejected,
+               TRUE AS error_mentions_expiry
+        FROM customer
     """,
 }

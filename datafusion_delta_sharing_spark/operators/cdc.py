@@ -100,3 +100,94 @@ def apply_changes(base: DataFrame, changes: DataFrame,
         cond = c if cond is None else cond & c
     return (base.join(touched, cond, "left_anti")
             .unionByName(survivors))
+
+
+def scd2_intervals(ev: DataFrame) -> DataFrame:
+    """SCD type-2 validity intervals from an event stream (``user_id``,
+    ``event_type``, ``ts``, ``event_id``): each user's events become
+    intervals [valid_from, valid_to) per observed event_type state,
+    closed by the next state change (open interval = current). The
+    window is per-user ordered by (ts, event_id) — a total order, so the
+    intervals are deterministic. NULLS LAST is pinned explicitly: Spark
+    defaults nulls first, DuckDB last, so a null ts/event_id would
+    otherwise land at opposite ends and shift every version for that
+    user."""
+    w = Window.partitionBy("user_id").orderBy(
+        F.asc_nulls_last("ts"), F.asc_nulls_last("event_id"))
+    return (ev.withColumn("valid_to", F.lead("ts").over(w))
+            .withColumn("version", F.row_number().over(w))
+            .select("user_id", "version",
+                    F.col("event_type").alias("state"),
+                    F.col("ts").alias("valid_from"), "valid_to"))
+
+
+def scd2_build_sql(source_sql: str, user_bound: int) -> str:
+    """DuckDB mirror of :func:`scd2_intervals` plus the ``is_current``
+    flag, over the events of users below ``user_bound``."""
+    return f"""
+    SELECT user_id, version, state, valid_from, valid_to,
+           valid_to IS NULL AS is_current
+    FROM (
+        SELECT user_id, event_type AS state, ts AS valid_from,
+               lead(ts) OVER w AS valid_to,
+               row_number() OVER w AS version
+        FROM {source_sql}
+        WINDOW w AS (PARTITION BY user_id
+                     ORDER BY ts NULLS LAST, event_id NULLS LAST)
+    )
+    WHERE user_id < {user_bound}
+"""
+
+
+def scd2_lookup(facts: DataFrame, dim: DataFrame) -> DataFrame:
+    """Point-in-time (as-of) lookup of (event_id, user_id, probe_ts)
+    facts against :func:`scd2_intervals`: each probe resolves the state
+    valid at that instant — probe_ts in [valid_from, valid_to), open
+    interval = current. The join carries the user_id equi-key, so Spark
+    plans a SortMergeJoin with the range as residual (never a BNLJ), and
+    the interval non-overlap invariant makes the fan-out exactly one row
+    per probe."""
+    dim = dim.withColumnRenamed("user_id", "d_user")
+    joined = facts.join(
+        dim,
+        (facts.user_id == dim.d_user)
+        & (F.col("probe_ts") >= F.col("valid_from"))
+        & (F.col("valid_to").isNull()
+           | (F.col("probe_ts") < F.col("valid_to"))))
+    return joined.select("event_id", "user_id", "probe_ts", "state",
+                         "version")
+
+
+def change_events(changes: DataFrame, key_col: str, state_col: str,
+                  version: F.Column) -> DataFrame:
+    """A change feed as the (user_id, event_type, ts, event_id) event log
+    :func:`scd2_intervals` and the streaming SCD2 sink consume: the key
+    is the entity, ``state_col`` its state, and a delete closes the row
+    into a terminal '<deleted>' state. Update preimages are the old row
+    restated, not an event — only postimages advance history. Event
+    time and tie-break derive from the commit ``version``, the CDC log
+    order, so the sink's order contract holds by construction."""
+    return (changes.filter(F.col("_change_type") != "update_preimage")
+            .select(
+                F.col(key_col).cast("bigint").alias("user_id"),
+                F.when(F.col("_change_type") == "delete",
+                       F.lit("<deleted>"))
+                .otherwise(F.col(state_col))
+                .alias("event_type"),
+                F.timestamp_seconds(version).alias("ts"),
+                version.cast("bigint").alias("event_id")))
+
+
+def scd2_lookup_sql(dim_sql: str, facts_sql: str) -> str:
+    """DuckDB mirror of :func:`scd2_lookup` over the dimension and facts
+    queries."""
+    return f"""
+    WITH dim AS ({dim_sql}),
+    facts AS ({facts_sql})
+    SELECT f.event_id, f.user_id, f.probe_ts, d.state, d.version
+    FROM facts f
+    JOIN dim d
+      ON d.user_id = f.user_id
+     AND f.probe_ts >= d.valid_from
+     AND (d.valid_to IS NULL OR f.probe_ts < d.valid_to)
+"""

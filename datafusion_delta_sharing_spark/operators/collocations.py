@@ -118,3 +118,57 @@ def pmi_collocations_sql(source_sql: str, text_col: str, id_col: str,
              b.bigram
     LIMIT {top_k}
     """
+
+
+# -- association rules over baskets -------------------------------------------
+
+
+def basket_rules(baskets: DataFrame, min_support: int) -> DataFrame:
+    """Association rules over distinct (g basket, i item) rows: item
+    pairs seen together in at least ``min_support`` baskets, with their
+    support counts and the exact integer lift cross-products (lift =
+    n_baskets*c_ab/(c_a*c_b); rank and filter on the integer
+    numerator/denominator) — the itemset analogue of the bigram PMI
+    above, with no division materialized."""
+    n_b = baskets.select("g").distinct().agg(
+        F.count(F.lit(1)).alias("n_baskets"))
+    item = baskets.groupBy("i").agg(F.count(F.lit(1)).alias("c"))
+    a = baskets.select("g", F.col("i").alias("ia"))
+    b = baskets.select("g", F.col("i").alias("ib"))
+    pairs = (a.join(b, "g").filter(F.col("ia") < F.col("ib"))
+             .groupBy("ia", "ib").agg(F.count(F.lit(1)).alias("c_ab"))
+             .filter(F.col("c_ab") >= min_support))
+    ca = item.select(F.col("i").alias("ia"), F.col("c").alias("c_a"))
+    cb = item.select(F.col("i").alias("ib"), F.col("c").alias("c_b"))
+    return (pairs.join(ca, "ia").join(cb, "ib")
+            .crossJoin(F.broadcast(n_b))
+            .select("ia", "ib", "c_ab", "c_a", "c_b",
+                    (F.col("c_ab") * F.col("n_baskets")).alias("lift_num"),
+                    (F.col("c_a") * F.col("c_b")).alias("lift_den")))
+
+
+def basket_rules_sql(baskets_sql: str, min_support: int) -> str:
+    """DuckDB mirror of :func:`basket_rules`; ``baskets_sql`` selects the
+    distinct (g, i) rows."""
+    return f"""
+    WITH baskets AS (
+        {baskets_sql}
+    ), nb AS (SELECT count(DISTINCT g) AS n_baskets FROM baskets),
+    item AS (SELECT i, count(*) AS c FROM baskets GROUP BY i),
+    pairs AS (
+        SELECT a.i AS ia, b.i AS ib, count(*) AS c_ab
+        FROM baskets a JOIN baskets b ON a.g = b.g AND a.i < b.i
+        GROUP BY a.i, b.i
+        HAVING count(*) >= {min_support}
+    )
+    SELECT p.ia, p.ib,
+           CAST(p.c_ab AS BIGINT) AS c_ab,
+           CAST(ca.c AS BIGINT) AS c_a,
+           CAST(cb.c AS BIGINT) AS c_b,
+           CAST(p.c_ab * nb.n_baskets AS BIGINT) AS lift_num,
+           CAST(ca.c * cb.c AS BIGINT) AS lift_den
+    FROM pairs p
+    JOIN item ca ON ca.i = p.ia
+    JOIN item cb ON cb.i = p.ib
+    CROSS JOIN nb
+"""

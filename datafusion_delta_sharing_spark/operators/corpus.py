@@ -30,7 +30,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 
 from datafusion_delta_sharing_spark.functions.text import (
-    tokens_lower, tokens_lower_sql)
+    dup_ngram_ratio_sql, shingles_of_words, tokens_lower, tokens_lower_sql,
+    words_of)
 from datafusion_delta_sharing_spark.operators.chunking import (
     chunk_documents,
     chunk_documents_sql,
@@ -260,4 +261,56 @@ def token_entropy_sql(source_sql: str, text_col: str, id_col: str,
                round(ln(sum(c)) - sum(c * ln(c)) / sum(c),
                      {ndigits}) AS entropy
         FROM per_tok GROUP BY {id_col}
+    """
+
+
+# -- repetition signals ------------------------------------------------------
+
+
+def repetition_metrics(docs: DataFrame) -> DataFrame:
+    """Gopher-style repetition signals of a (doc_id, text) frame:
+    duplicate-word and duplicate-3-gram fractions, plus the 3-gram ratio on the doc concatenated with itself
+    (provably > 0 — the ratio math is exercised on every row, not just the
+    few naturally repetitive docs).
+
+    The word and shingle arrays are materialized in staged selects
+    (CollapseProject keeps multiply-referenced non-cheap aliases): the
+    convenience one-liner form re-splits the text per shingle and
+    re-shingles per ratio reference — measured 16× slower at sf0.1."""
+    staged = docs.select(
+        "doc_id", "text", words_of("text").alias("_w"),
+        F.concat(F.col("text"), F.lit(" "), F.col("text")).alias("_t2"))
+    # _w2 must be its own column: embedded in the shingle lambda it would
+    # re-concat per element (same O(words²) trap as the text re-split)
+    staged = staged.withColumn("_w2", F.concat("_w", "_w"))
+    shingled = staged.select(
+        "doc_id",
+        # k=1 via shingles_of_words, not the raw _w: the size<k fallback
+        # ([trim(text)]) is what the oracle's dup_ngram_ratio_sql(k=1)
+        # applies on a zero-word doc — raw _w would divide 0/0 there
+        shingles_of_words("_w", "text", 1).alias("_s1"),
+        shingles_of_words("_w", "text", 3).alias("_s3"),
+        shingles_of_words("_w2", "_t2", 3).alias("_s3d"))
+
+    def ratio(c):
+        return F.round(1 - F.size(F.array_distinct(c)) / F.size(c), 6)
+
+    return shingled.select(
+        "doc_id",
+        ratio(F.col("_s1")).alias("dup_word_ratio"),
+        ratio(F.col("_s3")).alias("dup_3gram_ratio"),
+        ratio(F.col("_s3d")).alias("dup_3gram_doubled"),
+    )
+
+
+def repetition_metrics_sql(source_sql: str) -> str:
+    """DuckDB mirror of :func:`repetition_metrics` over a (doc_id,
+    text) source."""
+    return f"""
+        SELECT doc_id,
+               {dup_ngram_ratio_sql('text', 1)} AS dup_word_ratio,
+               {dup_ngram_ratio_sql('text', 3)} AS dup_3gram_ratio,
+               {dup_ngram_ratio_sql("(text || ' ' || text)", 3)}
+                   AS dup_3gram_doubled
+        FROM {source_sql}
     """

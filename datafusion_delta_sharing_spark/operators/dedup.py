@@ -21,7 +21,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 
 from datafusion_delta_sharing_spark.functions.text import (
-
+    WS_TOKEN_SPLIT,
     shingles_of_words,
     words_of,
 )
@@ -638,7 +638,7 @@ def sorted_neighborhood_pairs_sql(source_sql: str, posts_cte_name: str,
                                   threshold: float = 0.2) -> str:
     """DuckDB mirror of :func:`sorted_neighborhood_pairs` as a CTE tail:
     the caller provides the doc source and the name of an existing
-    (id, sh) posting-list CTE over the SAME source (harness/_posts_cte),
+    (id, sh) posting-list CTE over the SAME source (:func:`posts_cte_sql`),
     so the shingle derivation is shared with the other jaccard oracles.
     Returns the full text AFTER the caller's WITH-list."""
     return f"""
@@ -674,3 +674,85 @@ def sorted_neighborhood_pairs_sql(source_sql: str, posts_cte_name: str,
     JOIN snm_sizes sb ON sb.id = i.id_b
     WHERE round(n_inter / (sa.sz + sb.sz - n_inter), 6) >= {threshold}
     """
+
+
+# -- DuckDB mirrors of the k=5 shingle derivation -----------------------------
+# One spelling of shingle_sets' k=5 rows for every oracle that needs them,
+# so the k arithmetic and the tokenizer cannot drift between mirrors.
+# (decontam._shingles_sql spells the same derivation for any k with a
+# DISTINCT; the oracle strings built from each are pinned byte for byte,
+# so the two texts cannot be merged without changing an oracle.)
+
+
+def shingle_rows_sql(source_sql: str) -> str:
+    """(doc_id, sh) rows of ``source_sql`` (doc_id, text), multiplicity
+    kept — the DuckDB mirror of :func:`shingle_sets` at k=5."""
+    return f"""
+        SELECT doc_id, sh FROM (
+            SELECT doc_id,
+                   CASE WHEN len(words) < 5 THEN [trim(text)]
+                        ELSE list_transform(range(1, len(words) - 3),
+                             i -> array_to_string(words[i:i+4], ' '))
+                   END AS shs
+            FROM (SELECT doc_id, text,
+                         list_filter(regexp_split_to_array(trim(text), '{WS_TOKEN_SPLIT}'), x -> x != '') AS words
+                  FROM {source_sql})
+        ), unnest(shs) AS t(sh)
+    """
+
+
+def shingles_sql(source_sql: str) -> str:
+    """(sh) rows of :func:`shingle_rows_sql`, without the id column."""
+    return f"SELECT sh FROM ({shingle_rows_sql(source_sql)})"
+
+
+def posts_cte_sql(source_sql: str) -> str:
+    """The ``posts`` (id, sh) posting-list CTE over a doc source — the
+    SQL mirror of :func:`shingle_sets`."""
+    return f"""
+    posts AS (
+        SELECT DISTINCT doc_id AS id, sh
+        FROM ({shingle_rows_sql(source_sql)})
+    )
+"""
+
+
+def jaccard_tail_sql(posts: str) -> str:
+    """Exact pairwise shingle Jaccard >= 0.15 over the (id, sh) CTE
+    ``posts``: the quadratic posting self-join the LSH operators are
+    checked against (appended after a WITH list)."""
+    return f"""
+    sizes AS (SELECT id, count(*) AS sz FROM {posts} GROUP BY id),
+    inter AS (
+        SELECT a.id AS id_a, b.id AS id_b, count(*) AS n_inter
+        FROM {posts} a JOIN {posts} b ON a.sh = b.sh AND a.id < b.id
+        GROUP BY a.id, b.id
+    )
+    SELECT id_a, id_b,
+           round(n_inter / (sa.sz + sb.sz - n_inter), 6) AS jaccard
+    FROM inter
+    JOIN sizes sa ON sa.id = id_a
+    JOIN sizes sb ON sb.id = id_b
+    WHERE round(n_inter / (sa.sz + sb.sz - n_inter), 6) >= 0.15
+"""
+
+
+def containment_tail_sql(threshold: float) -> str:
+    """DuckDB mirror of :func:`containment_pairs` over the ``posts`` CTE
+    (appended after a WITH list)."""
+    return f"""
+    sizes AS (SELECT id, count(*) AS sz FROM posts GROUP BY id),
+    inter AS (
+        SELECT a.id AS id_a, b.id AS id_b, count(*) AS n_inter
+        FROM posts a JOIN posts b ON a.sh = b.sh AND a.id < b.id
+        GROUP BY a.id, b.id
+    )
+    SELECT id_a, id_b,
+           round(n_inter / least(sa.sz, sb.sz), 6) AS containment,
+           CASE WHEN sa.sz <= sb.sz THEN 'a_in_b' ELSE 'b_in_a' END
+               AS contained
+    FROM inter
+    JOIN sizes sa ON sa.id = id_a
+    JOIN sizes sb ON sb.id = id_b
+    WHERE round(n_inter / least(sa.sz, sb.sz), 6) >= {threshold}
+"""

@@ -36,6 +36,24 @@ def cooccurrence_edges(df: DataFrame, group_col: str, item_col: str,
     return edges
 
 
+def weighted_cooccurrence_edges(df: DataFrame, group_col: str,
+                                item_col: str, scale: int) -> DataFrame:
+    """Undirected (a < b, cost) edges between items sharing a group,
+    weighted by co-occurrence support: cost = max(1, scale div count),
+    an integer inverse, so stronger ties are cheaper and every path sum
+    is bit-exact on both engines."""
+    items = (df.select(F.col(group_col).alias("g"),
+                       F.col(item_col).alias("i")).distinct())
+    a = items.select("g", F.col("i").alias("a"))
+    b = items.select("g", F.col("i").alias("b"))
+    return (a.join(b, "g").filter(F.col("a") < F.col("b"))
+            .groupBy("a", "b").agg(F.count(F.lit(1)).alias("cnt"))
+            .select("a", "b",
+                    F.greatest(F.lit(1),
+                               F.expr(f"{scale} div cnt"))
+                    .cast("long").alias("cost")))
+
+
 def vertex_degrees(edges: DataFrame) -> DataFrame:
     """(v, d) degree table of an ordered (a < b) edge list — the one
     shared definition behind the cut and its dropped-vertex proof (a

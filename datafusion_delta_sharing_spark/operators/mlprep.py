@@ -27,7 +27,7 @@ per-row closed form. Both are one-pass at 100 TB.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import DataFrame, Window, functions as F
 
 
 def target_encode_loo(df: DataFrame, cat_col: str, target_col: str,
@@ -529,3 +529,36 @@ def conformal_interval_1f_sql(xy_sql: str, group_col: str) -> str:
     """DuckDB mirror of :func:`conformal_interval_1f` — the IDENTICAL
     SQL text over the wrapped source."""
     return _CONFORMAL_SQL.format(g=group_col, src=f"({xy_sql})")
+
+
+def label_index(df: DataFrame, cols: list[str]) -> DataFrame:
+    """Deterministic categorical encoding (StringIndexer analogue): each
+    distinct label of each of ``cols`` maps to a dense sorted index —
+    (column_name, label, idx) rows."""
+    out = None
+    for col in cols:
+        # explicit NULLS LAST: Spark defaults nulls first, DuckDB last —
+        # a NULL label would silently shift every index between engines
+        part = (df.select(F.col(col).alias("label")).distinct()
+                .withColumn("idx", F.dense_rank().over(
+                    Window.orderBy(F.asc_nulls_last("label"))) - 1)
+                .select(F.lit(col).alias("column_name"), "label", "idx"))
+        out = part if out is None else out.unionByName(part)
+    return out
+
+
+def label_index_sql(source_sql: str, cols: list[str]) -> str:
+    """DuckDB mirror of :func:`label_index`."""
+    rank = "CAST(dense_rank() OVER (ORDER BY label NULLS LAST) - 1 AS BIGINT)"
+    first, *rest = cols
+    parts = [f"""
+    SELECT '{first}' AS column_name, label,
+           {rank}
+               AS idx
+    FROM (SELECT DISTINCT {first} AS label FROM {source_sql})
+"""]
+    parts += [f"""    SELECT '{col}', label,
+           {rank}
+    FROM (SELECT DISTINCT {col} AS label FROM {source_sql})
+""" for col in rest]
+    return "    UNION ALL\n".join(parts)

@@ -290,3 +290,45 @@ def audio_features(df: DataFrame) -> DataFrame:
                 "duration_s", "rms", "zero_cross_rate", "error"])
 
     return df.mapInPandas(batches, AUDIO_FEATURE_SCHEMA)
+
+
+# -- synthetic payloads with closed-form features -----------------------------
+
+
+def solid_bmp_payloads(docs: DataFrame) -> DataFrame:
+    """(media_id, payload): per ``doc_id`` d, an 8x8 solid-color BMP of
+    color (d % 256, 7d % 256, 13d % 256) — its pixel means ARE the color,
+    so a SQL oracle can mirror :func:`image_features` in closed form."""
+    def synth(it):
+        for pdf in it:
+            payloads = [
+                encode_bmp(np.full(
+                    (8, 8, 3),
+                    (d % 256, (7 * d) % 256, (13 * d) % 256),
+                    np.uint8))
+                for d in pdf["doc_id"]]
+            yield pd.DataFrame({"media_id": pdf["doc_id"],
+                                "payload": payloads})
+
+    return docs.mapInPandas(synth, "media_id bigint, payload binary")
+
+
+def square_wav_payloads(docs: DataFrame) -> DataFrame:
+    """(media_id, payload): per ``doc_id`` d, a 1 kHz PCM16 WAV of
+    1000 + d % 500 frames of an alternating-sign wave at amplitude
+    100 + d % 900 — rms = amplitude exactly, zero-crossing rate 1.0, so
+    a SQL oracle can mirror :func:`audio_features` in closed form."""
+
+    def synth(it):
+        for pdf in it:
+            payloads = []
+            for d in pdf["doc_id"]:
+                n = 1000 + int(d) % 500
+                amp = 100 + int(d) % 900
+                wave = (amp * np.where(np.arange(n) % 2 == 0, 1, -1)
+                        ).astype(np.int16)
+                payloads.append(encode_wav(wave, 1000))
+            yield pd.DataFrame({"media_id": pdf["doc_id"],
+                                "payload": payloads})
+
+    return docs.mapInPandas(synth, "media_id bigint, payload binary")

@@ -306,3 +306,141 @@ def equi_width_histogram_sql(source_sql: str, col: str, lo: float, hi: float,
          f"{n_buckets - 1}) AS BIGINT)")
     return (f"SELECT {b} AS bucket, CAST(count(*) AS BIGINT) AS n "
             f"FROM {source_sql} WHERE {col} IS NOT NULL GROUP BY 1")
+
+
+# -- robust outliers ---------------------------------------------------------
+
+
+def mad_outliers(df: DataFrame, id_col: str, group_col: str,
+                 value_col: str) -> DataFrame:
+    """Robust outlier flags: per group, rows whose value deviates from
+    the group median by more than 3 median-absolute-deviations. Medians
+    of integers land on .0/.5 exactly, so the comparison is float-safe
+    and the DuckDB mirror hash-exact. Two grouped aggregates (median,
+    then MAD) + a broadcast-joined flag pass."""
+    med = df.groupBy(group_col).agg(
+        F.expr(f"percentile({value_col}, 0.5)").alias("med"))
+    dev = df.join(F.broadcast(med), group_col).withColumn(
+        "dev", F.abs(F.col(value_col) - F.col("med")))
+    mad = dev.groupBy(group_col).agg(
+        F.expr("percentile(dev, 0.5)").alias("mad"))
+    return (dev.join(F.broadcast(mad), group_col)
+            .select(id_col, group_col, value_col,
+                    F.round("dev", 6).alias("dev"),
+                    (F.col("dev") > 3 * F.col("mad")).alias("is_outlier")))
+
+
+def mad_outliers_sql(source_sql: str, id_col: str, group_col: str,
+                     value_col: str) -> str:
+    """DuckDB mirror of :func:`mad_outliers`."""
+    return f"""
+    WITH med AS (
+        SELECT {group_col}, median({value_col}) AS med FROM {source_sql} GROUP BY {group_col}
+    ),
+    dev AS (
+        SELECT d.{id_col}, d.{group_col}, d.{value_col},
+               abs(d.{value_col} - m.med) AS dev
+        FROM {source_sql} d JOIN med m USING ({group_col})
+    ),
+    mad AS (SELECT {group_col}, median(dev) AS mad FROM dev GROUP BY {group_col})
+    SELECT d.{id_col}, d.{group_col}, d.{value_col},
+           round(d.dev, 6) AS dev,
+           d.dev > 3 * m.mad AS is_outlier
+    FROM dev d JOIN mad m USING ({group_col})
+"""
+
+
+# -- algebraic incremental aggregation ---------------------------------------
+
+
+def incremental_rollup(df: DataFrame, keys: list[str], value_col: str,
+                       order_col: str, cutover: int) -> DataFrame:
+    """Per-``keys`` (n, total_<value>, avg_<value>) maintained as
+    mergeable partials: the stored state (rows with ``order_col`` below
+    ``cutover``, pre-aggregated) absorbs the new batch (the rest) WITHOUT
+    rescanning history — merge = sum the partial (n, total) pairs and
+    re-derive the average at read time. ``value_col`` must be integral
+    (e.g. cents) so the partials merge EXACTLY; the average is one
+    division of exact integers, engine-bit-identical. At 100 TB this is
+    the difference between touching one day's data and touching the
+    archive."""
+    total = f"total_{value_col}"
+
+    def partial(part):
+        return part.groupBy(*keys).agg(
+            F.count(F.lit(1)).alias("n"),
+            F.sum(value_col).alias(total))
+
+    state = partial(df.filter(F.col(order_col) < cutover))
+    batch = partial(df.filter(F.col(order_col) >= cutover))
+    merged = (state.unionByName(batch)
+              .groupBy(*keys)
+              .agg(F.sum("n").cast("bigint").alias("n"),
+                   F.sum(total).cast("bigint")
+                   .alias(total)))
+    return merged.select(
+        *keys, "n", total,
+        (F.col(total).cast("double") / F.col("n"))
+        .alias(f"avg_{value_col}"))
+
+
+# -- central moments ---------------------------------------------------------
+
+
+def central_moments_sql(source_sql: str, group_col: str,
+                        value_col: str) -> str:
+    """ONE spelling of the central-moment arithmetic for both engines
+    (Spark runs it through ``spark.sql``): per group n, mean, m2,
+    population skewness g1 = m3/m2^1.5 and excess kurtosis
+    g2 = m4/m2^2 - 3."""
+    return f"""
+    SELECT e.{group_col},
+           CAST(max(g.n) AS BIGINT) AS n,
+           round(max(g.mean), 6) AS mean,
+           round(avg(power(e.{value_col} - g.mean, 2)), 6) AS m2,
+           round(avg(power(e.{value_col} - g.mean, 3))
+                 / power(avg(power(e.{value_col} - g.mean, 2)), 1.5), 6) AS skew,
+           round(avg(power(e.{value_col} - g.mean, 4))
+                 / power(avg(power(e.{value_col} - g.mean, 2)), 2) - 3, 6) AS kurt
+    FROM {source_sql} e
+    JOIN (SELECT {group_col}, count(*) AS n, avg({value_col}) AS mean
+          FROM {source_sql} GROUP BY {group_col}) g
+      ON e.{group_col} = g.{group_col}
+    GROUP BY e.{group_col}
+"""
+
+
+def moments_builtin_check(moments: DataFrame, df: DataFrame,
+                          group_col: str, value_col: str) -> DataFrame:
+    """The :func:`central_moments_sql` rows plus ``builtin_ok``: Spark's
+    skewness/kurtosis builtins over ``df`` match the explicit formula
+    within 1e-6 — if either builtin's definition drifts from population
+    g1/g2, the flag flips."""
+    builtin = (df.groupBy(group_col)
+               .agg(F.skewness(value_col).alias("b_skew"),
+                    F.kurtosis(value_col).alias("b_kurt")))
+    ok = ((F.abs(F.col("skew") - F.col("b_skew")) <= 1e-6)
+          & (F.abs(F.col("kurt") - F.col("b_kurt")) <= 1e-6))
+    return (moments.join(F.broadcast(builtin), group_col)
+            .select(group_col, "n", "mean", "m2", "skew", "kurt",
+                    ok.alias("builtin_ok")))
+
+
+def mode_sql(source_sql: str, group_col: str, value_col: str,
+             mode_as: str) -> str:
+    """Deterministic per-group mode of ``value_col`` (named ``mode_as``)
+    with its count, for both engines (Spark runs it through
+    ``spark.sql``): count + row_number with an explicit value tie-break,
+    because the ``mode()`` builtin is nondeterministic on ties."""
+    return f"""
+    SELECT {group_col}, {value_col} AS {mode_as},
+           CAST(n AS BIGINT) AS n
+    FROM (
+        SELECT {group_col}, {value_col}, count(*) AS n,
+               row_number() OVER (
+                   PARTITION BY {group_col}
+                   ORDER BY count(*) DESC, {value_col}
+               ) AS rn
+        FROM {source_sql} GROUP BY {group_col}, {value_col}
+    ) WHERE rn = 1
+"""

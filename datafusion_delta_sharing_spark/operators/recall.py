@@ -23,7 +23,7 @@ Mis-wired banding/bucketing collapses recall and flips ``recall_ok`` (or
 ``n_false``), failing the driver's value hash; a broken exact baseline
 fails on ``n_exact``. The recall bounds are empirical constants measured
 at sf0.01/sf0.1 with deliberate slack (the workloads are pinned to
-SF-independent subsets where possible, see harness/extensions.py).
+SF-independent subsets where possible, see harness/text.py).
 """
 
 from __future__ import annotations
@@ -94,3 +94,44 @@ def recall_summary_sql(n_exact_sql: str, bound: float,
                {n_false}TRUE AS recall_ok
         FROM (SELECT CAST(({n_exact_sql}) AS BIGINT) AS n_exact)
     """
+
+
+def dup_set_parity(corpus: DataFrame, streamed: DataFrame,
+                   batch_dups: DataFrame, exact_dups: DataFrame, key: str,
+                   bound: float) -> DataFrame:
+    """One row comparing an incremental dedup's duplicate set
+    ``streamed`` against the batch operator's ``batch_dups`` (exact
+    parity expected: ``n_stream_only`` and ``n_batch_only``) and the
+    exact baseline ``exact_dups`` (recall bounded by ``bound``, false
+    positives counted); each frame holds distinct ``key`` rows, and
+    ``n_docs`` counts ``corpus``."""
+    u = (streamed.withColumn("in_s", F.lit(1))
+         .join(batch_dups.withColumn("in_b", F.lit(1)), key,
+               "full_outer")
+         .join(exact_dups.withColumn("in_e", F.lit(1)), key,
+               "full_outer"))
+    counts = u.agg(
+        F.coalesce(F.sum(F.when(F.col("in_s").isNotNull()
+                                & F.col("in_b").isNull(), 1)),
+                   F.lit(0)).cast("bigint").alias("n_stream_only"),
+        F.coalesce(F.sum(F.when(F.col("in_b").isNotNull()
+                                & F.col("in_s").isNull(), 1)),
+                   F.lit(0)).cast("bigint").alias("n_batch_only"),
+        F.coalesce(F.sum("in_e"), F.lit(0)).cast("bigint")
+        .alias("n_exact_dups"),
+        F.coalesce(F.sum(F.when(F.col("in_e").isNotNull()
+                                & F.col("in_s").isNotNull(), 1)),
+                   F.lit(0)).cast("bigint").alias("n_hit"),
+        F.coalesce(F.sum(F.when(F.col("in_s").isNotNull()
+                                & F.col("in_e").isNull(), 1)),
+                   F.lit(0)).cast("bigint").alias("n_false"))
+    n_docs = corpus.agg(F.count(F.lit(1)).cast("bigint").alias("n_docs"))
+    # same float expression shape as recall_summary
+    allowed = (F.floor(F.lit(1.0 - bound) * F.col("n_exact_dups"))
+               .cast("bigint"))
+    return (counts.join(F.broadcast(n_docs))
+            .select("n_docs", "n_exact_dups",
+                    allowed.alias("n_missed_allowed"), "n_false",
+                    "n_stream_only", "n_batch_only",
+                    ((F.col("n_exact_dups") - F.col("n_hit"))
+                     <= allowed).alias("recall_ok")))

@@ -38,7 +38,7 @@ part of the beyond-reference LLM-pipeline tier (SURVEY.md §2 extensions).
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, functions as F
+from pyspark.sql import Column, DataFrame, Window, functions as F
 
 from datafusion_delta_sharing_spark.functions.text import (
     tokens_lower, tokens_lower_sql)
@@ -491,3 +491,34 @@ def bm25_join_sql(docs_sql: str, queries_sql: str, text_col: str,
            ), {ndigits}) AS score
     FROM pairs GROUP BY {qid_col}, {id_col}
     """
+def bm25_join_topk(docs: DataFrame, queries: DataFrame, text_col: str,
+                   id_col: str, qid_col: str, qtext_col: str, k: int,
+                   **bm25) -> DataFrame:
+    """The ``k`` best documents per query of :func:`bm25_join` (score
+    desc, id tie-break), ranked 1..k."""
+    scored = bm25_join(docs, queries, text_col, id_col, qid_col, qtext_col,
+                       **bm25)
+    ranked = scored.withColumn(
+        "rank", F.row_number().over(
+            Window.partitionBy(qid_col).orderBy(F.desc("score"), id_col)))
+    return (ranked.filter(F.col("rank") <= k)
+            .select(qid_col, id_col, "n_terms_hit", "score",
+                    F.col("rank").cast("int").alias("rank")))
+
+
+def bm25_join_topk_sql(docs_sql: str, queries_sql: str, text_col: str,
+                       id_col: str, qid_col: str, qtext_col: str, k: int,
+                       **bm25) -> str:
+    """DuckDB mirror of :func:`bm25_join_topk`."""
+    inner = bm25_join_sql(docs_sql, queries_sql, text_col,
+                          id_col, qid_col, qtext_col, **bm25)
+    return f"""
+        SELECT {qid_col}, {id_col}, n_terms_hit, score, CAST(rank AS INT) AS rank
+        FROM (
+            SELECT *, row_number() OVER (
+                PARTITION BY {qid_col} ORDER BY score DESC, {id_col}) AS rank
+            FROM ({inner})
+        ) WHERE rank <= {k}
+    """
+
+

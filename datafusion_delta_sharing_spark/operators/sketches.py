@@ -617,3 +617,187 @@ def cm_probe_sql(source_sql: str, key_col: str,
                    <= 3 * n_total AS bound_ok
         FROM ests e LEFT JOIN truth t USING (k) CROSS JOIN total
     """
+
+
+# -- exact percentiles over value-frequency partials --------------------------
+
+
+def percentile_tail_sql(freq_src: str, ps: tuple[float, float, float],
+                        group_as: str) -> str:
+    """Exact discrete percentiles ``ps`` (the p50/p90/p99 columns, in
+    cents) per group (named ``group_as``) over a (g, v, cnt) frequency
+    source: the smallest v whose cumulative count reaches ceil(p * n).
+    Appended after a WITH list (starts with the cum CTE); Spark and
+    DuckDB parse the same text, so a merged '__all__' group's
+    percentiles come from summing the per-group partials."""
+    return f"""cum AS (
+        SELECT g, v,
+               sum(cnt) OVER (PARTITION BY g ORDER BY v) AS cum,
+               sum(cnt) OVER (PARTITION BY g) AS n
+        FROM {freq_src}
+    )
+    SELECT g AS {group_as}, CAST(max(n) AS BIGINT) AS n,
+           CAST(min(CASE WHEN cum >= ceil({ps[0]!r} * n) THEN v END)
+                AS BIGINT) AS p50_cents,
+           CAST(min(CASE WHEN cum >= ceil({ps[1]!r} * n) THEN v END)
+                AS BIGINT) AS p90_cents,
+           CAST(min(CASE WHEN cum >= ceil({ps[2]!r} * n) THEN v END)
+                AS BIGINT) AS p99_cents
+    FROM cum GROUP BY g
+"""
+
+
+def percentile_approx_ok(values: DataFrame, freq: DataFrame,
+                         ps: Sequence[float], accuracy: int, group_as: str,
+                         corrupt: int = 0) -> DataFrame:
+    """(``group_as``, approx_ok): does ``percentile_approx`` over the (g, v)
+    ``values`` agree with the (g, v, cnt) frequency distribution
+    ``freq`` within its rank-error guarantee (n/accuracy, +2 slack for
+    rank-convention differences)? Checked per group AND for a merged
+    '__all__' group. ``corrupt`` shifts the sketch output before the
+    check — the non-vacuousness knob that proves the bound can fail."""
+    ps = list(ps)
+    apx_expr = F.expr(
+        f"percentile_approx(v, array({', '.join(map(repr, ps))}), "
+        f"{accuracy})").alias("apx")
+    apx = (values.groupBy("g").agg(apx_expr)
+           .unionByName(values.agg(apx_expr)
+                        .withColumn("g", F.lit("__all__"))))
+    if corrupt:
+        apx = apx.withColumn(
+            "apx", F.transform("apx", lambda x: x + F.lit(corrupt)))
+    aggs = [F.sum("cnt").alias("n")]
+    for i in range(len(ps)):
+        aggs.append(F.sum(F.when(F.col("v") <= F.col("apx")[i],
+                                 F.col("cnt"))).alias(f"le{i}"))
+        aggs.append(F.sum(F.when(F.col("v") < F.col("apx")[i],
+                                 F.col("cnt"))).alias(f"lt{i}"))
+    ranked = freq.join(F.broadcast(apx), "g").groupBy("g").agg(*aggs)
+    tol = F.ceil(F.col("n") / F.lit(accuracy)) + F.lit(2)
+    ok = F.lit(True)
+    for i, p in enumerate(ps):
+        target = F.ceil(F.lit(p) * F.col("n"))
+        ok = (ok
+              & (F.coalesce(F.col(f"le{i}"), F.lit(0)) >= target - tol)
+              & (F.coalesce(F.col(f"lt{i}"), F.lit(0)) <= target + tol))
+    return ranked.select(F.col("g").alias(group_as), ok.alias("approx_ok"))
+
+
+# -- in-plan attestation of the rollup sketches -------------------------------
+
+
+def kmv_rollup_check(df: DataFrame, group_col: str, value_col: str, k: int,
+                     rel_bound: float) -> DataFrame:
+    """Distinct ``value_col`` per group AND overall, twice: exactly (the
+    attestation side) and from the KMV sketch (the rollup side — the
+    '__all__' row comes from MERGING the per-group partials, never
+    rescanning ``df``). ``est_ok`` bounds the relative error; both
+    engines compute the identical division, so the flag and the raw
+    estimate hash-match."""
+    partials = kmv_partials(df, group_col, value_col, k)
+    partials = partials.localCheckpoint(eager=True)  # merge reuses them
+    ests = kmv_estimate(partials.unionByName(kmv_merge(partials, k)), k)
+    exact = (df.groupBy(F.col(group_col).alias("g"))
+             .agg(F.countDistinct(value_col).alias("n_exact"))
+             .unionByName(
+                 df.agg(F.countDistinct(value_col).alias("n_exact"))
+                 .withColumn("g", F.lit("__all__"))))
+    ok = (F.abs(F.col("n_est") / F.col("n_exact") - 1.0)
+          <= F.lit(rel_bound))
+    return (exact.join(ests, "g")
+            .select(F.col("g").alias(group_col), "n_exact", "n_est",
+                    ok.alias("est_ok")))
+
+
+def kmv_rollup_check_sql(source_sql: str, group_col: str, value_col: str,
+                         k: int, rel_bound: float) -> str:
+    """DuckDB mirror of :func:`kmv_rollup_check`."""
+    return f"""
+    WITH ests AS ({kmv_sql(source_sql, group_col, value_col,
+                           k)}),
+    exact AS (
+        SELECT {group_col} AS g,
+               CAST(count(DISTINCT {value_col}) AS BIGINT) AS n_exact
+        FROM {source_sql} GROUP BY {group_col}
+        UNION ALL
+        SELECT '__all__' AS g,
+               CAST(count(DISTINCT {value_col}) AS BIGINT) AS n_exact
+        FROM {source_sql}
+    )
+    SELECT g AS {group_col}, n_exact, n_est,
+           abs(n_est / n_exact - 1.0) <= {rel_bound!r} AS est_ok
+    FROM exact JOIN ests USING (g)
+"""
+
+
+def hll_rollup_check(df: DataFrame, group_col: str, value_col: str,
+                     tol: float) -> DataFrame:
+    """Re-aggregatable distinct-count sketches: per-group HLL sketches of
+    ``value_col`` (Datasketches ``hll_sketch_agg``), then the TOTAL
+    distinct count from ``hll_union_agg`` over the per-group sketches
+    alone — the daily-into-monthly rollup that never rescans ``df``.
+    The estimate is engine-specific, so the rows carry the EXACT count
+    plus an in-plan within-``tol`` flag: the oracle is exact counts with
+    ``within_tol`` TRUE."""
+    per_group = df.groupBy(group_col).agg(
+        F.expr(f"hll_sketch_agg({value_col})").alias("sk"),
+        F.countDistinct(value_col).alias("n_exact"))
+    tol_ok = (F.abs(F.expr("hll_sketch_estimate(sk)") - F.col("n_exact"))
+              <= tol * F.col("n_exact"))
+    per = per_group.select(
+        group_col, F.col("n_exact").cast("bigint").alias("n_exact"),
+        tol_ok.alias("within_tol"))
+    merged = per_group.agg(
+        F.expr("hll_sketch_estimate(hll_union_agg(sk))").alias("est_all"))
+    exact_all = df.agg(
+        F.countDistinct(value_col).alias("n_exact"))
+    total = (merged.join(F.broadcast(exact_all))
+             .select(F.lit("__all__").alias(group_col),
+                     F.col("n_exact").cast("bigint").alias("n_exact"),
+                     (F.abs(F.col("est_all") - F.col("n_exact"))
+                      <= tol * F.col("n_exact")).alias("within_tol")))
+    return per.unionByName(total)
+
+
+def approx_topk_check(df: DataFrame, col: str, k: int) -> DataFrame:
+    """Spark 4 ``approx_top_k`` sketch vs the exact top-k of ``col``:
+    the rows are the EXACT top-k items (count desc, item tie-break), and
+    the sketch's (item, count) pairs are matched in-plan — ``sketch_ok``
+    is false if the sketch misses an item or miscounts it."""
+    from pyspark.sql import Window as W
+
+    exact = (df.groupBy(col)
+             .agg(F.count(F.lit(1)).alias("n"))
+             .withColumn("rk", F.row_number().over(
+                 W.orderBy(F.desc("n"), col)))
+             .filter(F.col("rk") <= k))
+    sketch = df.agg(F.expr(f"approx_top_k({col}, {k})")
+                    .alias("top"))
+    joined = exact.join(F.broadcast(sketch))
+    sketch_ok = F.exists(
+        "top", lambda s: (s["item"] == F.col(col))
+        & (s["count"] == F.col("n")))
+    return joined.select(
+        col, F.col("n").cast("long").alias("n"),
+        F.col("rk").cast("int").alias("rk"),
+        sketch_ok.alias("sketch_ok"))
+
+
+def value_freq_ctes_sql(source_sql: str, group_col: str, value_col: str,
+                        value_sql: str) -> str:
+    """WITH-list CTEs ending in ``freq`` (g, v, cnt): the per-group
+    value-frequency partials of ``value_sql`` (over the rows with a
+    ``value_col``) plus their '__all__' merge
+    (summed counts by value) — the mergeable input of
+    :func:`percentile_tail_sql`. Bounded by |groups| × |distinct values|,
+    so bin first when the value domain is unbounded."""
+    return f"""vals AS (
+        SELECT {group_col} AS g, {value_sql} AS v
+        FROM {source_sql} WHERE {value_col} IS NOT NULL
+    ),
+    freq_g AS (SELECT g, v, count(*) AS cnt FROM vals GROUP BY g, v),
+    freq AS (
+        SELECT g, v, cnt FROM freq_g
+        UNION ALL
+        SELECT '__all__' AS g, v, sum(cnt) AS cnt FROM freq_g GROUP BY v
+    )"""

@@ -13,10 +13,14 @@ frequencies rather than shuffling the corpus a second time.
 
 from __future__ import annotations
 
+import re
+
 from pyspark.sql import DataFrame, Window, functions as F
+from pyspark.sql.types import StringType, StructField, StructType
+from pyspark.sql.udtf import AnalyzeArgument, AnalyzeResult
 
 from datafusion_delta_sharing_spark.functions.text import (
-    tokens_lower, tokens_lower_sql)
+    WS_TOKEN_SPLIT, tokens_lower, tokens_lower_sql)
 
 
 def token_rows(docs: DataFrame, text_col: str, id_col: str) -> DataFrame:
@@ -483,3 +487,28 @@ def bpe_encode_lengths_sql(source_sql: str, text_col: str, id_col: str,
     FROM corpus c JOIN enc e ON e.word = c.token
     GROUP BY c.{id_col}
     """
+
+
+class SplitCols:
+    """Polymorphic Python UDTF ``(text, n_cols)``: ``analyze`` derives the
+    output schema (w0..w{n-1}) from the constant n_cols argument at plan
+    time; each row yields the text's first n_cols whitespace tokens
+    (NULL-padded), split by the shared WS_TOKEN_SPLIT class."""
+
+    @staticmethod
+    def analyze(text: AnalyzeArgument,
+                n_cols: AnalyzeArgument) -> AnalyzeResult:
+        if not isinstance(n_cols.value, int) or n_cols.value < 1:
+            raise ValueError(
+                "split_cols: n_cols must be a constant positive int")
+        return AnalyzeResult(StructType([
+            StructField(f"w{i}", StringType())
+            for i in range(n_cols.value)]))
+
+    def eval(self, text, n_cols):
+        if text is None:
+            return
+        words = [w for w in re.split(WS_TOKEN_SPLIT, text) if w]
+        yield tuple(words[i] if i < len(words) else None
+                    for i in range(n_cols))
+

@@ -390,7 +390,7 @@ def _acf_tail_sql(spine: str, perlag: str, scalars: str) -> str:
     2·n·S² — with the registry's weekly-modulated order-count series
     (n ≈ 2400 days, S ≈ 6e6 at sf1) that is 2·2400·(6e6)² ≈ 1.7e17, a
     ~50× margin against int64 (ADVICE r8 reconciled an earlier stale
-    ~2.8e18/~3× claim here to extensions17's measured figure). The
+    ~2.8e18/~3× claim here to acf_lags' measured figure). The
     term grows ~sf² (S scales with sf, n is the fixed day span), so
     exact through roughly sf7, overflowing beyond that.
     ACF is SCALE-INVARIANT, so the right move at larger SFs

@@ -500,6 +500,11 @@ class DeltaSharingCDFStreamReader(_OneClient, DataSourceStreamReader):
         self.out_schema = schema
         self.base_schema = T.StructType(
             [f for f in schema.fields if f.name not in meta_names])
+        # without startingVersion the stream starts at the table's version
+        # when Spark first asks: Spark builds this reader twice, and the
+        # copy that only serves ``read`` never asks, so it makes no REST
+        # call (and, under OAuth, no token grant)
+        self._initial = None
         start_opt = options.get("startingVersion")
         if start_opt is not None:
             try:
@@ -510,11 +515,11 @@ class DeltaSharingCDFStreamReader(_OneClient, DataSourceStreamReader):
                     f"{start_opt!r}") from exc
             # serve changes FROM startingVersion (inclusive)
             self._initial = {"version": start_v - 1}
-        else:
-            client, table = self._client_and_table()
-            self._initial = {"version": client.get_table_version(table)}
 
     def initialOffset(self) -> dict:
+        if self._initial is None:
+            client, table = self._client_and_table()
+            self._initial = {"version": client.get_table_version(table)}
         return dict(self._initial)
 
     def latestOffset(self) -> dict:

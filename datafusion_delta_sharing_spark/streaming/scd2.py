@@ -1,7 +1,7 @@
 """Streaming SCD2 dimension maintenance: foreachBatch MERGE of CDC
 events into a persisted interval table (VERDICT r8 #5).
 
-Batch ``scd2_build`` (harness/extensions7.scd2_intervals) turns a
+Batch ``scd2_build`` (operators/cdc.scd2_intervals) turns a
 COMPLETE change log into validity intervals in one window pass. A real
 lakehouse ingests the log incrementally: each micro-batch must CLOSE the
 affected entities' open intervals (valid_to := the first new event's

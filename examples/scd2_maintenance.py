@@ -35,9 +35,8 @@ sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
 from pyspark.sql import Row  # noqa: E402
 
-from datafusion_delta_sharing_spark.harness.extensions7 import (  # noqa: E402
-    q_scd2_build,
-)
+from datafusion_delta_sharing_spark.harness.relational import (  # noqa: E402
+    q_scd2_build)
 from datafusion_delta_sharing_spark.session import get_spark  # noqa: E402
 from datafusion_delta_sharing_spark.streaming import scd2 as S2  # noqa: E402
 

@@ -29,10 +29,8 @@ sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
 from datafusion_delta_sharing_spark.harness import (  # noqa: E402
     load_table, register_views)
-from datafusion_delta_sharing_spark.harness.extensions22 import (  # noqa: E402
-    _LR_XY_SQL)
-from datafusion_delta_sharing_spark.harness.extensions23 import (  # noqa: E402
-    _BOOT_XY_SQL, _CONF_XY_SQL)
+from datafusion_delta_sharing_spark.harness.ml import (  # noqa: E402
+    _BOOT_XY_SQL, _CONF_XY_SQL, _LR_XY_SQL)
 from datafusion_delta_sharing_spark.operators import (  # noqa: E402
     boosting as B, classify as CL, mlprep as ML, sampling as SA)
 from datafusion_delta_sharing_spark.session import get_spark  # noqa: E402

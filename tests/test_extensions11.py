@@ -76,7 +76,7 @@ def test_higher_moments_check_distinguishes_population_from_sample(
     correction shifts g1 by ~1% of its value, orders of magnitude above
     the tolerance."""
     from datafusion_delta_sharing_spark.harness import load_table
-    from datafusion_delta_sharing_spark.harness.extensions11 import (
+    from datafusion_delta_sharing_spark.harness.relational import (
         q_higher_moments)
 
     rows = q_higher_moments(spark, sf_dir).collect()
@@ -94,7 +94,7 @@ def test_higher_moments_check_distinguishes_population_from_sample(
 def test_udtf_analyze_rejects_bad_constant(spark, sf_dir):
     """The analyze() validation must fire at PLAN time for a
     non-positive column count."""
-    from datafusion_delta_sharing_spark.harness.extensions11 import (
+    from datafusion_delta_sharing_spark.harness.relational import (
         q_python_udtf_analyze)
 
     # registering via the query fn also registers the UDTF
@@ -130,7 +130,7 @@ def test_observe_metrics_rides_the_pass(spark, sf_dir):
 
     from datafusion_delta_sharing_spark.functions.money import cents
     from datafusion_delta_sharing_spark.harness import load_table
-    from datafusion_delta_sharing_spark.harness.extensions12 import (
+    from datafusion_delta_sharing_spark.harness.relational import (
         q_observe_metrics)
 
     row = q_observe_metrics(spark, sf_dir).collect()[0]
@@ -148,8 +148,7 @@ def test_approx_topk_check_is_nonvacuous(spark, sf_dir):
     by 1 must flip it."""
     from pyspark.sql import functions as F
 
-    from datafusion_delta_sharing_spark.harness.extensions12 import (
-        q_approx_topk)
+    from datafusion_delta_sharing_spark.harness.relational import q_approx_topk
 
     rows = q_approx_topk(spark, sf_dir).collect()
     assert rows and all(r.sketch_ok for r in rows)

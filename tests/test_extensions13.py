@@ -7,7 +7,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from datafusion_delta_sharing_spark.harness import extensions13 as E13
+from datafusion_delta_sharing_spark.harness import relational as E13
 from datafusion_delta_sharing_spark.operators import dedup as DD
 from datafusion_delta_sharing_spark.operators import graph as GR
 
@@ -191,7 +191,7 @@ def test_stream_minhash_dedup_matches_batch_and_ignores_order(spark, sf_dir):
     dup set regardless of slice count (micro-batch boundaries) — pair
     ids are least/greatest-normalized, so arrival order cannot change
     the set."""
-    from datafusion_delta_sharing_spark.harness.extensions import (
+    from datafusion_delta_sharing_spark.harness.text import (
         _docs_with_near_copies)
     from datafusion_delta_sharing_spark.streaming.minhash_dedup import (
         stream_minhash_dedup_flags)

@@ -55,7 +55,7 @@ def test_kmv_merge_equals_rebuild(spark):
 def test_kmv_registry_bound_is_non_vacuous(spark, sf_dir):
     """Corrupting the estimate by 2x the allowed relative error flips
     est_ok — the attestation can fail."""
-    from datafusion_delta_sharing_spark.harness.extensions15 import (
+    from datafusion_delta_sharing_spark.harness.relational import (
         _KMV_REL_BOUND, q_kmv_rollup)
 
     good = q_kmv_rollup(spark, sf_dir)

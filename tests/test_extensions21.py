@@ -260,9 +260,7 @@ def test_scd2_batch_boundaries_are_invisible(spark, sf_dir):
     REGARDLESS of micro-batching. Same log, 1 vs 4 slices — identical
     state (1 slice = the whole-log degenerate case; 4 exercises three
     cross-batch open-interval closes)."""
-    from datafusion_delta_sharing_spark.harness.extensions7 import (
-        q_scd2_build,
-    )
+    from datafusion_delta_sharing_spark.harness.relational import q_scd2_build
     from datafusion_delta_sharing_spark.streaming import scd2 as S2
 
     want = {(r.user_id, r.version): (r.state, r.valid_from, r.valid_to,
@@ -316,7 +314,7 @@ def test_scd2_sink_requires_run_id(spark, tmp_path):
 
 
 def test_kmv_overlap_registry_row_flags_hold(spark, sf_dir):
-    from datafusion_delta_sharing_spark.harness import extensions21 as E21
+    from datafusion_delta_sharing_spark.harness import text as E21
 
     row = E21.q_kmv_overlap(spark, sf_dir).collect()
     assert len(row) == 1

@@ -14,8 +14,8 @@ import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
-from datafusion_delta_sharing_spark.harness import extensions22 as E22
-from datafusion_delta_sharing_spark.harness.extensions7 import q_scd2_build
+from datafusion_delta_sharing_spark.harness import relational as E22
+from datafusion_delta_sharing_spark.harness.relational import q_scd2_build
 
 
 def test_scd2_repair_equals_batch_build(spark, sf_dir):
@@ -138,7 +138,7 @@ def test_logreg_degenerate_and_validation(spark):
 
 
 def test_logreg_registry_row_cross_engine(spark, sf_dir):
-    from datafusion_delta_sharing_spark.harness import extensions22 as E22
+    from datafusion_delta_sharing_spark.harness import ml as E22
 
     con = duckdb.connect()
     con.execute(
@@ -295,7 +295,7 @@ def test_stump_single_bucket_group_drops(spark):
 
 
 def test_stump_registry_row_cross_engine(spark, sf_dir):
-    from datafusion_delta_sharing_spark.harness import extensions22 as E22
+    from datafusion_delta_sharing_spark.harness import ml as E22
 
     con = duckdb.connect()
     con.execute(

@@ -17,7 +17,7 @@ import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
-from datafusion_delta_sharing_spark.harness import extensions23 as E23
+from datafusion_delta_sharing_spark.harness import ml as E23
 from datafusion_delta_sharing_spark.operators import boosting as B
 from datafusion_delta_sharing_spark.operators import mlprep as ML
 
@@ -410,8 +410,7 @@ def test_adaboost_first_stump_matches_stump_family(spark, sf_dir):
     chosen split must be a minimizer of the same exact-count objective
     recomputed from the raw frame in Python."""
     from datafusion_delta_sharing_spark.harness import register_views
-    from datafusion_delta_sharing_spark.harness.extensions22 import (
-        _LR_XY_SQL)
+    from datafusion_delta_sharing_spark.harness.ml import _LR_XY_SQL
 
     register_views(spark, sf_dir, ["events"])
     raw = spark.sql(_LR_XY_SQL).collect()

@@ -691,39 +691,60 @@ def test_change_relist_keys_an_add_and_a_remove_of_one_file_apart():
             ("/f.parquet", 3): f"{srv.base_url}/f.v3"}
 
 
-def test_oauth_cdf_stream_grants_one_token(registered):
-    """The CDF stream plans every trigger through one client, so an OAuth
-    profile grants one token for the whole stream (the executors' reads
-    make no REST call)."""
+def _oauth_cdf_stream(spark, srv, **options) -> list[tuple]:
+    """Run a CDF stream of table ``s.d.c`` with a caller-given schema over
+    an OAuth profile (``availableNow`` into a memory sink) and return its
+    rows."""
     from pyspark.sql import types as T
 
     from datafusion_delta_sharing_spark.sources.schema import CDF_META_FIELDS
 
+    srv.oauth = {"client_id": "cid", "client_secret": "sekrit",
+                 "expires_in": 3600}
+    profile = {"shareCredentialsVersion": 2,
+               "type": "oauth_client_credentials",
+               "endpoint": srv.endpoint,
+               "tokenEndpoint": f"{srv.base_url}/oauth/token",
+               "clientId": "cid", "clientSecret": "sekrit"}
+    schema = T.StructType([T.StructField("id", T.LongType(), False),
+                           *CDF_META_FIELDS])
+    sink = f"cdf_oauth_{uuid.uuid4().hex[:8]}"
+    query = (spark.readStream.format("deltasharing").schema(schema)
+             .option("profile_json", json.dumps(profile))
+             .option("table", "s.d.c")
+             .option("readChangeFeed", "true").options(**options).load()
+             .writeStream.format("memory").queryName(sink)
+             .trigger(availableNow=True).start())
+    try:
+        query.awaitTermination(60)
+        return _change_rows(spark.table(sink))
+    finally:
+        query.stop()
+
+
+def test_oauth_cdf_stream_grants_one_token(registered):
+    """The CDF stream plans every trigger through one client, so an OAuth
+    profile grants one token for the whole stream (the executors' reads
+    make no REST call)."""
     commits = [("add", [1, 2]), ("remove", [9]), ("cdf", [2])]
     with _serve_changes("http", commits) as (srv, _, expected):
-        srv.oauth = {"client_id": "cid", "client_secret": "sekrit",
-                     "expires_in": 3600}
-        profile = {"shareCredentialsVersion": 2,
-                   "type": "oauth_client_credentials",
-                   "endpoint": srv.endpoint,
-                   "tokenEndpoint": f"{srv.base_url}/oauth/token",
-                   "clientId": "cid", "clientSecret": "sekrit"}
-        schema = T.StructType([T.StructField("id", T.LongType(), False),
-                               *CDF_META_FIELDS])
-        sink = f"cdf_oauth_{uuid.uuid4().hex[:8]}"
-        query = (registered.readStream.format("deltasharing").schema(schema)
-                 .option("profile_json", json.dumps(profile))
-                 .option("table", "s.d.c")
-                 .option("readChangeFeed", "true")
-                 .option("startingVersion", "1").load()
-                 .writeStream.format("memory").queryName(sink)
-                 .trigger(availableNow=True).start())
-        try:
-            query.awaitTermination(60)
-            assert _change_rows(registered.table(sink)) == expected
-        finally:
-            query.stop()
+        assert _oauth_cdf_stream(registered, srv,
+                                 startingVersion="1") == expected
         assert len(srv.issued_tokens) == 1
+
+
+def test_cdf_stream_resolves_its_initial_offset_lazily(registered):
+    """Without ``startingVersion`` the stream starts at the table's
+    version when Spark first asks for the initial offset. Spark builds the
+    stream reader twice, and the copy that only serves ``read`` never
+    asks: one token grant, and one ``/version`` request each for the
+    initial and the latest offset."""
+    commits = [("add", [1, 2]), ("remove", [9]), ("cdf", [2])]
+    with _serve_changes("http", commits) as (srv, _, _expected):
+        assert _oauth_cdf_stream(registered, srv) == []
+        assert len(srv.issued_tokens) == 1
+        assert sum(r["path"].endswith("/version")
+                   for r in srv.requests) == 2
 
 
 # -- the executor file cache -------------------------------------------------

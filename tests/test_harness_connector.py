@@ -443,7 +443,7 @@ def test_previous_bench_prefers_full_archives(tmp_path):
     review rounds: a round's FULL archive (wall medians) beats its
     compact stub; a compact stub alone is used but FLAGGED substituted
     (so main divides compute-substituted numerators by it); parsed:null
-    rounds salvage the stdout tail or are skipped."""
+    rounds are skipped."""
     import json as _json
     import pathlib
     import sys
@@ -471,7 +471,7 @@ def test_previous_bench_prefers_full_archives(tmp_path):
         {"sf": 0.1, "n_queries": 4, "queries": full_map,
          "runs": {k: [v] for k, v in full_map.items()}}))
     p = bench._previous_bench(tmp_path)
-    assert (p["round"], p["substituted"], p["basis"]) == (7, False, "median")
+    assert (p["round"], p["substituted"]) == (7, False)
     assert p["queries"] == full_map
 
     # a newer parsed:null round without a tail is skipped, not crashed
@@ -479,13 +479,6 @@ def test_previous_bench_prefers_full_archives(tmp_path):
         {"parsed": None, "tail": "not json"}))
     p = bench._previous_bench(tmp_path)
     assert p["round"] == 7
-
-    # ...but a salvageable tail wins as the newest round
-    (tmp_path / "BENCH_r09.json").write_text(_json.dumps(
-        {"parsed": None,
-         "tail": _json.dumps({"sf": 0.1, "queries": {"a": 1.1}})}))
-    p = bench._previous_bench(tmp_path)
-    assert (p["round"], p["substituted"]) == (9, False)
 
 
 def test_full_archive_is_never_overwritten_by_an_inferred_round(

@@ -420,9 +420,8 @@ def test_prefix_jaccard_lossless_and_reduces_postings(spark, sf_dir):
 
     from pyspark.sql import Window, functions as F
 
-    from datafusion_delta_sharing_spark.harness.extensions import (
-        _docs_with_near_copies,
-    )
+    from datafusion_delta_sharing_spark.harness.text import (
+        _docs_with_near_copies)
     from datafusion_delta_sharing_spark.operators import dedup as DD
 
     docs = _docs_with_near_copies(spark, sf_dir)

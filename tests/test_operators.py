@@ -954,8 +954,7 @@ def test_embedding_neardup_bucketed_no_nlj_and_subset(spark, emb):
 
 
 def test_named_embedding_neardup_query_runs_bucketed_plan(spark, sf_dir):
-    from datafusion_delta_sharing_spark.harness.extensions import (
-        q_embedding_neardup)
+    from datafusion_delta_sharing_spark.harness.text import q_embedding_neardup
 
     plan = (q_embedding_neardup(spark, sf_dir)
             ._jdf.queryExecution().executedPlan().toString())

@@ -214,8 +214,7 @@ def _pct_ref(rows):
 @settings(max_examples=100, deadline=None)
 @given(_events)
 def test_percentile_core_matches_python_reference(rows):
-    from datafusion_delta_sharing_spark.harness.extensions13 import (
-        _PCT_CORE)
+    from datafusion_delta_sharing_spark.harness.relational import _PCT_CORE
 
     views = {"events": pd.DataFrame(
         rows, columns=["event_type", "value"])}

@@ -94,7 +94,7 @@ def test_dsir_short_docs_absent_and_validation(spark):
 def test_stream_session_equals_batch(spark, sf_dir):
     """The streaming session_window aggregation (incremental state merge)
     must produce exactly the batch session_window result."""
-    from datafusion_delta_sharing_spark.harness.tierb5 import (
+    from datafusion_delta_sharing_spark.harness.relational import (
         q_session_window_batch)
     from datafusion_delta_sharing_spark.streaming.windows import (
         stream_session_counts)
@@ -111,7 +111,8 @@ def test_stream_session_equals_batch(spark, sf_dir):
 # -- tierb9 harness semantics ------------------------------------------------
 
 def test_recursive_cte_spine_zero_fills(spark, sf_dir):
-    from datafusion_delta_sharing_spark.harness.tierb9 import q_recursive_cte
+    from datafusion_delta_sharing_spark.harness.relational import (
+        q_recursive_cte)
 
     rows = q_recursive_cte(spark, sf_dir).collect()
     assert len(rows) == 84  # 1995-01 .. 2001-12 inclusive
@@ -124,7 +125,8 @@ def test_recursive_cte_spine_zero_fills(spark, sf_dir):
 
 def test_lateral_topn_matches_direct_ranking(spark, sf_dir):
     from datafusion_delta_sharing_spark.harness import load_table
-    from datafusion_delta_sharing_spark.harness.tierb9 import q_lateral_topn
+    from datafusion_delta_sharing_spark.harness.relational import (
+        q_lateral_topn)
     from datafusion_delta_sharing_spark.functions.money import cents
 
     got = {(r["r_name"], r["n_name"], r["total_bal_cents"])
@@ -217,8 +219,7 @@ def test_hll_rollup_tolerance_is_nonvacuous(spark):
 
     from pyspark.sql import functions as F
     from datafusion_delta_sharing_spark.harness import load_table
-    from datafusion_delta_sharing_spark.harness.extensions10 import (
-        q_hll_rollup)
+    from datafusion_delta_sharing_spark.harness.relational import q_hll_rollup
     from tests.conftest import sf_path
 
     sf = sf_path("sf0.01")
