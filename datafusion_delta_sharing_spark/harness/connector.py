@@ -31,7 +31,6 @@ import io
 import json
 import os
 import tempfile as _tmp
-import time
 
 import numpy as np
 import pyarrow as pa
@@ -46,8 +45,9 @@ from datafusion_delta_sharing_spark.operators import cdc as CDC
 from datafusion_delta_sharing_spark.profile import Profile
 from datafusion_delta_sharing_spark.sources import dv as DV
 from datafusion_delta_sharing_spark.sources.reader import DeltaSharingReader
-from datafusion_delta_sharing_spark.streaming import (
-    progress as _STREAM_PROGRESS)
+from datafusion_delta_sharing_spark.streaming.progress import (
+    run_to_completion,
+)
 from datafusion_delta_sharing_spark.streaming.windows import materialize_stream
 
 
@@ -551,20 +551,14 @@ def q_connector_cdf_scd2(spark: SparkSession, sf_dir: str) -> DataFrame:
     stream = _load(spark, sf_dir, "customer_cdf_full", stream=True,
                    readChangeFeed="true", startingVersion="2")
 
-    t0 = time.perf_counter()
-    query = (CDC.change_events(stream, "c_custkey", "c_mktsegment",
-                               F.col("_commit_version"))
-             .writeStream.outputMode("update")
-             .foreachBatch(scd2_upsert_sink(spark, state_dir,
-                                            n_buckets=8, run_id=ckpt))
-             .option("checkpointLocation", ckpt)
-             .start())
-    try:
-        query.processAllAvailable()
-        _STREAM_PROGRESS.note("connector_cdf_scd2", query,
-                              wall_s=time.perf_counter() - t0)
-    finally:
-        query.stop()
+    run_to_completion(
+        "connector_cdf_scd2",
+        CDC.change_events(stream, "c_custkey", "c_mktsegment",
+                          F.col("_commit_version"))
+        .writeStream.outputMode("update")
+        .foreachBatch(scd2_upsert_sink(spark, state_dir,
+                                       n_buckets=8, run_id=ckpt)),
+        ckpt)
     return scd2_state(spark, state_dir)
 
 

@@ -52,7 +52,9 @@ from datafusion_delta_sharing_spark.operators.dedup import (
     minhash_signature,
     verify_jaccard_pairs,
 )
-from datafusion_delta_sharing_spark.streaming import progress as _PROGRESS
+from datafusion_delta_sharing_spark.streaming.progress import (
+    run_to_completion,
+)
 
 _BANDS_SCHEMA = "id bigint, band int, bh bigint"
 _SHINGLES_SCHEMA = "id bigint, shingles array<string>"
@@ -157,21 +159,12 @@ def stream_minhash_dedup_flags(spark: SparkSession, corpus: DataFrame,
     stream = (spark.readStream
               .schema(corpus.select(id_col, text_col).schema)
               .option("maxFilesPerTrigger", "1").parquet(src))
-    import time
-
-    t0 = time.perf_counter()
-    query = (stream.writeStream.outputMode("update")
-             .foreachBatch(minhash_dedup_sink(
-                 spark, state_dir, text_col, id_col,
-                 num_hashes=num_hashes, bands=bands, k=k,
-                 threshold=threshold))
-             .option("checkpointLocation", ckpt)
-             .start())
-    try:
-        query.processAllAvailable()
-        _PROGRESS.note("stream_minhash_dedup", query,
-                       wall_s=time.perf_counter() - t0)
-    finally:
-        query.stop()
+    run_to_completion(
+        "stream_minhash_dedup",
+        stream.writeStream.outputMode("update")
+        .foreachBatch(minhash_dedup_sink(
+            spark, state_dir, text_col, id_col, num_hashes=num_hashes,
+            bands=bands, k=k, threshold=threshold)),
+        ckpt)
     return (spark.read.schema(_FLAGS_SCHEMA)
             .parquet(os.path.join(state_dir, "flags")).distinct())

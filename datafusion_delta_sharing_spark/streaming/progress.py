@@ -9,14 +9,17 @@ r7's ``stream_topk`` read 11.49 s under load vs 2.34 s quiet for
 byte-identical code — a 5x artifact the CPU calibration probes cannot
 normalize because no CPU was being spent.
 
-Every streaming helper calls :func:`note` right before stopping its
-query; ``bench.py`` drains the recorded compute seconds per registry
-query and reports BOTH numbers (wall and compute) so a cross-round delta
-on a streaming query can be read against the number that actually
-reflects the plan.
+Every streaming helper runs its query through :func:`run_to_completion`
+(start → processAllAvailable → :func:`note` → stop), the one place a
+query is drained and noted; ``bench.py`` drains the recorded compute
+seconds per registry query and reports BOTH numbers (wall and compute)
+so a cross-round delta on a streaming query can be read against the
+number that actually reflects the plan.
 """
 
 from __future__ import annotations
+
+import time
 
 # tag -> one {"compute": s, "stream_wall": s} per completed run, in order
 RECORDED: dict[str, list[dict]] = {}
@@ -59,3 +62,27 @@ def take(tag: str) -> list[dict]:
     """Drain and return the runs recorded under ``tag`` (empty list when
     ``tag`` never ran a stream — i.e. a batch query)."""
     return RECORDED.pop(tag, [])
+
+
+def run_to_completion(tag: str, writer, ckpt: str,
+                      stats: list | None = None) -> None:
+    """Start ``writer`` (a DataStreamWriter) with checkpoint location
+    ``ckpt``, drain it with processAllAvailable, :func:`note` it under
+    ``tag`` with the stream segment's wall time, and stop it — stopped
+    even when the drain raises.
+
+    ``stats`` (optional): the ``stats=`` list of a bucket-merge sink
+    feeding the query, noted as its run's ``merge`` summary (batches
+    applied and their summed stamp rows, data rows and rewrite bytes)."""
+    t0 = time.perf_counter()
+    query = writer.option("checkpointLocation", ckpt).start()
+    try:
+        query.processAllAvailable()
+        extra = None
+        if stats is not None:
+            extra = {"merge": {"batches": len(stats), **{
+                k: sum(s[k] for s in stats)
+                for k in ("stamp_rows", "data_rows", "rewrite_bytes")}}}
+        note(tag, query, wall_s=time.perf_counter() - t0, extra=extra)
+    finally:
+        query.stop()

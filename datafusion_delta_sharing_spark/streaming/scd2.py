@@ -11,14 +11,14 @@ was micro-batched. That equality is this module's contract and the
 registry oracle (``stream_scd2_upsert``'s DuckDB side IS the batch
 interval SQL).
 
-Layout and idempotency reuse the streaming-upsert recipe
-(streaming/upsert.py): state partitioned by a hash bucket of the entity
-key, per-batch dynamic partition overwrite of ONLY the touched buckets,
-and one stamp row per (bucket, run) making at-least-once foreachBatch
-replays exactly-once per (bucket, batch). Each interval row also
-carries ``event_id`` — the id of the event that OPENED the version — so
-the cross-batch tie-break is exactly the batch window's
-(ts, event_id) total order, not ts alone.
+Layout and idempotency are the streaming-upsert skeleton
+(streaming/upsert.bucket_merge_sink): state partitioned by a hash bucket
+of the entity key, per-batch dynamic partition overwrite of ONLY the
+touched buckets, and one stamp row per (bucket, run) making
+at-least-once foreachBatch replays exactly-once per (bucket, batch).
+Each interval row also carries ``event_id`` — the id of the event that
+OPENED the version — so the cross-batch tie-break is exactly the batch
+window's (ts, event_id) total order, not ts alone.
 
 Order contract: per entity, events must arrive in (ts, event_id) order
 ACROSS batches (the CDC log order — within a batch any order is fine,
@@ -40,31 +40,29 @@ any parquet MERGE sink.
 
 from __future__ import annotations
 
-import os
 import tempfile
 
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
-from datafusion_delta_sharing_spark.streaming import progress as _PROGRESS
+from datafusion_delta_sharing_spark.streaming.progress import (
+    run_to_completion,
+)
 from datafusion_delta_sharing_spark.streaming.upsert import (
-    _check_bucket_marker,
-    carry_other_stamps,
-    new_stamp_rows,
-    observe_merged,
-    record_merge_stats,
-    refuse_null_buckets,
-    ReplayGuard,
+    bucket_col,
+    bucket_count,
+    bucket_merge_sink,
+    overwrite_buckets,
     write_slice_files,
 )
-
-# the in-plan order guard's marker (see scd2_upsert_sink): a write-job
-# failure whose message carries this sentinel IS the order refusal
-_GUARD_SENTINEL = "scd2-order-guard:"
 from datafusion_delta_sharing_spark.streaming.windows import (
     resolve_table_glob,
     set_stream_decode_confs,
     stream_events,
 )
+
+# the in-plan order guard's marker (see scd2_upsert_sink): a write-job
+# failure whose message carries this sentinel IS the order refusal
+_GUARD_SENTINEL = "scd2-order-guard:"
 
 _DIM_SCHEMA = ("bucket bigint, user_id bigint, version bigint, "
                "state string, valid_from timestamp, valid_to timestamp, "
@@ -98,6 +96,86 @@ def scd2_state(spark: SparkSession, state_dir: str) -> DataFrame:
                     F.col("valid_to").isNull().alias("is_current")))
 
 
+def _interval_rows(existing: DataFrame, new_ev: DataFrame,
+                   batch_id: int) -> DataFrame:
+    """The todo buckets' interval rows after merging ``new_ev`` (the
+    batch's change events routed to them) into their ``existing``
+    interval rows."""
+    affected = new_ev.select("user_id").distinct()
+
+    # the affected entities' first new event, in the batch window's
+    # (ts, event_id) total order — the close point for open rows
+    wu = Window.partitionBy("user_id").orderBy(
+        F.asc_nulls_last("ts"), F.asc_nulls_last("event_id"))
+    firsts = (new_ev.withColumn("__r", F.row_number().over(wu))
+              .filter(F.col("__r") == 1)
+              .select("user_id", F.col("ts").alias("first_ts"),
+                      F.col("event_id").alias("first_eid")))
+    open_rows = (existing.filter(F.col("valid_to").isNull())
+                 .join(firsts, "user_id", "inner"))
+    # order guard: the CDC contract is per-entity (ts, event_id)
+    # order across batches; a violation would silently rewrite
+    # history, so refuse loudly instead. NULL-safe on purpose (r9
+    # review): the schema allows NULL ts/event_id and the window
+    # order pins NULLS LAST, so compare under that total order by
+    # mapping NULL to a +infinity sentinel — a plain `<` would go
+    # NULL against a NULL-opened interval and silently merge the
+    # exact violation this refuses.
+    #
+    # The guard runs INSIDE the write's plan (r11, guide §2.4 /
+    # VERDICT r10 #1): a violating close row evaluates raise_error,
+    # the write JOB fails before its commit (dynamic overwrite
+    # replaces partitions only at successful job commit, so state is
+    # untouched), and scd2_upsert_sink re-raises the contract
+    # ValueError. The old standalone pre-write count was one extra job
+    # AND a second full pass of the window+join machinery on EVERY
+    # batch.
+    _TS_INF = "9999-12-31 23:59:59"
+    _ID_INF = (1 << 63) - 1
+    f_ts = F.coalesce(F.col("first_ts"),
+                      F.lit(_TS_INF).cast("timestamp"))
+    o_ts = F.coalesce(F.col("valid_from"),
+                      F.lit(_TS_INF).cast("timestamp"))
+    f_id = F.coalesce(F.col("first_eid"), F.lit(_ID_INF))
+    o_id = F.coalesce(F.col("event_id"), F.lit(_ID_INF))
+    viol = (f_ts < o_ts) | ((f_ts == o_ts) & (f_id <= o_id))
+    closed_now = open_rows.select(
+        "bucket", "user_id", "version", "state", "valid_from",
+        F.when(viol, F.raise_error(F.concat(
+            F.lit(f"{_GUARD_SENTINEL} batch {batch_id} entity "),
+            F.col("user_id").cast("string"))).cast("timestamp"))
+        .otherwise(F.col("first_ts")).alias("valid_to"),
+        "event_id")
+
+    base = (existing.groupBy("user_id")
+            .agg(F.max("version").alias("base_version")))
+    new_rows = (
+        new_ev
+        .join(base, "user_id", "left")
+        .withColumn("version",
+                    F.coalesce(F.col("base_version"), F.lit(0))
+                    + F.row_number().over(wu))
+        .withColumn("valid_to", F.lead("ts").over(wu))
+        .select("bucket", "user_id", "version",
+                F.col("event_type").alias("state"),
+                F.col("ts").alias("valid_from"), "valid_to",
+                "event_id"))
+
+    untouched_entities = (
+        existing.join(affected, "user_id", "left_anti")
+        .select("bucket", "user_id", "version", "state",
+                "valid_from", "valid_to", "event_id"))
+    closed_before = (
+        existing.filter(F.col("valid_to").isNotNull())
+        .join(affected, "user_id", "semi")
+        .select("bucket", "user_id", "version", "state",
+                "valid_from", "valid_to", "event_id"))
+    return (untouched_entities
+            .unionByName(closed_before)
+            .unionByName(closed_now)
+            .unionByName(new_rows))
+
+
 def scd2_upsert_sink(spark: SparkSession, state_dir: str,
                      n_buckets: int = 8, run_id: str = "",
                      stats: list | None = None):
@@ -108,9 +186,10 @@ def scd2_upsert_sink(spark: SparkSession, state_dir: str,
     forward verbatim; each touched entity's OPEN interval closes at its
     first new event's ts; the new events become versions
     max(version)+1.. ordered by (ts, event_id), the last one open.
-    Stamp bookkeeping is the upsert sink's exactly-once-per-
-    (bucket, batch) recipe — see streaming/upsert.py for the full
-    at-least-once analysis.
+    Stamp bookkeeping is the exactly-once-per-(bucket, batch) skeleton
+    of streaming/upsert.py (:func:`bucket_merge_sink`, which also holds
+    the full at-least-once analysis); this sink supplies the event
+    columns and :func:`_interval_rows`.
 
     ``stats`` (optional): one dict per applied batch — (batch_id,
     buckets, data_rows, stamp_rows, rewrite_bytes) — the totals sink's
@@ -118,148 +197,24 @@ def scd2_upsert_sink(spark: SparkSession, state_dir: str,
     the dimension's data_rows GROW with history (every version
     persists), so per-batch rewrite volume is the number to watch when
     sizing n_buckets for a long-lived dimension."""
-    if not run_id:
-        raise ValueError(
-            "scd2_upsert_sink needs a non-empty run_id (use the query's "
-            "checkpoint location) — see upsert_totals_sink")
-    os.makedirs(state_dir, exist_ok=True)
-    # same reattach hazard as the totals sink (r5 there, r9 review
-    # here): a different n_buckets re-routes entities to other buckets,
-    # so `existing` misses their history — versions restart at 1 and
-    # the old open interval never closes, silently
-    _check_bucket_marker(state_dir, n_buckets)
-    guard = ReplayGuard()
+    merge = bucket_merge_sink(
+        spark, state_dir, _DIM_SCHEMA, n_buckets, run_id, stats,
+        lambda batch_df: batch_df.select("user_id", "event_type", "ts",
+                                         "event_id"),
+        _interval_rows)
 
     def _merge(batch_df: DataFrame, batch_id: int) -> None:
-        events = (batch_df
-                  .select("user_id", "event_type", "ts", "event_id")
-                  .withColumn("bucket",
-                              F.pmod("user_id", F.lit(n_buckets))
-                              .cast("bigint"))
-                  # lazy: the touched-buckets collect right below is the
-                  # first action and materializes the checkpoint as a
-                  # side effect — same reuse, one fewer job per batch
-                  # (r10 optimization)
-                  ).localCheckpoint(eager=False)
-        touched = [r.bucket for r in
-                   events.select("bucket").distinct().collect()]
-        refuse_null_buckets(touched, batch_id)
-        if not touched:
-            return
-        current = _dim_df(spark, state_dir).filter(
-            F.col("bucket").isin(touched))
-        done = guard.done_buckets(current, run_id, batch_id, touched)
-        todo = [b for b in touched if b not in done]
-        if not todo:
-            guard.record(todo, batch_id)
-            return
-        in_todo = F.col("bucket").isin(todo)
-        new_ev = events.filter(in_todo)
-        existing = current.filter(in_todo & F.col("user_id").isNotNull())
-        affected = new_ev.select("user_id").distinct()
-
-        # the affected entities' first new event, in the batch window's
-        # (ts, event_id) total order — the close point for open rows
-        wu = Window.partitionBy("user_id").orderBy(
-            F.asc_nulls_last("ts"), F.asc_nulls_last("event_id"))
-        firsts = (new_ev.withColumn("__r", F.row_number().over(wu))
-                  .filter(F.col("__r") == 1)
-                  .select("user_id", F.col("ts").alias("first_ts"),
-                          F.col("event_id").alias("first_eid")))
-        open_rows = (existing.filter(F.col("valid_to").isNull())
-                     .join(firsts, "user_id", "inner"))
-        # order guard: the CDC contract is per-entity (ts, event_id)
-        # order across batches; a violation would silently rewrite
-        # history, so refuse loudly instead. NULL-safe on purpose (r9
-        # review): the schema allows NULL ts/event_id and the window
-        # order pins NULLS LAST, so compare under that total order by
-        # mapping NULL to a +infinity sentinel — a plain `<` would go
-        # NULL against a NULL-opened interval and silently merge the
-        # exact violation this refuses.
-        #
-        # The guard runs INSIDE the write's plan (r11, guide §2.4 /
-        # VERDICT r10 #1): a violating close row evaluates raise_error,
-        # the write JOB fails before its commit (dynamic overwrite
-        # replaces partitions only at successful job commit, so state is
-        # untouched), and the except path below re-raises the contract
-        # ValueError — with the violator count computed lazily, on the
-        # rare refusal path only. The old standalone pre-write count was
-        # one extra job AND a second full pass of the window+join
-        # machinery on EVERY batch.
-        _TS_INF = "9999-12-31 23:59:59"
-        _ID_INF = (1 << 63) - 1
-        f_ts = F.coalesce(F.col("first_ts"),
-                          F.lit(_TS_INF).cast("timestamp"))
-        o_ts = F.coalesce(F.col("valid_from"),
-                          F.lit(_TS_INF).cast("timestamp"))
-        f_id = F.coalesce(F.col("first_eid"), F.lit(_ID_INF))
-        o_id = F.coalesce(F.col("event_id"), F.lit(_ID_INF))
-        viol = (f_ts < o_ts) | ((f_ts == o_ts) & (f_id <= o_id))
-        closed_now = open_rows.select(
-            "bucket", "user_id", "version", "state", "valid_from",
-            F.when(viol, F.raise_error(F.concat(
-                F.lit(f"{_GUARD_SENTINEL} batch {batch_id} entity "),
-                F.col("user_id").cast("string"))).cast("timestamp"))
-            .otherwise(F.col("first_ts")).alias("valid_to"),
-            "event_id")
-
-        base = (existing.groupBy("user_id")
-                .agg(F.max("version").alias("base_version")))
-        new_rows = (
-            new_ev
-            .join(base, "user_id", "left")
-            .withColumn("version",
-                        F.coalesce(F.col("base_version"), F.lit(0))
-                        + F.row_number().over(wu))
-            .withColumn("valid_to", F.lead("ts").over(wu))
-            .select("bucket", "user_id", "version",
-                    F.col("event_type").alias("state"),
-                    F.col("ts").alias("valid_from"), "valid_to",
-                    "event_id"))
-
-        untouched_entities = (
-            existing.join(affected, "user_id", "left_anti")
-            .select("bucket", "user_id", "version", "state",
-                    "valid_from", "valid_to", "event_id"))
-        closed_before = (
-            existing.filter(F.col("valid_to").isNotNull())
-            .join(affected, "user_id", "semi")
-            .select("bucket", "user_id", "version", "state",
-                    "valid_from", "valid_to", "event_id"))
-        data = (untouched_entities
-                .unionByName(closed_before)
-                .unionByName(closed_now)
-                .unionByName(new_rows)
-                .withColumn("last_batch", F.lit(None).cast("bigint"))
-                .withColumn("last_run", F.lit(None).cast("string")))
-
-        other_stamps = carry_other_stamps(current, in_todo, run_id)
-        my_stamps = new_stamp_rows(spark, _DIM_SCHEMA, todo,
-                                   batch_id, run_id)
-        merged = (data.select(*my_stamps.columns)
-                  .unionByName(other_stamps).unionByName(my_stamps))
-        # lazy checkpoint still severs the LOGICAL lineage to state_dir
-        # immediately (the returned frame is a checkpoint scan, so the
-        # write's plan never reads the directory it overwrites); the
-        # physical read of the old state happens inside the write job's
-        # tasks, which complete before dynamic-overwrite commit replaces
-        # any partition — one fewer job per batch (r10 optimization)
-        merged = merged.localCheckpoint(eager=False)
-        if stats is not None:
-            obs, merged = observe_merged(merged)
         try:
-            (merged.write.mode("overwrite")
-             .option("partitionOverwriteMode", "dynamic")
-             .partitionBy("bucket").parquet(state_dir))
+            merge(batch_df, batch_id)
         except Exception as exc:
             if _GUARD_SENTINEL not in str(exc):
                 raise
-            # rare refusal path (state is untouched — the failed job
-            # never reached its commit). The sentinel message carries
-            # the first violating entity id; the full violator SET is
-            # derivable via repair tooling, so no extra count pass runs
-            # here (measured ~0.5 s/refusal at sf0.1 for a number only
-            # the error text used)
+            # rare refusal path: only the write job evaluates the guard,
+            # and state is untouched — the failed job never reached its
+            # commit. The sentinel message carries the first violating
+            # entity id; the full violator SET is derivable via repair
+            # tooling, so no extra count pass runs here (measured
+            # ~0.5 s/refusal at sf0.1 for a number only the error used)
             detail = str(exc).split(_GUARD_SENTINEL, 1)[1].split("\n")[0]
             raise ValueError(
                 f"batch {batch_id}: entity(ies) received events at or "
@@ -268,9 +223,6 @@ def scd2_upsert_sink(spark: SparkSession, state_dir: str,
                 "affected entities from the log (repair_entities), then "
                 "route the redelivered batch through unapplied_events"
             ) from None
-        guard.record(todo, batch_id)
-        if stats is not None:
-            record_merge_stats(obs, todo, state_dir, batch_id, stats)
 
     return _merge
 
@@ -309,15 +261,7 @@ def repair_entities(spark: SparkSession, state_dir: str,
     entities = list(entities)
     if not entities:
         return 0
-    import json as _json
-
-    from datafusion_delta_sharing_spark.streaming.upsert import (
-        _BUCKETS_MARKER,
-    )
-
-    marker = os.path.join(state_dir, _BUCKETS_MARKER)
-    with open(marker, encoding="utf-8") as fh:
-        n_buckets = _json.load(fh)["n_buckets"]
+    n_buckets = bucket_count(state_dir)
 
     ent_col = F.col("user_id").isin(entities)
     ev = (log_df.select("user_id", "event_type", "ts", "event_id")
@@ -340,9 +284,7 @@ def repair_entities(spark: SparkSession, state_dir: str,
     wu = Window.partitionBy("user_id").orderBy(
         F.asc_nulls_last("ts"), F.asc_nulls_last("event_id"))
     rebuilt = (ev
-               .withColumn("bucket",
-                           F.pmod("user_id", F.lit(n_buckets))
-                           .cast("bigint"))
+               .withColumn("bucket", bucket_col(n_buckets))
                .withColumn("version", F.row_number().over(wu))
                .withColumn("valid_to", F.lead("ts").over(wu))
                .select("bucket", "user_id", "version",
@@ -366,11 +308,8 @@ def repair_entities(spark: SparkSession, state_dir: str,
         | ~F.col("user_id").isin(entities))
     # lazy (r10): same overwrite-cycle reasoning as the sink's merge —
     # the checkpoint scan replaces state_dir in the write's logical plan
-    merged = (keep.unionByName(rebuilt.select(*keep.columns))
-              .localCheckpoint(eager=False))
-    (merged.write.mode("overwrite")
-     .option("partitionOverwriteMode", "dynamic")
-     .partitionBy("bucket").parquet(state_dir))
+    overwrite_buckets(keep.unionByName(rebuilt.select(*keep.columns))
+                      .localCheckpoint(eager=False), state_dir)
     return int(n_rebuilt)
 
 
@@ -441,29 +380,13 @@ def stream_scd2_upsert(spark: SparkSession, sf_dir: str,
     ckpt = tempfile.mkdtemp(prefix="scd2_ckpt_")
     events = stream_events(spark, src, glob="*.parquet",
                            maxFilesPerTrigger="1")
-    import time
-
-    t0 = time.perf_counter()
     merge_stats: list[dict] = []
-    query = (
+    run_to_completion(
+        "stream_scd2_upsert",
         events.select("user_id", "event_type", "ts", "event_id")
         .writeStream.outputMode("update")
         .foreachBatch(scd2_upsert_sink(spark, state_dir,
                                        n_buckets=n_buckets, run_id=ckpt,
-                                       stats=merge_stats))
-        .option("checkpointLocation", ckpt)
-        .start()
-    )
-    try:
-        query.processAllAvailable()
-        _PROGRESS.note(
-            "stream_scd2_upsert", query, wall_s=time.perf_counter() - t0,
-            extra={"merge": {
-                "batches": len(merge_stats),
-                "stamp_rows": sum(s["stamp_rows"] for s in merge_stats),
-                "data_rows": sum(s["data_rows"] for s in merge_stats),
-                "rewrite_bytes": sum(s["rewrite_bytes"]
-                                     for s in merge_stats)}})
-    finally:
-        query.stop()
+                                       stats=merge_stats)),
+        ckpt, stats=merge_stats)
     return scd2_state(spark, state_dir)

@@ -14,7 +14,9 @@ import tempfile
 from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
 
 from datafusion_delta_sharing_spark.functions import money as MONEY
-from datafusion_delta_sharing_spark.streaming import progress as _PROGRESS
+from datafusion_delta_sharing_spark.streaming.progress import (
+    run_to_completion,
+)
 
 
 def materialize_stream(stream_df: DataFrame, mode: str, name: str,
@@ -63,15 +65,7 @@ def materialize_stream(stream_df: DataFrame, mode: str, name: str,
 
         writer = (stream_df.writeStream.outputMode(mode)
                   .foreachBatch(_sink))
-    import time
-
-    t0 = time.perf_counter()
-    query = writer.option("checkpointLocation", ckpt).start()
-    try:
-        query.processAllAvailable()
-        _PROGRESS.note(name, query, wall_s=time.perf_counter() - t0)
-    finally:
-        query.stop()
+    run_to_completion(name, writer, ckpt)
     # explicit schema + pre-created dir: a zero-batch run writes nothing
     import os
 

@@ -55,7 +55,7 @@ def main() -> None:
     print("== 2. AdaBoost over stumps (cell-table boosting) ==")
     register_views(spark, sf_dir, ["events"])
     ada = B.adaboost_fit(spark, spark.sql(_LR_XY_SQL), "g", rounds=3)
-    ada.show(truncate=False)
+    ada.orderBy("g").show(truncate=False)
     print("train_err is the ensemble's EXACT 0/1 error; min_abs_score "
           "is the closest any sign decision comes to the float drift "
           "band.\n")

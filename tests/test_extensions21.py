@@ -208,6 +208,45 @@ def test_scd2_sink_closes_and_versions(spark, tmp_path):
     assert _dim(spark, state) == d2
 
 
+def test_scd2_sink_stats_count_the_rewritten_buckets(spark, tmp_path):
+    """``stats=`` gets one dict per applied batch; its data_rows are the
+    interval rows of the buckets the batch rewrote (untouched entities
+    sharing a bucket included), and a replay appends nothing."""
+    import datetime as dt
+
+    from pyspark.sql import functions as F
+
+    from datafusion_delta_sharing_spark.streaming import scd2 as S2
+
+    t = [dt.datetime(2024, 4, 1, h) for h in range(5)]
+    state = str(tmp_path / "dim")
+    stats: list[dict] = []
+    merge = S2.scd2_upsert_sink(spark, state, n_buckets=2, run_id="ck-s",
+                                stats=stats)
+
+    def interval_rows(buckets):
+        return (S2._dim_df(spark, state)
+                .filter(F.col("user_id").isNotNull()
+                        & F.col("bucket").isin(buckets)).count())
+
+    # batch 0 touches both buckets: user 2 in bucket 0, users 1 and 3 in 1
+    merge(_cdc(spark, [(1, "new", t[0], 10), (2, "new", t[1], 11),
+                       (3, "new", t[2], 12), (1, "active", t[3], 13)]), 0)
+    assert interval_rows([0, 1]) == 4
+    # batch 1 rewrites bucket 1 only: user 1's three versions + user 3's
+    batch1 = [(1, "churned", t[4], 14)]
+    merge(_cdc(spark, batch1), 1)
+    assert interval_rows([1]) == 4
+    assert [{k: s[k] for k in ("batch_id", "buckets", "data_rows",
+                               "stamp_rows")} for s in stats] == [
+        {"batch_id": 0, "buckets": 2, "data_rows": 4, "stamp_rows": 2},
+        {"batch_id": 1, "buckets": 1, "data_rows": 4, "stamp_rows": 1}]
+    assert all(s["rewrite_bytes"] > 0 for s in stats)
+
+    merge(_cdc(spark, batch1), 1)   # crash-replay: nothing applied
+    assert len(stats) == 2
+
+
 def test_scd2_sink_refuses_out_of_order(spark, tmp_path):
     import datetime as dt
 
