@@ -199,6 +199,17 @@ class TableChanges:
     actions: tuple[tuple[str, FileAction], ...]
     version: int | None = None
 
+    @property
+    def kinds(self) -> list[str]:
+        return [kind for kind, _ in self.actions]
+
+    @property
+    def files(self) -> tuple[FileAction, ...]:
+        """The actions' files in action order: the listing a change-feed
+        read plans (``scan.plan_files``), as a snapshot read plans
+        :attr:`TableData.files`."""
+        return tuple(f for _, f in self.actions)
+
 
 # -- client ---------------------------------------------------------------
 
@@ -421,10 +432,11 @@ class DeltaSharingClient:
     # advertised on every request (PROTOCOL.md capabilities header): both
     # response formats parse — delta-format actions are unwrapped by the
     # action classes, deletion vectors are applied at scan time, column
-    # mapping is translated (physicalName space, flat schemas), and type
-    # widening reads pre-widening files under the current wider types, so
-    # readerfeatures declares all three (a compliant provider withholds
-    # delta responses needing features a client does not declare)
+    # mapping is translated (parquet columns read by physicalName, flat
+    # schemas), and type widening reads pre-widening files under the
+    # current wider types, so readerfeatures declares all three (a
+    # compliant provider withholds delta responses needing features a
+    # client does not declare)
     DEFAULT_CAPABILITIES = (
         "responseformat=parquet,delta;"
         "readerfeatures=deletionvectors,columnmapping,typewidening")

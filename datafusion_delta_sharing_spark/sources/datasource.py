@@ -10,7 +10,10 @@ one partition per ``scan.pack_files`` file group, A1) and ``read()`` on
 executors (``scan.read_files``: ranged-HTTP parquet -> Arrow batches + typed
 partition columns, A2/A3/A20).
 This module adapts the one scan path of ``sources/scan.py`` to Spark's
-DataSource API: filters to hints, stream offsets and the commit log.
+DataSource API: filters to hints, stream offsets and the commit log. Every
+reader takes its files, partition columns, parquet column names and cache
+identity from one ``scan.plan_files`` plan in logical names; a
+caller-given schema limits the partition columns to those it holds.
 
 Usage::
 
@@ -34,14 +37,16 @@ O(1) — ``{"version", "batch"}`` — regardless of how many files the table
 has accumulated. The per-batch file
 manifest lives in an append-only JSONL commit log on the driver
 (``stream_log_dir`` option; a fresh temp dir by default) so a replayed
-microbatch reproduces its original file set exactly.
+microbatch reproduces its original file set exactly. A query restarted from
+its checkpoint needs the same ``stream_log_dir``: a new log cannot tell
+which files the committed batches held, so the reader refuses to resume
+instead of silently skipping the files that landed while it was down.
 """
 
 from __future__ import annotations
 
-import dataclasses
 import json
-from typing import Iterable, Iterator, Sequence
+from typing import Iterator, Sequence
 
 from pyspark.sql import types as T
 from pyspark.sql.datasource import (
@@ -63,13 +68,19 @@ from pyspark.sql.datasource import (
     StringStartsWith,
 )
 
-from datafusion_delta_sharing_spark.client import FileAction, TableData
+from datafusion_delta_sharing_spark.client import (
+    FileAction,
+    TableChanges,
+    TableData,
+)
 from datafusion_delta_sharing_spark.errors import DeltaSharingError, PredicateError
 from datafusion_delta_sharing_spark.plans.predicates import Op, ValueType, conjunction
 from datafusion_delta_sharing_spark.securable import Table
 from datafusion_delta_sharing_spark.sources.scan import (
     FileTask,
+    ScanPlan,
     _has_variant,
+    cache_identity,
     change_tasks,
     file_tasks,
     pack_files,
@@ -119,11 +130,11 @@ class _OneClient:
 
 
 class _FilePartition(InputPartition):
-    """The shared files of one Spark partition: a ``scan.pack_files`` group,
-    or no file for an empty batch listing (Spark requires at least one
-    partition). ``spec`` pins the task's re-list (``scan.relist``);
-    ``file_names`` maps a logical column to its parquet column where
-    delta.columnMapping.mode is name/id (the plan's mapping)."""
+    """The shared files of one Spark partition: a ``scan.pack_files`` group
+    of file tasks in logical names, or no file for an empty batch listing
+    (Spark requires at least one partition). ``spec`` pins the task's
+    re-list (``scan.relist``); ``file_names`` is the plan's map from a
+    logical column to its parquet column, empty without column mapping."""
 
     def __init__(self, tasks: list[FileTask], spec: dict | None = None,
                  file_names: dict[str, str] | None = None):
@@ -230,7 +241,8 @@ class DeltaSharingBatchReader(DataSourceReader):
         version, timestamp = _snapshot_pins(self.options)
         data = client.get_table_data(table, json_predicate_hints=hints,
                                      version=version, timestamp=timestamp)
-        plan = plan_files(data, self.full_schema, self.hints_op)
+        plan = plan_files(data, self.full_schema, self.hints_op, client,
+                          table)
         if _has_variant(self.full_schema):
             # this source always decodes through pyarrow, which cannot
             # parse a parquet footer containing the VARIANT logical type
@@ -238,39 +250,16 @@ class DeltaSharingBatchReader(DataSourceReader):
                 "table has VARIANT columns, which format('deltasharing') "
                 "cannot decode (pyarrow footer parse); use "
                 "DeltaSharingReader over a local (file://) share")
-        # this source reads in LOGICAL names: the plan's physical
-        # partition-value keys go back to logical, and the executor maps
-        # the parquet columns through the plan's logical -> physical map
-        names = {p: l for l, p in (plan.mapping or {}).items()}
-        files = [dataclasses.replace(f, partition_values={
-                     names.get(k, k): v
-                     for k, v in f.partition_values.items()})
-                 for f in plan.files]
-        tasks = file_tasks(files, self.full_schema, _partition_columns(
-            self.options, self.full_schema, files), source=(
-                client.profile.endpoint, table.full_name(),
-                data.metadata.id))
         # executor-side URL refreshes re-list the snapshot THIS listing
         # came from
         spec = relist_pin(data, version, timestamp)
-        return [_FilePartition(group, spec, plan.mapping)
-                for group in pack_files(tasks)]
+        return [_FilePartition(group, spec, plan.file_names)
+                for group in pack_files(file_tasks(plan))]
 
     def read(self, partition: _FilePartition):
         if not partition.tasks:
             return iter(())
         return _read_file_partition(self.options, self.full_schema, partition)
-
-
-def _partition_columns(options, schema: T.StructType,
-                       files: Iterable[FileAction]) -> list[str]:
-    """The partition columns of ``schema``, by logical name: those
-    ``schema()`` recorded in the options or, for a caller-given schema,
-    the files' partition keys."""
-    raw = options.get("partition_columns")
-    names = (set(json.loads(raw)) if raw
-             else {k for f in files for k in f.partition_values})
-    return [f.name for f in schema.fields if f.name in names]
 
 
 def _read_file_partition(options, schema: T.StructType,
@@ -293,16 +282,18 @@ def _read_file_partition(options, schema: T.StructType,
                           partition.file_names, relisted)
 
 
-def _check_stream_listing(reader, table, data: TableData,
-                          schema: T.StructType) -> None:
-    """Refuse, LOUDLY, a listing a stream cannot read: one
-    ``scan.plan_files`` refuses; a column-mapped table (a stream's
-    manifests do not yet persist the per-file translation batch reads
-    apply, so it would mis-read physical columns); and a schema that
-    drifted under the running stream (decoding new bytes with the old
-    schema mis-reads or drops columns). The first schema seen is pinned;
-    the operator restarts the stream to pick up a new one."""
-    if plan_files(data, schema, None).mapping:
+def _stream_plan(reader, client, table, data: TableData | TableChanges,
+                 schema: T.StructType) -> ScanPlan:
+    """The ``scan.plan_files`` plan of a stream's listing, refusing,
+    LOUDLY, a listing a stream cannot read: one ``scan.plan_files``
+    refuses; a column-mapped table (the streams do not yet pass the
+    plan's ``file_names`` to their reads, so they would mis-read physical
+    columns); and a schema that drifted under the running stream
+    (decoding new bytes with the old schema mis-reads or drops columns).
+    The first schema seen is pinned; the operator restarts the stream to
+    pick up a new one."""
+    plan = plan_files(data, schema, None, client, table)
+    if plan.file_names:
         raise DeltaSharingError(
             "column-mapped tables are not supported by the streaming "
             "sources; read them with the batch reader")
@@ -315,6 +306,7 @@ def _check_stream_listing(reader, table, data: TableData,
             f"schema of {table.full_name()} changed while the stream was "
             "running; restart the query to pick up the new schema "
             "(refusing to decode new files with the old one)")
+    return plan
 
 
 def _snapshot_pins(options) -> tuple[int | None, str | None]:
@@ -343,8 +335,8 @@ class DeltaSharingStreamReader(_OneClient, DataSourceStreamReader):
     fetch to executors (same ``_read_file_partition`` path as the batch
     source); a range with no files plans no partition. Replay after a
     driver restart reloads the manifest from the log; a replay the log
-    cannot satisfy fails loudly rather than silently emitting fewer
-    rows."""
+    cannot satisfy, or a range that starts after a batch the log never
+    cut, fails loudly rather than silently emitting fewer rows."""
 
     def __init__(self, options, schema: T.StructType):
         import os
@@ -414,10 +406,10 @@ class DeltaSharingStreamReader(_OneClient, DataSourceStreamReader):
     def latestOffset(self) -> dict:
         client, table = self._client_and_table()
         data = client.get_table_data(table)
-        _check_stream_listing(self, table, data, self.full_schema)
+        plan = _stream_plan(self, client, table, data, self.full_schema)
         if data.version is not None:
             self._version = data.version
-        new = [f for f in data.files if f.id not in self._seen]
+        new = [f for f in plan.files if f.id not in self._seen]
         if new:
             self._latest_batch += 1
             manifest = [{"id": f.id, "url": f.url, "size": f.size,
@@ -430,36 +422,53 @@ class DeltaSharingStreamReader(_OneClient, DataSourceStreamReader):
                    "schema": getattr(self, "_schema_string_seen", None),
                    # the listing's metaData.id, part of the files' cache
                    # keys; a record without one reads uncached
-                   "table_id": data.metadata.id}
+                   "table_id": data.metadata.id,
+                   "partition_columns": plan.partition_columns}
             self._batches[self._latest_batch] = rec
             self._seen.update(f.id for f in new)
             self._append_log(rec)
         return {"version": self._version, "batch": self._latest_batch}
 
+    def _record(self, batch: int) -> dict | None:
+        if batch not in self._batches:
+            self._load_log()  # commit pruned memory; the log is durable
+        return self._batches.get(batch)
+
     def partitions(self, start: dict, end: dict) -> Sequence[InputPartition]:
-        batches: list[tuple[str | None, list[FileAction]]] = []
-        for b in range(start.get("batch", -1) + 1, end.get("batch", -1) + 1):
-            rec = self._batches.get(b)
-            if rec is None:
-                self._load_log()  # commit pruned memory; the log is durable
-                rec = self._batches.get(b)
-            if rec is None:
+        first, last = start.get("batch", -1), end.get("batch", -1)
+        if last < first or end.get("version", -1) < start.get("version", -1):
+            raise DeltaSharingError(
+                f"stream offset {end} comes before {start}; refusing to "
+                "plan a backwards range")
+        done = self._record(first) if first >= 0 else None
+        if first >= 0 and (done is None or done.get("version", -1)
+                           > start.get("version", -1)):
+            # a log that did not cut this batch by the start's version (a
+            # restart without its stream_log_dir lists every live file as
+            # a new batch 0) would silently plan an empty or short range
+            raise DeltaSharingError(
+                f"cannot resume after microbatch {first} at version "
+                f"{start.get('version')}: the stream commit log at "
+                f"{self._log_path} has no record of it; restart the query "
+                "with the stream_log_dir it ran with")
+        records = []
+        for b in range(first + 1, last + 1):
+            rec = self._record(b)
+            if rec is None or "partition_columns" not in rec:
                 raise DeltaSharingError(
-                    f"cannot replay microbatch {b}: no manifest in the "
-                    f"stream commit log at {self._log_path} (log lost or "
-                    "truncated) — refusing to guess the original file set")
-            # a manifest entry is spelled with FileAction's field names
-            batches.append((rec.get("table_id"),
-                            [FileAction(**f) for f in rec["files"]]))
-        files = [f for _, fs in batches for f in fs]
-        if not files:
+                    f"cannot replay microbatch {b}: no manifest this reader "
+                    f"can read in the stream commit log at {self._log_path} "
+                    "(log lost, truncated or written by an older version) — "
+                    "refusing to guess the original file set")
+            records.append(rec)
+        if not any(rec["files"] for rec in records):
             return []
         client, table = self._client_and_table()
-        columns = _partition_columns(self.options, self.full_schema, files)
-        tasks = [task for table_id, fs in batches
-                 for task in file_tasks(fs, self.full_schema, columns,
-                                        source=(client.profile.endpoint,
-                                                table.full_name(), table_id))]
+        # a manifest entry is spelled with FileAction's field names
+        tasks = [task for rec in records for task in file_tasks(ScanPlan(
+            [FileAction(**f) for f in rec["files"]], self.full_schema,
+            rec["partition_columns"], {},
+            cache_identity(client, table, rec.get("table_id"))))]
         # an unpinned re-list: the stream follows the live table
         return [_FilePartition(group) for group in pack_files(tasks)]
 
@@ -467,10 +476,11 @@ class DeltaSharingStreamReader(_OneClient, DataSourceStreamReader):
         return _read_file_partition(self.options, self.full_schema, partition)
 
     def commit(self, end: dict) -> None:
-        # batches <= end are processed and will never be re-requested;
-        # drop them from memory (the JSONL log keeps the durable history)
+        # batches before end are processed and will never be re-requested;
+        # drop them from memory (the JSONL log keeps the durable history).
+        # The end batch stays: the next range starts after it
         done = end.get("batch", -1)
-        for b in [b for b in self._batches if b <= done]:
+        for b in [b for b in self._batches if b < done]:
             del self._batches[b]
 
 
@@ -533,15 +543,9 @@ class DeltaSharingCDFStreamReader(_OneClient, DataSourceStreamReader):
         client, table = self._client_and_table()
         changes = client.get_table_changes(
             table, starting_version=lo + 1, ending_version=hi)
-        data = TableData(changes.protocol, changes.metadata,
-                         tuple(f for _, f in changes.actions), changes.version)
-        _check_stream_listing(self, table, data, self.base_schema)
+        plan = _stream_plan(self, client, table, changes, self.base_schema)
         return [_FilePartition(group, spec)
-                for spec, group in change_tasks(
-                    changes.actions, self.base_schema, _partition_columns(
-                        self.options, self.base_schema, data.files), hi,
-                    (client.profile.endpoint, table.full_name(),
-                     changes.metadata.id))]
+                for spec, group in change_tasks(plan, changes.kinds, hi)]
 
     def read(self, partition: _FilePartition):
         return _read_file_partition(self.options, self.out_schema, partition)
@@ -573,9 +577,6 @@ class DeltaSharingDataSource(DataSource):
                 limit_hint=0).metadata
         else:
             _, metadata = client.get_table_metadata(table)
-        # remember partition columns for the readers (options travel)
-        self.options["partition_columns"] = json.dumps(
-            list(metadata.partition_columns))
         base = schema_from_string(metadata.schema_string)
         if _wants_cdf(self.options):
             return T.StructType(list(base.fields) + list(CDF_META_FIELDS))

@@ -35,6 +35,7 @@ handful of files Spark must actually open.
 
 from __future__ import annotations
 
+import dataclasses
 import json
 import pickle
 from functools import reduce
@@ -46,7 +47,6 @@ from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
 from datafusion_delta_sharing_spark.client import (
     DeltaSharingClient,
     FileAction,
-    TableData,
 )
 from datafusion_delta_sharing_spark.errors import (
     DeltaSharingError,
@@ -65,8 +65,8 @@ from datafusion_delta_sharing_spark.sources.scan import (
     _local_path,
     change_tasks,
     file_tasks,
+    logical_partition_keys,
     pack_files,
-    physical_partition_keys,
     plan_files,
     read_files,
     relist,
@@ -77,7 +77,6 @@ from datafusion_delta_sharing_spark.sources.schema import (
     column_mapping_of,
     decode_partition_values,
     schema_from_string,
-    to_physical_schema,
 )
 
 
@@ -99,18 +98,19 @@ def _fetch_batches_task(
     columns: Sequence[str] | None,
     profile_doc: str,
     table_fqn: str,
+    file_names: dict[str, str] | None = None,
 ) -> Iterator["pyarrow.RecordBatch"]:  # noqa: F821
     """mapInArrow worker: the file groups of one Spark task in, table
-    record batches out, through ``scan.read_files``. Each row is one
-    pickled ``(spec, tasks)`` group whose tasks arrive ready, partition
-    values and change-feed columns decoded on the driver (A20); an expired
-    presigned URL re-lists the table once per group, pinned to its
-    ``spec``."""
+    record batches out, through ``scan.read_files`` with the plan's
+    ``file_names``. Each row is one pickled ``(spec, tasks)`` group whose
+    tasks arrive ready, partition values and change-feed columns decoded
+    on the driver (A20); an expired presigned URL re-lists the table once
+    per group, pinned to its ``spec``."""
     for batch in group_batches:
         for group in batch.column("group").to_pylist():
             spec, tasks = pickle.loads(group)
             yield from read_files(
-                tasks, schema, columns, {},
+                tasks, schema, columns, file_names or {},
                 lambda: relist(profile_doc, table_fqn, spec))
 
 
@@ -125,6 +125,22 @@ def _normalized_path_expr(col):
         F.regexp_replace(
             F.regexp_replace(col, r"^file:(//)?+(?=/)", ""),
             r"\+", "%2B"))
+
+
+def _file_schema(schema: T.StructType, constants: Iterable[str],
+                 file_names: dict[str, str]) -> T.StructType:
+    """The parquet read schema of ``schema``'s data columns: the fields
+    not in ``constants``, each named by its parquet column."""
+    return T.StructType([
+        T.StructField(file_names.get(f.name, f.name), f.dataType, f.nullable,
+                      f.metadata)
+        for f in schema.fields if f.name not in constants])
+
+
+def _file_column(name: str, file_names: dict[str, str]):
+    """The data column ``name``, read from its parquet column."""
+    physical = file_names.get(name, name).replace("`", "``")
+    return F.col(f"`{physical}`").alias(name)
 
 
 # ---------------------------------------------------------------------------
@@ -263,21 +279,19 @@ class DeltaSharingReader:
             if unknown:
                 raise DeltaSharingError(
                     f"unknown column(s) in projection: {unknown}")
-        plan = plan_files(data, logical, predicate_op)
-        files = plan.files
+        plan = plan_files(data, logical, predicate_op, self.client, table)
         if prune_limit is not None and predicate_op is None:
             # beyond the reference's limitHint: stop listing files once
             # stats-known record counts cover the limit
-            files = prune_for_limit(files, prune_limit)
+            plan = dataclasses.replace(
+                plan, files=prune_for_limit(plan.files, prune_limit))
         # executor-side URL refreshes re-list the snapshot THIS listing
         # came from
         spec = relist_pin(data, version, timestamp)
-        groups = [(spec, group) for group in pack_files(file_tasks(
-            files, plan.schema, plan.partition_columns,
-            source=(self.client.profile.endpoint, table.full_name(),
-                    data.metadata.id)))]
+        groups = [(spec, group)
+                  for group in pack_files(file_tasks(plan))]
         df = self._dataframe_from_tasks(table, groups, plan.schema,
-                                        plan.mapping, scan_columns)
+                                        plan.file_names, scan_columns)
         if predicate is not None:
             df = df.filter(predicate)  # residual: Inexact semantics (A5)
             if out_columns is not None and scan_columns != out_columns:
@@ -342,8 +356,8 @@ class DeltaSharingReader:
 
         Under column mapping the file actions may spell partition keys
         physically (raw delta-format adds) or logically (parquet-format
-        servers translate): both are normalized to physical names, as
-        the scan does, and the output columns carry the logical ones."""
+        servers translate): both are normalized to logical names, as
+        the scan plan does."""
         if isinstance(table, str):
             table = Table.from_str(table)
         data = self.client.get_table_data(
@@ -357,15 +371,12 @@ class DeltaSharingReader:
         # the shared validated entry point (r9 review: this path used to
         # skip the mode check and crashed with a raw AttributeError when
         # the schema carried no physicalName metadata)
-        mapping = column_mapping_of(metadata, schema) or {}
-        files, _ = physical_partition_keys(data.files, mapping)
-        physical = to_physical_schema(schema, mapping)
-        keys = [mapping.get(c, c) for c in part_cols]
+        files, _ = logical_partition_keys(
+            data.files, column_mapping_of(metadata, schema) or {})
         counts: dict[tuple, int] = {}
         for f in files:
-            decoded = decode_partition_values(
-                f.partition_values, physical, keys)
-            key = tuple(decoded[c] for c in keys)
+            key = tuple(decode_partition_values(
+                f.partition_values, schema, part_cols).values())
             counts[key] = counts.get(key, 0) + self._logical_file_rows(f)
         by_name = {fld.name: fld for fld in schema.fields}
         out_schema = T.StructType(
@@ -404,30 +415,22 @@ class DeltaSharingReader:
             ending_version=ending_version,
             starting_timestamp=starting_timestamp,
             ending_timestamp=ending_timestamp)
-        data = TableData(changes.protocol, changes.metadata,
-                         tuple(f for _, f in changes.actions),
-                         changes.version)
-        plan = plan_files(data, schema_from_string(
-            changes.metadata.schema_string), None)
+        plan = plan_files(changes, schema_from_string(
+            changes.metadata.schema_string), None, self.client, table)
         groups = change_tasks(
-            zip([kind for kind, _ in changes.actions], plan.files,
-                strict=True),
-            plan.schema, plan.partition_columns,
-            ending_version if ending_version is not None
-            else changes.version,
-            (self.client.profile.endpoint, table.full_name(),
-             changes.metadata.id))
+            plan, changes.kinds, ending_version if ending_version is not None
+            else changes.version)
         return self._dataframe_from_tasks(
             table, groups,
             T.StructType(plan.schema.fields + list(CDF_META_FIELDS)),
-            plan.mapping)
+            plan.file_names)
 
     # -- physical construction --------------------------------------------
 
     def _dataframe_from_tasks(self, table: Table,
                               groups: list[tuple[dict, list[FileTask]]],
                               schema: T.StructType,
-                              mapping: dict[str, str] | None,
+                              file_names: dict[str, str],
                               columns: Sequence[str] | None = None,
                               ) -> DataFrame:
         """The rows of the file-task ``groups`` (each with its re-list
@@ -436,43 +439,32 @@ class DeltaSharingReader:
 
         Column mapping ('name'/'id' modes) is TRANSLATED, beyond the
         reference class (which ignores the metadata and reads all-NULL
-        columns): ``schema`` and the tasks are in the plan's PHYSICAL
-        names, ``columns`` in logical ones, and the result renames back to
-        logical in one final projection. Nested-field renames are refused
-        by the planner — a flat select-alias cannot rename inside a
-        struct."""
-        rename_back: list[tuple[str, str]] | None = None
-        if mapping:
-            logical_of = {phys: name for name, phys in mapping.items()}
-            rename_back = [(mapping.get(c, c), c) for c in columns or [
-                logical_of.get(f.name, f.name) for f in schema.fields]]
-            columns = [phys for phys, _ in rename_back] if columns else None
+        columns): ``schema``, ``columns`` and the tasks are in the plan's
+        logical names, and both strategies read a data column from its
+        parquet column ``file_names.get(name, name)``. Nested-field
+        renames are refused by the planner — a flat select-alias cannot
+        rename inside a struct."""
         tasks = [task for _, group in groups for task in group]
         if not tasks:
             # CALLER column order, not table-schema order: the non-empty
             # paths return columns as projected, and a positionally-bound
             # consumer (union, toPandas().iloc) must see the same layout
             # whether or not pruning emptied the listing
-            df = self.spark.createDataFrame([], T.StructType(
+            return self.spark.createDataFrame([], T.StructType(
                 [schema[c] for c in columns]) if columns else schema)
-        elif all(urlparse(t.url).scheme in ("", "file") for t in tasks):
-            df = self._read_local(tasks, schema, columns)
-        else:
-            if _has_variant(schema):
-                # pyarrow (the fetch strategies' decoder) does not
-                # recognize the parquet VARIANT logical type — a clear
-                # plan-time error beats the task-side Thrift failure
-                raise DeltaSharingError(
-                    "table has VARIANT columns, which this client reads "
-                    "only from local (file://) shares — the ranged-HTTP "
-                    "fetch decodes via pyarrow, which cannot parse a "
-                    "parquet footer containing the VARIANT logical type")
-            df = self._read_distributed(table, groups, schema, columns)
-        if rename_back:
-            # leave column-mapped physical space: one final projection
-            df = df.select([F.col(f"`{phys}`").alias(logical)
-                            for phys, logical in rename_back])
-        return df
+        if all(urlparse(t.url).scheme in ("", "file") for t in tasks):
+            return self._read_local(tasks, schema, columns, file_names)
+        if _has_variant(schema):
+            # pyarrow (the fetch strategies' decoder) does not recognize
+            # the parquet VARIANT logical type — a clear plan-time error
+            # beats the task-side Thrift failure
+            raise DeltaSharingError(
+                "table has VARIANT columns, which this client reads "
+                "only from local (file://) shares — the ranged-HTTP "
+                "fetch decodes via pyarrow, which cannot parse a "
+                "parquet footer containing the VARIANT logical type")
+        return self._read_distributed(table, groups, schema, columns,
+                                      file_names)
 
     # above this many distinct constant tuples (partition values and
     # change-feed columns), one scan per tuple would blow up the plan:
@@ -521,10 +513,13 @@ class DeltaSharingReader:
                 .drop("__dv_key", "__dv_pos"))
 
     def _read_local(self, tasks: list[FileTask], schema: T.StructType,
-                    columns: Sequence[str] | None) -> DataFrame:
+                    columns: Sequence[str] | None,
+                    file_names: dict[str, str]) -> DataFrame:
         """Native parquet scans: Spark's vectorized reader + Catalyst
-        pushdown do A2/A4 for free, and each task's ``constants``
-        (partition values, change-feed columns) become typed literals.
+        pushdown do A2/A4 for free, each task's ``constants`` (partition
+        values, change-feed columns) become typed literals, and each data
+        column is read from its parquet column ``file_names.get(name,
+        name)`` under its logical name.
 
         Tasks are grouped by the names of their constants (a change feed's
         add and remove files carry ``_change_type``, its cdf files read it
@@ -541,7 +536,7 @@ class DeltaSharingReader:
             out = reduce(DataFrame.unionByName, [
                 self._read_local_single_scan(
                     [t for group in by_values.values() for t in group],
-                    schema, names)
+                    schema, names, file_names)
                 for names, by_values in shapes.items()])
             return out.select(*columns) if columns else out
         groups = [group for by_values in shapes.values()
@@ -554,11 +549,12 @@ class DeltaSharingReader:
         parts: list[DataFrame] = []
         for i, group in enumerate(groups):
             constants = group[0].constants
-            df = self.spark.read.schema(T.StructType(
-                [f for f in schema.fields if f.name not in constants])
+            df = self.spark.read.schema(
+                _file_schema(schema, constants, file_names)
             ).parquet(*[_local_path(t.url) for t in group])
             select = [F.lit(constants[f.name]).cast(f.dataType).alias(f.name)
-                      if f.name in constants else f.name
+                      if f.name in constants
+                      else _file_column(f.name, file_names)
                       for f in schema.fields]
             if dv_rows is not None:
                 # row positions come from the scan's hidden _metadata
@@ -576,7 +572,8 @@ class DeltaSharingReader:
 
     def _read_local_single_scan(self, tasks: list[FileTask],
                                 schema: T.StructType,
-                                names: tuple[str, ...]) -> DataFrame:
+                                names: tuple[str, ...],
+                                file_names: dict[str, str]) -> DataFrame:
         """One scan over the tasks' files + a broadcast join from file
         identity (``input_file_name``) to each task's constants ``names``:
         plan size is O(1) in the number of distinct tuples. A file that
@@ -589,15 +586,15 @@ class DeltaSharingReader:
         (scheme stripped, ``%xx`` unescaped) — a path with spaces or other
         URI-special characters must not silently drop its rows."""
         paths = [_local_path(t.url) for t in tasks]
-        data_schema = T.StructType(
-            [f for f in schema.fields if f.name not in names])
-        scan = (self.spark.read.schema(data_schema)
-                .parquet(*dict.fromkeys(paths))
-                .withColumn("__file",
-                            _normalized_path_expr(F.input_file_name())))
         dv_rows = self._local_dv_rows(enumerate(tasks))
-        if dv_rows is not None:
-            scan = scan.withColumn("__dv_pos", F.col("_metadata.row_index"))
+        scan = (self.spark.read.schema(_file_schema(schema, names, file_names))
+                .parquet(*dict.fromkeys(paths)))
+        scan = scan.select(
+            *[_file_column(f.name, file_names) for f in schema.fields
+              if f.name not in names],
+            _normalized_path_expr(F.input_file_name()).alias("__file"),
+            *([F.col("_metadata.row_index").alias("__dv_pos")]
+              if dv_rows is not None else []))
         map_schema = T.StructType(
             [T.StructField("__file", T.StringType(), False),
              T.StructField("__dv_key", T.LongType(), False)]
@@ -616,7 +613,8 @@ class DeltaSharingReader:
     def _read_distributed(self, table: Table,
                           groups: list[tuple[dict, list[FileTask]]],
                           schema: T.StructType,
-                          columns: Sequence[str] | None) -> DataFrame:
+                          columns: Sequence[str] | None,
+                          file_names: dict[str, str]) -> DataFrame:
         """The scale path: parallelize the file-task groups, each pickled
         with its re-list spec, one Spark partition each and with no
         shuffle, and fetch + decode them on executors in one mapInArrow."""
@@ -641,6 +639,6 @@ class DeltaSharingReader:
 
         def fetch(batches):
             return _fetch_batches_task(batches, schema, cols, profile_doc,
-                                       fqn)
+                                       fqn, file_names)
 
         return group_df.mapInArrow(fetch, out_schema)

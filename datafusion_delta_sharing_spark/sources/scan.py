@@ -8,11 +8,14 @@ Counterpart of the reference's ``DeltaSharingTable::scan``
 stream and the CDF stream all go through the same functions:
 
 * :func:`plan_files` (driver): the checks a listing must pass before any
-  task is scheduled, and stats pruning;
-* :func:`file_tasks` (driver): the one builder of :class:`FileTask`,
-  each file's partition values decoded once while the scan is planned, as
-  the reference does (``src/datasource/scan.rs:61-82,159-229``);
-* :func:`change_tasks` (driver): the file tasks of a change-feed read,
+  task is scheduled, stats pruning, and the one :class:`ScanPlan` every
+  entry point reads from, in logical names: the files, the schema, the
+  partition columns, the parquet column of each data column under column
+  mapping, and the files' cache identity;
+* :func:`file_tasks` (driver): the one builder of :class:`FileTask` from a
+  plan, each file's partition values decoded once while the scan is
+  planned, as the reference does (``src/datasource/scan.rs:61-82,159-229``);
+* :func:`change_tasks` (driver): the file tasks of a change-feed plan,
   batch or stream, with their change-feed columns, packed across commits;
 * :func:`pack_files` (driver): the file groups of every read, batch and
   stream alike, one Spark task each, as the reference runs one partition
@@ -64,6 +67,7 @@ from pyspark.sql import types as T
 
 from datafusion_delta_sharing_spark.client import (
     FileAction,
+    TableChanges,
     TableData,
     check_response,
     send_with_retry,
@@ -81,7 +85,6 @@ from datafusion_delta_sharing_spark.sources.schema import (
     ambiguous_mapping_names,
     column_mapping_of,
     decode_partition_values,
-    to_physical_schema,
 )
 
 # ---------------------------------------------------------------------------
@@ -89,9 +92,10 @@ from datafusion_delta_sharing_spark.sources.schema import (
 # ---------------------------------------------------------------------------
 
 # delta reader features this scan layer actually honors: deletion vectors
-# are APPLIED (sources/dv.py), column mapping is TRANSLATED (the scan
-# runs in physicalName space and renames back to logical — flat schemas;
-# nested renames refuse loudly), type widening READS WIDE (files written
+# are APPLIED (sources/dv.py), column mapping is TRANSLATED (the plan is
+# in logical names and each read maps a data column to its parquet
+# column through the plan's file_names — flat schemas; nested renames
+# refuse loudly), type widening READS WIDE (files written
 # before a column was widened decode under the current logical type:
 # the local strategy via Spark 4's vectorized-reader widening, the
 # fetch strategies via the per-column Arrow cast of read_files — every
@@ -115,27 +119,39 @@ _SUPPORTED_READER_FEATURES = frozenset(
 
 @dataclasses.dataclass(frozen=True)
 class ScanPlan:
-    """The files a read must fetch, in PHYSICAL names: under column mapping
-    the schema, the partition columns and every file's partition-value
-    keys are spelled as the parquet files spell them, and ``mapping``
-    (logical -> physical) renames them back; without it, ``mapping`` is
-    None and physical is logical."""
+    """The files a read must fetch, in LOGICAL names: the schema, the
+    partition columns (the listing's ``metaData.partitionColumns`` that
+    the schema holds) and every file's partition-value keys are spelled as
+    the table's readers spell them. ``file_names`` maps a logical column to
+    its parquet column under column mapping and is empty without it.
+    ``source`` is the files' cache identity (:func:`cache_identity`), or
+    None when the plan was made without a client."""
 
     files: list[FileAction]
     schema: T.StructType
     partition_columns: list[str]
-    mapping: dict[str, str] | None
+    file_names: dict[str, str]
+    source: tuple[str, str, str | None] | None = None
 
 
-def plan_files(data: TableData, schema: T.StructType,
-               predicate_op: Op | None) -> ScanPlan:
-    """Check a listing and prune it with ``predicate_op`` (logical names).
+def cache_identity(client, table, table_id: str | None,
+                   ) -> tuple[str, str, str | None]:
+    """The cache identity of a table's files: ``(profile endpoint,
+    "share.schema.table", the listing's metaData.id)``."""
+    return (client.profile.endpoint, table.full_name(), table_id)
+
+
+def plan_files(data: TableData | TableChanges, schema: T.StructType,
+               predicate_op: Op | None, client=None, table=None) -> ScanPlan:
+    """Check a listing, a snapshot's or a change feed's, and prune it with
+    ``predicate_op`` (logical names); with the reading ``client`` and its
+    ``table`` the plan carries the files' cache identity.
 
     Refuses, with :class:`DeltaSharingError`: a non-parquet format; a
     required reader feature this client cannot honor (plain-parquet
     decoding may return wrong rows, the same failure class as unapplied
     deletion vectors); an invalid column mapping or an ambiguous
-    partition key (:func:`physical_partition_keys`); and any listed
+    partition key (:func:`logical_partition_keys`); and any listed
     file's deletion vector that executors could never resolve — all
     before pruning, so every entry point refuses the same listings."""
     metadata = data.metadata
@@ -150,8 +166,8 @@ def plan_files(data: TableData, schema: T.StructType,
             f"table requires reader features {sorted(unsupported)} "
             "this client does not implement; supported: "
             f"{sorted(_SUPPORTED_READER_FEATURES)}")
-    mapping = column_mapping_of(metadata, schema)
-    files, ambiguous = physical_partition_keys(data.files, mapping)
+    mapping = column_mapping_of(metadata, schema) or {}
+    files, ambiguous = logical_partition_keys(data.files, mapping)
     for f in files:
         if f.deletion_vector:
             dv.validate_descriptor(f.deletion_vector, data_url=f.url)
@@ -171,19 +187,22 @@ def plan_files(data: TableData, schema: T.StructType,
                  if all(may_match(op, st) for op in ops
                         for st in (f.parsed_stats(),
                                    partition_value_stats(f.partition_values)))]
-    mapping_or_id = mapping or {}
-    return ScanPlan(files, to_physical_schema(schema, mapping_or_id),
-                    [mapping_or_id.get(c, c)
-                     for c in metadata.partition_columns],
-                    mapping)
+    partition_columns = set(metadata.partition_columns)
+    return ScanPlan(
+        files, schema,
+        [f.name for f in schema.fields if f.name in partition_columns],
+        mapping,
+        None if client is None else cache_identity(client, table,
+                                                   metadata.id))
 
 
-def physical_partition_keys(files: Iterable[FileAction],
-                            mapping: dict[str, str] | None,
-                            ) -> tuple[list[FileAction], bool]:
-    """``files`` with their partition-value keys spelled physically, and
-    whether ``mapping`` has names that are one column's logical name and
-    another's physical name (rename-swap tables).
+def logical_partition_keys(files: Iterable[FileAction],
+                           mapping: dict[str, str],
+                           ) -> tuple[list[FileAction], bool]:
+    """``files`` with their partition-value keys spelled logically, and
+    whether ``mapping`` (logical -> physical) has names that are one
+    column's logical name and another's physical name (rename-swap
+    tables).
 
     Keys arrive LOGICAL from parquet-format responses (the server
     translates) and PHYSICAL from raw delta-format add actions. A key in
@@ -201,8 +220,9 @@ def physical_partition_keys(files: Iterable[FileAction],
             "ambiguous (the name is one column's logical name and another's "
             "physical name); ask the provider for a parquet-format share "
             "(keys pre-translated server-side)")
+    logical = {phys: name for name, phys in mapping.items()}
     return [dataclasses.replace(f, partition_values={
-                mapping.get(k, k): v for k, v in f.partition_values.items()})
+                logical.get(k, k): v for k, v in f.partition_values.items()})
             if f.partition_values else f for f in files], bool(ambiguous)
 
 
@@ -530,23 +550,21 @@ class FileTask:
     cache_key: str | None = None
 
 
-def file_tasks(files: Iterable[FileAction], schema: T.StructType,
-               partition_columns: Sequence[str],
+def file_tasks(plan: ScanPlan,
                constants: Sequence[dict[str, Any]] | None = None,
-               source: tuple[str, str, str] | None = None,
                ) -> list[FileTask]:
-    """The read tasks of ``files``, built on the driver: the one place a
-    :class:`FileTask` is made. Each file's partition values are decoded
-    against ``schema`` (its keys and ``partition_columns`` spelled as
-    ``schema`` spells them; a missing value is NULL), then merged with its
-    entry of ``constants``, the per-file output columns of a change feed.
+    """The read tasks of the plan's files, built on the driver: the one
+    place a :class:`FileTask` is made. Each file's
+    partition values are decoded against the plan's schema and partition
+    columns (a missing value is NULL), then merged with its entry of
+    ``constants``, the per-file output columns of a change feed.
 
-    ``source`` is ``(profile endpoint, "share.schema.table", the
-    listing's metaData.id)``. With it, each http(s) file gets its cache
-    key: a digest of ``source``, the file id and the listed size. The
-    protocol keeps a file's id across requests, and the endpoint and the
-    table id keep two servers' or two tables' files apart even when their
-    names and file ids agree."""
+    With the plan's ``source``, its cache identity, each http(s) file gets
+    its cache key: a digest of ``source``, the file id and the listed
+    size. The protocol keeps a file's id across requests, and the endpoint
+    and the table id keep two servers' or two tables' files apart even
+    when their names and file ids agree."""
+    source = plan.source
 
     def cache_key(f: FileAction) -> str | None:
         if (source is None or not all(source) or not f.id
@@ -555,12 +573,12 @@ def file_tasks(files: Iterable[FileAction], schema: T.StructType,
         return hashlib.sha256("\0".join(
             (*source, f.id, str(f.size))).encode()).hexdigest()
 
-    files = list(files)
     return [FileTask(f.url, f.size, f.id, {
-                **decode_partition_values(f.partition_values, schema,
-                                          partition_columns), **extra},
+                **decode_partition_values(f.partition_values, plan.schema,
+                                          plan.partition_columns), **extra},
                 f.deletion_vector, cache_key(f))
-            for f, extra in zip(files, constants or [{}] * len(files),
+            for f, extra in zip(plan.files,
+                                constants or [{}] * len(plan.files),
                                 strict=True)]
 
 
@@ -587,15 +605,13 @@ def _change_constants(kind: str, f: FileAction,
     return constants
 
 
-def change_tasks(changes: Iterable[tuple[str, FileAction]],
-                 schema: T.StructType, partition_columns: Sequence[str],
+def change_tasks(plan: ScanPlan, kinds: Sequence[str],
                  end_version: int | None,
-                 source: tuple[str, str, str] | None = None,
                  ) -> list[tuple[dict, list[FileTask]]]:
-    """The file-task groups of a change-feed read of ``(kind, file)``
-    actions (``add`` / ``remove`` / ``cdf``) of a range ending at
-    ``end_version``, each with its :func:`relist` spec; ``source`` as in
-    :func:`file_tasks`.
+    """The file-task groups of a change-feed read of the plan's files, the
+    actions of a range ending at ``end_version`` whose ``kinds`` are
+    ``add`` / ``remove`` / ``cdf`` in the same order, each group with its
+    :func:`relist` spec.
 
     Every task carries ``_commit_version`` and ``_commit_timestamp``, and
     an add or remove file the literal ``_change_type`` insert or delete.
@@ -603,10 +619,9 @@ def change_tasks(changes: Iterable[tuple[str, FileAction]],
     share a group, and a group re-lists through ``/changes`` over the
     versions of its files (remove and cdc files are in no snapshot
     listing). An empty range has no group."""
-    changes = list(changes)
-    tasks = file_tasks([f for _, f in changes], schema, partition_columns,
-                       [_change_constants(kind, f, end_version)
-                        for kind, f in changes], source)
+    tasks = file_tasks(plan, constants=[
+        _change_constants(kind, f, end_version)
+        for kind, f in zip(kinds, plan.files, strict=True)])
     out = []
     for group in pack_files(tasks) if tasks else []:
         versions = [t.constants["_commit_version"] for t in group

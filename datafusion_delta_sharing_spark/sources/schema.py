@@ -192,8 +192,9 @@ def decode_partition_values(partition_values: dict[str, str],
 # field either way). Reading such files under the logical schema yields
 # all-NULL columns, which is why the reference-class behavior (ignore the
 # metadata) is a correctness bug, not a limitation. This reader TRANSLATES:
-# the scan runs entirely in physical names and the result is renamed back
-# to logical at the end (sources/reader.py). 'id' mode also matches by
+# the scan plan stays in logical names and carries the logical -> physical
+# map, and each read takes a data column from its physical parquet column
+# under the logical name (sources/scan.py). 'id' mode also matches by
 # parquet field id, but Delta writes physicalName alongside, and parquet
 # column names equal physicalName for both modes, so one rename rule
 # serves both.
@@ -285,12 +286,3 @@ def ambiguous_mapping_names(mapping: dict[str, str]) -> set[str]:
     return {n for n in mapping
             if any(p == n and l != n for l, p in mapping.items())}
 
-
-def to_physical_schema(schema: T.StructType,
-                       mapping: dict[str, str]) -> T.StructType:
-    """The schema as the parquet files spell it: top-level fields renamed
-    to their physical names (types/nullability/metadata preserved)."""
-    return T.StructType([
-        T.StructField(mapping.get(f.name, f.name), f.dataType, f.nullable,
-                      f.metadata)
-        for f in schema.fields])

@@ -223,6 +223,92 @@ def test_stream_replay_lost_log_raises(tmp_path):
                               {"version": 1, "batch": 2})
 
 
+def test_stream_restart_needs_its_commit_log(registered, tmp_path):
+    """A snapshot stream restarted from its checkpoint resumes after the
+    batches its commit log cut. With the same ``stream_log_dir`` the file
+    that landed while the query was down is read; without one, the new log
+    lists every live file as its first batch, so the restart refuses
+    instead of planning an empty range and silently dropping that file."""
+    from pyspark.errors.exceptions.captured import StreamingQueryException
+
+    spark = registered
+    blobs = {"/a.parquet": _blob([1, 2], [1.0, 2.0]),
+             "/b.parquet": _blob([3, 4], [3.0, 4.0])}
+    for log_dir in (None, str(tmp_path / "log")):
+        out = tmp_path / f"out-{log_dir is None}"
+        srv, table = _server(blobs)
+
+        def add(fid: str) -> None:
+            table.files.append({
+                "id": fid, "url": f"{srv.base_url}/{fid}.parquet",
+                "size": len(blobs[f"/{fid}.parquet"]),
+                "partition_values": {"day": "2021-04-28"}})
+
+        def run() -> list[int]:
+            reader = (spark.readStream.format("deltasharing")
+                      .option("profile_json", json.dumps(srv.profile_doc()))
+                      .option("table", "s.d.t"))
+            if log_dir is not None:
+                reader = reader.option("stream_log_dir", log_dir)
+            query = (reader.load().writeStream.format("parquet")
+                     .option("path", str(out / "data"))
+                     .option("checkpointLocation", str(out / "ckpt"))
+                     .trigger(availableNow=True).start())
+            try:
+                query.awaitTermination(60)
+            finally:
+                query.stop()
+            return sorted(r.id for r in
+                          spark.read.parquet(str(out / "data")).collect())
+
+        with srv:
+            add("a")
+            assert run() == [1, 2]
+            add("b")
+            table.version += 1
+            if log_dir is None:
+                with pytest.raises(StreamingQueryException,
+                                   match="stream_log_dir"):
+                    run()
+            else:
+                assert run() == [1, 2, 3, 4]
+
+
+def test_stream_resumes_after_a_version_only_commit(tmp_path):
+    """An offset whose version moved without a new batch (a commit that
+    added no file) still resumes: the log cut its batch at an earlier
+    version. A range that runs backwards is refused."""
+    from datafusion_delta_sharing_spark.errors import DeltaSharingError
+    from datafusion_delta_sharing_spark.sources.datasource import (
+        DeltaSharingStreamReader,
+    )
+
+    blobs = {"/s1.parquet": _blob([1, 2], [1.0, 2.0]),
+             "/s2.parquet": _blob([3], [3.0])}
+    srv, table = _server(blobs)
+    with srv:
+        for fid in ("s1", "s2"):
+            table.files.append({
+                "id": fid, "url": f"{srv.base_url}/{fid}.parquet",
+                "size": len(blobs[f"/{fid}.parquet"]),
+                "partition_values": {"day": "2021-04-28"}})
+        s2 = table.files.pop()
+        opts = {"profile_json": json.dumps(srv.profile_doc()),
+                "table": "s.d.t", "stream_log_dir": str(tmp_path)}
+        reader = DeltaSharingStreamReader(opts, _stream_schema())
+        cut = reader.latestOffset()
+        table.version += 1
+        bumped = reader.latestOffset()
+        assert bumped == {"version": cut["version"] + 1, "batch": 0}
+        assert reader.partitions(cut, bumped) == []
+        table.files.append(s2)
+        latest = reader.latestOffset()
+        parts = reader.partitions(bumped, latest)
+        assert [[t.file_id for t in p.tasks] for p in parts] == [["s2"]]
+        with pytest.raises(DeltaSharingError, match="before"):
+            reader.partitions(latest, bumped)
+
+
 def test_stream_expired_url_refreshes_by_file_id(tmp_path):
     """A logged presigned URL that expired between logging and replay is
     re-resolved by file id through a fresh listing on the executor."""

@@ -524,11 +524,12 @@ def _cm_blob(ids, amounts) -> bytes:
 
 def test_column_mapped_table_is_translated(spark, tmp_path):
     """delta.columnMapping.mode='name' tables are TRANSLATED (r6): the
-    scan runs in physicalName space and renames back, so logical columns
-    come back with real data — the reference-class behavior (ignore the
-    metadata) reads all-NULL columns. One file carries LOGICAL
-    partition-value keys (parquet-format responses, server-translated),
-    the other PHYSICAL keys (raw delta-format add actions): both decode."""
+    scan reads each logical column from its physicalName parquet column,
+    so logical columns come back with real data — the reference-class
+    behavior (ignore the metadata) reads all-NULL columns. One file
+    carries LOGICAL partition-value keys (parquet-format responses,
+    server-translated), the other PHYSICAL keys (raw delta-format add
+    actions): both decode."""
     p1 = tmp_path / "cm1.parquet"
     p1.write_bytes(_cm_blob([1, 2], [1.0, 2.0]))
     p2 = tmp_path / "cm2.parquet"
@@ -598,8 +599,8 @@ def test_column_mapped_http_strategy_prunes_physical_stats(spark):
 def test_column_mapping_composes_with_type_widening(spark, tmp_path):
     """One file exercising BOTH translations: physical column names
     (columnMapping) holding pre-widening narrow types (typeWidening) —
-    the physical-space scan must widen, then the final projection
-    renames to logical."""
+    the scan must widen while it reads each logical column from its
+    physical parquet column."""
     cm_wide_schema = json.dumps({"type": "struct", "fields": [
         {"name": "id", "type": "long", "nullable": False,
          "metadata": {"delta.columnMapping.physicalName": "col-1111"}},

@@ -139,21 +139,24 @@ def test_plan_files_prunes(fields, mapped, files, predicate, kept):
                             else ())
     plan = plan_files(data, schema, predicate)
     assert [f.id for f in plan.files] == kept
-    assert plan.mapping == ({f["name"]: f["metadata"][
+    assert plan.file_names == ({f["name"]: f["metadata"][
         "delta.columnMapping.physicalName"] for f in fields}
-        if mapped else None)
+        if mapped else {})
 
 
-def test_plan_files_spells_the_plan_physically():
+def test_plan_files_spells_the_plan_logically():
+    """Both partition-key spellings normalize to the logical one, and the
+    parquet column of each data column is in ``file_names``."""
     data, schema = _listing(
         MAPPED, [_file("f", partition_values={"p": "v"}),
                  _file("g", partition_values={"col-p": "w"})],
         partition_columns=["p"], mapped=True)
     plan = plan_files(data, schema, None)
-    assert plan.schema.fieldNames() == ["col-x", "col-p"]
-    assert plan.partition_columns == ["col-p"]
+    assert plan.schema.fieldNames() == ["x", "p"]
+    assert plan.partition_columns == ["p"]
     assert [f.partition_values for f in plan.files] == [
-        {"col-p": "v"}, {"col-p": "w"}]
+        {"p": "v"}, {"p": "w"}]
+    assert plan.file_names == {"x": "col-x", "p": "col-p"}
 
 
 # -- the file packer of both batch reads ----------------------------------
@@ -245,34 +248,46 @@ def test_one_retry_loop_and_no_raw_http_errors_in_sources():
             assert "requests.HTTPError" not in fh.read(), path
 
 
-def _source_calls() -> tuple[set[tuple[str, str, str]],
-                             list[tuple[str, str]]]:
-    """Every call in ``sources/*.py`` as ``(file, qualified enclosing def,
-    callee)``, and every def as ``(file, qualified name)``."""
+def _source_nodes() -> list[tuple[str, str, "ast.AST"]]:
+    """Every AST node in ``sources/*.py`` as ``(file, qualified enclosing
+    def, node)``; a def is listed in the scope that encloses it."""
     import ast
     import glob
 
     import datafusion_delta_sharing_spark as pkg
 
     root = os.path.dirname(pkg.__file__)
-    calls: set[tuple[str, str, str]] = set()  # (file, enclosing def, callee)
-    defs: list[tuple[str, str]] = []  # (file, qualified def name)
+    nodes: list[tuple[str, str, ast.AST]] = []
 
     def visit(node, name: str, where: str) -> None:
         for child in ast.iter_child_nodes(node):
+            nodes.append((name, where, child))
             if isinstance(child, (ast.FunctionDef, ast.AsyncFunctionDef,
                                   ast.ClassDef)):
-                scope = f"{where}.{child.name}".lstrip(".")
-                defs.append((name, scope))
-                visit(child, name, scope)
-                continue
-            if isinstance(child, ast.Call):
-                calls.add((name, where, ast.unparse(child.func)))
-            visit(child, name, where)
+                visit(child, name, f"{where}.{child.name}".lstrip("."))
+            else:
+                visit(child, name, where)
 
     for path in sorted(glob.glob(os.path.join(root, "sources", "*.py"))):
         with open(path) as fh:
             visit(ast.parse(fh.read()), os.path.basename(path), "")
+    return nodes
+
+
+def _source_calls() -> tuple[set[tuple[str, str, str]],
+                             list[tuple[str, str]]]:
+    """Every call in ``sources/*.py`` as ``(file, qualified enclosing def,
+    callee)``, and every def as ``(file, qualified name)``."""
+    import ast
+
+    calls: set[tuple[str, str, str]] = set()  # (file, enclosing def, callee)
+    defs: list[tuple[str, str]] = []  # (file, qualified def name)
+    for name, where, node in _source_nodes():
+        if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef,
+                             ast.ClassDef)):
+            defs.append((name, f"{where}.{node.name}".lstrip(".")))
+        elif isinstance(node, ast.Call):
+            calls.add((name, where, ast.unparse(node.func)))
     return calls, defs
 
 
@@ -336,6 +351,55 @@ def test_the_file_cache_is_used_only_in_read_files():
     assert callers("cache_key") == [("scan.py", "file_tasks")]
 
 
+def test_one_read_plan_in_logical_names():
+    """Every read entry point takes its partition columns, parquet column
+    names and cache identity from ``scan.plan_files``. No ``options``
+    access in ``sources/`` reads or writes ``"partition_columns"``; the
+    reader renames nothing back after its scan; the cache identity is
+    spelled in one function; no source builds a ``TableData`` (a change
+    feed's ``TableChanges`` is planned as it is); and both
+    ``change_tasks`` callers pass the plan ``plan_files`` made."""
+    import ast
+
+    nodes = _source_nodes()
+    calls, defs = _source_calls()
+
+    def callers(callee: str) -> list[tuple[str, str]]:
+        return sorted({(f, w) for f, w, c in calls if c == callee})
+
+    assert [(f, w) for f, w, n in nodes
+            if isinstance(n, (ast.Subscript, ast.Call))
+            and "options" in ast.unparse(
+                n.value if isinstance(n, ast.Subscript) else n.func)
+            and "'partition_columns'" in ast.unparse(n)] == []
+    scope = "DeltaSharingReader._dataframe_from_tasks"
+    assert defs.count(("reader.py", scope)) == 1
+    assert not {c.rsplit(".", 1)[-1] for f, w, c in calls
+                if f == "reader.py" and w == scope} & {
+        "select", "alias", "toDF", "withColumnRenamed"}
+    assert sorted({(f, w) for f, w, n in nodes
+                   if isinstance(n, ast.Attribute)
+                   and n.attr == "endpoint"}) == [
+        ("scan.py", "cache_identity")]
+    assert callers("TableData") == []
+    assert callers("_stream_plan") == [
+        ("datasource.py", "DeltaSharingCDFStreamReader.partitions"),
+        ("datasource.py", "DeltaSharingStreamReader.latestOffset")]
+    assert ("datasource.py", "_stream_plan") in callers("plan_files")
+    plans = {(f, w) for f, w, n in nodes
+             if isinstance(n, ast.Assign)
+             and [ast.unparse(t) for t in n.targets] == ["plan"]
+             and isinstance(n.value, ast.Call)
+             and ast.unparse(n.value.func) in ("plan_files", "_stream_plan")}
+    change_calls = sorted((f, w, ast.unparse(n.args[0])) for f, w, n in nodes
+                          if isinstance(n, ast.Call)
+                          and ast.unparse(n.func) == "change_tasks")
+    assert change_calls == [
+        ("datasource.py", "DeltaSharingCDFStreamReader.partitions", "plan"),
+        ("reader.py", "DeltaSharingReader.table_changes", "plan")]
+    assert {(f, w) for f, w, _ in change_calls} <= plans
+
+
 def test_an_empty_listing_is_one_empty_group():
     assert pack_files([]) == [[]]
     table = MockTable(share="s", schema="d", name="t",
@@ -353,11 +417,17 @@ def test_an_empty_listing_is_one_empty_group():
 
 # -- one share, every read entry point ------------------------------------
 
-PARITY_SCHEMA = json.dumps({"type": "struct", "fields": [
-    _field("id", "long"), _field("amount", "double"),
-    _field("note", "string"), _field("day", "date")]})
 # ids deleted by the on-file deletion vector of /new.parquet
 DELETED = {11, 14}
+
+
+def _parity_rows() -> list[tuple]:
+    import datetime
+
+    return sorted(
+        [(i, 0.5 * i, None, datetime.date(2021, 4, 28)) for i in range(5)]
+        + [(i, 1.5 * (i - 10), f"n{i - 10}", datetime.date(2021, 4, 29))
+           for i in range(10, 17) if i not in DELETED])
 
 
 def _parquet(table: pa.Table) -> bytes:
@@ -367,28 +437,52 @@ def _parquet(table: pa.Table) -> bytes:
 
 
 @contextlib.contextmanager
-def _parity_share():
+def _parity_share(mapped: bool = False, local_dir: str | None = None):
     """Two partitions: /old.parquet was written before ``note`` was added;
     /new.parquet has it, and a deletion vector in a DV file over HTTP. The
-    share's one commit added both files."""
-    old = _parquet(pa.table({"id": pa.array(range(5), pa.int64()),
-                             "amount": pa.array([0.5 * i for i in range(5)])}))
+    share's one commit added both files.
+
+    ``mapped`` makes it a column-mapped share: every column, the partition
+    column too, has the physical name ``col-<name>`` its parquet column
+    carries, and /new.parquet spells its partition key physically. With
+    ``local_dir`` the data files are listed by ``file://`` URLs there."""
+    def name(column: str) -> str:
+        return f"col-{column}" if mapped else column
+
+    old = _parquet(pa.table({
+        name("id"): pa.array(range(5), pa.int64()),
+        name("amount"): pa.array([0.5 * i for i in range(5)])}))
     new = _parquet(pa.table({
-        "id": pa.array(range(10, 17), pa.int64()),
-        "amount": pa.array([1.5 * i for i in range(7)]),
-        "note": pa.array([f"n{i}" for i in range(7)])}))
+        name("id"): pa.array(range(10, 17), pa.int64()),
+        name("amount"): pa.array([1.5 * i for i in range(7)]),
+        name("note"): pa.array([f"n{i}" for i in range(7)])}))
     dv_data = dv.encode_dv_data(sorted(i - 10 for i in DELETED))
     dv_file, [offset] = dv.encode_dv_file([dv_data])
     blobs = {"/old.parquet": old, "/new.parquet": new, "/del.dv": dv_file}
+    schema_string = json.dumps({"type": "struct", "fields": [
+        _field(column, kind, name(column) if mapped else None)
+        for column, kind in (("id", "long"), ("amount", "double"),
+                             ("note", "string"), ("day", "date"))]})
     table = MockTable(share="s", schema="d", name="t",
-                      schema_string=PARITY_SCHEMA, partition_columns=["day"],
-                      version=1)
+                      schema_string=schema_string, partition_columns=["day"],
+                      version=1, configuration={
+                          "delta.columnMapping.mode": "name"} if mapped
+                      else {},
+                      reader_features=["columnMapping"] if mapped else [])
     with MockSharingServer([table], parquet_bytes=blobs) as srv:
+        def url(path: str) -> str:
+            if local_dir is None:
+                return f"{srv.base_url}{path}"
+            local = os.path.join(local_dir, path.lstrip("/"))
+            with open(local, "wb") as fh:
+                fh.write(blobs[path])
+            return f"file://{local}"
+
         files = [
-            {"id": "old", "url": f"{srv.base_url}/old.parquet",
+            {"id": "old", "url": url("/old.parquet"),
              "size": len(old), "partition_values": {"day": "2021-04-28"}},
-            {"id": "new", "url": f"{srv.base_url}/new.parquet",
-             "size": len(new), "partition_values": {"day": "2021-04-29"},
+            {"id": "new", "url": url("/new.parquet"),
+             "size": len(new), "partition_values": {name("day"): "2021-04-29"},
              "deletion_vector": {
                  "storageType": "p",
                  "pathOrInlineDv": f"{srv.base_url}/del.dv",
@@ -399,6 +493,14 @@ def _parity_share():
                               "timestamp": 1_600_000_000_000, **f}
                              for f in files)
         yield srv
+
+
+def _source(spark, profile: str, stream: bool, **options):
+    reader = spark.readStream if stream else spark.read
+    for k, v in {"profile_json": profile, "table": "s.d.t",
+                 **options}.items():
+        reader = reader.option(k, v)
+    return reader.format("deltasharing").load()
 
 
 def _drain(spark, stream) -> list:
@@ -413,23 +515,14 @@ def _drain(spark, stream) -> list:
 
 
 def test_every_entry_point_reads_the_same_rows(spark):
-    import datetime
-
     spark.dataSource.register(DeltaSharingDataSource)
     base = ["id", "amount", "note", "day"]
-    want = sorted(
-        [(i, 0.5 * i, None, datetime.date(2021, 4, 28)) for i in range(5)]
-        + [(i, 1.5 * (i - 10), f"n{i - 10}", datetime.date(2021, 4, 29))
-           for i in range(10, 17) if i not in DELETED])
+    want = _parity_rows()
     with _parity_share() as srv:
         profile = json.dumps(srv.profile_doc())
 
         def source(**options):
-            reader = spark.readStream if options.pop("stream") else spark.read
-            for k, v in {"profile_json": profile, "table": "s.d.t",
-                         **options}.items():
-                reader = reader.option(k, v)
-            return reader.format("deltasharing").load()
+            return _source(spark, profile, **options)
 
         client = DeltaSharingClient(Profile.from_json(profile))
         reads = {
@@ -446,6 +539,42 @@ def test_every_entry_point_reads_the_same_rows(spark):
                 name)
         # the http(s) DV was fetched, never skipped
         assert any(r["path"] == "/del.dv" for r in srv.requests)
+
+
+def test_every_entry_point_reads_a_column_mapped_share_the_same(
+        spark, tmp_path):
+    """One column mapping policy: a column-mapped share (``col-*`` parquet
+    columns, a mapped partition column spelled both ways, one deletion
+    vector) reads the same logical rows through ``DeltaSharingReader.table``
+    over http and over ``file://``, ``table_changes`` and
+    ``format("deltasharing")``, and both streams refuse it."""
+    from pyspark.errors.exceptions.captured import StreamingQueryException
+
+    spark.dataSource.register(DeltaSharingDataSource)
+    reads = {}
+    for local_dir in (None, str(tmp_path)):
+        with _parity_share(mapped=True, local_dir=local_dir) as srv:
+            profile = json.dumps(srv.profile_doc())
+            reader = DeltaSharingReader(
+                spark, DeltaSharingClient(Profile.from_json(profile)))
+            if local_dir is not None:
+                reads["reader_file"] = reader.table("s.d.t").collect()
+                continue
+            reads["reader_http"] = reader.table("s.d.t").collect()
+            reads["table_changes"] = reader.table_changes(
+                "s.d.t", starting_version=1).collect()
+            reads["format"] = _source(spark, profile, stream=False).collect()
+            for options in ({}, {"readChangeFeed": "true",
+                                 "startingVersion": "1"}):
+                with pytest.raises(StreamingQueryException,
+                                   match="column-mapped"):
+                    _drain(spark, _source(spark, profile, stream=True,
+                                          **options))
+    assert sorted(reads) == ["format", "reader_file", "reader_http",
+                             "table_changes"]
+    for name, rows in reads.items():
+        assert sorted((r.id, r.amount, r.note, r.day)
+                      for r in rows) == _parity_rows(), name
 
 
 # -- the benchmark's trace hook -------------------------------------------
