@@ -102,23 +102,38 @@ def apply_changes(base: DataFrame, changes: DataFrame,
             .unionByName(survivors))
 
 
+_EVENT_COLUMNS = ("user_id", "event_type", "ts", "event_id")
+
+
+def scd2_window(ev: DataFrame, *then: str) -> DataFrame:
+    """The one definition of an SCD2 interval, shared by the batch build
+    (:func:`scd2_intervals`) and by the streaming merge and the repair of
+    streaming/scd2.py: each user's events (``user_id``, ``event_type``,
+    ``ts``, ``event_id``), in one window ordered by (ts, event_id, *then),
+    become versions 1.. with intervals [valid_from, valid_to) per observed
+    event_type state, closed by the next event's ts (open interval =
+    current). NULLS LAST is pinned on every key: Spark defaults nulls
+    first, DuckDB last, so a null ts/event_id would otherwise land at
+    opposite ends and shift every version for that user.
+
+    Every other column of ``ev`` rides along in front of (user_id,
+    version, state, valid_from, valid_to, event_id)."""
+    w = Window.partitionBy("user_id").orderBy(
+        *(F.asc_nulls_last(c) for c in ("ts", "event_id", *then)))
+    return ev.select(
+        *(c for c in ev.columns if c not in _EVENT_COLUMNS), "user_id",
+        F.row_number().over(w).alias("version"),
+        F.col("event_type").alias("state"), F.col("ts").alias("valid_from"),
+        F.lead("ts").over(w).alias("valid_to"), "event_id")
+
+
 def scd2_intervals(ev: DataFrame) -> DataFrame:
     """SCD type-2 validity intervals from an event stream (``user_id``,
-    ``event_type``, ``ts``, ``event_id``): each user's events become
-    intervals [valid_from, valid_to) per observed event_type state,
-    closed by the next state change (open interval = current). The
-    window is per-user ordered by (ts, event_id) — a total order, so the
-    intervals are deterministic. NULLS LAST is pinned explicitly: Spark
-    defaults nulls first, DuckDB last, so a null ts/event_id would
-    otherwise land at opposite ends and shift every version for that
-    user."""
-    w = Window.partitionBy("user_id").orderBy(
-        F.asc_nulls_last("ts"), F.asc_nulls_last("event_id"))
-    return (ev.withColumn("valid_to", F.lead("ts").over(w))
-            .withColumn("version", F.row_number().over(w))
-            .select("user_id", "version",
-                    F.col("event_type").alias("state"),
-                    F.col("ts").alias("valid_from"), "valid_to"))
+    ``event_type``, ``ts``, ``event_id``) by :func:`scd2_window`. The
+    window's (ts, event_id) order is total for distinct events, so the
+    intervals are deterministic."""
+    return scd2_window(ev).select("user_id", "version", "state",
+                                  "valid_from", "valid_to")
 
 
 def scd2_build_sql(source_sql: str, user_bound: int) -> str:

@@ -286,17 +286,11 @@ def _stream_plan(reader, client, table, data: TableData | TableChanges,
                  schema: T.StructType) -> ScanPlan:
     """The ``scan.plan_files`` plan of a stream's listing, refusing,
     LOUDLY, a listing a stream cannot read: one ``scan.plan_files``
-    refuses; a column-mapped table (the streams do not yet pass the
-    plan's ``file_names`` to their reads, so they would mis-read physical
-    columns); and a schema that drifted under the running stream
+    refuses, and a schema that drifted under the running stream
     (decoding new bytes with the old schema mis-reads or drops columns).
     The first schema seen is pinned; the operator restarts the stream to
     pick up a new one."""
     plan = plan_files(data, schema, None, client, table)
-    if plan.file_names:
-        raise DeltaSharingError(
-            "column-mapped tables are not supported by the streaming "
-            "sources; read them with the batch reader")
     schema_string = data.metadata.schema_string
     seen = getattr(reader, "_schema_string_seen", None)
     if seen is None:
@@ -423,7 +417,8 @@ class DeltaSharingStreamReader(_OneClient, DataSourceStreamReader):
                    # the listing's metaData.id, part of the files' cache
                    # keys; a record without one reads uncached
                    "table_id": data.metadata.id,
-                   "partition_columns": plan.partition_columns}
+                   "partition_columns": plan.partition_columns,
+                   "file_names": plan.file_names}
             self._batches[self._latest_batch] = rec
             self._seen.update(f.id for f in new)
             self._append_log(rec)
@@ -464,13 +459,17 @@ class DeltaSharingStreamReader(_OneClient, DataSourceStreamReader):
         if not any(rec["files"] for rec in records):
             return []
         client, table = self._client_and_table()
-        # a manifest entry is spelled with FileAction's field names
+        # a manifest entry is spelled with FileAction's field names; a
+        # record without file_names was logged by a stream that refused
+        # column mapping. The schema pin gives every record one mapping
+        file_names = records[-1].get("file_names", {})
         tasks = [task for rec in records for task in file_tasks(ScanPlan(
             [FileAction(**f) for f in rec["files"]], self.full_schema,
-            rec["partition_columns"], {},
+            rec["partition_columns"], file_names,
             cache_identity(client, table, rec.get("table_id"))))]
         # an unpinned re-list: the stream follows the live table
-        return [_FilePartition(group) for group in pack_files(tasks)]
+        return [_FilePartition(group, file_names=file_names)
+                for group in pack_files(tasks)]
 
     def read(self, partition: _FilePartition) -> Iterator:
         return _read_file_partition(self.options, self.full_schema, partition)
@@ -544,7 +543,7 @@ class DeltaSharingCDFStreamReader(_OneClient, DataSourceStreamReader):
         changes = client.get_table_changes(
             table, starting_version=lo + 1, ending_version=hi)
         plan = _stream_plan(self, client, table, changes, self.base_schema)
-        return [_FilePartition(group, spec)
+        return [_FilePartition(group, spec, plan.file_names)
                 for spec, group in change_tasks(plan, changes.kinds, hi)]
 
     def read(self, partition: _FilePartition):

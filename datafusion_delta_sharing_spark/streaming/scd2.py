@@ -3,13 +3,15 @@ events into a persisted interval table (VERDICT r8 #5).
 
 Batch ``scd2_build`` (operators/cdc.scd2_intervals) turns a
 COMPLETE change log into validity intervals in one window pass. A real
-lakehouse ingests the log incrementally: each micro-batch must CLOSE the
-affected entities' open intervals (valid_to := the first new event's
-ts) and INSERT the new versions, with the final table equal to the
-batch build over the same events bit-for-bit, no matter how the stream
-was micro-batched. That equality is this module's contract and the
-registry oracle (``stream_scd2_upsert``'s DuckDB side IS the batch
-interval SQL).
+lakehouse ingests the log incrementally: each micro-batch merges its
+events into the touched entities' histories, with the final table equal
+to the batch build over the same events bit-for-bit, no matter how the
+stream was micro-batched. That equality is this module's contract and
+the registry oracle (``stream_scd2_upsert``'s DuckDB side IS the batch
+interval SQL). The batch build, the merge and the repair share one
+definition of an interval, ``cdc.scd2_window``: the merge re-windows
+each touched bucket's stored rows together with the batch's new events,
+and the repair windows the affected entities' full log.
 
 Layout and idempotency are the streaming-upsert skeleton
 (streaming/upsert.bucket_merge_sink): state partitioned by a hash bucket
@@ -26,16 +28,17 @@ the merge sorts). An out-of-order event would silently corrupt version
 history, so the merge REFUSES loudly instead (ValueError naming a
 violating entity). Recovery is implemented: :func:`repair_entities` batch-rebuilds
 ONLY the affected entities' intervals from the full log (the same
-window recipe as ``scd2_intervals``) and merges them back through the
+window as ``scd2_intervals``) and merges them back through the
 touched-bucket overwrite, and :func:`unapplied_events` routes the
 refused micro-batch around its now-applied rows on redelivery.
 
 Scale posture: per batch the merge rewrites only the touched buckets
 (cost = touched fraction × state size — pick n_buckets so one bucket ≈
-one task) and the window runs over the touched entities' NEW events
-plus one open row each, never over history. History growth is the
-dimension table's own size; compaction is the same maintenance story as
-any parquet MERGE sink.
+one task), and the window runs over exactly the rows that rewrite
+already reads and writes whole: the todo buckets' stored intervals plus
+the batch's events routed to them, in one shuffle by user_id. History
+growth is the dimension table's own size; compaction is the same
+maintenance story as any parquet MERGE sink.
 """
 
 from __future__ import annotations
@@ -44,6 +47,7 @@ import tempfile
 
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
+from datafusion_delta_sharing_spark.operators.cdc import scd2_window
 from datafusion_delta_sharing_spark.streaming.progress import (
     run_to_completion,
 )
@@ -100,80 +104,51 @@ def _interval_rows(existing: DataFrame, new_ev: DataFrame,
                    batch_id: int) -> DataFrame:
     """The todo buckets' interval rows after merging ``new_ev`` (the
     batch's change events routed to them) into their ``existing``
-    interval rows."""
-    affected = new_ev.select("user_id").distinct()
+    interval rows: the stored rows, read back as the events that opened
+    them, and the new events go through the batch build's one window
+    (``cdc.scd2_window``). A stored row recomputes to itself, since only
+    that window ever wrote the state, and its stored version, the last
+    order key, keeps rows that tie on (ts, event_id) in their stored
+    order. Each touched entity's open row closes at its first new
+    event's ts and the new events become versions max(version)+1.., the
+    last one open.
 
-    # the affected entities' first new event, in the batch window's
-    # (ts, event_id) total order — the close point for open rows
-    wu = Window.partitionBy("user_id").orderBy(
-        F.asc_nulls_last("ts"), F.asc_nulls_last("event_id"))
-    firsts = (new_ev.withColumn("__r", F.row_number().over(wu))
-              .filter(F.col("__r") == 1)
-              .select("user_id", F.col("ts").alias("first_ts"),
-                      F.col("event_id").alias("first_eid")))
-    open_rows = (existing.filter(F.col("valid_to").isNull())
-                 .join(firsts, "user_id", "inner"))
-    # order guard: the CDC contract is per-entity (ts, event_id)
-    # order across batches; a violation would silently rewrite
-    # history, so refuse loudly instead. NULL-safe on purpose (r9
-    # review): the schema allows NULL ts/event_id and the window
-    # order pins NULLS LAST, so compare under that total order by
-    # mapping NULL to a +infinity sentinel — a plain `<` would go
-    # NULL against a NULL-opened interval and silently merge the
-    # exact violation this refuses.
-    #
-    # The guard runs INSIDE the write's plan (r11, guide §2.4 /
-    # VERDICT r10 #1): a violating close row evaluates raise_error,
-    # the write JOB fails before its commit (dynamic overwrite
-    # replaces partitions only at successful job commit, so state is
-    # untouched), and scd2_upsert_sink re-raises the contract
-    # ValueError. The old standalone pre-write count was one extra job
-    # AND a second full pass of the window+join machinery on EVERY
-    # batch.
-    _TS_INF = "9999-12-31 23:59:59"
-    _ID_INF = (1 << 63) - 1
-    f_ts = F.coalesce(F.col("first_ts"),
-                      F.lit(_TS_INF).cast("timestamp"))
-    o_ts = F.coalesce(F.col("valid_from"),
-                      F.lit(_TS_INF).cast("timestamp"))
-    f_id = F.coalesce(F.col("first_eid"), F.lit(_ID_INF))
-    o_id = F.coalesce(F.col("event_id"), F.lit(_ID_INF))
-    viol = (f_ts < o_ts) | ((f_ts == o_ts) & (f_id <= o_id))
-    closed_now = open_rows.select(
-        "bucket", "user_id", "version", "state", "valid_from",
-        F.when(viol, F.raise_error(F.concat(
+    The order guard rides the same plan: the CDC contract is per-entity
+    (ts, event_id) order across batches, and a new event at or before
+    its entity's latest stored row would silently rewrite history, so
+    it evaluates raise_error instead. The write JOB then fails before
+    its commit (dynamic overwrite replaces partitions only at a
+    successful job commit, so state is untouched), and
+    scd2_upsert_sink re-raises the contract ValueError. The comparison
+    is NULL-safe on purpose: the schema allows NULL ts/event_id and the
+    window orders NULLS LAST, so a NULL compares as a +infinity sentinel
+    — a plain comparison would go NULL against a NULL-opened interval
+    and silently merge the exact violation this refuses. The latest
+    stored row is an unordered window over the same user_id
+    partitioning, so the plan still shuffles once."""
+    stored = existing.select(
+        "bucket", "user_id", F.col("state").alias("event_type"),
+        F.col("valid_from").alias("ts"), "event_id",
+        F.col("version").alias("stored_version"))
+    fresh = new_ev.select("bucket", "user_id", "event_type", "ts",
+                          "event_id",
+                          F.lit(None).cast("bigint").alias("stored_version"))
+    rows = scd2_window(stored.unionByName(fresh), "stored_version")
+
+    key = F.struct(
+        F.coalesce("valid_from", F.lit("9999-12-31 23:59:59")
+                   .cast("timestamp")),
+        F.coalesce("event_id", F.lit((1 << 63) - 1)))
+    latest_stored = F.max(F.when(F.col("stored_version").isNotNull(), key)
+                          ).over(Window.partitionBy("user_id"))
+    late = F.col("stored_version").isNull() & (key <= latest_stored)
+    return rows.select(
+        "bucket", "user_id", "version", "state",
+        F.when(late, F.raise_error(F.concat(
             F.lit(f"{_GUARD_SENTINEL} batch {batch_id} entity "),
             F.col("user_id").cast("string"))).cast("timestamp"))
-        .otherwise(F.col("first_ts")).alias("valid_to"),
-        "event_id")
-
-    base = (existing.groupBy("user_id")
-            .agg(F.max("version").alias("base_version")))
-    new_rows = (
-        new_ev
-        .join(base, "user_id", "left")
-        .withColumn("version",
-                    F.coalesce(F.col("base_version"), F.lit(0))
-                    + F.row_number().over(wu))
-        .withColumn("valid_to", F.lead("ts").over(wu))
-        .select("bucket", "user_id", "version",
-                F.col("event_type").alias("state"),
-                F.col("ts").alias("valid_from"), "valid_to",
-                "event_id"))
-
-    untouched_entities = (
-        existing.join(affected, "user_id", "left_anti")
-        .select("bucket", "user_id", "version", "state",
-                "valid_from", "valid_to", "event_id"))
-    closed_before = (
-        existing.filter(F.col("valid_to").isNotNull())
-        .join(affected, "user_id", "semi")
-        .select("bucket", "user_id", "version", "state",
-                "valid_from", "valid_to", "event_id"))
-    return (untouched_entities
-            .unionByName(closed_before)
-            .unionByName(closed_now)
-            .unionByName(new_rows))
+        .otherwise(F.col("valid_from")).alias("valid_from"),
+        "valid_to", "event_id")
 
 
 def scd2_upsert_sink(spark: SparkSession, state_dir: str,
@@ -182,9 +157,10 @@ def scd2_upsert_sink(spark: SparkSession, state_dir: str,
     """foreachBatch callback: MERGE a micro-batch of change events
     (user_id, event_type, ts, event_id) into the interval table.
 
-    Per touched, not-yet-stamped bucket: untouched entities' rows carry
-    forward verbatim; each touched entity's OPEN interval closes at its
-    first new event's ts; the new events become versions
+    Per touched, not-yet-stamped bucket, :func:`_interval_rows`
+    re-windows the stored rows with the routed events: stored rows keep
+    their values, each touched entity's OPEN interval closes at its
+    first new event's ts, and the new events become versions
     max(version)+1.. ordered by (ts, event_id), the last one open.
     Stamp bookkeeping is the exactly-once-per-(bucket, batch) skeleton
     of streaming/upsert.py (:func:`bucket_merge_sink`, which also holds
@@ -241,7 +217,7 @@ def repair_entities(spark: SparkSession, state_dir: str,
     (``entities``: a bounded Python sequence, the refused batch's
     violators — same boundedness contract as the sinks' bucket lists).
     Each affected entity's rows are replaced by the batch
-    ``scd2_intervals`` window over its OWN full log — per-entity
+    ``cdc.scd2_window`` over its OWN full log — per-entity
     (ts, event_id) total order, identical tie-break to both the sink
     and the ``_SCD2_SQL`` oracle — so after repair the state
     hash-matches the batch build over the same events.
@@ -281,16 +257,7 @@ def repair_entities(spark: SparkSession, state_dir: str,
             f"have no rows in the supplied log ({uncovered[:10]}...); "
             "the repair log must contain each affected entity's FULL "
             "history — a retention-trimmed log cannot rebuild it")
-    wu = Window.partitionBy("user_id").orderBy(
-        F.asc_nulls_last("ts"), F.asc_nulls_last("event_id"))
-    rebuilt = (ev
-               .withColumn("bucket", bucket_col(n_buckets))
-               .withColumn("version", F.row_number().over(wu))
-               .withColumn("valid_to", F.lead("ts").over(wu))
-               .select("bucket", "user_id", "version",
-                       F.col("event_type").alias("state"),
-                       F.col("ts").alias("valid_from"), "valid_to",
-                       "event_id")
+    rebuilt = (scd2_window(ev.withColumn("bucket", bucket_col(n_buckets)))
                .withColumn("last_batch", F.lit(None).cast("bigint"))
                .withColumn("last_run", F.lit(None).cast("string"))
                # lazy (r10): the count right below materializes it,

@@ -822,12 +822,10 @@ def test_datasource_column_mapping_translated(registered):
         assert str(rows[4].day) == "2021-04-29"
 
 
-def test_stream_refuses_column_mapped_table(registered, tmp_path):
-    """The streaming source does not translate column mapping (the
-    manifest carries no per-file translation state) — it must refuse
-    loudly instead of mis-reading physical columns."""
-    from pyspark.errors.exceptions.captured import StreamingQueryException
-
+def test_stream_reads_column_mapped_table(registered, tmp_path):
+    """The snapshot stream translates column mapping: the commit log
+    carries the plan's logical -> parquet column map, and each partition
+    reads the physical ``col-a`` column as the logical ``id``."""
     spark = registered
     cm_schema = json.dumps({"type": "struct", "fields": [
         {"name": "id", "type": "long", "nullable": False,
@@ -850,12 +848,15 @@ def test_stream_refuses_column_mapped_table(registered, tmp_path):
                   .option("table", "s.d.st")
                   .option("stream_log_dir", str(tmp_path / "log"))
                   .load())
-        q = (stream.writeStream.format("memory")
-             .queryName(f"cmref_{uuid.uuid4().hex[:8]}")
+        sink = f"cmread_{uuid.uuid4().hex[:8]}"
+        q = (stream.writeStream.format("memory").queryName(sink)
              .trigger(availableNow=True).start())
-        with pytest.raises(StreamingQueryException,
-                           match="column-mapped"):
-            q.awaitTermination()
+        q.awaitTermination(60)
+        assert q.exception() is None
+        assert [r.id for r in spark.table(sink).collect()] == [1]
+        with open(tmp_path / "log" / "batches.jsonl") as fh:
+            assert [json.loads(line)["file_names"] for line in fh] == [
+                {"id": "col-a"}]
 
 
 def test_dv_file_fetch_retries_transient_failures(registered):

@@ -294,6 +294,31 @@ def test_scd2_sink_order_guard_is_null_safe(spark, tmp_path):
     assert d[(9, 2)] == ("nullts2", None, None, True)
 
 
+def test_scd2_sink_keeps_stored_order_of_tied_rows(spark, tmp_path):
+    """The merge re-windows every stored row of a touched bucket; two
+    rows that tie on (ts, event_id) — one ts, both event_id NULL — keep
+    their stored versions and valid_to when a later batch touches the
+    bucket through another entity."""
+    import datetime as dt
+
+    from datafusion_delta_sharing_spark.streaming import scd2 as S2
+
+    t = [dt.datetime(2024, 5, 1, h) for h in range(3)]
+    state = str(tmp_path / "dim")
+    merge = S2.scd2_upsert_sink(spark, state, n_buckets=2, run_id="ck-t")
+    merge(_cdc(spark, [(1, "a", t[0], None), (1, "b", t[0], None)]), 0)
+    stored = _dim(spark, state)
+    assert sorted(stored) == [(1, 1), (1, 2)]
+    assert [stored[(1, v)][2:] for v in (1, 2)] == [(t[0], False),
+                                                    (None, True)]
+    # user 3 shares user 1's bucket (3 % 2 == 1 % 2)
+    merge(_cdc(spark, [(3, "c", t[1], 40), (3, "d", t[2], 41)]), 1)
+    after = _dim(spark, state)
+    assert {k: v for k, v in after.items() if k[0] == 1} == stored
+    assert after[(3, 1)] == ("c", t[1], t[2], False)
+    assert after[(3, 2)] == ("d", t[2], None, True)
+
+
 def test_scd2_batch_boundaries_are_invisible(spark, sf_dir):
     """The module contract: the final dimension equals the batch build
     REGARDLESS of micro-batching. Same log, 1 vs 4 slices — identical

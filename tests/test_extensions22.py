@@ -161,40 +161,68 @@ def test_scd2_repair_converges_for_any_holdout(spark, data):
     """Property (r10 session): for ANY per-entity event log and ANY
     held-out subset that triggers the order guard, repair_entities over
     the full log converges the state to the batch window build — the
-    fixed-stripe registry query generalized. Entities, timestamps, and
-    the holdout choice are all hypothesis-driven; the applied prefix is
-    whatever the holdout leaves (still per-entity ordered, so the first
-    merge accepts it)."""
+    fixed-stripe registry query generalized. Entities, timestamps (NULL
+    and equal ones included), NULL event ids and the holdout choice are
+    all hypothesis-driven; the applied prefix is whatever the holdout
+    leaves (still per-entity ordered), merged in drawn batches that the
+    guard accepts, after which the state equals ``cdc.scd2_intervals``
+    over the applied events."""
     import datetime as dt
+    import itertools
 
     from pyspark.sql import Row, Window
     from pyspark.sql import functions as F
 
+    from datafusion_delta_sharing_spark.operators import cdc as CDC
     from datafusion_delta_sharing_spark.streaming import scd2 as S2
+
+    def key(ev):
+        """The batch window's (ts, event_id) order, NULLS LAST."""
+        _, _, ts, e = ev
+        return (ts is None, ts or dt.datetime.min, e is None, e or 0)
 
     n_entities = data.draw(st.integers(1, 4), label="n_entities")
     logs = {}
     eid = 0
     for u in range(n_entities):
         n_ev = data.draw(st.integers(1, 6), label=f"n_ev_{u}")
-        hours = sorted(data.draw(
-            st.lists(st.integers(0, 40), min_size=n_ev, max_size=n_ev,
-                     unique=True), label=f"hours_{u}"))
-        logs[u] = [(u, f"s{eid + i}",
-                    dt.datetime(2024, 4, 1) + dt.timedelta(hours=h),
-                    eid + i) for i, h in enumerate(hours)]
+        hours = data.draw(
+            st.lists(st.none() | st.integers(0, 8), min_size=n_ev,
+                     max_size=n_ev), label=f"hours_{u}")
+        null_ids = data.draw(
+            st.lists(st.booleans(), min_size=n_ev, max_size=n_ev),
+            label=f"null_ids_{u}")
+        evs = []
+        for i, (h, null_id) in enumerate(zip(hours, null_ids)):
+            e = None if null_id else eid + i
+            # events that tie on (ts, event_id) share their state, so
+            # every order of the tie builds the same intervals
+            evs.append((u, f"t{h}" if e is None else f"s{e}",
+                        None if h is None
+                        else dt.datetime(2024, 4, 1) + dt.timedelta(hours=h),
+                        e))
+        logs[u] = sorted(evs, key=key)
         eid += n_ev
-    # hold out a non-final subset per entity (an event with a later
-    # sibling — guaranteed to trip the guard when merged afterwards)
-    held, applied = [], []
+    # hold out a non-final subset per entity (an event at or before the
+    # entity's last one — guaranteed to trip the guard when merged
+    # afterwards); the applied rest goes in drawn batches that never
+    # split a (ts, event_id) tie, so each batch starts after the last
+    n_batches = data.draw(st.integers(1, 3), label="n_batches")
+    held, batches = [], [[] for _ in range(n_batches)]
     for u, evs in logs.items():
         holdable = list(range(len(evs) - 1))  # all but the last
         picks = data.draw(
             st.lists(st.sampled_from(holdable), unique=True,
                      max_size=len(holdable)),
             label=f"holdout_{u}") if holdable else []
-        for i, ev in enumerate(evs):
-            (held if i in picks else applied).append(ev)
+        held += [ev for i, ev in enumerate(evs) if i in picks]
+        ties = [list(g) for _, g in itertools.groupby(
+            [ev for i, ev in enumerate(evs) if i not in picks], key=key)]
+        cuts = sorted(data.draw(
+            st.lists(st.integers(0, n_batches - 1), min_size=len(ties),
+                     max_size=len(ties)), label=f"batches_{u}"))
+        for b, tie in zip(cuts, ties):
+            batches[b] += tie
 
     def cdc(rows):
         return spark.createDataFrame(
@@ -203,32 +231,38 @@ def test_scd2_repair_converges_for_any_holdout(spark, data):
             "user_id bigint, event_type string, ts timestamp, "
             "event_id bigint").localCheckpoint()
 
+    def intervals(frame):
+        return {(r.user_id, r.version): (r.state, r.valid_from, r.valid_to)
+                for r in frame.collect()}
+
     import tempfile
 
     state = tempfile.mkdtemp(prefix="scd2_prop_")
     merge = S2.scd2_upsert_sink(spark, state, n_buckets=2,
                                 run_id=f"{state}-run")
-    merge(cdc(applied), 0)
+    applied = [ev for batch in batches if batch for ev in batch]
+    for batch_id, batch in enumerate(b for b in batches if b):
+        merge(cdc(batch), batch_id)
+    assert intervals(S2.scd2_state(spark, state)) == intervals(
+        CDC.scd2_intervals(cdc(applied)))
     if held:
         with pytest.raises(ValueError, match="out-of-order"):
-            merge(cdc(held), 1)
+            merge(cdc(held), n_batches)
         all_rows = [e for evs in logs.values() for e in evs]
         S2.repair_entities(spark, state, cdc(all_rows),
                            sorted({u for u, *_ in held}))
         assert S2.unapplied_events(spark, state, cdc(held)).count() == 0
 
-    got = {(r.user_id, r.version): (r.state, r.valid_from, r.valid_to)
-           for r in S2.scd2_state(spark, state).collect()}
+    got = intervals(S2.scd2_state(spark, state))
     wu = Window.partitionBy("user_id").orderBy(
         F.asc_nulls_last("ts"), F.asc_nulls_last("event_id"))
     ev = cdc([e for evs in logs.values() for e in evs])
-    want = {(r.user_id, r.version): (r.state, r.valid_from, r.valid_to)
-            for r in (ev.withColumn("version", F.row_number().over(wu))
-                      .withColumn("valid_to", F.lead("ts").over(wu))
-                      .select("user_id", "version",
-                              F.col("event_type").alias("state"),
-                              F.col("ts").alias("valid_from"),
-                              "valid_to")).collect()}
+    want = intervals(ev.withColumn("version", F.row_number().over(wu))
+                     .withColumn("valid_to", F.lead("ts").over(wu))
+                     .select("user_id", "version",
+                             F.col("event_type").alias("state"),
+                             F.col("ts").alias("valid_from"),
+                             "valid_to"))
     assert got == want
 
 

@@ -546,10 +546,8 @@ def test_every_entry_point_reads_a_column_mapped_share_the_same(
     """One column mapping policy: a column-mapped share (``col-*`` parquet
     columns, a mapped partition column spelled both ways, one deletion
     vector) reads the same logical rows through ``DeltaSharingReader.table``
-    over http and over ``file://``, ``table_changes`` and
-    ``format("deltasharing")``, and both streams refuse it."""
-    from pyspark.errors.exceptions.captured import StreamingQueryException
-
+    over http and over ``file://``, ``table_changes``,
+    ``format("deltasharing")`` and both streams."""
     spark.dataSource.register(DeltaSharingDataSource)
     reads = {}
     for local_dir in (None, str(tmp_path)):
@@ -564,13 +562,13 @@ def test_every_entry_point_reads_a_column_mapped_share_the_same(
             reads["table_changes"] = reader.table_changes(
                 "s.d.t", starting_version=1).collect()
             reads["format"] = _source(spark, profile, stream=False).collect()
-            for options in ({}, {"readChangeFeed": "true",
-                                 "startingVersion": "1"}):
-                with pytest.raises(StreamingQueryException,
-                                   match="column-mapped"):
-                    _drain(spark, _source(spark, profile, stream=True,
-                                          **options))
-    assert sorted(reads) == ["format", "reader_file", "reader_http",
+            reads["snapshot_stream"] = _drain(
+                spark, _source(spark, profile, stream=True))
+            reads["cdf_stream"] = _drain(spark, _source(
+                spark, profile, stream=True, readChangeFeed="true",
+                startingVersion="1"))
+    assert sorted(reads) == ["cdf_stream", "format", "reader_file",
+                             "reader_http", "snapshot_stream",
                              "table_changes"]
     for name, rows in reads.items():
         assert sorted((r.id, r.amount, r.note, r.day)

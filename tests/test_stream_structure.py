@@ -1,7 +1,9 @@
 """The streaming layer's shared machinery has one home each: the bucket
 merge sinks run one exactly-once skeleton (streaming/upsert.py
-``bucket_merge_sink``) and every stream helper runs its query through one
-lifecycle (streaming/progress.py ``run_to_completion``)."""
+``bucket_merge_sink``), every stream helper runs its query through one
+lifecycle (streaming/progress.py ``run_to_completion``), and the SCD2
+batch build, merge and repair share one interval window
+(operators/cdc.py ``scd2_window``)."""
 
 from __future__ import annotations
 
@@ -12,13 +14,14 @@ import os
 import datafusion_delta_sharing_spark as pkg
 
 
-def _streaming_uses() -> tuple[set[tuple[str, str, str]],
-                               set[tuple[str, str, str]]]:
-    """Every call in ``streaming/*.py`` and ``harness/*.py`` as ``(file,
-    qualified enclosing def, last segment of the callee)``, and every
-    string constant as ``(file, qualified enclosing def, value)``."""
+def _uses(*patterns: str) -> tuple[list[tuple[str, str, str]],
+                                   set[tuple[str, str, str]]]:
+    """Every call in the package files matching ``patterns`` as ``(file,
+    qualified enclosing def, last segment of the callee)``, once per call
+    site, and every string constant as ``(file, qualified enclosing def,
+    value)``."""
     root = os.path.dirname(pkg.__file__)
-    calls: set[tuple[str, str, str]] = set()
+    calls: list[tuple[str, str, str]] = []
     strings: set[tuple[str, str, str]] = set()
 
     def visit(node, name: str, where: str) -> None:
@@ -29,21 +32,21 @@ def _streaming_uses() -> tuple[set[tuple[str, str, str]],
                 continue
             if isinstance(child, ast.Call):
                 callee = ast.unparse(child.func).rsplit(".", 1)[-1]
-                calls.add((name, where, callee))
+                calls.append((name, where, callee))
             elif (isinstance(child, ast.Constant)
                   and isinstance(child.value, str)):
                 strings.add((name, where, child.value))
             visit(child, name, where)
 
-    for sub in ("streaming", "harness"):
-        for path in sorted(glob.glob(os.path.join(root, sub, "*.py"))):
+    for pattern in patterns:
+        for path in sorted(glob.glob(os.path.join(root, pattern))):
             with open(path) as fh:
                 visit(ast.parse(fh.read()), os.path.basename(path), "")
     return calls, strings
 
 
 def test_one_merge_skeleton_and_one_stream_lifecycle():
-    calls, strings = _streaming_uses()
+    calls, strings = _uses("streaming/*.py", "harness/*.py")
 
     def callers(callee: str) -> list[tuple[str, str]]:
         return sorted({(f, w) for f, w, c in calls if c == callee})
@@ -75,3 +78,19 @@ def test_one_merge_skeleton_and_one_stream_lifecycle():
         ("scd2.py", "stream_scd2_upsert"),
         ("upsert.py", "stream_upsert_totals"),
         ("windows.py", "materialize_stream")]
+
+
+def test_one_scd2_interval_recipe():
+    """One definition of an SCD2 interval: ``lead`` is called once across
+    streaming/scd2.py and operators/cdc.py, inside the shared window,
+    and the streaming merge re-windows its buckets with that window
+    instead of joining new versions onto stored ones."""
+    calls, _ = _uses("streaming/scd2.py", "operators/cdc.py")
+    assert [(f, w) for f, w, c in calls if c == "lead"] == [
+        ("cdc.py", "scd2_window")]
+    assert sorted({(f, w) for f, w, c in calls if c == "scd2_window"}) == [
+        ("cdc.py", "scd2_intervals"),
+        ("scd2.py", "_interval_rows"),
+        ("scd2.py", "repair_entities")]
+    assert not [c for f, w, c in calls
+                if (f, w) == ("scd2.py", "_interval_rows") and c == "join"]
